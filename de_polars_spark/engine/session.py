@@ -42,6 +42,20 @@ _DEFAULTS: dict[str, str] = {
 }
 
 
+def session_size() -> tuple[int, str]:
+    """(task slots, driver memory) for a local session on this machine.
+
+    One slot per core this process may run on and half the physical
+    memory for the driver, leaving the rest to the Python workers and the
+    OS. ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` override them."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+        mem = f"{max(1024, phys_mb // 2)}m"
+    return cpus, mem
+
+
 def get_spark(
     app_name: str = "de_polars_spark",
     master: str | None = None,
@@ -50,10 +64,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    for tests; on a cluster, leave unset and submit normally.
+    ``master`` defaults to ``local[N]`` with N from :func:`session_size`;
+    on a cluster, leave unset and submit normally.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, driver_mem = session_size()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -62,7 +76,7 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+    conf.setdefault("spark.driver.memory", driver_mem)
     conf.setdefault("spark.ui.enabled", "false")
     if extra_conf:
         conf.update(extra_conf)

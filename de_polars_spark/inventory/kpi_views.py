@@ -13,16 +13,25 @@ the tail of the TPC-H shipdate range deterministically.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 
 from de_polars_spark.inventory.dialect_macros import render
+from de_polars_spark.sources.artifacts import artifact_path, publish
 from de_polars_spark.sources.registry import register_testdata
-from de_polars_spark.views.kpi import VIEW_CHAIN, chained_oracle, view_sql
+from de_polars_spark.views.kpi import (
+    VIEW_CHAIN,
+    chained_oracle,
+    register_kpi_views,
+    view_sql,
+)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
 
-NOW = "DATE '1998-10-01'"
+NOW_DATE = "1998-10-01"
+NOW = f"DATE '{NOW_DATE}'"
 
 #: every column kpi_instance_all.sql / the level-1 views read, derived
 #: deterministically from lineitem (same SQL text in both engines)
@@ -184,33 +193,27 @@ def _ensure_cur_ext(spark: SparkSession, sf_dir: str) -> str:
     active = _CUR_ACTIVE.get(id(spark))
     if active is not None and active[0] == sf_dir:
         return active[1]
-    import hashlib
-    import os
-
     register_testdata(spark, sf_dir)
-    cache_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".cache")
-    # content-addressed so editing the synthesis CTE invalidates the
-    # artifact; "|layout=par" versions the FILE LAYOUT — the original
-    # single-file write made every downstream view's 600k-row projection
-    # run on ONE core (40 MB file < maxPartitionBytes = one scan task),
-    # which WAS the KPI wave's critical path (cur_all stage 6.2s -> ~1s
-    # after parallelizing the layout; r5 wave shave)
-    tag = hashlib.md5((CUR_EXT_CTE + "|layout=par").encode()).hexdigest()[:8]
-    path = os.path.join(
-        cache_dir,
-        f"cur_ext_{os.path.basename(os.path.normpath(sf_dir))}_{tag}.parquet",
-    )
-    if not os.path.exists(path):
+
+    def build(tmp: str) -> None:
         df = spark.sql(render(CUR_EXT_CTE, "spark") + "\nSELECT * FROM cur")
         # one file per core: downstream scans parallelize across the
         # session's full width instead of being a single-task stage.
         # Row order inside the artifact is irrelevant to every consumer
         # (all aggregates are decimal/order-free — the repo's
         # determinism contract), so the round-robin shuffle is safe.
-        df.repartition(spark.sparkContext.defaultParallelism).write.mode(
-            "overwrite"
-        ).parquet(path)
+        df.repartition(spark.sparkContext.defaultParallelism).write.parquet(tmp)
+
+    # content-addressed so editing the synthesis CTE invalidates the
+    # artifact; "|layout=par" versions the FILE LAYOUT — the original
+    # single-file write made every downstream view's 600k-row projection
+    # run on ONE core (40 MB file < maxPartitionBytes = one scan task),
+    # which WAS the KPI wave's critical path (cur_all stage 6.2s -> ~1s
+    # after parallelizing the layout; r5 wave shave)
+    path = publish(
+        artifact_path("cur_ext", sf_dir, CUR_EXT_CTE, "|layout=par", suffix=".parquet"),
+        build,
+    )
     spark.read.parquet(path).createOrReplaceTempView("cur_ext")
     if active is not None:
         # sf_dir switched: the materialized KPI views were built over the
@@ -220,79 +223,17 @@ def _ensure_cur_ext(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-_SPARK_CUR_PREFIX = "WITH cur AS (SELECT * FROM cur_ext)"
-
-#: level-1/2 views materialized once per session (parquet artifacts by
-#: default — see _kpi_materialize_mode): every final KPI query used to
-#: re-embed the WHOLE chain as CTEs, so kpi_tracker re-derived the
-#: kpi_instance_all CASE ladder from raw CUR on every run (and paid
-#: driver-side analysis of ~700 lines of unused CTE text besides). A
-#: layered view system materializes each layer once and serves the
-#: finals from it — same rows (the downstream aggs are order-independent
-#: decimal sums), and the materialization cost lands in the first KPI
-#: query of the session, not in an unbenched warm-up.
-_MATERIALIZED_VIEWS = (
-    "summary_view",
-    "kpi_ebs_storage_all",
-    "kpi_ebs_snap",
-    "kpi_s3_storage_all",
-    # the instance layer is pinned at ROLLUP grain (views/kpi.py
-    # KPI_INSTANCE_ROLLUP_BODY): every aggregate consumer (the tracker's
-    # instance sub-query, kpi_view_instance_all) reads the small decimal-
-    # partial cube instead of the 26-key detail, whose ~205k rows x ~70
-    # columns (sf0.1) dominated both the artifact write and the tracker's
-    # sub-aggregation. The detail view kpi_instance_all stays registered
-    # (virtual) for ad-hoc API queries.
-    "kpi_instance_rollup",
-)
 #: applicationId -> sf_dir whose views are CURRENTLY materialized (a dict,
 #: not an accumulating set, so an sf_dir switch-back forces a rebuild)
 _KPI_VIEWS_READY: dict[str, str] = {}
 
 
-def _kpi_materialize_mode() -> str:
-    """'parquet' (default) or 'checkpoint'.
-
-    Parquet is the default on BOTH axes:
-
-    - **Scale**: ``localCheckpoint`` pins blocks in executor storage and
-      TRUNCATES lineage — on a real cluster with executor loss or
-      dynamic allocation the blocks vanish unrecoverably, and a
-      100 TB-derived view won't fit block storage. Parquet artifacts
-      (the reference's own pattern: data_partitioner.py:105-142)
-      survive executor loss and scale past cluster memory.
-    - **Speed**: checkpoint scans deserialize full InternalRows — no
-      column pruning, no vectorization. The tracker's five sub-
-      aggregates each read a handful of the ~70 decimal columns, so
-      over parquet they scan column-pruned vectorized batches: measured
-      at sf0.1, tracker materialization 4.5s over parquet artifacts vs
-      21-41s over localCheckpoints (and a COUNT over the checkpointed
-      kpi_instance_all alone took 6s).
-
-    Set SPARK_GRAFT_KPI_MATERIALIZE=checkpoint to keep everything in
-    block storage (e.g. a read-only filesystem); both modes serve
-    identical rows (tests/test_kpi_materialize.py).
-    """
-    import os
-
-    return os.environ.get("SPARK_GRAFT_KPI_MATERIALIZE", "parquet")
-
-
 def _kpi_artifact_dir(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    cache_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__)))), ".cache")
     # content-addressed over the whole chain: editing any view SQL (or the
     # CUR synthesis) invalidates the artifacts
-    chain_text = CUR_EXT_CTE + NOW + "".join(
-        view_sql(v, b, "cur_ext", NOW, "spark") for v, b in VIEW_CHAIN
-    )
-    tag = hashlib.md5(chain_text.encode()).hexdigest()[:8]
-    return os.path.join(
-        cache_dir,
-        f"kpi_views_{os.path.basename(os.path.normpath(sf_dir))}_{tag}",
+    return artifact_path(
+        "kpi_views", sf_dir, CUR_EXT_CTE, NOW,
+        *(view_sql(v, b, "cur_ext", NOW, "spark") for v, b in VIEW_CHAIN),
     )
 
 
@@ -302,92 +243,20 @@ def clear_kpi_artifacts(sf_dir: str) -> None:
     bench.py calls this in its (untimed) warm-up so the materialization
     wave is paid — and measured — inside the benchmark run instead of
     being inherited from a previous session's artifacts."""
-    import shutil
-
     shutil.rmtree(_kpi_artifact_dir(sf_dir), ignore_errors=True)
 
 
 def _ensure_kpi_views(spark: SparkSession, sf_dir: str) -> None:
+    """Register the chain over ``cur_ext`` once per session, its level-1/2
+    views and tracker pinned as parquet artifacts: every final KPI query
+    used to re-embed the WHOLE chain as CTEs, re-deriving the instance
+    CASE ladder from raw CUR on every run. The materialization cost lands
+    in the first KPI query of the session, not in an unbenched warm-up."""
     _ensure_cur_ext(spark, sf_dir)
     app = spark.sparkContext.applicationId
     if _KPI_VIEWS_READY.get(app) == sf_dir:
         return
-    # phase-1 registration: every view the MATERIALIZATION wave reads.
-    # A view whose body directly references a to-be-materialized name
-    # (only kpi_tracker in this chain) is deferred to the post-wave
-    # re-registration — creating it here would be parsed twice for
-    # nothing (~0.3s of driver analysis on the largest SQL in the repo)
-    for vname, body in VIEW_CHAIN:
-        if vname not in _MATERIALIZED_VIEWS and any(
-            mv in body for mv in _MATERIALIZED_VIEWS
-        ):
-            continue
-        sql = view_sql(vname, body, "cur_ext", NOW, "spark")
-        spark.sql(f"CREATE OR REPLACE TEMP VIEW {vname} AS {sql}")
-
-    import os
-
-    parquet_mode = _kpi_materialize_mode() == "parquet"
-    art_dir = _kpi_artifact_dir(sf_dir) if parquet_mode else None
-
-    def _pin(vname: str):
-        """Materialize one view via the configured backend."""
-        if parquet_mode:
-            path = os.path.join(art_dir, vname)
-            if not os.path.exists(path):
-                # write-then-rename so a concurrent session never reads a
-                # half-committed directory (artifacts are content-addressed,
-                # so any completed write is interchangeable)
-                tmp = f"{path}.tmp-{os.getpid()}"
-                spark.table(vname).write.mode("overwrite").parquet(tmp)
-                try:
-                    os.rename(tmp, path)
-                except OSError:  # another session won the race
-                    import shutil
-
-                    shutil.rmtree(tmp, ignore_errors=True)
-            return vname, spark.read.parquet(path)
-        return vname, spark.table(vname).localCheckpoint(eager=True)
-
-    # the five level-1/2 views are mutually independent (each reads only
-    # cur_ext + virtual upstreams) — submit their jobs concurrently so
-    # the cheap scans overlap the instance_all ladder instead of queuing
-    # behind it. The two-barrier shape (all five, then the tracker) IS
-    # the dependency graph: the tracker's five sub-aggregates read
-    # summary_view (spend), kpi_instance_rollup, and the three storage
-    # views — every wave-1 artifact — so per-dependency future chaining
-    # cannot start it earlier. Measured critical path at sf0.1: the
-    # rollup chain (~9s, dominated by cur_all's 206k-row 30-column
-    # projection write, not the 26-key groupBy, which adds ~0.3s) then
-    # the 1.3s tracker join over artifacts.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(len(_MATERIALIZED_VIEWS)) as ex:
-        for vname, df in ex.map(_pin, _MATERIALIZED_VIEWS):
-            df.createOrReplaceTempView(vname)
-    # temp views capture their dependencies' plans at CREATE time, so
-    # (re-)create the virtual views that TRANSITIVELY reference a
-    # materialized name, now that those inputs resolve to the pinned
-    # frames instead of the original full-recompute definitions. Views
-    # with no materialized dependency keep their phase-1 registration —
-    # re-parsing them here cost ~1s of driver analysis per session for
-    # identical plans (r5 wave shave).
-    affected = set(_MATERIALIZED_VIEWS)
-    for vname, body in VIEW_CHAIN:
-        if vname in _MATERIALIZED_VIEWS:
-            continue
-        if any(a in body for a in affected):
-            sql = view_sql(vname, body, "cur_ext", NOW, "spark")
-            spark.sql(f"CREATE OR REPLACE TEMP VIEW {vname} AS {sql}")
-            affected.add(vname)
-    # second wave: the final tracker view — its ~100-column savings
-    # projection is the single biggest codegen unit in the repo, so pin
-    # it down once here (over the wave-1 artifacts) instead of paying
-    # a high-variance recompile per consumer; this also mirrors the
-    # reference, where kpi_tracker is a materialized query artifact
-    # (data_partitioner.py:105-142 writes view results to parquet)
-    _, tracker = _pin("kpi_tracker")
-    tracker.createOrReplaceTempView("kpi_tracker")
+    register_kpi_views(spark, "cur_ext", NOW_DATE, pin=_kpi_artifact_dir(sf_dir))
     _KPI_VIEWS_READY[app] = sf_dir
 
 

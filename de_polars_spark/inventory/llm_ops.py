@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from de_polars_spark.functions import text as TX
 from de_polars_spark.functions.local_relation import values_df
 from de_polars_spark.operators import dedup, multimodal, sampling, similarity
+from de_polars_spark.sources.artifacts import artifact_path, publish
 from de_polars_spark.sources.registry import register_testdata
 
 QUERIES: dict = {}
@@ -120,47 +121,36 @@ def _lsh_graph_cap() -> int | None:
     return cap
 
 
-def _pair_graph_artifact_dir(sf_dir: str) -> str:
-    """Content-addressed artifact path for the shared MinHash pair graph.
-
-    Keyed on the corpus (sf_dir basename — testdata is immutable), the
-    LSH parameters (incl. the optional production bucket cap), and a
-    hash of the generating implementation, so any edit to the
-    MinHash/LSH code invalidates cached graphs. Same pattern as
-    ``kpi_views._kpi_artifact_dir``."""
-    import hashlib
+def _pair_graph_key() -> str:
+    """What shapes the shared MinHash pair graph: the LSH parameters (incl.
+    the optional production bucket cap) and the generating implementation,
+    so any edit to the MinHash/LSH code invalidates cached graphs."""
     import inspect
-    import os
 
-    cache_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-    )
     impl = (
         inspect.getsource(dedup._gram_strings)
         + inspect.getsource(dedup._minhash_sig_df)
         + inspect.getsource(dedup.minhash_lsh_pairs)
     )
-    tag = hashlib.md5(
-        f"{impl}|{_N_HASHES}|{_BAND_SIZE}|shingle2|cap={_lsh_graph_cap()}".encode()
-    ).hexdigest()[:8]
-    return os.path.join(
-        cache_dir,
-        f"dedup_pairs_{os.path.basename(os.path.normpath(sf_dir))}_{tag}",
-    )
+    return f"{impl}|{_N_HASHES}|{_BAND_SIZE}|shingle2|cap={_lsh_graph_cap()}"
+
+
+def _pair_graph_artifact_dir(sf_dir: str) -> str:
+    """Artifact path of the shared MinHash pair graph, keyed on the corpus
+    (sf_dir basename — testdata is immutable) and ``_pair_graph_key``
+    (``sources/artifacts.py``)."""
+    return artifact_path("dedup_pairs", sf_dir, _pair_graph_key())
 
 
 def _components_artifact_dir(sf_dir: str) -> str:
     """Derived artifact: connected-component labels over the pair graph
-    (content-addressed on the pair-graph tag + the components impl)."""
-    import hashlib
+    (keyed on the pair graph's key + the components impl)."""
     import inspect
 
-    base = _pair_graph_artifact_dir(sf_dir)
-    tag = hashlib.md5(
-        inspect.getsource(dedup.connected_components).encode()
-    ).hexdigest()[:8]
-    return f"{base}_comps_{tag}"
+    return artifact_path(
+        "dedup_comps", sf_dir, _pair_graph_key(),
+        inspect.getsource(dedup.connected_components),
+    )
 
 
 def clear_dedup_pair_artifacts(sf_dir: str) -> None:
@@ -181,20 +171,14 @@ def _dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair graph (~6 iterative jobs), and THREE inventory queries consume
     the identical labels (component summary, keep-best survivor
     selection, cluster-size histogram) — at 100 TB you run the closure
-    once and every cluster analysis reads the label table. Same
-    content-addressed write-then-rename protocol as the pair graph."""
-    import os
-    import shutil
-
-    path = _components_artifact_dir(sf_dir)
-    if not os.path.exists(path):
-        comps = dedup.connected_components(_dedup_pair_graph(spark, sf_dir))
-        tmp = f"{path}.tmp-{os.getpid()}"
-        comps.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # another session won the race
-            shutil.rmtree(tmp, ignore_errors=True)
+    once and every cluster analysis reads the label table. Published like
+    the pair graph."""
+    path = publish(
+        _components_artifact_dir(sf_dir),
+        lambda tmp: dedup.connected_components(
+            _dedup_pair_graph(spark, sf_dir)
+        ).write.parquet(tmp),
+    )
     return spark.read.parquet(path)
 
 
@@ -207,24 +191,16 @@ def _dedup_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph analysis reads the materialized edges. This materializes the
     pairs as a content-addressed parquet artifact on first use per
     (corpus, params, implementation) and serves every later consumer
-    from the column-pruned vectorized scan. Write-then-rename keeps
-    concurrent sessions safe (any completed write is interchangeable)."""
-    import os
-    import shutil
-
+    from the column-pruned vectorized scan. ``publish`` keeps concurrent
+    sessions safe (any completed write is interchangeable)."""
     t = register_testdata(spark, sf_dir)
-    path = _pair_graph_artifact_dir(sf_dir)
-    if not os.path.exists(path):
-        pairs = dedup.minhash_lsh_pairs(
+    path = publish(
+        _pair_graph_artifact_dir(sf_dir),
+        lambda tmp: dedup.minhash_lsh_pairs(
             t["documents"], "doc_id", "text", _N_HASHES, _BAND_SIZE,
             shingle_n=2, max_bucket_size=_lsh_graph_cap(),
-        )
-        tmp = f"{path}.tmp-{os.getpid()}"
-        pairs.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # another session won the race
-            shutil.rmtree(tmp, ignore_errors=True)
+        ).write.parquet(tmp),
+    )
     return spark.read.parquet(path)
 
 
@@ -3188,14 +3164,8 @@ def _fit_km_centroids(corpus) -> list:
 
 
 def _ivf_index_dir(sf_dir: str) -> str:
-    import hashlib
     import inspect
-    import os
 
-    cache_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-    )
     # the tag must cover the FULL impl chain that shapes the artifact:
     # _fit_km_centroids delegates the centroid math to kmeans_iterations
     # (and its _with_assignment helper) — editing either must invalidate
@@ -3209,13 +3179,7 @@ def _ivf_index_dir(sf_dir: str) -> str:
         + inspect.getsource(_km.kmeans_iterations)
         + inspect.getsource(_km._with_assignment)
     )
-    tag = hashlib.md5(
-        f"{impl}|{_KM_K}|{_KM_ITERS}".encode()
-    ).hexdigest()[:8]
-    return os.path.join(
-        cache_dir,
-        f"ivf_index_{os.path.basename(os.path.normpath(sf_dir))}_{tag}",
-    )
+    return artifact_path("ivf_index", sf_dir, f"{impl}|{_KM_K}|{_KM_ITERS}")
 
 
 def clear_ivf_index_artifacts(sf_dir: str) -> None:
@@ -3230,20 +3194,12 @@ def clear_ivf_index_artifacts(sf_dir: str) -> None:
 
 
 def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import shutil
-
-    path = _ivf_index_dir(sf_dir)
-    if not os.path.exists(path):
+    def build(tmp: str) -> None:
         t = register_testdata(spark, sf_dir)
         cents = _fit_km_centroids(t["embeddings"])
-        tmp = f"{path}.tmp-{os.getpid()}"
         similarity.build_ivf_index(t["embeddings"], "vec_id", "embedding", cents, tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # concurrent session won the race
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+
+    return publish(_ivf_index_dir(sf_dir), build)
 
 
 def q_ann_ivf_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3309,24 +3265,19 @@ _APPEND_ID_SHIFT = 1_000_000
 
 
 def q_ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
     t = register_testdata(spark, sf_dir)
     base = _ensure_ivf_index(spark, sf_dir)
-    path = f"{base}_appended"
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    def build(tmp: str) -> None:
         shutil.copytree(base, tmp)
         batch = t["embeddings"].select(
             (F.col("vec_id") + _APPEND_ID_SHIFT).alias("vec_id"), "embedding"
         )
         similarity.append_ivf_index(batch, "vec_id", "embedding", tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # concurrent session won the race
-            shutil.rmtree(tmp, ignore_errors=True)
+
+    path = publish(f"{base}_appended", build)
     _, postings = similarity.load_ivf_index(spark, path)
     return postings.groupBy(F.col("cell").cast("bigint").alias("cell")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
@@ -3372,25 +3323,20 @@ ORACLES["ann_ivf_index_append"] = _ivf_index_append_oracle()
 # count collapsed and a probe query returns identical results.      #
 # ---------------------------------------------------------------- #
 def q_ann_ivf_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
     # build on a COPY of the appended index (the append artifact itself
     # must stay multi-file so its own query keeps measuring that shape)
     q_ann_ivf_index_append(spark, sf_dir).collect()
     base = f"{_ensure_ivf_index(spark, sf_dir)}_appended"
-    path = f"{base}_compacted"
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    def build(tmp: str) -> None:
         shutil.copytree(base, tmp)
         stats = similarity.compact_ivf_index(spark, tmp)
         # layout collapsed (one task's output per cell), content untouched
         assert stats["files_after"] <= stats["files_before"]
-        try:
-            os.rename(tmp, path)
-        except OSError:  # concurrent session won the race
-            shutil.rmtree(tmp, ignore_errors=True)
+
+    path = publish(f"{base}_compacted", build)
     _, postings = similarity.load_ivf_index(spark, path)
     return postings.groupBy(F.col("cell").cast("bigint").alias("cell")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
@@ -3770,26 +3716,17 @@ def _pq_seeds(corpus) -> list[list[float]]:
 
 def _pq_art_path(sf_dir: str) -> str:
     """Content-addressed location of the fitted PQ codebooks — the
-    ``_ensure_kpi_views`` artifact rule applied to driver-side model
-    state: keyed on the fit implementation + parameters, so any code or
+    ``sources/artifacts.py`` rule applied to driver-side model state:
+    keyed on the fit implementation + parameters, so any code or
     parameter change re-fits instead of serving a stale model."""
-    import hashlib
     import inspect
-    import os
 
     from de_polars_spark.operators import pq as PQ
 
-    cache_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-    )
     impl = inspect.getsource(PQ.fit_pq) + inspect.getsource(_pq_seeds)
-    tag = hashlib.md5(
-        f"{impl}|{_PQ_M}|{_PQ_DSUB}|{_PQ_K}|{_PQ_ITERS}".encode()
-    ).hexdigest()[:8]
-    return os.path.join(
-        cache_dir,
-        f"pq_codebooks_{os.path.basename(os.path.normpath(sf_dir))}_{tag}.json",
+    return artifact_path(
+        "pq_codebooks", sf_dir, f"{impl}|{_PQ_M}|{_PQ_DSUB}|{_PQ_K}|{_PQ_ITERS}",
+        suffix=".json",
     )
 
 
@@ -3810,26 +3747,20 @@ def _ensure_pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     ~1.5s x 3 of identical work per bench run. JSON round-trips Python
     floats exactly (repr), so the loaded model is bit-identical."""
     import json
-    import os
 
     from de_polars_spark.operators import pq as PQ
 
-    path = _pq_art_path(sf_dir)
-    if os.path.exists(path):
-        with open(path) as f:
-            return json.load(f)
-    t = register_testdata(spark, sf_dir)
-    corpus = t["embeddings"]
-    cbs = PQ.fit_pq(
-        corpus, "vec_id", "embedding", _pq_seeds(corpus), _PQ_M, _PQ_DSUB,
-        iterations=_PQ_ITERS,
-    )
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(cbs, f)
-    os.replace(tmp, path)
-    return cbs
+    def build(tmp: str) -> None:
+        corpus = register_testdata(spark, sf_dir)["embeddings"]
+        cbs = PQ.fit_pq(
+            corpus, "vec_id", "embedding", _pq_seeds(corpus), _PQ_M, _PQ_DSUB,
+            iterations=_PQ_ITERS,
+        )
+        with open(tmp, "w") as f:
+            json.dump(cbs, f)
+
+    with open(publish(_pq_art_path(sf_dir), build)) as f:
+        return json.load(f)
 
 
 def _pq_codes(spark: SparkSession, sf_dir: str):

@@ -11,8 +11,8 @@ Exchange, and with sortBy no Sort either). This is the reference's
 "pre-partitioned local data" idea (de_polars/data_partitioner.py)
 expressed in Spark's own storage layer.
 
-Artifacts are content-addressed per (sf_dir, layout version) like the
-KPI/IVF artifacts (inventory/kpi_views.py, inventory/llm_ops.py): the
+Artifacts are content-addressed per (sf_dir, layout version) under the
+cache root of ``sources/artifacts.py``, like the KPI/IVF artifacts: the
 first query in a session pays the build (measured inside bench via the
 ``clear_bucketed_artifacts`` warm-up hook); later joins reuse the
 layout. Data lives under ``.cache/bucketed/`` as external tables —
@@ -28,6 +28,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from de_polars_spark.sources.artifacts import cache_root
 from de_polars_spark.sources.bucketing import write_bucketed
 
 #: bucket count — sized so one bucket of the largest side fits an
@@ -37,11 +38,7 @@ N_BUCKETS = 8
 
 
 def _cache_base() -> str:
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-        "bucketed",
-    )
+    return os.path.join(cache_root(), "bucketed")
 
 
 def _tag(sf_dir: str) -> str:

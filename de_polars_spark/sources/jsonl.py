@@ -29,12 +29,12 @@ back on Spark while the DuckDB oracle reads the SAME files with
 
 from __future__ import annotations
 
-import hashlib
 import inspect
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from de_polars_spark.sources.artifacts import artifact_path, publish
 
 DOCUMENTS_JSONL_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -64,31 +64,19 @@ def write_jsonl(df: DataFrame, path: str) -> None:
 
 def documents_jsonl_dir(sf_dir: str) -> str:
     """Content-addressed artifact path for the documents-as-JSONL fixture
-    (same pattern as the pair-graph / IVF artifacts: corpus basename +
-    implementation hash, so editing the writer invalidates the copy)."""
-    cache_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-    )
-    impl = inspect.getsource(write_jsonl) + DOCUMENTS_JSONL_SCHEMA
-    tag = hashlib.md5(impl.encode()).hexdigest()[:8]
-    return os.path.join(
-        cache_dir,
-        f"documents_jsonl_{os.path.basename(os.path.normpath(sf_dir))}_{tag}",
+    (``sources/artifacts.py``: corpus basename + implementation hash, so
+    editing the writer invalidates the copy)."""
+    return artifact_path(
+        "documents_jsonl", sf_dir,
+        inspect.getsource(write_jsonl) + DOCUMENTS_JSONL_SCHEMA,
     )
 
 
 def ensure_documents_jsonl(spark: SparkSession, sf_dir: str) -> str:
     """Write the documents table as a JSONL artifact once per sf_dir
-    (write-then-rename, interchangeable across concurrent sessions)."""
-    path = documents_jsonl_dir(sf_dir)
-    if not os.path.exists(path):
+    (published, so interchangeable across concurrent sessions)."""
+    def build(tmp: str) -> None:
         df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        tmp = f"{path}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
         write_jsonl(df.select("doc_id", "text", "lang", "source", "n_chars"), tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # another session won the race
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+
+    return publish(documents_jsonl_dir(sf_dir), build)

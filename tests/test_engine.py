@@ -167,3 +167,18 @@ def test_register_json_lines(spark, tmp_path):
     df = engine.register_json("json_table", str(path))
     assert df.count() == 2
     assert spark.sql("SELECT SUM(id) FROM json_table").collect()[0][0] == 3
+
+
+def test_session_size_fits_this_machine(monkeypatch):
+    from de_polars_spark.engine.session import session_size
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    cpus, mem = session_size()
+    assert cpus == len(os.sched_getaffinity(0))
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    assert mem.endswith("m") and 1024 <= int(mem[:-1]) <= max(1024, phys_mb // 2)
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert session_size() == (3, "2g")

@@ -1,20 +1,17 @@
-"""KPI view materialization backends + sf_dir switching.
+"""KPI view materialization + sf_dir switching.
 
-The checkpoint backend (local fast path) and the parquet backend (the
-cluster-safe mode: survives executor loss, no block-storage pinning —
-the reference's own artifact pattern, data_partitioner.py:105-142) must
-serve identical rows. And switching sf_dir A -> B -> A in one session
-must re-register cur_ext + rebuild the views each time, not serve the
-previous dir's data from the session caches.
+The chain pinned as parquet artifacts (the reference's own pattern,
+data_partitioner.py:105-142) must serve the same rows as the virtual
+chain. And switching sf_dir A -> B -> A in one session must re-register
+cur_ext + rebuild the views each time, not serve the previous dir's data
+from the session caches.
 """
 
 from __future__ import annotations
 
-import os
-
-from de_polars_spark.inventory import QUERIES
 from de_polars_spark.inventory import kpi_views as kv
 from de_polars_spark.testing import compare
+from de_polars_spark.views.kpi import register_kpi_views
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
@@ -25,17 +22,22 @@ def _reset(spark):
     kv._CUR_ACTIVE.pop(id(spark), None)
 
 
-def test_kpi_materialize_modes_agree(spark):
-    os.environ["SPARK_GRAFT_KPI_MATERIALIZE"] = "checkpoint"
-    try:
-        via_checkpoint = QUERIES["kpi_view_summary"](spark, SF_A).toPandas()
-    finally:
-        del os.environ["SPARK_GRAFT_KPI_MATERIALIZE"]
+def test_pinned_and_virtual_chains_agree(spark, tmp_path):
     _reset(spark)
-    via_parquet = QUERIES["kpi_view_summary"](spark, SF_A).toPandas()  # default
-    _reset(spark)
-    problems = compare(via_parquet, via_checkpoint)
-    assert not problems, "; ".join(problems)
+    kv._ensure_cur_ext(spark, SF_A)
+    views = ("kpi_tracker", "summary_view")
+
+    register_kpi_views(spark, "cur_ext", kv.NOW_DATE, pin=str(tmp_path / "kpi"))
+    pinned = {v: spark.table(v).toPandas() for v in views}
+    assert (tmp_path / "kpi" / "kpi_tracker").is_dir()
+    register_kpi_views(spark, "cur_ext", kv.NOW_DATE)
+    virtual = {v: spark.table(v).toPandas() for v in views}
+    _reset(spark)  # the session's views no longer match the ready marker
+
+    for v in views:
+        assert len(pinned[v]) > 0, v
+        problems = compare(pinned[v], virtual[v])
+        assert not problems, f"{v}: " + "; ".join(problems)
 
 
 def test_cur_ext_follows_sf_dir_switch(spark):
@@ -77,9 +79,7 @@ def test_rollup_is_incrementally_maintainable(spark):
     from de_polars_spark.testing import compare
 
     kv._ensure_cur_ext(spark, SF_B)
-    for vname, body in kv.VIEW_CHAIN:
-        sql = kv.view_sql(vname, body, "cur_ext", kv.NOW, "spark")
-        spark.sql(f"CREATE OR REPLACE TEMP VIEW {vname} AS {sql}")
+    register_kpi_views(spark, "cur_ext", kv.NOW_DATE)
     full = spark.table("kpi_instance_rollup")
     keys = [
         "billing_period", "payer_account_id", "linked_account_id",
@@ -96,16 +96,7 @@ def test_rollup_is_incrementally_maintainable(spark):
         spark.table("cur_ext").where(
             F.col("billing_period") == m
         ).createOrReplaceTempView("cur_month")
-        for vname, body in kv.VIEW_CHAIN:
-            if vname in ("cur_all", "joined", "kpi_prep",
-                         "kpi_instance_all", "kpi_instance_rollup",
-                         "kpi_instance_mapping"):
-                sql = kv.view_sql(
-                    vname, body,
-                    "cur_month" if vname == "cur_all" else "cur_ext",
-                    kv.NOW, "spark",
-                )
-                spark.sql(f"CREATE OR REPLACE TEMP VIEW {vname} AS {sql}")
+        register_kpi_views(spark, "cur_month", kv.NOW_DATE)
         partials.append(spark.table("kpi_instance_rollup").toPandas())
 
     import pandas as pd
@@ -117,9 +108,7 @@ def test_rollup_is_incrementally_maintainable(spark):
         *[F.sum(c).alias(c) for c in measure_cols]
     )
     # restore the full-table chain for other tests
-    for vname, body in kv.VIEW_CHAIN:
-        sql = kv.view_sql(vname, body, "cur_ext", kv.NOW, "spark")
-        spark.sql(f"CREATE OR REPLACE TEMP VIEW {vname} AS {sql}")
+    register_kpi_views(spark, "cur_ext", kv.NOW_DATE)
 
     full_pdf = full.toPandas()
     merged_pdf = merged.select(*full.columns).toPandas()
