@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from typing import Any, Optional
 
-from de_polars_spark.analytics.base import AnalyticsModule
+from de_polars_spark.analytics.base import AnalyticsModule, RequestError
 
 _HIERARCHY_SQL = """
 WITH account_costs AS (
@@ -213,7 +213,7 @@ class CostAllocation(AnalyticsModule):
         period_filter = ""
         if period is not None:
             if not (len(period) == 7 and period[4] == "-" and period.replace("-", "").isdigit()):
-                raise ValueError(f"period={period!r} must be 'YYYY-MM'")
+                raise RequestError(f"period={period!r} must be 'YYYY-MM'")
             period_filter = f"AND billing_period = '{period}'"
         rows = self._rows(self._sql(_COST_CENTER_SQL, period_filter=period_filter))
         cost_centers = [

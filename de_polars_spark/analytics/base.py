@@ -26,6 +26,11 @@ from de_polars_spark.engine.core import SparkEngine
 _DATE_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
 
 
+class RequestError(ValueError):
+    """A request its parameters or the registered export cannot serve: the
+    client's error, which the API answers with 422, not 500."""
+
+
 class AnalyticsModule:
     def __init__(self, engine: SparkEngine, now: Optional[str] = None):
         if now is not None and not _DATE_RE.match(now):

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from de_polars_spark.analytics.base import AnalyticsModule
+from de_polars_spark.analytics.base import AnalyticsModule, RequestError
 
 _IDLE_SQL = """
 WITH resource_utilization AS (
@@ -206,6 +206,11 @@ class OptimizationEngine(AnalyticsModule):
     def get_vpc_optimization_recommendations(self, min_cost: float = 100.0) -> dict[str, Any]:
         """GET /api/v1/finops/optimization/vpc-charges
         (optimization.py:266-366)."""
+        if "product_location" not in self.engine.spark.table(self.table).columns:
+            raise RequestError(
+                f"VPC charges need the column product_location, which table "
+                f"{self.table} does not have"
+            )
         rows = self._rows(self._sql(_VPC_SQL, min_cost=float(min_cost)))
         analysis, total = [], 0.0
         for r in rows:

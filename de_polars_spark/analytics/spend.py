@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from typing import Any, Optional
 
-from de_polars_spark.analytics.base import AnalyticsModule
+from de_polars_spark.analytics.base import AnalyticsModule, RequestError
 
 _INVOICE_SQL = """
 WITH monthly_spend AS (
@@ -161,7 +161,7 @@ class SpendAnalytics(AnalyticsModule):
         colmap = {"region": "product_region", "service": "product_servicecode"}
         bad = [d for d in dims if d not in colmap]
         if bad:
-            raise ValueError(f"unsupported dimensions {bad}; choose from {list(colmap)}")
+            raise RequestError(f"unsupported dimensions {bad}; choose from {list(colmap)}")
         select = ", ".join(f"{colmap[d]} AS {d}" for d in dims) or "'All' AS dimension"
         group = ", ".join(colmap[d] for d in dims)
         sql = f"""

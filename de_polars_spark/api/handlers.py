@@ -5,20 +5,35 @@ Each handler returns a JSON-serializable dict; errors raise ``ApiError``
 with an HTTP status. The FastAPI wrapper (fastapi_app.py here) maps these
 1:1 onto routes; tests drive the handlers directly so the full serving
 contract is exercised without the optional web dependency.
+
+Every GET route but ``health`` and ``root`` answers from a response memo
+when it can: dashboard users repeat the same GETs. The key is the handler,
+its bound arguments and ``FinOpsEngine.data_version()`` (the CUR files'
+manifest and the effective date), so new data or a new day is a new key;
+nothing expires on a timer. POST routes are never memoized: ad-hoc SQL can
+read temp views the key does not version.
 """
 
 from __future__ import annotations
 
+import copy
+import functools
+import inspect
 import io
-import re
+import threading
 import time
-from typing import Any, Optional
+from collections import OrderedDict
+from typing import Any, Callable, Optional
 
+from de_polars_spark.analytics.base import RequestError
 from de_polars_spark.client import FinOpsEngine
 
 DEFAULT_LIMIT = 1000
 MAX_LIMIT = 10_000
 MAX_SQL_LENGTH = 10_000
+#: responses the memo keeps (least recently used out first); a dashboard
+#: session repeats a handful of distinct GETs
+MEMO_SIZE = 64
 
 
 class ApiError(Exception):
@@ -57,6 +72,62 @@ class FinOpsHandlers:
 
     def __init__(self, engine: FinOpsEngine):
         self.engine = engine
+        self._memo: OrderedDict = OrderedDict()
+        self._memo_lock = threading.Lock()
+        self.memo_hits = self.memo_misses = 0
+        for (method, _), name in ROUTES.items():
+            if name not in ("health", "root"):
+                setattr(self, name, self._route(name, getattr(self, name), method == "GET"))
+
+    def memo_info(self) -> dict:
+        return {"hits": self.memo_hits, "misses": self.memo_misses,
+                "size": len(self._memo), "maxsize": MEMO_SIZE}
+
+    def _route(self, name: str, fn: Callable, memoize: bool) -> Callable:
+        """``fn`` with request errors answered as 422 and, for GET routes,
+        its responses memoized under ``(name, bound arguments, data
+        version)``. A hit returns a deep copy; exceptions, and responses
+        that report a swallowed failure (a top-level ``error``), are never
+        stored. Two concurrent misses may both compute; both answers are
+        right."""
+        sig = inspect.signature(fn)
+
+        def call(*args, **kwargs):
+            try:
+                return fn(*args, **kwargs)
+            except RequestError as exc:
+                raise ApiError(422, str(exc)) from exc
+
+        @functools.wraps(fn)
+        def route(*args, **kwargs):
+            if not memoize:
+                return call(*args, **kwargs)
+            bound = sig.bind(*args, **kwargs)
+            bound.apply_defaults()
+            version = self.engine.data_version()
+            if version is None:
+                return call(*args, **kwargs)
+            key = (name, tuple(bound.arguments.items()), version)
+            with self._memo_lock:
+                hit = self._memo.get(key)
+                if hit is not None:
+                    self._memo.move_to_end(key)
+                    self.memo_hits += 1
+                else:
+                    self.memo_misses += 1
+            if hit is not None:
+                return copy.deepcopy(hit)
+            result = call(*args, **kwargs)
+            if not (isinstance(result, dict) and "error" in result):
+                stored = copy.deepcopy(result)
+                with self._memo_lock:
+                    self._memo[key] = stored
+                    self._memo.move_to_end(key)
+                    while len(self._memo) > MEMO_SIZE:
+                        self._memo.popitem(last=False)
+            return result
+
+        return route
 
     # ------------------------------------------------------------------ #
     # health / root (fastapi_app.py:95-115)                               #
@@ -103,8 +174,8 @@ class FinOpsHandlers:
 
         Validation is the engine's parser-based allow-list
         (SparkEngine.validate_select_only) instead of the reference's
-        keyword regex; LIMIT injection applies the row cap via a real
-        ``.limit()`` when the text has none (default 1000, max 10000)."""
+        keyword regex; the row cap is always a real ``.limit()`` on the
+        result (default 1000, at most 10000), whatever LIMIT the text has."""
         started = time.time()
         if not sql or not sql.strip():
             raise ApiError(400, "sql must be a non-empty string")
@@ -133,10 +204,7 @@ class FinOpsHandlers:
 
         try:
             df = self.engine.query(sql, force_s3=force_s3)
-            has_limit = re.search(r"\bLIMIT\b", sql, re.IGNORECASE)
-            if limit and not has_limit:
-                df = df.limit(limit)
-            pdf = df.toPandas()
+            pdf = df.limit(min(limit or MAX_LIMIT, MAX_LIMIT)).toPandas()
         except ApiError:
             raise
         except Exception as exc:

@@ -13,12 +13,13 @@ the tail of the TPC-H shipdate range deterministically.
 
 from __future__ import annotations
 
+import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from de_polars_spark.inventory.dialect_macros import render
-from de_polars_spark.sources.artifacts import artifact_path, publish
+from de_polars_spark.sources.artifacts import artifact_path, manifest_tag, publish
 from de_polars_spark.sources.registry import register_testdata
 from de_polars_spark.views.kpi import (
     VIEW_CHAIN,
@@ -180,18 +181,25 @@ cur AS (
 #: production, where CUR is a parquet table at rest, not a per-query
 #: expression. The synthesis is deterministic, so the artifact is safe to
 #: reuse across sessions.
-#: id(spark) -> (sf_dir currently registered as ``cur_ext``, parquet path).
-#: Keyed by the ACTIVE sf_dir, not an accumulating set: switching sf_dir
-#: A -> B -> A in one session must re-register the temp view each time,
-#: or cur_ext keeps serving the previous dir's data (registry.py handles
-#: the base tables' switch-back; this cache must too).
-_CUR_ACTIVE: dict[int, tuple[str, str]] = {}
+#: id(spark) -> ((sf_dir, lineitem manifest) currently registered as
+#: ``cur_ext``, parquet path). Keyed by the ACTIVE input, not an
+#: accumulating set: switching sf_dir A -> B -> A in one session, or
+#: rewriting A's lineitem, must re-register the temp view each time, or
+#: cur_ext keeps serving the previous data (registry.py handles the base
+#: tables' switch-back; this cache must too).
+_CUR_ACTIVE: dict[int, tuple[tuple[str, str], str]] = {}
+
+
+def _lineitem_tag(sf_dir: str) -> str:
+    """File manifest of the one table ``CUR_EXT_CTE`` reads."""
+    return manifest_tag([os.path.join(sf_dir, "lineitem.parquet")])
 
 
 def _ensure_cur_ext(spark: SparkSession, sf_dir: str) -> str:
     """Materialize + register the synthetic CUR; returns the parquet path."""
+    source = (sf_dir, _lineitem_tag(sf_dir))
     active = _CUR_ACTIVE.get(id(spark))
-    if active is not None and active[0] == sf_dir:
+    if active is not None and active[0] == source:
         return active[1]
     register_testdata(spark, sf_dir)
 
@@ -204,36 +212,39 @@ def _ensure_cur_ext(spark: SparkSession, sf_dir: str) -> str:
         # determinism contract), so the round-robin shuffle is safe.
         df.repartition(spark.sparkContext.defaultParallelism).write.parquet(tmp)
 
-    # content-addressed so editing the synthesis CTE invalidates the
-    # artifact; "|layout=par" versions the FILE LAYOUT — the original
+    # content-addressed so editing the synthesis CTE or lineitem invalidates
+    # the artifact; "|layout=par" versions the FILE LAYOUT — the original
     # single-file write made every downstream view's 600k-row projection
     # run on ONE core (40 MB file < maxPartitionBytes = one scan task),
     # which WAS the KPI wave's critical path (cur_all stage 6.2s -> ~1s
     # after parallelizing the layout; r5 wave shave)
     path = publish(
-        artifact_path("cur_ext", sf_dir, CUR_EXT_CTE, "|layout=par", suffix=".parquet"),
+        artifact_path("cur_ext", sf_dir, CUR_EXT_CTE, "|layout=par", source[1],
+                      suffix=".parquet"),
         build,
     )
     spark.read.parquet(path).createOrReplaceTempView("cur_ext")
-    if active is not None:
-        # sf_dir switched: the materialized KPI views were built over the
-        # previous cur_ext and would serve stale data — force a rebuild
-        _KPI_VIEWS_READY.pop(spark.sparkContext.applicationId, None)
-    _CUR_ACTIVE[id(spark)] = (sf_dir, path)
+    # any views materialized before were built over another cur_ext (or
+    # none) and would serve stale data — force a rebuild
+    _KPI_VIEWS_READY.pop(spark.sparkContext.applicationId, None)
+    _CUR_ACTIVE[id(spark)] = (source, path)
     return path
 
 
 #: applicationId -> sf_dir whose views are CURRENTLY materialized (a dict,
-#: not an accumulating set, so an sf_dir switch-back forces a rebuild)
+#: not an accumulating set, so an sf_dir switch-back forces a rebuild).
+#: ``_ensure_cur_ext`` clears it whenever it re-registers ``cur_ext``, so it
+#: also follows the input's manifest.
 _KPI_VIEWS_READY: dict[str, str] = {}
 
 
 def _kpi_artifact_dir(sf_dir: str) -> str:
-    # content-addressed over the whole chain: editing any view SQL (or the
-    # CUR synthesis) invalidates the artifacts
+    # content-addressed over the whole chain and its input: editing any
+    # view SQL, the CUR synthesis or lineitem invalidates the artifacts
     return artifact_path(
         "kpi_views", sf_dir, CUR_EXT_CTE, NOW,
         *(view_sql(v, b, "cur_ext", NOW, "spark") for v, b in VIEW_CHAIN),
+        _lineitem_tag(sf_dir),
     )
 
 

@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from de_polars_spark.sources.artifacts import manifest_tag
+
 #: range-probe sample: error only skews bucket SIZES (load balance),
 #: never the computed ranks
 _BOUNDS_SAMPLE = 0.02
@@ -63,7 +65,7 @@ _BOUNDS_SEED = 421
 #: process (e.g. a median pass and a quantile profile over the same
 #: table/keys/value) pass ``probe_memo_key`` to pay the two probe jobs
 #: once. The operators append keys, value column, bucket count AND a
-#: file-manifest fingerprint of the input (``_manifest_tag``), so a
+#: file-manifest fingerprint of the input files (``manifest_tag``), so a
 #: caller that mutates the table between calls gets a fresh probe, not
 #: a stale memo — the caller's key is a logical label only. Driver state is the same
 #: G + G x B rows the probe already collects — memoizing adds no new
@@ -79,28 +81,6 @@ def clear_probe_memo() -> None:
     _PROBE_MEMO.clear()
 
 
-def _manifest_tag(df: DataFrame) -> str:
-    """Content fingerprint of the frame's input files (URI, size, mtime).
-
-    Appended to every probe memo key so the memo invalidates itself when
-    the underlying table changes: the caller's ``probe_memo_key`` is a
-    logical label, not a freshness proof. ``inputFiles()`` is driver-side
-    metadata (no job); a non-local URI that cannot be ``stat``-ed
-    contributes its path alone, which still beats keying on nothing."""
-    import hashlib
-    import os
-
-    parts = []
-    for uri in sorted(df.inputFiles()):
-        path = uri[5:] if uri.startswith("file:") else uri
-        try:
-            st = os.stat(path)
-            parts.append(f"{uri}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            parts.append(uri)
-    return hashlib.md5("\n".join(parts).encode()).hexdigest()
-
-
 def _default_buckets(df: DataFrame) -> int:
     return max(32, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
 
@@ -114,7 +94,7 @@ def _memo_key(
         return None
     return (
         f"{prefix}|{kind}|{','.join(keys)}|{value_col}"
-        f"|B={n_buckets}|{_manifest_tag(df)}"
+        f"|B={n_buckets}|{manifest_tag(df.inputFiles())}"
     )
 
 

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from de_polars_spark.sources.artifacts import manifest_tag
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -27,13 +29,14 @@ TESTDATA_TABLES = (
 )
 
 
-#: app id -> (sf_dir, registered frames); tables are registered once per
-#: session (the engine design — SURVEY.md §3.1 "register once, not per
-#: query"), so the 72-query inventory doesn't pay 10 parquet footer reads
-#: + view registrations per query. Keyed on the LAST dir registered: temp
-#: view names are shared, so switching sf_dir must re-register, and a
-#: cached result is only valid while its dir is the one the views see.
-_REGISTERED: dict[str, tuple[str, dict[str, DataFrame]]] = {}
+#: app id -> ((sf_dir, manifest), registered frames); tables are registered
+#: once per session (the engine design — SURVEY.md §3.1 "register once, not
+#: per query"), so the 72-query inventory doesn't pay 10 parquet footer
+#: reads + view registrations per query. Keyed on the LAST dir registered
+#: and its file manifest: temp view names are shared, so switching sf_dir
+#: must re-register, and a view keeps the file listing it was created with,
+#: so a file rewritten under the same dir must re-register too.
+_REGISTERED: dict[str, tuple[tuple[str, str], dict[str, DataFrame]]] = {}
 
 
 def register_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -45,8 +48,9 @@ def register_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     DuckDB oracle) ingest the same file.
     """
     key = spark.sparkContext.applicationId
+    source = (sf_dir, manifest_tag([sf_dir]))
     cached = _REGISTERED.get(key)
-    if cached is not None and cached[0] == sf_dir:
+    if cached is not None and cached[0] == source:
         return cached[1]
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     out: dict[str, DataFrame] = {}
@@ -59,5 +63,5 @@ def register_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         df.createOrReplaceTempView(name)
         out[name] = df
-    _REGISTERED[key] = (sf_dir, out)
+    _REGISTERED[key] = (source, out)
     return out

@@ -16,12 +16,7 @@ from de_polars_spark.utils.formatters import (
     format_relative_date,
     get_date_range_description,
 )
-from de_polars_spark.utils.performance import (
-    CacheManager,
-    QueryProfiler,
-    cache_manager,
-    query_profiler,
-)
+from de_polars_spark.utils.performance import QueryProfiler, query_profiler
 from de_polars_spark.utils.validators import (
     validate_cost_data,
     validate_date_range,
@@ -41,9 +36,7 @@ __all__ = [
     "format_relative_date",
     "get_date_range_description",
     "QueryProfiler",
-    "CacheManager",
     "query_profiler",
-    "cache_manager",
     "validate_cost_data",
     "validate_date_range",
     "validate_local_path",

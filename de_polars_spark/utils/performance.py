@@ -1,10 +1,9 @@
-"""Query profiling and TTL result caching (reference
-de_polars/utils/performance.py:11-281).
+"""Query profiling (reference de_polars/utils/performance.py:11-137).
 
-Driver-side utilities; the Spark-side complement for hot data is
-``CACHE TABLE`` / ``df.persist()`` (engine concern, not handled here —
-see SparkEngine). Both classes are thread-safe, matching the reference's
-lock discipline, because FastAPI serves them from worker threads.
+Driver-side and thread-safe, matching the reference's lock discipline,
+because FastAPI serves it from worker threads. The reference's TTL result
+cache is not carried over: the API's response memo (api/handlers.py) is
+invalidated by the data, not by a timer.
 """
 
 from __future__ import annotations
@@ -12,8 +11,8 @@ from __future__ import annotations
 import functools
 import threading
 import time
-from datetime import datetime, timedelta
-from typing import Any, Callable, Optional
+from datetime import datetime
+from typing import Callable
 
 
 class QueryProfiler:
@@ -122,81 +121,5 @@ class QueryProfiler:
             }
 
 
-class CacheManager:
-    """In-memory TTL cache for query results (performance.py:140-277)."""
-
-    def __init__(self, default_ttl: int = 300) -> None:
-        self.default_ttl = default_ttl
-        self._cache: dict[str, tuple[Any, datetime]] = {}
-        self._lock = threading.Lock()
-
-    def get(self, key: str) -> Optional[Any]:
-        with self._lock:
-            entry = self._cache.get(key)
-            if entry is None:
-                return None
-            value, expiry = entry
-            if datetime.now() < expiry:
-                return value
-            del self._cache[key]
-            return None
-
-    def set(self, key: str, value: Any, ttl: int | None = None) -> None:
-        expiry = datetime.now() + timedelta(seconds=ttl or self.default_ttl)
-        with self._lock:
-            self._cache[key] = (value, expiry)
-
-    def invalidate(self, key: str) -> bool:
-        with self._lock:
-            return self._cache.pop(key, None) is not None
-
-    def clear(self) -> None:
-        with self._lock:
-            self._cache.clear()
-
-    def cleanup_expired(self) -> int:
-        now = datetime.now()
-        with self._lock:
-            stale = [k for k, (_, exp) in self._cache.items() if now >= exp]
-            for key in stale:
-                del self._cache[key]
-        return len(stale)
-
-    def get_stats(self) -> dict:
-        with self._lock:
-            now = datetime.now()
-            expired = sum(1 for _, exp in self._cache.values() if now >= exp)
-            return {
-                "total_entries": len(self._cache),
-                "active_entries": len(self._cache) - expired,
-                "expired_entries": expired,
-                "default_ttl": self.default_ttl,
-            }
-
-    def cache_result(self, ttl: int | None = None):
-        """Decorator memoizing by function + arguments (performance.py:249-276).
-        Note: a cached value of ``None`` is indistinguishable from a miss,
-        as in the reference."""
-
-        def decorator(func: Callable) -> Callable:
-            @functools.wraps(func)
-            def wrapper(*args, **kwargs):
-                key = (
-                    f"{func.__module__}.{func.__name__}:"
-                    f"{hash(str(args) + str(sorted(kwargs.items())))}"
-                )
-                hit = self.get(key)
-                if hit is not None:
-                    return hit
-                result = func(*args, **kwargs)
-                self.set(key, result, ttl)
-                return result
-
-            return wrapper
-
-        return decorator
-
-
 #: module-level conveniences (performance.py:280-281)
 query_profiler = QueryProfiler()
-cache_manager = CacheManager()

@@ -11,9 +11,14 @@ from __future__ import annotations
 
 import pytest
 
-from de_polars_spark.api.handlers import ApiError, FinOpsHandlers, ROUTES
+import os
+import shutil
+import threading
+
+from de_polars_spark.api import handlers as handlers_module
+from de_polars_spark.api.handlers import MAX_LIMIT, ApiError, FinOpsHandlers, ROUTES
 from de_polars_spark.client import FinOpsEngine
-from de_polars_spark.config import DataConfig
+from de_polars_spark.config import DataConfig, DataExportType
 
 
 @pytest.fixture(scope="module")
@@ -100,6 +105,21 @@ class TestSqlEndpoint:
             "SELECT line_item_resource_id FROM CUR LIMIT 3", limit=1000
         )
         assert out["row_count"] == 3
+
+    def test_row_cap_holds_whatever_limit_the_text_has(self, handlers):
+        # a LIMIT in the text, however large or wherever it sits, used to
+        # lift the cap on the collect
+        out = handlers.sql_query(
+            "SELECT line_item_resource_id FROM CUR LIMIT 10000000", limit=5
+        )
+        assert out["row_count"] == 5
+        out = handlers.sql_query(
+            "SELECT * FROM (SELECT line_item_resource_id FROM CUR LIMIT 100000) t",
+            limit=4,
+        )
+        assert out["row_count"] == 4
+        out = handlers.sql_query("SELECT id FROM range(20000)", limit=None)
+        assert out["row_count"] == MAX_LIMIT
 
     @pytest.mark.parametrize(
         "bad",
@@ -213,6 +233,22 @@ class TestOtherRouters:
         out = handlers.mcp_query("how can I optimize and save money")
         assert out["parsed_intent"]["intent"] == "optimization"
 
+    @pytest.mark.parametrize(
+        "route, kwargs, needle",
+        [
+            ("allocation_cost_center_breakdown", {"period": "2024-1"}, "YYYY-MM"),
+            ("spend_breakdown", {"dimensions": "region,bogus"}, "bogus"),
+            ("optimization_vpc_charges", {}, "product_location"),
+        ],
+    )
+    def test_request_errors_are_422_and_not_memoized(self, handlers, route, kwargs, needle):
+        size = handlers.memo_info()["size"]
+        with pytest.raises(ApiError) as err:
+            getattr(handlers, route)(**kwargs)
+        assert err.value.status_code == 422
+        assert needle in str(err.value.detail)
+        assert handlers.memo_info()["size"] == size
+
     def test_route_census(self, handlers):
         # every declared route resolves to a real handler method
         for (method, path), attr in ROUTES.items():
@@ -229,16 +265,16 @@ class TestStdlibLauncher:
     """start_api.py's fallback server: the route table over real HTTP."""
 
     @pytest.fixture(scope="class")
-    def server(self, finops):
+    def served(self, finops):
+        return FinOpsHandlers(finops)
+
+    @pytest.fixture(scope="class")
+    def server(self, served):
         import start_api as launcher
 
         httpd = __import__("http.server", fromlist=["ThreadingHTTPServer"])
         srv = httpd.ThreadingHTTPServer(
-            ("127.0.0.1", 0), launcher.make_handler_class(
-                __import__(
-                    "de_polars_spark.api.handlers", fromlist=["FinOpsHandlers"]
-                ).FinOpsHandlers(finops)
-            ),
+            ("127.0.0.1", 0), launcher.make_handler_class(served),
         )
         import threading
 
@@ -276,6 +312,37 @@ class TestStdlibLauncher:
         with pytest.raises(urllib.error.HTTPError) as ei:
             urllib.request.urlopen(req, timeout=60)
         assert ei.value.code in (400, 403, 422)
+
+
+    @pytest.mark.parametrize(
+        "path, needle",
+        [
+            ("allocation/cost-center-breakdown?period=2024-1", "YYYY-MM"),
+            ("spend/breakdown?dimensions=bogus", "bogus"),
+            ("optimization/vpc-charges", "product_location"),
+        ],
+    )
+    def test_client_errors_are_422_over_http(self, server, served, path, needle):
+        import json
+        import urllib.error
+        import urllib.request
+
+        size = served.memo_info()["size"]
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            urllib.request.urlopen(f"{server}/api/v1/finops/{path}", timeout=60)
+        assert ei.value.code == 422
+        assert needle in json.loads(ei.value.read())["detail"]
+        assert served.memo_info()["size"] == size
+
+    def test_repeated_get_is_served_from_the_memo(self, server, served):
+        import json
+        import urllib.request
+
+        url = f"{server}/api/v1/finops/spend/regions/top?limit=3"
+        first = json.loads(urllib.request.urlopen(url, timeout=60).read())
+        hits = served.memo_info()["hits"]
+        assert json.loads(urllib.request.urlopen(url, timeout=60).read()) == first
+        assert served.memo_info()["hits"] == hits + 1
 
 
 class TestFastApiRouteParity:
@@ -346,3 +413,163 @@ class TestAnalyticsEdgeGuard:
         big = spark.range(AnalyticsModule.MAX_EDGE_ROWS + 7).toDF("id")
         with pytest.raises(ValueError, match="API edge cap"):
             AnalyticsModule._rows(big)
+
+
+# ---------------------------------------------------------------------- #
+# the GET response memo over a hive CUR directory that changes            #
+# ---------------------------------------------------------------------- #
+HELD_OUT = "billing_period=1998-09"
+
+
+@pytest.fixture(scope="module")
+def cur_partitions(spark, sf_dir, tmp_path_factory):
+    """Two years of the synthetic CUR as a hive ``billing_period=YYYY-MM``
+    dataset, one directory per month as an export lands."""
+    from de_polars_spark.inventory.kpi_views import _ensure_cur_ext
+
+    out = str(tmp_path_factory.mktemp("cur") / "staged")
+    (spark.read.parquet(_ensure_cur_ext(spark, sf_dir))
+     .where("billing_period BETWEEN '1997-01' AND '1998-12'")
+     .repartition("billing_period").write.partitionBy("billing_period").parquet(out))
+    return out
+
+
+@pytest.fixture()
+def cur_root(cur_partitions, tmp_path):
+    """A served CUR root holding every staged month but ``HELD_OUT``."""
+    root = str(tmp_path / "cur")
+    os.makedirs(root)
+    for name in os.listdir(cur_partitions):
+        if name.startswith("billing_period=") and name != HELD_OUT:
+            shutil.copytree(os.path.join(cur_partitions, name), os.path.join(root, name))
+    return root
+
+
+@pytest.fixture(autouse=False)
+def memo_engines(spark):
+    """Engines over ``memo_cur``; afterwards the KPI view chain, which these
+    register over their data, is marked stale for the inventory queries."""
+    from de_polars_spark.inventory import kpi_views as kv
+
+    def serve(root: str, now: str | None = "1998-10-01") -> FinOpsHandlers:
+        return FinOpsHandlers(FinOpsEngine(
+            DataConfig(export_type=DataExportType.FOCUS_1_0, local_data_path=root,
+                       table_name="memo_cur"),
+            spark=spark, now=now,
+        ))
+
+    yield serve
+    kv._KPI_VIEWS_READY.pop(spark.sparkContext.applicationId, None)
+
+
+def _part_file(root: str, partition: str) -> str:
+    d = os.path.join(root, partition)
+    return os.path.join(d, next(n for n in sorted(os.listdir(d)) if n.endswith(".parquet")))
+
+
+def _crc(path: str) -> str:
+    return os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+
+
+class TestResponseMemo:
+    def test_hit_equals_a_fresh_answer_and_is_a_private_copy(self, memo_engines, cur_root):
+        h = memo_engines(cur_root)
+        first = h.spend_top_regions(limit=3)
+        first["regions"].clear()  # the caller's copy, not the memo's
+        hit = h.spend_top_regions(3)  # positional binds to the same entry
+        assert h.memo_info() == {"hits": 1, "misses": 1, "size": 1,
+                                 "maxsize": handlers_module.MEMO_SIZE}
+        assert hit == h.engine.spend.get_top_regions(limit=3) and hit["regions"]
+        hit["regions"].clear()
+        assert h.spend_top_regions(limit=3)["regions"]
+        # an omitted default and the explicit default share one entry
+        h.spend_top_services()
+        h.spend_top_services(limit=10)
+        assert h.memo_info()["hits"] == 3 and h.memo_info()["size"] == 2
+
+    def test_appended_billing_period_changes_the_answer(self, memo_engines, cur_root,
+                                                        cur_partitions):
+        h = memo_engines(cur_root)
+        before = h.spend_invoice_summary()
+        assert h.spend_invoice_summary() == before
+        shutil.copytree(os.path.join(cur_partitions, HELD_OUT),
+                        os.path.join(cur_root, HELD_OUT))
+        after = h.spend_invoice_summary()
+        assert after != before
+        assert "1998-09" in [t["month"] for t in after["trend_data"]]
+        assert "1998-09" not in [t["month"] for t in before["trend_data"]]
+        n = h.engine.query("SELECT COUNT(*) FROM memo_cur").first()[0]
+        assert n == h.engine.spark.read.parquet(cur_root).count()
+
+    def test_file_rewritten_in_place_changes_the_answer(self, memo_engines, cur_root):
+        h = memo_engines(cur_root)
+        before = h.spend_invoice_summary()
+        # August's file replaced by July's rows, under August's file name
+        # (with its checksum, as a writer would leave it)
+        src = _part_file(cur_root, "billing_period=1998-07")
+        dst = _part_file(cur_root, "billing_period=1998-08")
+        for a, b in ((src, dst), (_crc(src), _crc(dst))):
+            shutil.copyfile(a, b)
+        after = h.spend_invoice_summary()
+        assert after != before
+        assert "1998-08" not in [t["month"] for t in after["trend_data"]]
+
+    def test_kpi_summary_reflects_new_data(self, memo_engines, cur_root, cur_partitions):
+        h = memo_engines(cur_root)
+        period = HELD_OUT.split("=")[1]
+        assert h.kpi_summary(billing_period=period)["summary_metadata"]["records_analyzed"] == 0
+        shutil.copytree(os.path.join(cur_partitions, HELD_OUT),
+                        os.path.join(cur_root, HELD_OUT))
+        assert h.kpi_summary(billing_period=period)["summary_metadata"]["records_analyzed"] > 0
+
+    def test_lru_evicts_the_least_recently_used_past_the_bound(
+            self, memo_engines, cur_root, monkeypatch):
+        monkeypatch.setattr(handlers_module, "MEMO_SIZE", 2)
+        h = memo_engines(cur_root)
+        h.mcp_tools()
+        h.mcp_resources()
+        h.mcp_tools()  # hit: mcp_resources is now the oldest
+        h.sql_tables()  # third entry evicts mcp_resources
+        assert h.memo_info()["size"] == 2
+        misses = h.memo_info()["misses"]
+        h.mcp_tools()
+        h.sql_tables()
+        assert h.memo_info()["misses"] == misses
+        h.mcp_resources()
+        assert h.memo_info()["misses"] == misses + 1
+
+    def test_racing_requests_agree_and_store_one_entry(self, memo_engines, cur_root):
+        h = memo_engines(cur_root)
+        n = 4
+        start = threading.Barrier(n)
+        answers, errors = [], []
+
+        def run():
+            try:
+                start.wait(timeout=30)
+                answers.append(h.spend_top_services(limit=3))
+            except Exception as exc:  # surfaced below
+                errors.append(exc)
+
+        threads = [threading.Thread(target=run) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not errors, errors
+        assert len(answers) == n and all(a == answers[0] for a in answers)
+        assert h.memo_info()["size"] == 1
+
+    def test_non_local_root_bypasses_the_memo(self, memo_engines, cur_root):
+        h = memo_engines(cur_root)
+        # as after a force_s3 request: the table's root is an object store
+        h.engine.engine._registered["memo_cur"] = "s3a://finops-bucket/cur"
+        assert h.engine.data_version() is None
+        assert h.mcp_tools() == h.mcp_tools()
+        assert h.memo_info() == {"hits": 0, "misses": 0, "size": 0,
+                                 "maxsize": handlers_module.MEMO_SIZE}
+
+    def test_unpinned_version_is_the_session_date(self, memo_engines, cur_root, spark):
+        h = memo_engines(cur_root, now=None)
+        _, today = h.engine.data_version()
+        assert today == spark.sql("SELECT CAST(current_date() AS STRING)").first()[0]

@@ -125,6 +125,45 @@ def test_only_the_artifacts_module_builds_cache_paths():
     assert not offenders, offenders
 
 
+def test_only_the_artifacts_module_fingerprints_files():
+    """Guard: a file's modification time is read only by
+    ``sources/artifacts.manifest_tag``, so every data-versioned key (the
+    API response memo, the quantile probe memo, the KPI artifacts) shares
+    one fingerprint instead of a hand-rolled copy."""
+    stat_times = {"st_mtime", "st_mtime_ns", "st_ctime", "st_ctime_ns",
+                  "getmtime", "getctime"}
+    offenders = []
+    for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True):
+        if os.path.relpath(path, PKG) == os.path.join("sources", "artifacts.py"):
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        offenders += [
+            f"{os.path.relpath(path, PKG)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute) and node.attr in stat_times
+        ]
+    assert not offenders, offenders
+
+
+def test_manifest_tag_follows_the_files(tmp_path):
+    from de_polars_spark.sources.artifacts import manifest_tag
+
+    root = tmp_path / "cur"
+    _write_dir(str(root))
+    tag = manifest_tag([str(root)])
+    assert manifest_tag([f"file:{root}"]) != tag  # the URI text is keyed too
+    assert manifest_tag([str(root)]) == tag
+    (root / "part-3").write_text("appended\n")
+    appended = manifest_tag([str(root)])
+    assert appended != tag
+    (root / "part-0").write_text("rewritten in place\n")
+    assert manifest_tag([str(root)]) != appended
+    assert manifest_tag([str(root / "part-0")]) != manifest_tag([str(root / "part-1")])
+    # a URI that cannot be stat-ed still gets a stable tag
+    assert manifest_tag(["s3a://bucket/cur"]) == manifest_tag(["s3a://bucket/cur"])
+
+
 @pytest.fixture()
 def clean_artifacts():
     L.clear_dedup_pair_artifacts(SF)

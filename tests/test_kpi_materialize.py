@@ -66,6 +66,36 @@ def test_kpi_views_rebuilt_on_sf_dir_switch(spark):
     _reset(spark)
 
 
+def test_kpi_artifacts_follow_a_rewritten_lineitem(spark, tmp_path):
+    """The synthetic CUR and the pinned views are keyed by the input's file
+    manifest: rewriting lineitem under the same sf_dir must rebuild them,
+    not serve the old answer."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from de_polars_spark.sources.artifacts import cache_root
+
+    sf = tmp_path / f"sf-{tmp_path.name}"
+    sf.mkdir()
+    shutil.copy(os.path.join(SF_A, "lineitem.parquet"), sf)
+    query = kv.QUERIES["kpi_view_summary"]
+    _reset(spark)
+    try:
+        before = query(spark, str(sf)).toPandas()
+        table = pq.read_table(sf / "lineitem.parquet")
+        pq.write_table(table.slice(0, table.num_rows // 2), sf / "lineitem.parquet")
+        after = query(spark, str(sf)).toPandas()
+    finally:
+        _reset(spark)
+        for path in glob.glob(os.path.join(cache_root(), f"*_{sf.name}_*")):
+            shutil.rmtree(path, ignore_errors=True)
+    assert len(before) > 0 and len(after) > 0
+    assert compare(before, after), "kpi_view_summary still serves the old lineitem"
+
+
 def test_rollup_is_incrementally_maintainable(spark):
     """The rollup grain's DECIMAL(38,8) partials merge EXACTLY: computing
     the rollup per billing_period and re-aggregating the partials equals

@@ -10,7 +10,6 @@ from datetime import datetime
 import pytest
 
 from de_polars_spark.utils import (
-    CacheManager,
     DataExporter,
     QueryProfiler,
     ReportGenerator,
@@ -223,29 +222,3 @@ class TestPerformance:
         summary = prof.get_performance_summary()
         assert summary["total_queries"] == 2
         assert summary["success_rate"] == pytest.approx(66.7, abs=0.1)
-
-    def test_cache(self):
-        cache = CacheManager(default_ttl=60)
-        cache.set("k", "v")
-        assert cache.get("k") == "v"
-        assert cache.invalidate("k") and cache.get("k") is None
-        # ttl=0 falls back to the default (reference performance.py:184
-        # `ttl or self.default_ttl` quirk — kept for parity)
-        cache.set("short", 1, ttl=0)
-        assert cache.get("short") == 1
-        # force expiry: backdate the stored deadline
-        value, _ = cache._cache["short"]
-        cache._cache["short"] = (value, datetime(2000, 1, 1))
-        assert cache.get("short") is None
-        assert cache.cleanup_expired() == 0  # get() already evicted it
-        calls = []
-
-        @cache.cache_result()
-        def expensive(x):
-            calls.append(x)
-            return x * 2
-
-        assert expensive(2) == 4 and expensive(2) == 4
-        assert calls == [2]
-        stats = cache.get_stats()
-        assert stats["default_ttl"] == 60
