@@ -1,9 +1,10 @@
 """Benchmark harness — times the full operator inventory on Spark.
 
-Runs every ``queries()`` entry at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+Runs every ``queries()`` entry at ``$SPARK_GRAFT_SF_DIR`` (default: the
+sf0.1 test data) on ``local[N]`` (N and the driver heap from
+``engine.session.session_size``) and prints ONE JSON line:
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {name: sec},
+"sf": ...}.
 
 Timing covers the full query lifecycle: plan construction + execution +
 result collection (results are small aggregates; collect cost is the
@@ -52,7 +53,9 @@ def _steal_jiffies() -> int | None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from de_polars_spark.engine.session import session_size
+
+    cpus, driver_mem = session_size()
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
     calibration = _cpu_calibration()
@@ -73,7 +76,7 @@ def main() -> None:
         # +20s of pure jitter on the wave when it lands at position ~80
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # same raise as tools/audit_plans.py: at sf1 the exact n-gram
         # anchor's AQE broadcast build serializes ~1047 MiB of task
         # results — flaky against the 1 GiB default cap (observed r7:

@@ -40,15 +40,30 @@ nested ``array<...>`` of those. Anything else (maps, structs, decimals,
 dates) raises ``TypeError`` — keep using ``createDataFrame`` there.
 Row count is capped (default 10 000): this is a driver-state channel,
 not a data-ingest path.
+
+The same renderer, :func:`sql_literal`, also serves EXPRESSION literals:
+:func:`literal_column` parses one rendered value (scalars, nested
+arrays, and ``dict`` -> ``named_struct``) as one ``Column``. Operators
+use it for their constant driver-side data (IVF centroid tables, MinHash
+seed suffixes, stopword lists): building the same constant from
+``F.lit`` per element costs ~3 py4j round trips PER ELEMENT (an
+8-centroid x 64-d table built that way was ~3,300 round trips per
+expression), while one parsed literal costs a constant handful whatever
+its size. Catalyst folds the parsed ``array(...)``/``named_struct(...)``
+into one ``Literal``, and the doubles are bit-exact for the same reason
+as above (also fuzz-tested in expression context). The text holds only
+literals, never a caller's ``Column``: a column's SQL rendering does
+not quote identifiers.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-__all__ = ["values_df"]
+__all__ = ["literal_column", "sql_literal", "values_df"]
 
 _SCALAR_TYPES = {
     "bigint",
@@ -101,8 +116,11 @@ def _split_schema(schema: str) -> list[tuple[str, str]]:
     return cols
 
 
-def _literal(v) -> str:
-    """One value as a Spark SQL literal, exact under re-parse."""
+def sql_literal(v) -> str:
+    """One value as a Spark SQL literal, exact under re-parse.
+
+    Lists and tuples render as ``array(...)``, dicts (string keys, in
+    insertion order) as ``named_struct(...)``."""
     if v is None:
         return "NULL"
     # bool before int: bool is an int subclass
@@ -126,11 +144,18 @@ def _literal(v) -> str:
         escaped = v.replace("\\", "\\\\").replace("'", "\\'")
         return f"'{escaped}'"
     if isinstance(v, (list, tuple)):
-        return f"array({', '.join(_literal(x) for x in v)})"
+        return f"array({', '.join(sql_literal(x) for x in v)})"
+    if isinstance(v, dict):
+        fields = []
+        for name, x in v.items():
+            if not isinstance(name, str):
+                raise TypeError(f"struct field names must be str, got {name!r}")
+            fields += [sql_literal(name), sql_literal(x)]
+        return f"named_struct({', '.join(fields)})"
     # numpy scalars and other exotica: refuse rather than guess — a
     # float32 rendered as its repr would NOT round-trip the caller's
     # intent, and silent coercion here would corrupt oracle hashes
-    raise TypeError(f"values_df cannot render {type(v).__name__!r} literals")
+    raise TypeError(f"sql_literal cannot render {type(v).__name__!r} literals")
 
 
 def values_df(
@@ -175,12 +200,20 @@ def values_df(
             *[_null_col(typ).alias(name) for name, typ in cols]
         )
     tuples = ", ".join(
-        "(" + ", ".join(_literal(v) for v in row) + ")" for row in rows
+        "(" + ", ".join(sql_literal(v) for v in row) + ")" for row in rows
     )
     return spark.sql(f"SELECT {projection} FROM VALUES {tuples}")
 
 
-def _null_col(typ: str):
-    from pyspark.sql import functions as F
+def literal_column(v, typ: str | None = None) -> Column:
+    """One driver-side constant as ONE parsed literal expression.
 
+    A constant number of py4j round trips whatever the size of ``v``
+    (see module doc). ``typ`` casts the literal (e.g. ``array<int>``:
+    integers render as BIGINT)."""
+    text = sql_literal(v)
+    return F.expr(text if typ is None else f"CAST({text} AS {typ})")
+
+
+def _null_col(typ: str):
     return F.lit(None).cast(typ)

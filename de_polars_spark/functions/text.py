@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from de_polars_spark.functions.local_relation import literal_column
+
 #: regex with no backslash escapes — identical source text works in both
 #: Spark (Java regex) and DuckDB (RE2)
 WORDLIKE_PATTERN = "[A-Za-z0-9]+|[^A-Za-z0-9 ]"
@@ -38,29 +40,35 @@ def hash60(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Stopword-overlap score per language."""
-    toks = tokens(text)
-
-    def count_sw(sw: tuple[str, ...]) -> Column:
-        return F.size(F.filter(toks, lambda t: t.isin(*sw)))
-
-    return {lang: count_sw(sw) for lang, sw in STOPWORDS.items()}
+def _stopword_count(toks: Column, words: Column) -> Column:
+    """Number of tokens found in the array column ``words``."""
+    return F.size(F.filter(toks, lambda t: F.array_contains(words, t)))
 
 
 def predict_lang(text: Column) -> Column:
     """argmax language by stopword overlap; 'und' when all scores are 0.
 
     Deterministic tie-break: languages checked in sorted order, strict
-    greater-than required to displace the current best."""
-    scores = lang_scores(text)
-    best_lang, best_score = F.lit("und"), F.lit(0)
-    for lang in sorted(scores):
-        s = scores[lang]
-        is_better = s > best_score
-        best_lang = F.when(is_better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(is_better, s).otherwise(best_score)
-    return best_lang
+    greater-than required to displace the current best. The stopword
+    table is one parsed literal (``literal_column``) and the argmax one
+    fold over it: the build costs the same py4j round trips for any
+    number of languages and words, and each score is evaluated once per
+    row (an unrolled CASE chain repeats each score ~2^n times in the
+    expression tree)."""
+    toks = tokens(text)
+    table = literal_column(
+        [{"lang": lang, "words": list(STOPWORDS[lang])} for lang in sorted(STOPWORDS)]
+    )
+    scores = F.transform(
+        table,
+        lambda row: F.struct(
+            row["lang"].alias("lang"), _stopword_count(toks, row["words"]).alias("s")
+        ),
+    )
+    start = literal_column({"lang": "und", "s": 0}, "struct<lang:string,s:int>")
+    return F.aggregate(
+        scores, start, lambda best, x: F.when(x["s"] > best["s"], x).otherwise(best)
+    )["lang"]
 
 
 def quality_features(text: Column) -> dict[str, Column]:
@@ -70,7 +78,7 @@ def quality_features(text: Column) -> dict[str, Column]:
     n_distinct = F.size(F.array_distinct(toks))
     n_chars = F.length(text)
     n_punct = F.size(F.regexp_extract_all(text, F.lit("[^A-Za-z0-9 ]"), 0))
-    en_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS["en"])))
+    en_stop = _stopword_count(toks, literal_column(STOPWORDS["en"]))
     return {
         "n_tokens": n_tok,
         "n_chars": n_chars,

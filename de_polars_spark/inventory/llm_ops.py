@@ -1770,28 +1770,12 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned, cents = kmeans_iterations(
         emb, "vec_id", "embedding", seeds, iterations=_KM_ITERS
     )
+    # squared norms folded driver-side, one VALUES row per centroid
     norms = values_df(
-        spark, [(cid,) for cid in range(_KM_K)], "cid int"
-    ).select(
-        "cid",
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.array(
-                        *[
-                            F.when(F.col("cid") == c, F.lit(float(v)))
-                            .otherwise(F.lit(0.0))
-                            for c, cent in enumerate(cents)
-                            for v in [sum(x * x for x in cent)]
-                        ]
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-            6,
-        ).alias("centroid_norm"),
-    )
+        spark,
+        [(cid, float(sum(x * x for x in cent))) for cid, cent in enumerate(cents)],
+        "cid int, sq double",
+    ).select("cid", F.round(F.sqrt("sq"), 6).alias("centroid_norm"))
     summary = assigned.groupBy("cid").agg(
         F.count("*").alias("n_members"),
         F.sum("vec_id").alias("id_sum"),
@@ -3163,22 +3147,36 @@ def _fit_km_centroids(corpus) -> list:
     return list(enumerate(cents))
 
 
+def _ivf_index_impl() -> tuple:
+    """Every function whose source shapes the cached IVF index.
+
+    The tag must cover the FULL impl chain: _fit_km_centroids delegates
+    the centroid math to kmeans_iterations (and its _with_assignment
+    helper), and _centroid_scores to the vector folds, the driver-side
+    norm and the literal renderer — editing any of them must invalidate
+    the cached index, not serve a stale one (ADVICE r4)."""
+    from de_polars_spark.functions import local_relation as _lr
+    from de_polars_spark.functions import vectors as _vx
+    from de_polars_spark.operators import kmeans as _km
+
+    return (
+        similarity.build_ivf_index,
+        similarity._centroid_scores,
+        similarity._py_norm,
+        _vx.dot,
+        _vx.norm,
+        _lr.literal_column,
+        _lr.sql_literal,
+        _fit_km_centroids,
+        _km.kmeans_iterations,
+        _km._with_assignment,
+    )
+
+
 def _ivf_index_dir(sf_dir: str) -> str:
     import inspect
 
-    # the tag must cover the FULL impl chain that shapes the artifact:
-    # _fit_km_centroids delegates the centroid math to kmeans_iterations
-    # (and its _with_assignment helper) — editing either must invalidate
-    # the cached index, not serve a stale one (ADVICE r4)
-    from de_polars_spark.operators import kmeans as _km
-
-    impl = (
-        inspect.getsource(similarity.build_ivf_index)
-        + inspect.getsource(similarity._centroid_scores)
-        + inspect.getsource(_fit_km_centroids)
-        + inspect.getsource(_km.kmeans_iterations)
-        + inspect.getsource(_km._with_assignment)
-    )
+    impl = "".join(inspect.getsource(f) for f in _ivf_index_impl())
     return artifact_path("ivf_index", sf_dir, f"{impl}|{_KM_K}|{_KM_ITERS}")
 
 

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from de_polars_spark.functions import text as TX
 from de_polars_spark.functions import vectors as VX
+from de_polars_spark.functions.local_relation import literal_column, sql_literal
 
 #: Production default for every pair generator's bucket cap: a bucket
 #: of B ids emits B^2/2 candidate pairs, so uncapped banding is
@@ -157,14 +158,37 @@ def _minhash_sig_df(
     the doc's grams — MIN over the repeated gram stream equals MIN over
     the distinct set, so no dedup pass is needed. One map-side-combinable
     groupBy; same values as the interpreted per-row array-fold form this
-    replaced (seeded md5 minima over the distinct shingle set)."""
+    replaced (seeded md5 minima over the distinct shingle set).
+
+    The ``n_hashes`` aggregates are ONE parsed expression, a struct of
+    MINs over the internal ``__g`` column with the seed suffixes as
+    literals, so building it costs the same py4j round trips for any
+    ``n_hashes``; the struct is built once per doc after the aggregation
+    and unpacked by the projection above it."""
     grams = _gram_strings(df, id_col, text_col, shingle_n)
-    return grams.groupBy(id_col).agg(
-        *[
-            F.min(F.md5(F.concat(F.col("__g"), F.lit(f"#{i}")))).alias(f"mh{i}")
-            for i in range(n_hashes)
-        ]
+    slots = ", ".join(
+        f"'mh{i}', min(md5(concat(__g, {sql_literal(f'#{i}')})))"
+        for i in range(n_hashes)
     )
+    return (
+        grams.groupBy(id_col)
+        .agg(F.expr(f"named_struct({slots})").alias("__mh"))
+        .select(id_col, "__mh.*")
+    )
+
+
+def _band_structs(slot: str, n_bands: int, band_size: int) -> Column:
+    """``array(named_struct('band_id', b, 'band_key', md5(concat(<band
+    b's signature slots>))), ..)`` as one parsed expression: constant
+    py4j cost for any band count. ``slot`` formats slot ``i`` (0-based)
+    as SQL over the operator's OWN signature columns, never a caller's."""
+    bands = ", ".join(
+        f"named_struct('band_id', {sql_literal(b)}, 'band_key', md5(concat("
+        + ", ".join(slot.format(i=b * band_size + j) for j in range(band_size))
+        + ")))"
+        for b in range(n_bands)
+    )
+    return F.expr(f"array({bands})")
 
 
 def minhash_lsh_pairs(
@@ -191,21 +215,13 @@ def minhash_lsh_pairs(
     assert n_hashes % band_size == 0
     n_bands = n_hashes // band_size
     sig = _minhash_sig_df(df, id_col, text_col, n_hashes, shingle_n)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(
-                F.concat(
-                    *[F.col(f"mh{b * band_size + j}") for j in range(band_size)]
-                )
-            ).alias("band_key"),
-        )
-        for b in range(n_bands)
-    ]
     # docs with no shingles are already absent from sig (the gram
     # explode emits nothing for them), so no NULL-key filter is needed
     bands = (
-        sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("band"))
+        sig.select(
+            F.col(id_col),
+            F.explode(_band_structs("mh{i}", n_bands, band_size)).alias("band"),
+        )
         .select(id_col, "band.band_id", "band.band_key")
     )
     buckets = bands.groupBy("band_id", "band_key").agg(
@@ -362,7 +378,9 @@ def simhash_hamming_pairs(
     # seconds at sf1).
     chunks = clusters.select(
         "simhash",
-        F.explode(F.array(*[F.lit(i) for i in range(n_chunks)])).alias("chunk_idx"),
+        F.explode(literal_column(list(range(n_chunks)), "array<int>")).alias(
+            "chunk_idx"
+        ),
     ).select(
         "simhash",
         "chunk_idx",
@@ -906,29 +924,23 @@ def minhash_estimate_pairs(
         _minhash_sig_df(df, id_col, text_col, n_hashes, shingle_n)
         .select(
             F.col(id_col),
-            F.array(*[F.col(f"mh{i}") for i in range(n_hashes)]).alias("__sig"),
+            F.expr(
+                f"array({', '.join(f'mh{i}' for i in range(n_hashes))})"
+            ).alias("__sig"),
         )
         .persist()
     )
     _PERSISTED.append(sig)
 
-    n_bands = n_hashes // band_size
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(
-                F.concat(
-                    *[
-                        F.element_at("__sig", b * band_size + j + 1)
-                        for j in range(band_size)
-                    ]
-                )
-            ).alias("band_key"),
-        )
-        for b in range(n_bands)
-    ]
     bands = (
-        sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("band"))
+        sig.select(
+            F.col(id_col),
+            F.explode(
+                _band_structs(
+                    "element_at(__sig, {i} + 1)", n_hashes // band_size, band_size
+                )
+            ).alias("band"),
+        )
         .select(id_col, "band.band_id", "band.band_key")
     )
     buckets = bands.groupBy("band_id", "band_key").agg(

@@ -12,10 +12,12 @@
 - ``ivf_topk``: the other classic scale path (IVF — inverted file index).
   A small centroid set partitions the corpus into cells; each query only
   scores the ``nprobe`` nearest cells. Cell assignment here is map-only:
-  the centroids are baked into the plan as literal arrays (they are by
-  construction tiny — the whole point of a coarse quantizer), so the
-  corpus is never shuffled for assignment, and the candidate join keys on
-  the cell id exactly like the LSH variant. At 100 TB you would fit the
+  the centroid table (ids, vectors, driver-folded norms) enters the plan
+  as ONE parsed literal array of structs (it is by construction tiny —
+  the whole point of a coarse quantizer — and one literal crosses py4j
+  in a constant number of round trips whatever its size), so the corpus
+  is never shuffled for assignment, and the candidate join keys on the
+  cell id exactly like the LSH variant. At 100 TB you would fit the
   centroids with k-means (e.g. one MLlib pass over a sample) and persist
   the assigned corpus partitioned by cell; the deterministic sample-fit
   used here keeps the operator oracle-checkable.
@@ -27,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from de_polars_spark.functions import vectors as VX
-from de_polars_spark.functions.local_relation import values_df
+from de_polars_spark.functions.local_relation import literal_column, values_df
 
 
 #: DataFrames persisted by operators in this module (the margin miner's
@@ -114,8 +116,13 @@ def _centroid_scores(
 
     Struct comparison is lexicographic on (cos, cid), so ``sort_array``
     descending orders by cosine DESC then cid DESC — mirror that tiebreak
-    in any oracle. Centroid vectors are plan literals: per-row work is
-    ``nlist`` dot-product folds, no join, no shuffle.
+    in any oracle. The centroid table is one plan literal,
+    ``array(named_struct('cid', .., 'v', array(..), 'n', ..), ..)``
+    (``literal_column``: the build costs the same py4j round trips for
+    any nlist and dimension), and the expression is
+    ``sort_array(transform(table, c -> struct(dot(vec, c.v) / (vn * c.n)
+    AS cos, c.cid AS cid)), false)``: per-row work is ``nlist``
+    dot-product folds over the same doubles, no join, no shuffle.
 
     ``vnorm``: the (attribute) column holding ``VX.norm(vec)``. Passing
     it drops the per-centroid recomputation of the row norm (nlist folds
@@ -123,14 +130,22 @@ def _centroid_scores(
     the centroid norms are folded driver-side (``_py_norm``) — together
     the per-row fold count falls from 3x nlist to nlist."""
     vn = VX.norm(vec) if vnorm is None else vnorm
-    entries = []
-    for cid, cvec in centroids:
-        arr = F.array(*[F.lit(float(x)) for x in cvec])
-        cos = VX.dot(vec, arr) / (vn * F.lit(_py_norm(cvec)))
-        entries.append(
-            F.struct(cos.alias("cos"), F.lit(int(cid)).cast("bigint").alias("cid"))
-        )
-    return F.sort_array(F.array(*entries), asc=False)
+    table = literal_column(
+        [
+            {"cid": int(cid), "v": [float(x) for x in cvec], "n": _py_norm(cvec)}
+            for cid, cvec in centroids
+        ]
+    )
+    return F.sort_array(
+        F.transform(
+            table,
+            lambda c: F.struct(
+                (VX.dot(vec, c["v"]) / (vn * c["n"])).alias("cos"),
+                c["cid"].alias("cid"),
+            ),
+        ),
+        asc=False,
+    )
 
 
 def ivf_topk(
@@ -146,9 +161,9 @@ def ivf_topk(
 
     ``centroids`` is a list of ``(cid, vector)`` pairs — the fitted coarse
     quantizer (driver-side; tiny by design). Corpus rows are assigned to
-    their nearest centroid's cell (map-only, centroids inlined as plan
-    literals); each query probes its ``nprobe`` nearest cells and scores
-    only the candidates inside them."""
+    their nearest centroid's cell (map-only, the centroid table inlined as
+    one plan literal); each query probes its ``nprobe`` nearest cells and
+    scores only the candidates inside them."""
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), VX.as_double(F.col(vec_col)).alias("cv")
     )

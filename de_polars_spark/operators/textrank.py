@@ -28,6 +28,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from de_polars_spark.functions.local_relation import literal_column
+
 
 def _tokens(text_col: str) -> F.Column:
     return F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
@@ -215,7 +217,7 @@ def vocab_coverage(
     # a vocabulary smaller than K must still produce a row: the cut rank
     # is min(K, |vocab|). nv is an aggregate over the <=kmax top rows.
     nv = top.agg(F.max("rank").alias("__nv"))
-    cuts = F.array(*[F.lit(int(k)) for k in ks])
+    cuts = literal_column([int(k) for k in ks], "array<int>")
     return (
         top.crossJoin(total)
         .crossJoin(nv)

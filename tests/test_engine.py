@@ -182,3 +182,18 @@ def test_session_size_fits_this_machine(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     assert session_size() == (3, "2g")
+
+
+@pytest.mark.parametrize(
+    "script",
+    ["bench.py", "tools/audit_plans.py", "tools/dump_plans.py", "tools/profile_phases.py"],
+)
+def test_scripts_take_their_session_size_from_session_size(script):
+    # one sizing rule: the scripts must not hard-code their own default
+    # cores or driver heap next to session_size's
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, script)) as fh:
+        src = fh.read()
+    assert "cpus, driver_mem = session_size()" in src
+    for var in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"):
+        assert f'os.environ.get("{var}"' not in src, var

@@ -9,15 +9,20 @@ import random
 import struct
 
 import pytest
+from pyspark.sql import functions as F
 
-from de_polars_spark.functions.local_relation import values_df
+from de_polars_spark.functions.local_relation import (
+    literal_column,
+    sql_literal,
+    values_df,
+)
 
 
 def _rows(df):
     return sorted(map(str, df.collect()))
 
 
-def test_double_bit_exact_fuzz(spark):
+def _fuzz_doubles() -> list[float]:
     # raw 64-bit patterns -> doubles: the harshest round-trip corpus
     rng = random.Random(0xC0FFEE)
     vals = []
@@ -25,14 +30,55 @@ def test_double_bit_exact_fuzz(spark):
         v = struct.unpack("d", struct.pack("Q", rng.getrandbits(64)))[0]
         if not (math.isnan(v) or math.isinf(v)):
             vals.append(v)
-    vals += [0.0, -0.0, 5e-324, -5e-324, 1.7976931348623157e308, 1e-300]
+    return vals + [0.0, -0.0, 5e-324, -5e-324, 1.7976931348623157e308, 1e-300]
+
+
+def _same_bits(want: list[float], got: list[float]) -> None:
+    assert len(want) == len(got)
+    for w, g in zip(want, got):
+        assert struct.pack("d", w) == struct.pack("d", g), (w, g)
+
+
+def test_double_bit_exact_fuzz(spark):
+    vals = _fuzz_doubles()
     rows = [(i, v) for i, v in enumerate(vals)]
     got = values_df(spark, rows, "i bigint, v double").collect()
-    for (_, want), row in zip(rows, sorted(got, key=lambda r: r["i"])):
-        assert struct.pack("d", want) == struct.pack("d", row["v"]), (
-            want,
-            row["v"],
-        )
+    _same_bits(vals, [r["v"] for r in sorted(got, key=lambda r: r["i"])])
+
+
+def test_double_bit_exact_fuzz_in_expression_context(spark):
+    # the same renderer parsed as an expression literal (F.expr), not as
+    # VALUES rows: a flat array, each value as its own scalar literal,
+    # and values nested in a struct inside an array
+    vals = _fuzz_doubles()
+    one = spark.range(1)
+    _same_bits(vals, one.select(F.expr(sql_literal(vals))).first()[0])
+    scalars = one.select(*[F.expr(sql_literal(v)) for v in vals[:64]]).first()
+    _same_bits(vals[:64], list(scalars))
+    table = literal_column([{"i": i, "v": [v, -v]} for i, v in enumerate(vals)])
+    got = one.select(table).first()[0]
+    assert [r["i"] for r in got] == list(range(len(vals)))
+    _same_bits([x for v in vals for x in (v, -v)], [x for r in got for x in r["v"]])
+
+
+def test_literal_column_types_and_cast(spark):
+    row = spark.range(1).select(
+        literal_column([1, 2]).alias("a"),
+        literal_column([1, 2], "array<int>").alias("b"),
+        literal_column({"s": "it's", "d": 0.5, "n": None}).alias("c"),
+        literal_column(("x", "y")).alias("d"),
+    )
+    assert row.dtypes == [
+        ("a", "array<bigint>"),
+        ("b", "array<int>"),
+        ("c", "struct<s:string,d:double,n:void>"),
+        ("d", "array<string>"),
+    ]
+    got = row.first()
+    assert (got["a"], got["b"], got["d"]) == ([1, 2], [1, 2], ["x", "y"])
+    assert got["c"].asDict() == {"s": "it's", "d": 0.5, "n": None}
+    with pytest.raises(TypeError, match="field names must be str"):
+        sql_literal({1: 2})
 
 
 def test_special_doubles(spark):

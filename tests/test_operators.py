@@ -148,6 +148,22 @@ def test_text_functions(spark):
     assert row["fp"] is not None
 
 
+def test_predict_lang_tie_break_and_no_match(spark):
+    # languages are tried in sorted order and only a strictly higher score
+    # displaces the best: 'der' (de) and 'the' (en) tie, so de keeps it;
+    # 'la la' scores 2 for es and fr, so es; no stopword, empty and NULL
+    # text are 'und'
+    df = spark.createDataFrame(
+        [(0, "der the"), (1, "the der la la"), (2, "xyz"), (3, ""), (4, None)],
+        "i int, t string",
+    )
+    got = {
+        r["i"]: r["lang"]
+        for r in df.select("i", T.predict_lang(F.col("t")).alias("lang")).collect()
+    }
+    assert got == {0: "de", 1: "es", 2: "und", 3: "und", 4: "und"}
+
+
 def test_fingerprint_is_word_order_insensitive(spark):
     df = spark.createDataFrame(
         [("alpha beta gamma", "gamma alpha beta")], ["t1", "t2"]

@@ -168,14 +168,16 @@ def audit(name: str, df) -> dict:
 def main() -> None:
     from pyspark.sql import SparkSession
 
-    # mirror bench.py's session shape (local[$SPARK_GRAFT_CPUS], shuffle
-    # partitions = cpus): AQE finalizes join strategies from runtime
+    # mirror bench.py's session shape (local[cpus], shuffle partitions =
+    # cpus, both from session_size): AQE finalizes join strategies from runtime
     # partition stats, so an audit session shaped differently from the
     # bench session audits DIFFERENT plans than the ones measured — at
     # sf1 the 8-partition shape even flipped a verification join to a
     # broadcast whose array-heavy build OOM'd while the bench shape ran
     # the same query clean
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from de_polars_spark.engine.session import session_size
+
+    cpus, driver_mem = session_size()
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("de_polars_spark-plan-audit")
@@ -185,10 +187,7 @@ def main() -> None:
         # artifact-building query constructors (pair graph, KPI wave,
         # IVF index) execute real jobs before the plan is explained —
         # at sf1 those OOM the 1g default heap
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
+        .config("spark.driver.memory", driver_mem)
         # audit() executes each plan (AQE finalizes strategies at
         # runtime); at sf1 a broadcast-side build can exceed the 1g
         # default result cap mid-session even when the query's own

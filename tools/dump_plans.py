@@ -6,8 +6,9 @@ Usage:
 Executes each query first (AQE finalizes join strategies at runtime,
 matching tools/audit_plans.py), then writes the FINAL formatted plan to
 ``<out>/<name>_<suffix>.txt``. Session shape mirrors bench.py
-(local[$SPARK_GRAFT_CPUS], shuffle partitions = cpus) so the dumped
-plans are the plans the bench measures.
+(local[N], shuffle partitions = N, N and the driver heap from
+``engine.session.session_size``) so the dumped plans are the plans the
+bench measures.
 """
 
 from __future__ import annotations
@@ -37,17 +38,16 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from de_polars_spark.engine.session import session_size
+
+    cpus, driver_mem = session_size()
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("de_polars_spark-plan-dump")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
+        .config("spark.driver.memory", driver_mem)
         .config("spark.driver.maxResultSize", "4g")
         .getOrCreate()
     )

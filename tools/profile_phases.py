@@ -37,7 +37,9 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from de_polars_spark.engine.session import session_size
+
+    cpus, driver_mem = session_size()
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("de_polars_spark-phase-profile")
@@ -47,7 +49,7 @@ def main() -> None:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.driver.maxResultSize", "4g")
         .getOrCreate()
     )
