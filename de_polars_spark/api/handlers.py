@@ -6,34 +6,46 @@ with an HTTP status. The FastAPI wrapper (fastapi_app.py here) maps these
 1:1 onto routes; tests drive the handlers directly so the full serving
 contract is exercised without the optional web dependency.
 
-Every GET route but ``health`` and ``root`` answers from a response memo
-when it can: dashboard users repeat the same GETs. The key is the handler,
-its bound arguments and ``FinOpsEngine.data_version()`` (the CUR files'
-manifest and the effective date), so new data or a new day is a new key;
-nothing expires on a timer. POST routes are never memoized: ad-hoc SQL can
-read temp views the key does not version.
+Every GET route but ``health`` and ``root``, and ad-hoc SQL, answer from
+one response memo when they can: dashboard users repeat the same requests.
+A GET is keyed by the handler, its bound arguments and
+``FinOpsEngine.data_version()`` (the CUR files' manifest and the effective
+date), so new data or a new day is a new key; nothing expires on a timer.
+A SQL statement is keyed by Spark's optimized plan, the manifest of every
+file root it reads, the session's SQL conf and its output schema
+(``FinOpsHandlers._sql_key``). The other POST routes are never memoized.
 """
 
 from __future__ import annotations
 
 import copy
 import functools
+import hashlib
 import inspect
 import io
+import json
 import threading
 import time
 from collections import OrderedDict
 from typing import Any, Callable, Optional
+from urllib.parse import urlsplit
 
 from de_polars_spark.analytics.base import RequestError
 from de_polars_spark.client import FinOpsEngine
+from de_polars_spark.sources.artifacts import manifest_tag
 
 DEFAULT_LIMIT = 1000
 MAX_LIMIT = 10_000
 MAX_SQL_LENGTH = 10_000
 #: responses the memo keeps (least recently used out first); a dashboard
-#: session repeats a handful of distinct GETs
+#: session repeats a handful of distinct GETs and SQL statements
 MEMO_SIZE = 64
+#: plan leaves a memoized statement may read: a file scan, versioned by the
+#: manifest of its roots, and leaves whose rows are in the plan itself
+_FILE_SCAN = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_FILES = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+_PURE_LEAVES = {f"org.apache.spark.sql.catalyst.plans.logical.{n}"
+                for n in ("LocalRelation", "OneRowRelation", "Range")}
 
 
 class ApiError(Exception):
@@ -44,6 +56,28 @@ class ApiError(Exception):
         super().__init__(str(detail))
         self.status_code = status_code
         self.detail = detail
+
+
+class _SameResult:
+    """A plan in a memo key: hashed by its ``semanticHash``, equal to any
+    plan it ``sameResult``s with, so the hash only picks the bucket."""
+
+    __slots__ = ("plan", "_hash")
+
+    def __init__(self, plan):
+        self.plan = plan
+        self._hash = plan.semanticHash()
+
+    def __hash__(self) -> int:
+        return self._hash
+
+    def __eq__(self, other) -> bool:
+        return isinstance(other, _SameResult) and self.plan.sameResult(other.plan)
+
+
+def _seq(seq) -> list:
+    """A Scala ``Seq`` behind py4j as a Python list."""
+    return [seq.apply(i) for i in range(seq.size())]
 
 
 def _classify_error(message: str) -> str:
@@ -67,6 +101,18 @@ def _classify_error(message: str) -> str:
     return "EXECUTION_ERROR"
 
 
+def _result_part(pdf, format: str) -> dict:
+    """The part of a SQL answer the memo keeps: rows, dtypes, row count."""
+    if format.lower() == "csv":
+        buf = io.StringIO()
+        pdf.to_csv(buf, index=False)
+        data: Any = buf.getvalue()
+    else:
+        data = json.loads(pdf.to_json(orient="records", date_format="iso"))
+    schema = {c: str(t) for c, t in zip(pdf.columns, pdf.dtypes)}
+    return {"data": data, "schema": schema, "row_count": len(pdf)}
+
+
 class FinOpsHandlers:
     """All routes over one FinOpsEngine (the app factory's engine)."""
 
@@ -75,6 +121,9 @@ class FinOpsHandlers:
         self._memo: OrderedDict = OrderedDict()
         self._memo_lock = threading.Lock()
         self.memo_hits = self.memo_misses = 0
+        # resolved once: a py4j class lookup costs a round trip per package
+        trees = engine.spark._jvm.org.apache.spark.sql.catalyst.trees
+        self._clock = trees.TreePattern.CURRENT_LIKE()
         for (method, _), name in ROUTES.items():
             if name not in ("health", "root"):
                 setattr(self, name, self._route(name, getattr(self, name), method == "GET"))
@@ -83,13 +132,34 @@ class FinOpsHandlers:
         return {"hits": self.memo_hits, "misses": self.memo_misses,
                 "size": len(self._memo), "maxsize": MEMO_SIZE}
 
+    def _memo_get(self, key) -> Optional[Any]:
+        """A deep copy of the answer stored under ``key``, or ``None``;
+        counts a hit or a miss."""
+        with self._memo_lock:
+            hit = self._memo.get(key)
+            if hit is not None:
+                self._memo.move_to_end(key)
+                self.memo_hits += 1
+            else:
+                self.memo_misses += 1
+        return None if hit is None else copy.deepcopy(hit)
+
+    def _memo_put(self, key, value) -> None:
+        """Store a deep copy of ``value`` under ``key``, evicting the least
+        recently used entries past ``MEMO_SIZE``."""
+        stored = copy.deepcopy(value)
+        with self._memo_lock:
+            self._memo[key] = stored
+            self._memo.move_to_end(key)
+            while len(self._memo) > MEMO_SIZE:
+                self._memo.popitem(last=False)
+
     def _route(self, name: str, fn: Callable, memoize: bool) -> Callable:
         """``fn`` with request errors answered as 422 and, for GET routes,
         its responses memoized under ``(name, bound arguments, data
-        version)``. A hit returns a deep copy; exceptions, and responses
-        that report a swallowed failure (a top-level ``error``), are never
-        stored. Two concurrent misses may both compute; both answers are
-        right."""
+        version)``. Exceptions, and responses that report a swallowed
+        failure (a top-level ``error``), are never stored. Two concurrent
+        misses may both compute; both answers are right."""
         sig = inspect.signature(fn)
 
         def call(*args, **kwargs):
@@ -108,23 +178,12 @@ class FinOpsHandlers:
             if version is None:
                 return call(*args, **kwargs)
             key = (name, tuple(bound.arguments.items()), version)
-            with self._memo_lock:
-                hit = self._memo.get(key)
-                if hit is not None:
-                    self._memo.move_to_end(key)
-                    self.memo_hits += 1
-                else:
-                    self.memo_misses += 1
+            hit = self._memo_get(key)
             if hit is not None:
-                return copy.deepcopy(hit)
+                return hit
             result = call(*args, **kwargs)
             if not (isinstance(result, dict) and "error" in result):
-                stored = copy.deepcopy(result)
-                with self._memo_lock:
-                    self._memo[key] = stored
-                    self._memo.move_to_end(key)
-                    while len(self._memo) > MEMO_SIZE:
-                        self._memo.popitem(last=False)
+                self._memo_put(key, result)
             return result
 
         return route
@@ -175,7 +234,16 @@ class FinOpsHandlers:
         Validation is the engine's parser-based allow-list
         (SparkEngine.validate_select_only) instead of the reference's
         keyword regex; the row cap is always a real ``.limit()`` on the
-        result (default 1000, at most 10000), whatever LIMIT the text has."""
+        result (default 1000, at most 10000), whatever LIMIT the text has.
+
+        A statement that passes the guard is parsed, analyzed and optimized
+        on every request; its rows come from the response memo when
+        ``_sql_key`` gives a key that is stored, and then no Spark job
+        runs. ``data_version()`` runs first, so a changed CUR is registered
+        again before the statement is planned. ``force_s3``, a CUR root
+        that is not local, a ``data_version()`` that fails and a statement
+        ``_sql_key`` refuses are answered fresh; errors are never stored.
+        The metadata and timing are each request's own."""
         started = time.time()
         if not sql or not sql.strip():
             raise ApiError(400, "sql must be a non-empty string")
@@ -202,9 +270,19 @@ class FinOpsHandlers:
                 },
             )
 
+        cap = min(limit or MAX_LIMIT, MAX_LIMIT)
+        try:
+            version = None if force_s3 else self.engine.data_version()
+        except Exception:
+            version = None
         try:
             df = self.engine.query(sql, force_s3=force_s3)
-            pdf = df.limit(min(limit or MAX_LIMIT, MAX_LIMIT)).toPandas()
+            key = self._sql_key(df, cap, format) if version else None
+            part = self._memo_get(key) if key else None
+            if part is None:
+                part = _result_part(df.limit(cap).toPandas(), format)
+                if key:
+                    self._memo_put(key, part)
         except ApiError:
             raise
         except Exception as exc:
@@ -218,16 +296,6 @@ class FinOpsHandlers:
                     "query_metadata": self._error_metadata(sql, started),
                 },
             )
-
-        if format.lower() == "csv":
-            buf = io.StringIO()
-            pdf.to_csv(buf, index=False)
-            data: Any = buf.getvalue()
-        else:
-            import json
-
-            data = json.loads(pdf.to_json(orient="records", date_format="iso"))
-        schema = {c: str(t) for c, t in zip(pdf.columns, pdf.dtypes)}
         return {
             "success": True,
             "query_metadata": {
@@ -244,11 +312,55 @@ class FinOpsHandlers:
                 "format": format,
                 "limit_applied": limit,
             },
-            "data": data,
-            "schema": schema,
-            "row_count": len(pdf),
+            **part,
             "execution_time_ms": round((time.time() - started) * 1000, 2),
         }
+
+    def _sql_key(self, df, cap: int, format: str) -> Optional[tuple]:
+        """The memo key of ``df``'s capped answer, or ``None`` when it must
+        be computed fresh.
+
+        The key holds the OPTIMIZED plan, compared with ``sameResult`` (the
+        analyzer has seeded ``rand()`` and the like into it), and the
+        output schema, since equal plans may name their columns apart.
+        Refused: a plan or subquery that is not deterministic, a statement
+        that reads the clock, and any leaf but a file scan, a
+        ``LocalRelation``, a ``OneRowRelation`` or a ``Range`` (not an RDD,
+        a cached table, a DSv2 source or a shared CTE), since only those
+        are versioned. Plans over the same file roots are equal whatever
+        the files hold, so the key holds the roots' ``manifest_tag``, and
+        the bytes in each scan's file listing: that listing is the one
+        taken when the table was registered, so files that land after it
+        give another key once the table is listed again. The session's SQL
+        conf is digested: not every conf that changes an answer shows in
+        the plan (``timeParserPolicy``)."""
+        qe = df._jdf.queryExecution()
+        plan, analyzed = qe.optimizedPlan(), qe.analyzed()
+        plans = [plan, *_seq(plan.subqueriesAll())]
+        if not all(p.deterministic() for p in plans):
+            return None
+        if any(p.containsPattern(self._clock)
+               for p in [analyzed, *_seq(analyzed.subqueriesAll())]):
+            return None
+        roots: list[str] = []
+        listed: list[int] = []
+        for leaf in (leaf for p in plans for leaf in _seq(p.collectLeaves())):
+            kind = leaf.getClass().getName()
+            if kind == _FILE_SCAN:
+                relation = leaf.relation()
+                if relation.getClass().getName() != _FILES:
+                    return None
+                location = relation.location()
+                roots += location.rootPaths().mkString("\n").split("\n")
+                listed.append(location.sizeInBytes())
+            elif kind not in _PURE_LEAVES:
+                return None
+        if any(urlsplit(root).scheme not in ("", "file") for root in roots):
+            return None
+        conf = df.sparkSession._jsparkSession.sessionState().conf().getAllConfs()
+        return ("sql_query", _SameResult(plan), manifest_tag(roots), tuple(listed),
+                hashlib.md5(conf.toString().encode()).hexdigest(),
+                df.schema.simpleString(), cap, format.lower())
 
     def _error_metadata(self, sql: str, started: float) -> dict:
         return {

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pytest
 
+import contextlib
 import os
 import shutil
 import threading
@@ -344,6 +345,27 @@ class TestStdlibLauncher:
         assert json.loads(urllib.request.urlopen(url, timeout=60).read()) == first
         assert served.memo_info()["hits"] == hits + 1
 
+    def test_repeated_sql_is_served_from_the_memo(self, server, served):
+        import json
+        import urllib.request
+
+        body = json.dumps({"sql": "SELECT product_servicecode, COUNT(*) AS n"
+                                  " FROM CUR GROUP BY 1 ORDER BY 1"}).encode()
+
+        def post() -> dict:
+            req = urllib.request.Request(
+                f"{server}/api/v1/finops/sql/query", data=body,
+                headers={"Content-Type": "application/json"},
+            )
+            out = json.loads(urllib.request.urlopen(req, timeout=60).read())
+            del out["query_metadata"]["query_timestamp"], out["execution_time_ms"]
+            return out
+
+        first = post()
+        hits = served.memo_info()["hits"]
+        assert post() == first and first["row_count"] > 0
+        assert served.memo_info()["hits"] == hits + 1
+
 
 class TestFastApiRouteParity:
     """The FastAPI factory (api/fastapi_app.py) is the production path
@@ -501,6 +523,35 @@ class TestResponseMemo:
         n = h.engine.query("SELECT COUNT(*) FROM memo_cur").first()[0]
         assert n == h.engine.spark.read.parquet(cur_root).count()
 
+    def test_sql_sees_an_appended_billing_period(self, memo_engines, cur_root,
+                                                 cur_partitions):
+        # no GET in between: the SQL route itself must notice the new files
+        h = memo_engines(cur_root)
+        sql = "SELECT COUNT(*) AS n FROM memo_cur"
+        before = h.sql_query(sql)["data"][0]["n"]
+        shutil.copytree(os.path.join(cur_partitions, HELD_OUT),
+                        os.path.join(cur_root, HELD_OUT))
+        after = h.sql_query(sql)["data"][0]["n"]
+        assert after == h.engine.spark.read.parquet(cur_root).count() > before
+
+    def test_files_landing_mid_request_are_not_served_stale(
+            self, memo_engines, cur_root, cur_partitions, monkeypatch):
+        h = memo_engines(cur_root)
+        walk = h.engine.data_version
+
+        def files_land_after_the_walk():
+            version = walk()
+            shutil.copytree(os.path.join(cur_partitions, HELD_OUT),
+                            os.path.join(cur_root, HELD_OUT))
+            monkeypatch.setattr(h.engine, "data_version", walk)
+            return version
+
+        monkeypatch.setattr(h.engine, "data_version", files_land_after_the_walk)
+        sql = "SELECT COUNT(*) AS n FROM memo_cur"
+        before = h.sql_query(sql)["data"][0]["n"]  # over the listing without them
+        after = h.sql_query(sql)["data"][0]["n"]
+        assert after == h.engine.spark.read.parquet(cur_root).count() > before
+
     def test_file_rewritten_in_place_changes_the_answer(self, memo_engines, cur_root):
         h = memo_engines(cur_root)
         before = h.spend_invoice_summary()
@@ -538,16 +589,34 @@ class TestResponseMemo:
         h.mcp_resources()
         assert h.memo_info()["misses"] == misses + 1
 
+    def test_get_and_sql_entries_share_one_lru(self, memo_engines, cur_root, monkeypatch):
+        monkeypatch.setattr(handlers_module, "MEMO_SIZE", 2)
+        h = memo_engines(cur_root)
+        count = "SELECT COUNT(*) AS n FROM memo_cur"
+        h.mcp_tools()
+        h.sql_query(count)
+        h.mcp_tools()  # hit: the SQL entry is now the oldest
+        h.sql_query("SELECT 1 AS one")  # third entry evicts the SQL count
+        assert h.memo_info()["size"] == 2
+        misses = h.memo_info()["misses"]
+        h.mcp_tools()
+        h.sql_query("SELECT 1 AS one")
+        assert h.memo_info()["misses"] == misses
+        h.sql_query(count)
+        assert h.memo_info()["misses"] == misses + 1
+
     def test_racing_requests_agree_and_store_one_entry(self, memo_engines, cur_root):
         h = memo_engines(cur_root)
         n = 4
         start = threading.Barrier(n)
-        answers, errors = [], []
+        answers, rows, errors = [], [], []
 
         def run():
             try:
                 start.wait(timeout=30)
                 answers.append(h.spend_top_services(limit=3))
+                start.wait(timeout=300)
+                rows.append(h.sql_query("SELECT COUNT(*) AS n FROM memo_cur")["data"])
             except Exception as exc:  # surfaced below
                 errors.append(exc)
 
@@ -558,7 +627,8 @@ class TestResponseMemo:
             t.join(timeout=300)
         assert not errors, errors
         assert len(answers) == n and all(a == answers[0] for a in answers)
-        assert h.memo_info()["size"] == 1
+        assert len(rows) == n and all(r == rows[0] for r in rows)
+        assert h.memo_info()["size"] == 2
 
     def test_non_local_root_bypasses_the_memo(self, memo_engines, cur_root):
         h = memo_engines(cur_root)
@@ -573,3 +643,239 @@ class TestResponseMemo:
         h = memo_engines(cur_root, now=None)
         _, today = h.engine.data_version()
         assert today == spark.sql("SELECT CAST(current_date() AS STRING)").first()[0]
+
+
+@contextlib.contextmanager
+def _session_conf(spark, key: str, value: str):
+    """``key`` set to ``value`` in the session for the block."""
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _jobs_run(spark, group: str, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestSqlMemo:
+    """Which ad-hoc statements the memo serves (hit), computes and stores
+    (miss), or answers fresh without a key (bypass)."""
+
+    COUNT = "SELECT COUNT(*) AS n FROM memo_cur"
+
+    @staticmethod
+    def _twice_unmemoized(h, sql: str) -> list:
+        outs = [h.sql_query(sql) for _ in range(2)]
+        assert h.memo_info() == {"hits": 0, "misses": 0, "size": 0,
+                                 "maxsize": handlers_module.MEMO_SIZE}
+        return outs
+
+    def test_repeated_statement_is_a_hit_that_runs_no_job(self, memo_engines, cur_root,
+                                                          spark):
+        h = memo_engines(cur_root)
+        first, jobs = _jobs_run(spark, "sql-memo-miss", lambda: h.sql_query(self.COUNT))
+        assert jobs > 0
+        second, jobs = _jobs_run(spark, "sql-memo-hit", lambda: h.sql_query(self.COUNT))
+        assert jobs == 0
+        assert h.memo_info() == {"hits": 1, "misses": 1, "size": 1,
+                                 "maxsize": handlers_module.MEMO_SIZE}
+        assert second["data"] == first["data"] and first["data"][0]["n"] > 0
+        second["data"].clear()  # the caller's copy, not the memo's
+        assert h.sql_query(self.COUNT)["data"] == first["data"]
+
+    def test_whitespace_variants_share_an_entry_and_echo_their_own_metadata(
+            self, memo_engines, cur_root):
+        h = memo_engines(cur_root)
+        variant = "  SELECT  COUNT(*) AS n\n   FROM memo_cur  "
+        a = h.sql_query(self.COUNT, limit=MAX_LIMIT)
+        b = h.sql_query(variant, limit=None, format="JSON")
+        assert h.memo_info()["hits"] == 1 and h.memo_info()["size"] == 1
+        assert b["data"] == a["data"]
+        meta_a, meta_b = a["query_metadata"], b["query_metadata"]
+        assert (meta_a["query_length"], meta_b["query_length"]) == (len(self.COUNT),
+                                                                    len(variant))
+        assert (meta_a["limit_applied"], meta_b["limit_applied"]) == (MAX_LIMIT, None)
+        assert (meta_a["format"], meta_b["format"]) == ("json", "JSON")
+
+    @pytest.mark.parametrize(
+        "first, second",
+        [
+            ("SELECT id AS a FROM range(3)", "SELECT id AS b FROM range(3)"),
+            ("SELECT id FROM range(3)", "select ID from range(3)"),
+        ],
+    )
+    def test_column_name_variants_miss(self, memo_engines, cur_root, first, second):
+        h = memo_engines(cur_root)
+        a, b = h.sql_query(first), h.sql_query(second)
+        assert h.memo_info()["hits"] == 0 and h.memo_info()["size"] == 2
+        assert list(a["schema"]) != list(b["schema"])
+        for out in (a, b):
+            assert list(out["data"][0]) == list(out["schema"])
+
+    @pytest.mark.parametrize(
+        "sql",
+        [
+            "SELECT current_timestamp() AS t",
+            "SELECT rand() AS r",
+            "SELECT memo_nondeterministic(id) AS v FROM range(3)",
+        ],
+    )
+    def test_nondeterministic_statements_are_never_stored(self, memo_engines, cur_root,
+                                                          spark, sql):
+        from pyspark.sql import functions as F
+
+        spark.udf.register("memo_nondeterministic",
+                           F.udf(lambda x: x, "bigint").asNondeterministic())
+        self._twice_unmemoized(memo_engines(cur_root), sql)
+
+    def test_failed_execution_is_never_stored(self, memo_engines, cur_root):
+        h = memo_engines(cur_root)
+        for _ in range(2):
+            with pytest.raises(ApiError) as err:
+                h.sql_query("SELECT assert_true(id < 1) AS v FROM range(3)")
+            assert err.value.status_code == 400
+        assert h.memo_info()["hits"] == 0 and h.memo_info()["size"] == 0
+
+    def test_table_read_only_by_a_scalar_subquery_is_versioned(
+            self, memo_engines, cur_root, spark, tmp_path):
+        h = memo_engines(cur_root)
+        side, other = str(tmp_path / "side"), str(tmp_path / "other")
+        spark.range(3).coalesce(1).write.parquet(side)
+        spark.range(10).coalesce(1).write.parquet(other)
+        sql = "SELECT 1 AS one, (SELECT SUM(id) FROM memo_side) AS s"
+        try:
+            spark.read.parquet(side).createOrReplaceTempView("memo_side")
+            assert h.sql_query(sql)["data"][0]["s"] == 3
+            assert h.sql_query(sql)["data"][0]["s"] == 3
+            assert h.memo_info()["hits"] == 1
+            # the file rewritten in place; the view registered again over
+            # the same path gives a plan that is sameResult with the old one
+            src, dst = _part_file(other, ""), _part_file(side, "")
+            for a, b in ((src, dst), (_crc(src), _crc(dst))):
+                shutil.copyfile(a, b)
+            spark.read.parquet(side).createOrReplaceTempView("memo_side")
+            assert h.sql_query(sql)["data"][0]["s"] == 45
+            assert h.memo_info()["hits"] == 1 and h.memo_info()["misses"] == 2
+        finally:
+            spark.catalog.dropTempView("memo_side")
+
+    def test_files_appended_before_the_table_is_listed_again_miss(
+            self, memo_engines, cur_root, spark, tmp_path):
+        h = memo_engines(cur_root)
+        side = str(tmp_path / "side")
+        spark.range(3).coalesce(1).write.parquet(side)
+        sql = "SELECT SUM(id) AS s FROM memo_side"
+        try:
+            spark.read.parquet(side).createOrReplaceTempView("memo_side")
+            spark.range(3, 10).coalesce(1).write.mode("append").parquet(side)
+            # Spark reads the listing taken when the view was registered
+            assert h.sql_query(sql)["data"][0]["s"] == 3
+            spark.read.parquet(side).createOrReplaceTempView("memo_side")
+            assert h.sql_query(sql)["data"][0]["s"] == 45
+            assert h.memo_info()["hits"] == 0
+        finally:
+            spark.catalog.dropTempView("memo_side")
+
+    def test_view_replaced_with_other_logic_misses(self, memo_engines, cur_root, spark):
+        h = memo_engines(cur_root)
+        sql = "SELECT COUNT(*) AS n FROM memo_view"
+        view = "CREATE OR REPLACE TEMP VIEW memo_view AS SELECT * FROM memo_cur WHERE "
+        try:
+            spark.sql(view + "billing_period < '1998-01'")
+            before = h.sql_query(sql)["data"][0]["n"]
+            spark.sql(view + "billing_period >= '1998-01'")
+            after = h.sql_query(sql)["data"][0]["n"]
+        finally:
+            spark.catalog.dropTempView("memo_view")
+        assert h.memo_info()["hits"] == 0 and h.memo_info()["misses"] == 2
+        total = h.sql_query(self.COUNT)["data"][0]["n"]
+        assert before > 0 and after > 0 and before + after == total
+
+    def test_changed_session_time_zone_misses(self, memo_engines, cur_root, spark):
+        h = memo_engines(cur_root)
+        sql = "SELECT date_format(timestamp_seconds(id), 'yyyy-MM-dd HH:mm') AS t FROM range(1)"
+        with _session_conf(spark, "spark.sql.session.timeZone", "UTC"):
+            utc = h.sql_query(sql)["data"][0]["t"]
+        with _session_conf(spark, "spark.sql.session.timeZone", "America/Los_Angeles"):
+            pacific = h.sql_query(sql)["data"][0]["t"]
+        assert (utc, pacific) == ("1970-01-01 00:00", "1969-12-31 16:00")
+        assert h.memo_info()["hits"] == 0 and h.memo_info()["misses"] == 2
+
+    def test_changed_ansi_mode_misses(self, memo_engines, cur_root, spark):
+        h = memo_engines(cur_root)
+        sql = "SELECT CAST(concat('x', id) AS INT) AS v FROM range(1)"
+        with _session_conf(spark, "spark.sql.ansi.enabled", "false"):
+            assert h.sql_query(sql)["data"] == [{"v": None}]
+        with _session_conf(spark, "spark.sql.ansi.enabled", "true"):
+            with pytest.raises(ApiError) as err:
+                h.sql_query(sql)
+        assert "CAST_INVALID_INPUT" in err.value.detail["error"]
+        assert h.memo_info()["hits"] == 0 and h.memo_info()["misses"] == 2
+
+    def test_conf_the_plan_does_not_show_misses(self, memo_engines, cur_root, spark):
+        # the two plans are sameResult: only the conf digest tells them apart
+        h = memo_engines(cur_root)
+        sql = "SELECT to_date(concat('2020-1-', id + 1), 'yyyy-MM-dd') AS v FROM range(1)"
+        policy = "spark.sql.legacy.timeParserPolicy"
+        with _session_conf(spark, "spark.sql.ansi.enabled", "false"):
+            with _session_conf(spark, policy, "LEGACY"):
+                assert h.sql_query(sql)["data"] == [{"v": "2020-01-01T00:00:00.000"}]
+            with _session_conf(spark, policy, "CORRECTED"):
+                assert h.sql_query(sql)["data"] == [{"v": None}]
+        assert h.memo_info()["hits"] == 0 and h.memo_info()["misses"] == 2
+
+    def test_rdd_leaf_bypasses_the_memo(self, memo_engines, cur_root, spark):
+        h = memo_engines(cur_root)
+        rdd = spark.sparkContext.parallelize([(1,), (2,)])
+        spark.createDataFrame(rdd, "a int").createOrReplaceTempView("memo_rdd")
+        try:
+            outs = self._twice_unmemoized(h, "SELECT SUM(a) AS s FROM memo_rdd")
+        finally:
+            spark.catalog.dropTempView("memo_rdd")
+        assert [o["data"] for o in outs] == [[{"s": 3}]] * 2
+
+    def test_cached_view_bypasses_the_memo(self, memo_engines, cur_root, spark):
+        h = memo_engines(cur_root)
+        spark.sql("CACHE TABLE memo_cached AS SELECT id FROM range(5)")
+        try:
+            outs = self._twice_unmemoized(h, "SELECT SUM(id) AS s FROM memo_cached")
+        finally:
+            spark.sql("UNCACHE TABLE memo_cached")
+            spark.catalog.dropTempView("memo_cached")
+        assert [o["data"] for o in outs] == [[{"s": 10}]] * 2
+
+    def test_force_s3_bypasses_the_memo(self, memo_engines, cur_root, monkeypatch):
+        h = memo_engines(cur_root)
+        # the S3 registration itself is not under test (and would need S3)
+        registered = []
+        monkeypatch.setattr(h.engine.engine, "register",
+                            lambda config, force_s3=False: registered.append(force_s3))
+        outs = [h.sql_query(self.COUNT, force_s3=True) for _ in range(2)]
+        assert registered == [True, True] and outs[0]["data"] == outs[1]["data"]
+        assert h.memo_info()["hits"] == h.memo_info()["misses"] == 0
+
+    def test_non_local_root_bypasses_the_memo(self, memo_engines, cur_root):
+        h = memo_engines(cur_root)
+        h.engine.engine._registered["memo_cur"] = "s3a://finops-bucket/cur"
+        self._twice_unmemoized(h, self.COUNT)
+
+    @pytest.mark.parametrize("sql", ["DROP TABLE memo_cur", "SELEC COUNT(*) FROM"])
+    def test_refused_or_unparsable_statement_leaves_the_memo_alone(
+            self, memo_engines, cur_root, sql):
+        h = memo_engines(cur_root)
+        h.sql_query(self.COUNT)
+        info = h.memo_info()
+        with pytest.raises(ApiError) as err:
+            h.sql_query(sql)
+        assert err.value.status_code == 400
+        assert h.memo_info() == info
