@@ -251,14 +251,14 @@ def main() -> None:
 
     _rd()  # builds persist shingle relations; queries start clean
 
+    from de_polars_spark.operators import similarity as _sim
     from de_polars_spark.operators.dedup import release_cached as _release_dedup
-    from de_polars_spark.operators.similarity import (
-        release_cached as _release_sim,
-    )
 
     def release_cached() -> None:
         _release_dedup()
-        _release_sim()
+        _sim.release_cached()
+        # each query pays for its own IVF cell assignment, as before the cache
+        _sim.clear_ivf_cache()
 
     import gc
 

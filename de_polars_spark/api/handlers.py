@@ -11,16 +11,16 @@ one response memo when they can: dashboard users repeat the same requests.
 A GET is keyed by the handler, its bound arguments and
 ``FinOpsEngine.data_version()`` (the CUR files' manifest and the effective
 date), so new data or a new day is a new key; nothing expires on a timer.
-A SQL statement is keyed by Spark's optimized plan, the manifest of every
-file root it reads, the session's SQL conf and its output schema
-(``FinOpsHandlers._sql_key``). The other POST routes are never memoized.
+A SQL statement is keyed by its ``sources/artifacts.plan_version`` (Spark's
+optimized plan, the manifest of every file root it reads, the session's SQL
+conf) and its output schema (``FinOpsHandlers._sql_key``). The other POST
+routes are never memoized.
 """
 
 from __future__ import annotations
 
 import copy
 import functools
-import hashlib
 import inspect
 import io
 import json
@@ -28,11 +28,10 @@ import threading
 import time
 from collections import OrderedDict
 from typing import Any, Callable, Optional
-from urllib.parse import urlsplit
 
 from de_polars_spark.analytics.base import RequestError
 from de_polars_spark.client import FinOpsEngine
-from de_polars_spark.sources.artifacts import manifest_tag
+from de_polars_spark.sources.artifacts import plan_version
 
 DEFAULT_LIMIT = 1000
 MAX_LIMIT = 10_000
@@ -40,12 +39,6 @@ MAX_SQL_LENGTH = 10_000
 #: responses the memo keeps (least recently used out first); a dashboard
 #: session repeats a handful of distinct GETs and SQL statements
 MEMO_SIZE = 64
-#: plan leaves a memoized statement may read: a file scan, versioned by the
-#: manifest of its roots, and leaves whose rows are in the plan itself
-_FILE_SCAN = "org.apache.spark.sql.execution.datasources.LogicalRelation"
-_FILES = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
-_PURE_LEAVES = {f"org.apache.spark.sql.catalyst.plans.logical.{n}"
-                for n in ("LocalRelation", "OneRowRelation", "Range")}
 
 
 class ApiError(Exception):
@@ -56,28 +49,6 @@ class ApiError(Exception):
         super().__init__(str(detail))
         self.status_code = status_code
         self.detail = detail
-
-
-class _SameResult:
-    """A plan in a memo key: hashed by its ``semanticHash``, equal to any
-    plan it ``sameResult``s with, so the hash only picks the bucket."""
-
-    __slots__ = ("plan", "_hash")
-
-    def __init__(self, plan):
-        self.plan = plan
-        self._hash = plan.semanticHash()
-
-    def __hash__(self) -> int:
-        return self._hash
-
-    def __eq__(self, other) -> bool:
-        return isinstance(other, _SameResult) and self.plan.sameResult(other.plan)
-
-
-def _seq(seq) -> list:
-    """A Scala ``Seq`` behind py4j as a Python list."""
-    return [seq.apply(i) for i in range(seq.size())]
 
 
 def _classify_error(message: str) -> str:
@@ -121,9 +92,6 @@ class FinOpsHandlers:
         self._memo: OrderedDict = OrderedDict()
         self._memo_lock = threading.Lock()
         self.memo_hits = self.memo_misses = 0
-        # resolved once: a py4j class lookup costs a round trip per package
-        trees = engine.spark._jvm.org.apache.spark.sql.catalyst.trees
-        self._clock = trees.TreePattern.CURRENT_LIKE()
         for (method, _), name in ROUTES.items():
             if name not in ("health", "root"):
                 setattr(self, name, self._route(name, getattr(self, name), method == "GET"))
@@ -236,13 +204,15 @@ class FinOpsHandlers:
         keyword regex; the row cap is always a real ``.limit()`` on the
         result (default 1000, at most 10000), whatever LIMIT the text has.
 
-        A statement that passes the guard is parsed, analyzed and optimized
-        on every request; its rows come from the response memo when
-        ``_sql_key`` gives a key that is stored, and then no Spark job
-        runs. ``data_version()`` runs first, so a changed CUR is registered
-        again before the statement is planned. ``force_s3``, a CUR root
-        that is not local, a ``data_version()`` that fails and a statement
-        ``_sql_key`` refuses are answered fresh; errors are never stored.
+        The text is translated and parsed once; the guard checks that plan,
+        and the same plan is analyzed and optimized (so a text ending in
+        ``.sql`` is a statement, never a file path). Its rows come from the
+        response memo when ``_sql_key`` gives a key that is stored, and
+        then no Spark job runs. ``data_version()`` runs before the analysis,
+        so a changed CUR is registered again before the statement is
+        planned. ``force_s3``, a CUR root that is not local, a
+        ``data_version()`` that fails and a statement ``_sql_key`` refuses
+        are answered fresh; errors are never stored.
         The metadata and timing are each request's own."""
         started = time.time()
         if not sql or not sql.strip():
@@ -256,7 +226,7 @@ class FinOpsHandlers:
                     400, f"limit must be between 1 and {MAX_LIMIT}"
                 )
         try:
-            self.engine.engine.validate_select_only(sql)
+            plan = self.engine.engine.validate_select_only(sql)
         except PermissionError as exc:
             raise ApiError(400, str(exc))
         except Exception as exc:  # parse failure
@@ -276,7 +246,7 @@ class FinOpsHandlers:
         except Exception:
             version = None
         try:
-            df = self.engine.query(sql, force_s3=force_s3)
+            df = self.engine.query_plan(plan, force_s3=force_s3)
             key = self._sql_key(df, cap, format) if version else None
             part = self._memo_get(key) if key else None
             if part is None:
@@ -316,51 +286,16 @@ class FinOpsHandlers:
             "execution_time_ms": round((time.time() - started) * 1000, 2),
         }
 
-    def _sql_key(self, df, cap: int, format: str) -> Optional[tuple]:
+    @staticmethod
+    def _sql_key(df, cap: int, format: str) -> Optional[tuple]:
         """The memo key of ``df``'s capped answer, or ``None`` when it must
-        be computed fresh.
-
-        The key holds the OPTIMIZED plan, compared with ``sameResult`` (the
-        analyzer has seeded ``rand()`` and the like into it), and the
-        output schema, since equal plans may name their columns apart.
-        Refused: a plan or subquery that is not deterministic, a statement
-        that reads the clock, and any leaf but a file scan, a
-        ``LocalRelation``, a ``OneRowRelation`` or a ``Range`` (not an RDD,
-        a cached table, a DSv2 source or a shared CTE), since only those
-        are versioned. Plans over the same file roots are equal whatever
-        the files hold, so the key holds the roots' ``manifest_tag``, and
-        the bytes in each scan's file listing: that listing is the one
-        taken when the table was registered, so files that land after it
-        give another key once the table is listed again. The session's SQL
-        conf is digested: not every conf that changes an answer shows in
-        the plan (``timeParserPolicy``)."""
-        qe = df._jdf.queryExecution()
-        plan, analyzed = qe.optimizedPlan(), qe.analyzed()
-        plans = [plan, *_seq(plan.subqueriesAll())]
-        if not all(p.deterministic() for p in plans):
+        be computed fresh: the statement's ``plan_version`` (optimized plan,
+        manifest and listing of every file it reads, SQL conf digest) and
+        the output schema, since equal plans may name their columns apart."""
+        version = plan_version(df)
+        if version is None:
             return None
-        if any(p.containsPattern(self._clock)
-               for p in [analyzed, *_seq(analyzed.subqueriesAll())]):
-            return None
-        roots: list[str] = []
-        listed: list[int] = []
-        for leaf in (leaf for p in plans for leaf in _seq(p.collectLeaves())):
-            kind = leaf.getClass().getName()
-            if kind == _FILE_SCAN:
-                relation = leaf.relation()
-                if relation.getClass().getName() != _FILES:
-                    return None
-                location = relation.location()
-                roots += location.rootPaths().mkString("\n").split("\n")
-                listed.append(location.sizeInBytes())
-            elif kind not in _PURE_LEAVES:
-                return None
-        if any(urlsplit(root).scheme not in ("", "file") for root in roots):
-            return None
-        conf = df.sparkSession._jsparkSession.sessionState().conf().getAllConfs()
-        return ("sql_query", _SameResult(plan), manifest_tag(roots), tuple(listed),
-                hashlib.md5(conf.toString().encode()).hexdigest(),
-                df.schema.simpleString(), cap, format.lower())
+        return ("sql_query", version, df.schema.simpleString(), cap, format.lower())
 
     def _error_metadata(self, sql: str, started: float) -> dict:
         return {

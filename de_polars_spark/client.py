@@ -146,6 +146,13 @@ class FinOpsEngine:
             self.engine.register(self.config, force_s3=True)
         return self.engine.query(sql_or_file)
 
+    def query_plan(self, plan, force_s3: bool = False) -> DataFrame:
+        """A plan parsed by ``SparkEngine.validate_select_only`` as a
+        DataFrame, with :meth:`query`'s ``force_s3`` routing."""
+        if force_s3:
+            self.engine.register(self.config, force_s3=True)
+        return self.engine.query_plan(plan)
+
     def has_local_data(self) -> bool:
         import os
 

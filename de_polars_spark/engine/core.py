@@ -23,6 +23,7 @@ import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from de_polars_spark.config import PARTITION_FORMAT, DataConfig
 from de_polars_spark.engine.dialect import translate_duckdb_sql
@@ -172,8 +173,9 @@ class SparkEngine:
             text = translate_duckdb_sql(text)
         return self.spark.sql(text)
 
-    def validate_select_only(self, sql: str) -> None:
-        """Parser-based guard for the ad-hoc SQL API edge.
+    def validate_select_only(self, sql: str):
+        """Parser-based guard for the ad-hoc SQL API edge; returns the
+        parsed plan it checked, for :meth:`query_plan` to run.
 
         The reference used a regex keyword blocklist
         (de_polars/api/sql_endpoints.py:42-69). A class-name deny-list is
@@ -183,7 +185,8 @@ class SparkEngine:
         is a Catalyst ``Command`` (every DDL/utility statement: CREATE/
         DROP/ALTER/CACHE/SET/EXPLAIN/ANALYZE/SHOW/...), a pre-analysis
         ``ParsedStatement``, or any ``InsertInto*`` node (InsertIntoDir is
-        neither of the former two) is rejected.
+        neither of the former two) is rejected. The text is always SQL,
+        never a file path.
         """
         plan = self.spark._jsparkSession.sessionState().sqlParser().parsePlan(
             translate_duckdb_sql(sql)
@@ -207,6 +210,15 @@ class SparkEngine:
             raise PermissionError(
                 f"statement type {name} is not allowed; SELECT only"
             )
+        return plan
+
+    def query_plan(self, plan) -> DataFrame:
+        """The DataFrame of a parsed plan (:meth:`validate_select_only`),
+        analyzed now, so views and tables resolve as they are at this
+        call."""
+        jss = self.spark._jsparkSession
+        jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(jss, plan)
+        return ClassicDataFrame(jdf, self.spark)
 
     # ------------------------------------------------------------------ #
     # introspection (duckdb_engine.py:315-376 parity)                     #

@@ -3152,21 +3152,30 @@ def _ivf_index_impl() -> tuple:
 
     The tag must cover the FULL impl chain: _fit_km_centroids delegates
     the centroid math to kmeans_iterations (and its _with_assignment
-    helper), and _centroid_scores to the vector folds, the driver-side
-    norm and the literal renderer — editing any of them must invalidate
-    the cached index, not serve a stale one (ADVICE r4)."""
+    helper), build_ivf_index the assignment to _assign_cells and the
+    centroid write to values_df, and _centroid_scores to the vector
+    folds, the driver-side norm and the literal renderer; the query
+    entries probe through _probe_cells — editing any of them must
+    invalidate the cached index, not serve a stale one (ADVICE r4)."""
     from de_polars_spark.functions import local_relation as _lr
     from de_polars_spark.functions import vectors as _vx
     from de_polars_spark.operators import kmeans as _km
 
     return (
         similarity.build_ivf_index,
+        similarity._assign_cells,
+        similarity._probe_cells,
+        similarity._normed,
         similarity._centroid_scores,
         similarity._py_norm,
+        _vx.as_double,
         _vx.dot,
         _vx.norm,
         _lr.literal_column,
         _lr.sql_literal,
+        _lr.values_df,
+        _lr._split_schema,
+        _lr._null_col,
         _fit_km_centroids,
         _km.kmeans_iterations,
         _km._with_assignment,

@@ -17,29 +17,41 @@
   the whole point of a coarse quantizer — and one literal crosses py4j
   in a constant number of round trips whatever its size), so the corpus
   is never shuffled for assignment, and the candidate join keys on the
-  cell id exactly like the LSH variant. At 100 TB you would fit the
-  centroids with k-means (e.g. one MLlib pass over a sample) and persist
-  the assigned corpus partitioned by cell; the deterministic sample-fit
-  used here keeps the operator oracle-checkable.
+  cell id exactly like the LSH variant. The assigned corpus is the part
+  that does not change between calls: ``ivf_topk`` keeps it persisted
+  in-process, keyed by the corpus's data version (``sources/artifacts.
+  plan_version``: plan, files, listing, SQL conf) and the exact centroid
+  table, so a repeated call over unchanged files only probes and scores.
+  ``build_ivf_index`` persists the same assignment as a cell-partitioned
+  parquet index for use across processes. At 100 TB you would fit the
+  centroids with k-means (e.g. one MLlib pass over a sample); the
+  deterministic sample-fit used here keeps the operator oracle-checkable.
 """
 
 from __future__ import annotations
+
+import hashlib
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from de_polars_spark.functions import vectors as VX
 from de_polars_spark.functions.local_relation import literal_column, values_df
+from de_polars_spark.sources.artifacts import plan_version
 
 
-#: DataFrames persisted by operators in this module (the margin miner's
-#: scored A x B relation feeds three consumers). Call
+#: per-call intermediates persisted by operators in this module (the
+#: margin miner's scored A x B relation feeds three consumers). Call
 #: :func:`release_cached` between jobs in long sessions.
 _SIM_PERSISTED: list = []
 
 
 def release_cached() -> int:
-    """Unpersist every relation cached by this module; returns the count."""
+    """Unpersist every per-call intermediate this module persisted; returns
+    the count. The IVF cache is not one: it keeps its entries across calls
+    (:func:`clear_ivf_cache` drops them)."""
     n = 0
     while _SIM_PERSISTED:
         try:
@@ -148,6 +160,127 @@ def _centroid_scores(
     )
 
 
+def _normed(df: DataFrame, id_col: str, vec_col: str, label_col, side: str):
+    """``(<side>_id[, <side>_label], v, n)`` and its column names: ``v`` the
+    vector as doubles, ``n`` its norm in a Project of its own. The centroid
+    scores then read the norm ATTRIBUTE: CollapseProject keeps the
+    non-cheap fold un-inlined, so the row norm is computed once, not once
+    per centroid."""
+    v, n = ("cv", "cn") if side == "neighbor" else ("qv", "qn")
+    keep = [F.col(id_col).alias(f"{side}_id")]
+    if label_col is not None:
+        keep.append(F.col(label_col).alias(f"{side}_label"))
+    names = [f"{side}_id", f"{side}_label"][: len(keep)]
+    out = df.select(*keep, VX.as_double(F.col(vec_col)).alias(v))
+    return out.select(*names, v, VX.norm(F.col(v)).alias(n)), [*names, v, n]
+
+
+def _assign_cells(
+    corpus: DataFrame, id_col: str, vec_col: str, centroids: list, label_col=None
+) -> DataFrame:
+    """The IVF assignment: ``(neighbor_id[, neighbor_label], cv, cn, cell)``,
+    each row in its nearest centroid's cell (map-only, the centroid table
+    inlined as one plan literal)."""
+    c, names = _normed(corpus, id_col, vec_col, label_col, "neighbor")
+    return c.select(
+        *names,
+        F.element_at(
+            _centroid_scores(F.col("cv"), centroids, F.col("cn")), 1
+        )["cid"].alias("cell"),
+    )
+
+
+def _probe_cells(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids: list,
+    nprobe: int,
+    label_col=None,
+) -> DataFrame:
+    """The IVF probe: ``(query_id[, query_label], qv, qn, cell)``, one row
+    per query and each of its ``nprobe`` nearest cells."""
+    q, names = _normed(queries, id_col, vec_col, label_col, "query")
+    probes = F.slice(_centroid_scores(F.col("qv"), centroids, F.col("qn")), 1, nprobe)
+    return q.select(*names, F.explode(probes).alias("probe")).select(
+        *names, F.col("probe")["cid"].alias("cell")
+    )
+
+
+#: assigned corpora ``ivf_topk`` keeps (least recently used out first)
+MEMO_SIZE = 4
+_IVF_CACHE: OrderedDict = OrderedDict()
+_IVF_LOCK = threading.Lock()
+_IVF_COUNTS = {"hits": 0, "misses": 0}
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # its session is gone, and its blocks with it
+
+
+def _assigned_corpus(
+    corpus: DataFrame, id_col: str, vec_col: str, centroids: list
+) -> DataFrame:
+    """``_assign_cells(corpus, ...)``, from the IVF cache when it can be.
+
+    Cached: a corpus that reads at least one file scan and has a
+    ``plan_version``. The key is the application, that version (plan,
+    files' manifest and listing, SQL conf), the two column names and the
+    exact centroid table. A miss stores the assignment ``persist()``ed at
+    the default level; the first action over it fills it. The stored plan
+    carries the version's digest as a constant column: Spark matches
+    cached data by plan alone, so without it a plan over the same roots
+    with other files in them would be served these rows. Any other corpus
+    is assigned afresh (re-reading it costs nothing)."""
+    version = plan_version(corpus)
+    if version is None or not version.listed:
+        return _assign_cells(corpus, id_col, vec_col, centroids)
+    table = tuple((int(cid), tuple(float(x) for x in vec)) for cid, vec in centroids)
+    key = (corpus.sparkSession.sparkContext.applicationId, version, id_col, vec_col, table)
+    with _IVF_LOCK:
+        hit = _IVF_CACHE.get(key)
+        if hit is not None:
+            _IVF_CACHE.move_to_end(key)
+            _IVF_COUNTS["hits"] += 1
+            return hit
+        _IVF_COUNTS["misses"] += 1
+    digest = hashlib.md5(repr(version[1:]).encode()).hexdigest()
+    built = _assign_cells(corpus, id_col, vec_col, centroids).withColumn(
+        "data_version", F.lit(digest)
+    )
+    # two racing misses both build; the first stored is the one persisted
+    with _IVF_LOCK:
+        stored = _IVF_CACHE.setdefault(key, built)
+        _IVF_CACHE.move_to_end(key)
+        if stored is built:
+            built.persist()
+            while len(_IVF_CACHE) > MEMO_SIZE:
+                _unpersist(_IVF_CACHE.popitem(last=False)[1])
+    return stored
+
+
+def clear_ivf_cache() -> int:
+    """Unpersist and drop every assigned corpus the IVF cache holds;
+    returns the count. :func:`release_cached` leaves the cache alone."""
+    with _IVF_LOCK:
+        held = list(_IVF_CACHE.values())
+        _IVF_CACHE.clear()
+    for df in held:
+        _unpersist(df)
+    return len(held)
+
+
+def ivf_cache_info() -> dict:
+    """Hits, misses and entries of the IVF cache (see :func:`ivf_topk`);
+    :func:`release_cached` does not touch it, :func:`clear_ivf_cache`
+    empties it."""
+    with _IVF_LOCK:
+        return {**_IVF_COUNTS, "size": len(_IVF_CACHE), "maxsize": MEMO_SIZE}
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -163,41 +296,14 @@ def ivf_topk(
     quantizer (driver-side; tiny by design). Corpus rows are assigned to
     their nearest centroid's cell (map-only, the centroid table inlined as
     one plan literal); each query probes its ``nprobe`` nearest cells and
-    scores only the candidates inside them."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), VX.as_double(F.col(vec_col)).alias("cv")
-    )
-    # norm first (own Project), THEN the centroid scores over the norm
-    # ATTRIBUTE: CollapseProject keeps the non-cheap fold un-inlined, so
-    # the row norm is computed once, not once per centroid
-    c = c.select("neighbor_id", "cv", VX.norm(F.col("cv")).alias("cn")).select(
-        "neighbor_id",
-        "cv",
-        "cn",
-        F.element_at(
-            _centroid_scores(F.col("cv"), centroids, F.col("cn")), 1
-        )["cid"].alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), VX.as_double(F.col(vec_col)).alias("qv")
-    )
-    q = q.select("query_id", "qv", VX.norm(F.col("qv")).alias("qn")).select(
-        "query_id",
-        "qv",
-        "qn",
-        F.explode(
-            F.slice(_centroid_scores(F.col("qv"), centroids, F.col("qn")), 1, nprobe)
-        ).alias("probe"),
-    ).select("query_id", "qv", "qn", F.col("probe")["cid"].alias("cell"))
-    scored = c.join(
-        F.broadcast(q),
-        (c["cell"] == q["cell"]) & (F.col("query_id") != F.col("neighbor_id")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(VX.dot(q["qv"], c["cv"]) / (q["qn"] * c["cn"]), 6).alias("cosine"),
-    )
-    return _ranked_topk(scored, k)
+    scores only the candidates inside them (:func:`ivf_topk_from_index`).
+
+    The assigned corpus is kept per data version in an in-process LRU of
+    ``MEMO_SIZE`` entries (``_assigned_corpus``), so repeated calls over
+    unchanged files only probe and score; the rows are the same either
+    way."""
+    postings = _assigned_corpus(corpus, id_col, vec_col, centroids)
+    return ivf_topk_from_index(postings, centroids, queries, id_col, vec_col, k, nprobe)
 
 
 def fit_centroids_sample(
@@ -237,16 +343,7 @@ def build_ivf_index(
     at build time, not per query."""
     import os
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), VX.as_double(F.col(vec_col)).alias("cv")
-    ).select("neighbor_id", "cv", VX.norm(F.col("cv")).alias("cn")).select(
-        "neighbor_id",
-        "cv",
-        "cn",
-        F.element_at(
-            _centroid_scores(F.col("cv"), centroids, F.col("cn")), 1
-        )["cid"].alias("cell"),
-    )
+    c = _assign_cells(corpus, id_col, vec_col, centroids)
     # cluster by cell before the partitioned write: a partitionBy write
     # from an N-partition scan emits up to N files PER cell dir (a
     # 100 TB scan has thousands of partitions — tiny-file storm, slow
@@ -288,16 +385,7 @@ def append_ivf_index(
             os.path.join(path, "centroids")
         ).collect()
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), VX.as_double(F.col(vec_col)).alias("cv")
-    ).select("neighbor_id", "cv", VX.norm(F.col("cv")).alias("cn")).select(
-        "neighbor_id",
-        "cv",
-        "cn",
-        F.element_at(
-            _centroid_scores(F.col("cv"), cents, F.col("cn")), 1
-        )["cid"].alias("cell"),
-    )
+    c = _assign_cells(corpus, id_col, vec_col, cents)
     c.write.mode("append").partitionBy("cell").parquet(
         os.path.join(path, "postings")
     )
@@ -399,17 +487,7 @@ def ivf_topk_from_index(
     the index is just the materialized assignment — but the per-query
     cost drops to probing ``nprobe`` inverted lists; no corpus scan, no
     re-assignment, no norm recomputation."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), VX.as_double(F.col(vec_col)).alias("qv")
-    )
-    q = q.select("query_id", "qv", VX.norm(F.col("qv")).alias("qn")).select(
-        "query_id",
-        "qv",
-        "qn",
-        F.explode(
-            F.slice(_centroid_scores(F.col("qv"), centroids, F.col("qn")), 1, nprobe)
-        ).alias("probe"),
-    ).select("query_id", "qv", "qn", F.col("probe")["cid"].alias("cell"))
+    q = _probe_cells(queries, id_col, vec_col, centroids, nprobe)
     scored = postings.join(
         F.broadcast(q),
         (postings["cell"] == q["cell"]) & (F.col("query_id") != F.col("neighbor_id")),
@@ -445,36 +523,8 @@ def hard_negative_topk_ivf(
     matches the exact form: ``(query_id, neighbor_id, neighbor_label,
     cosine, rank)``.
     """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        VX.as_double(F.col(vec_col)).alias("cv"),
-    ).select(
-        "neighbor_id", "neighbor_label", "cv", VX.norm(F.col("cv")).alias("cn")
-    ).select(
-        "neighbor_id",
-        "neighbor_label",
-        "cv",
-        "cn",
-        F.element_at(
-            _centroid_scores(F.col("cv"), centroids, F.col("cn")), 1
-        )["cid"].alias("cell"),
-    )
-    q = anchors.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("query_label"),
-        VX.as_double(F.col(vec_col)).alias("qv"),
-    ).select(
-        "query_id", "query_label", "qv", VX.norm(F.col("qv")).alias("qn")
-    ).select(
-        "query_id",
-        "query_label",
-        "qv",
-        "qn",
-        F.explode(
-            F.slice(_centroid_scores(F.col("qv"), centroids, F.col("qn")), 1, nprobe)
-        ).alias("probe"),
-    ).select("query_id", "query_label", "qv", "qn", F.col("probe")["cid"].alias("cell"))
+    c = _assign_cells(corpus, id_col, vec_col, centroids, label_col)
+    q = _probe_cells(anchors, id_col, vec_col, centroids, nprobe, label_col)
     scored = c.join(
         F.broadcast(q),
         (c["cell"] == q["cell"])

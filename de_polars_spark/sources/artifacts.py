@@ -13,16 +13,29 @@ pattern of materializing view results to parquet
 - **published** by :func:`publish`: built under a private temporary sibling,
   then renamed into place, so a concurrent reader never sees a half-written
   artifact and any completed write is interchangeable with another.
+
+:func:`plan_version` is the in-process counterpart for caches of Spark
+results: what a DataFrame's answer depends on, or ``None`` when that cannot
+be told. The SQL response memo and the IVF cell-assignment cache share it.
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
 import hashlib
 import os
 import shutil
 import threading
-from typing import Callable, Iterable, Iterator
+from typing import Callable, Iterable, Iterator, NamedTuple, Optional
+from urllib.parse import urlsplit
+
+#: plan leaves a versioned plan may read: a file scan, versioned by the
+#: manifest of its roots, and leaves whose rows are in the plan itself
+_FILE_SCAN = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_FILES = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+_PURE_LEAVES = {f"org.apache.spark.sql.catalyst.plans.logical.{n}"
+                for n in ("LocalRelation", "OneRowRelation", "Range")}
 
 
 def cache_root() -> str:
@@ -111,3 +124,88 @@ def publish(path: str, build: Callable[[str], object]) -> str:
         if not (isinstance(exc, OSError) and os.path.exists(path)):
             raise
     return path
+
+
+class _SameResult:
+    """A plan in a cache key: hashed by its ``semanticHash``, equal to any
+    plan it ``sameResult``s with, so the hash only picks the bucket."""
+
+    __slots__ = ("plan", "_hash")
+
+    def __init__(self, plan):
+        self.plan = plan
+        self._hash = plan.semanticHash()
+
+    def __hash__(self) -> int:
+        return self._hash
+
+    def __eq__(self, other) -> bool:
+        return isinstance(other, _SameResult) and self.plan.sameResult(other.plan)
+
+
+class PlanVersion(NamedTuple):
+    """What a DataFrame's answer depends on (:func:`plan_version`)."""
+
+    plan: _SameResult
+    #: ``manifest_tag`` of every file root the plan reads
+    files: str
+    #: the bytes in Spark's listing of each file scan, one per scan
+    listed: tuple
+    #: md5 of the session's SQL conf
+    conf: str
+
+
+def _seq(seq) -> list:
+    """A Scala ``Seq`` behind py4j as a Python list."""
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+@functools.lru_cache(maxsize=None)
+def _clock_pattern(jvm):
+    """The ``CURRENT_LIKE`` tree pattern, resolved once per JVM: a py4j
+    class lookup costs a round trip per package."""
+    return jvm.org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE()
+
+
+def plan_version(df) -> Optional[PlanVersion]:
+    """The data version of ``df``'s answer, or ``None`` when it cannot be
+    told and the answer must be computed fresh.
+
+    It holds the OPTIMIZED plan, compared with ``sameResult`` (the analyzer
+    has seeded ``rand()`` and the like into it). Refused: a plan or
+    subquery that is not deterministic, a plan that reads the clock, and
+    any leaf but a file scan over local files, a ``LocalRelation``, a
+    ``OneRowRelation`` or a ``Range`` (not an RDD, a cached table, a DSv2
+    source or a shared CTE), since only those are versioned. Plans over the
+    same file roots are equal whatever the files hold, so the version holds
+    the roots' ``manifest_tag``, and the bytes in each scan's file listing:
+    that listing is the one taken when the DataFrame was read, so files
+    that land after it give another version once it is read again. The
+    session's SQL conf is digested: not every conf that changes an answer
+    shows in the plan (``timeParserPolicy``)."""
+    qe = df._jdf.queryExecution()
+    plan, analyzed = qe.optimizedPlan(), qe.analyzed()
+    plans = [plan, *_seq(plan.subqueriesAll())]
+    if not all(p.deterministic() for p in plans):
+        return None
+    clock = _clock_pattern(df.sparkSession._jvm)
+    if any(p.containsPattern(clock) for p in [analyzed, *_seq(analyzed.subqueriesAll())]):
+        return None
+    roots: list[str] = []
+    listed: list[int] = []
+    for leaf in (leaf for p in plans for leaf in _seq(p.collectLeaves())):
+        kind = leaf.getClass().getName()
+        if kind == _FILE_SCAN:
+            relation = leaf.relation()
+            if relation.getClass().getName() != _FILES:
+                return None
+            location = relation.location()
+            roots += location.rootPaths().mkString("\n").split("\n")
+            listed.append(location.sizeInBytes())
+        elif kind not in _PURE_LEAVES:
+            return None
+    if any(urlsplit(root).scheme not in ("", "file") for root in roots):
+        return None
+    conf = df.sparkSession._jsparkSession.sessionState().conf().getAllConfs()
+    return PlanVersion(_SameResult(plan), manifest_tag(roots), tuple(listed),
+                       hashlib.md5(conf.toString().encode()).hexdigest())

@@ -879,3 +879,32 @@ class TestSqlMemo:
             h.sql_query(sql)
         assert err.value.status_code == 400
         assert h.memo_info() == info
+
+
+class TestSqlParsedOnce:
+    """The SQL route runs the statement its guard checked: the text is
+    translated and parsed once, and that plan is the one analyzed."""
+
+    TEXT = "SELECT 1 AS a -- see notes.sql"
+
+    def test_text_ending_in_dot_sql_is_a_statement(self, memo_engines, cur_root):
+        assert memo_engines(cur_root).sql_query(self.TEXT)["data"] == [{"a": 1}]
+
+    def test_a_file_named_like_the_text_is_not_run(self, memo_engines, cur_root,
+                                                   monkeypatch, tmp_path):
+        monkeypatch.chdir(tmp_path)
+        (tmp_path / self.TEXT).write_text("SELECT 2 AS a")
+        assert memo_engines(cur_root).sql_query(self.TEXT)["data"] == [{"a": 1}]
+
+    def test_translation_runs_once_per_request(self, memo_engines, cur_root, monkeypatch):
+        from de_polars_spark.engine import core
+
+        h = memo_engines(cur_root)
+        calls = []
+        translate = core.translate_duckdb_sql
+        monkeypatch.setattr(core, "translate_duckdb_sql",
+                            lambda sql: calls.append(sql) or translate(sql))
+        sql = "SELECT '2024-01-02'::date AS d"
+        for _ in range(2):  # a miss, then a memo hit
+            assert h.sql_query(sql)["data"] == [{"d": "2024-01-02T00:00:00.000"}]
+        assert calls == [sql, sql] and h.memo_info()["hits"] == 1

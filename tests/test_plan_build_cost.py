@@ -208,3 +208,14 @@ def test_ivf_index_key_covers_the_centroid_scoring_chain():
     assert similarity._centroid_scores in keyed
     missing = sorted(f"{f.__module__}.{f.__name__}" for f in callees - keyed)
     assert not missing, f"IVF index key does not cover: {missing}"
+
+
+def test_ivf_index_key_covers_everything_the_build_calls():
+    from de_polars_spark.inventory import llm_ops
+
+    callees = _repo_callees(similarity.build_ivf_index, set())
+    assert {similarity._assign_cells, similarity._centroid_scores} <= callees
+    keyed = set(llm_ops._ivf_index_impl())
+    assert similarity._probe_cells in keyed
+    missing = sorted(f"{f.__module__}.{f.__name__}" for f in callees - keyed)
+    assert not missing, f"IVF index key does not cover: {missing}"
