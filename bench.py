@@ -247,18 +247,10 @@ def main() -> None:
 
     _pay("quantile_probe", _warm_quantile_probes)
 
-    from de_polars_spark.operators.dedup import release_cached as _rd
+    from de_polars_spark.operators.similarity import clear_ivf_cache
+    from de_polars_spark.sources.artifacts import release_cached
 
-    _rd()  # builds persist shingle relations; queries start clean
-
-    from de_polars_spark.operators import similarity as _sim
-    from de_polars_spark.operators.dedup import release_cached as _release_dedup
-
-    def release_cached() -> None:
-        _release_dedup()
-        _sim.release_cached()
-        # each query pays for its own IVF cell assignment, as before the cache
-        _sim.clear_ivf_cache()
+    release_cached()  # builds persist shingle relations; queries start clean
 
     import gc
 
@@ -285,7 +277,9 @@ def main() -> None:
             if rep == 0:
                 timings_first[name] = round(elapsed, 4)
             best = elapsed if best is None else min(best, elapsed)
-            release_cached()  # dedup ops persist internally; no cross-query reuse
+            release_cached()  # operators persist per-call intermediates; no cross-query reuse
+            # each query pays for its own IVF cell assignment, as before the cache
+            clear_ivf_cache()
             # drop py4j refs promptly so ContextCleaner can release finished
             # queries' RDDs/broadcasts — a 100-query session otherwise carries
             # a cleanup backlog into the tail queries (measured as multi-second

@@ -14,7 +14,9 @@ date), so new data or a new day is a new key; nothing expires on a timer.
 A SQL statement is keyed by its ``sources/artifacts.plan_version`` (Spark's
 optimized plan, the manifest of every file root it reads, the session's SQL
 conf) and its output schema (``FinOpsHandlers._sql_key``). The other POST
-routes are never memoized.
+routes are never memoized. The memo is one ``sources/artifacts.Memo`` of
+``MEMO_SIZE`` entries per ``FinOpsHandlers``; it stores and returns deep
+copies, so no caller can change an entry.
 """
 
 from __future__ import annotations
@@ -24,14 +26,12 @@ import functools
 import inspect
 import io
 import json
-import threading
 import time
-from collections import OrderedDict
 from typing import Any, Callable, Optional
 
 from de_polars_spark.analytics.base import RequestError
 from de_polars_spark.client import FinOpsEngine
-from de_polars_spark.sources.artifacts import plan_version
+from de_polars_spark.sources.artifacts import Memo, plan_version
 
 DEFAULT_LIMIT = 1000
 MAX_LIMIT = 10_000
@@ -89,38 +89,13 @@ class FinOpsHandlers:
 
     def __init__(self, engine: FinOpsEngine):
         self.engine = engine
-        self._memo: OrderedDict = OrderedDict()
-        self._memo_lock = threading.Lock()
-        self.memo_hits = self.memo_misses = 0
+        self._responses = Memo(MEMO_SIZE)
         for (method, _), name in ROUTES.items():
             if name not in ("health", "root"):
                 setattr(self, name, self._route(name, getattr(self, name), method == "GET"))
 
     def memo_info(self) -> dict:
-        return {"hits": self.memo_hits, "misses": self.memo_misses,
-                "size": len(self._memo), "maxsize": MEMO_SIZE}
-
-    def _memo_get(self, key) -> Optional[Any]:
-        """A deep copy of the answer stored under ``key``, or ``None``;
-        counts a hit or a miss."""
-        with self._memo_lock:
-            hit = self._memo.get(key)
-            if hit is not None:
-                self._memo.move_to_end(key)
-                self.memo_hits += 1
-            else:
-                self.memo_misses += 1
-        return None if hit is None else copy.deepcopy(hit)
-
-    def _memo_put(self, key, value) -> None:
-        """Store a deep copy of ``value`` under ``key``, evicting the least
-        recently used entries past ``MEMO_SIZE``."""
-        stored = copy.deepcopy(value)
-        with self._memo_lock:
-            self._memo[key] = stored
-            self._memo.move_to_end(key)
-            while len(self._memo) > MEMO_SIZE:
-                self._memo.popitem(last=False)
+        return self._responses.info()
 
     def _route(self, name: str, fn: Callable, memoize: bool) -> Callable:
         """``fn`` with request errors answered as 422 and, for GET routes,
@@ -146,12 +121,12 @@ class FinOpsHandlers:
             if version is None:
                 return call(*args, **kwargs)
             key = (name, tuple(bound.arguments.items()), version)
-            hit = self._memo_get(key)
+            hit = self._responses.get(key)
             if hit is not None:
-                return hit
+                return copy.deepcopy(hit)
             result = call(*args, **kwargs)
             if not (isinstance(result, dict) and "error" in result):
-                self._memo_put(key, result)
+                self._responses.put(key, copy.deepcopy(result))
             return result
 
         return route
@@ -248,11 +223,13 @@ class FinOpsHandlers:
         try:
             df = self.engine.query_plan(plan, force_s3=force_s3)
             key = self._sql_key(df, cap, format) if version else None
-            part = self._memo_get(key) if key else None
+            part = self._responses.get(key) if key else None
             if part is None:
                 part = _result_part(df.limit(cap).toPandas(), format)
                 if key:
-                    self._memo_put(key, part)
+                    self._responses.put(key, copy.deepcopy(part))
+            else:
+                part = copy.deepcopy(part)
         except ApiError:
             raise
         except Exception as exc:

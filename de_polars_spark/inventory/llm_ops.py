@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from de_polars_spark.functions import text as TX
 from de_polars_spark.functions.local_relation import values_df
 from de_polars_spark.operators import dedup, multimodal, sampling, similarity
-from de_polars_spark.sources.artifacts import artifact_path, publish
+from de_polars_spark.sources.artifacts import artifact_path, keep, publish
 from de_polars_spark.sources.registry import register_testdata
 
 QUERIES: dict = {}
@@ -3374,10 +3374,7 @@ def q_embedding_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.round(VXF.norm(VXF.as_double(F.col("embedding"))), 6).alias("nrm"),
     )
-    q = exact_quantiles(
-        norms, ["label"], "nrm", [0.25, 0.5, 0.75],
-        probe_memo_key="embeddings.nrm",
-    )
+    q = exact_quantiles(norms, ["label"], "nrm", [0.25, 0.5, 0.75])
     extra = norms.groupBy("label").agg(
         F.round(F.min("nrm"), 6).alias("min_norm"),
         F.round(F.max("nrm"), 6).alias("max_norm"),
@@ -3525,7 +3522,6 @@ def q_histogram_equidepth_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         [],
         "l_extendedprice",
         tiebreaks=["l_orderkey", "l_linenumber"],
-        probe_memo_key="lineitem.l_extendedprice.global",
     )
     # NTILE(k) over N rows, 0-based rank rn: the first r = N % k buckets
     # hold q+1 = N div k + 1 rows, the rest hold q (integer `div` keeps
@@ -3588,8 +3584,7 @@ def q_dedup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id_a").cast("bigint").alias("a"),
         F.col("id_b").cast("bigint").alias("b"),
     )
-    pairs = pairs.persist()
-    dedup._PERSISTED.append(pairs)
+    pairs = keep(pairs)
     deg = (
         pairs.select(F.col("a").alias("n"))
         .unionAll(pairs.select(F.col("b").alias("n")))

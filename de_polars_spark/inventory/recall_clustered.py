@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_polars_spark.operators import similarity
+from de_polars_spark.sources.artifacts import keep
 from de_polars_spark.sources.registry import register_testdata
 from de_polars_spark.inventory.training_ops import (
     _BITEXT_K,
@@ -110,7 +111,7 @@ _RC_QMOD = 25
 def q_ann_recall_eval_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: exact baseline, centroid sampler, and IVF probe all
     # re-reference the derived corpus (window+join lineage)
-    corpus = clustered_embeddings(spark, sf_dir).persist()
+    corpus = keep(clustered_embeddings(spark, sf_dir))
     queries = corpus.filter(F.col("vec_id") % _RC_QMOD == 0)
     exact = similarity.cosine_topk(
         corpus, queries, "vec_id", "embedding", k=_RC_K
@@ -369,7 +370,7 @@ def q_bitext_ivf_pair_recall_clustered(
     # persist the derived corpus: BOTH miners (and the centroid sampler
     # inside each) re-reference it many times, and re-deriving the
     # window+join lineage per action is pure waste
-    corpus = paired_bitext_embeddings(spark, sf_dir).persist()
+    corpus = keep(paired_bitext_embeddings(spark, sf_dir))
     exact = similarity.margin_mutual_pairs(
         corpus, "vec_id", "embedding", "label", 0, 1, k=_BITEXT_K
     ).select("id_a", "id_b")
@@ -445,7 +446,7 @@ def q_ann_pq_recall_eval_clustered(
     )
     from de_polars_spark.operators import pq as PQ
 
-    corpus = clustered_embeddings(spark, sf_dir).persist()
+    corpus = keep(clustered_embeddings(spark, sf_dir))
     cbs = PQ.fit_pq(
         corpus, "vec_id", "embedding", _pq_seeds(corpus), _PQ_M, _PQ_DSUB,
         iterations=_PQ_ITERS,
@@ -592,7 +593,7 @@ def q_ann_pq_recall_eval_neardup(
     )
     from de_polars_spark.operators import pq as PQ
 
-    corpus = neardup_embeddings(spark, sf_dir).persist()
+    corpus = keep(neardup_embeddings(spark, sf_dir))
     cbs = PQ.fit_pq(
         corpus, "vec_id", "embedding", _pq_seeds(corpus), _PQ_M, _PQ_DSUB,
         iterations=_PQ_ITERS,

@@ -111,9 +111,7 @@ def q_quantile_price_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = register_testdata(spark, sf_dir)
     return exact_quantiles(
-        t["lineitem"], ["l_returnflag"], "l_extendedprice",
-        [0.25, 0.5, 0.75, 0.95],
-        probe_memo_key="lineitem.l_extendedprice",
+        t["lineitem"], ["l_returnflag"], "l_extendedprice", [0.25, 0.5, 0.75, 0.95]
     )
 
 
@@ -1020,12 +1018,11 @@ def q_median_abs_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from de_polars_spark.operators.quantiles import exact_quantiles, probe_bounds
 
     t = register_testdata(spark, sf_dir)
-    # same probe as quantile_price_profile (identical relation/keys/
-    # value over immutable testdata): the median pass reuses it; the
-    # deviation pass below probes its own derived column.
+    # same probe as quantile_price_profile (same data, keys and value):
+    # the median pass reuses it; the deviation pass below probes its own
+    # derived column.
     med_q = exact_quantiles(
-        t["lineitem"], ["l_returnflag"], "l_extendedprice", [0.5],
-        probe_memo_key="lineitem.l_extendedprice",
+        t["lineitem"], ["l_returnflag"], "l_extendedprice", [0.5]
     ).select("l_returnflag", F.col("p50").alias("__med"))
     # materialize the G-row median (bounded: one row per return flag)
     # so the second exact_quantiles pass doesn't re-run the first
@@ -1046,10 +1043,7 @@ def q_median_abs_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full sample scan is skipped (guide §1.2: one fewer pass). Bounds
     # only balance buckets, never a quantile (operators/quantiles.py
     # contract), so this cannot change the MAD.
-    price_bounds = probe_bounds(
-        t["lineitem"], ["l_returnflag"], "l_extendedprice",
-        "lineitem.l_extendedprice",
-    )
+    price_bounds = probe_bounds(t["lineitem"], ["l_returnflag"], "l_extendedprice")
     dev_bounds = None
     if price_bounds is not None:
         med_by_key = {r["l_returnflag"]: r["__med"] for r in med_rows}

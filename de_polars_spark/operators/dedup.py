@@ -52,6 +52,9 @@ from pyspark.sql import functions as F
 from de_polars_spark.functions import text as TX
 from de_polars_spark.functions import vectors as VX
 from de_polars_spark.functions.local_relation import literal_column, sql_literal
+from de_polars_spark.sources.artifacts import keep
+# the package's one release of per-call persisted frames, under this name too
+from de_polars_spark.sources.artifacts import release_cached  # noqa: F401
 
 #: Production default for every pair generator's bucket cap: a bucket
 #: of B ids emits B^2/2 candidate pairs, so uncapped banding is
@@ -62,25 +65,6 @@ from de_polars_spark.functions.local_relation import literal_column, sql_literal
 #: are oracle-checked end-to-end by ``dedup_minhash_lsh_capped``. Pass
 #: ``max_bucket_size=None`` for exact oracle-matching semantics.
 DEFAULT_MAX_BUCKET_SIZE = 16
-
-#: DataFrames persisted by operators in this module (shingle relations
-#: reused by 3+ branches). Callers that run many dedup jobs in one
-#: session should call :func:`release_cached` between jobs.
-_PERSISTED: list[DataFrame] = []
-
-
-def release_cached() -> int:
-    """Unpersist every relation cached by this module's operators; returns
-    the number released. Safe to call while no job is running."""
-    n = 0
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
 
 def exact_dup_groups(df: DataFrame, id_col: str, content: Column) -> DataFrame:
     """Group rows by exact content hash; emit one row per duplicate group
@@ -302,9 +286,9 @@ def simhash_hamming_pairs(
     # SAME fingerprint; collapse them first so the quadratic pair
     # expansion runs over distinct fingerprints, not documents — identical
     # output, and bucket sizes shrink by the duplication factor.
-    clusters = sims.groupBy("simhash").agg(
+    clusters = keep(sims.groupBy("simhash").agg(
         F.array_sort(F.collect_list(id_col)).alias("ids")
-    ).persist()
+    ))
     # one row per distinct fingerprint (small, linear): persisting it is
     # what keeps the expensive tokenize->vote pipeline from re-running
     # once per consuming branch — the within self-join, the two chunk
@@ -313,7 +297,6 @@ def simhash_hamming_pairs(
     # materializes the cache EAGERLY: under a single downstream action
     # the consuming stages otherwise race to fill it and still re-run
     # the pipeline (measured 161s vs 24s for the same join).
-    _PERSISTED.append(clusters)
     clusters.count()
     # distance-0: pairs within one fingerprint cluster. Duplicate-heavy
     # corpora make this the OUTPUT-bound part (sum over clusters of
@@ -394,11 +377,11 @@ def simhash_hamming_pairs(
     sizes = chunks.groupBy("chunk_idx", "chunk_val").agg(
         F.count("*").alias("__bsz")
     )
-    keep = sizes.filter(F.col("__bsz") > 1)
+    live = sizes.filter(F.col("__bsz") > 1)
     if max_bucket_size is not None:
-        keep = keep.filter(F.col("__bsz") <= max_bucket_size)
+        live = live.filter(F.col("__bsz") <= max_bucket_size)
     cands = chunks.join(
-        F.broadcast(keep.select("chunk_idx", "chunk_val")),
+        F.broadcast(live.select("chunk_idx", "chunk_val")),
         ["chunk_idx", "chunk_val"],
     ).withColumn("__ft", F.pmod(F.xxhash64("simhash"), F.lit(T)).cast("int"))
     # fingerprint-level candidates: bucket equi-join with the Hamming
@@ -563,8 +546,7 @@ def ngram_jaccard_pairs(
         grams = tok.select(
             id_col, "block", F.xxhash64("tok").alias("shingle")
         )
-    ex = grams.select(id_col, "block", "shingle").distinct().persist()
-    _PERSISTED.append(ex)
+    ex = keep(grams.select(id_col, "block", "shingle").distinct())
     # per-doc shingle sets for the verification join, rebuilt from the
     # (already distinct) postings; docs with no shingles can never be
     # candidates, so their absence here is harmless
@@ -920,17 +902,14 @@ def minhash_estimate_pairs(
     pair-side joins); call :func:`release_cached` after collecting.
     """
     assert n_hashes % band_size == 0
-    sig = (
-        _minhash_sig_df(df, id_col, text_col, n_hashes, shingle_n)
-        .select(
+    sig = keep(
+        _minhash_sig_df(df, id_col, text_col, n_hashes, shingle_n).select(
             F.col(id_col),
             F.expr(
                 f"array({', '.join(f'mh{i}' for i in range(n_hashes))})"
             ).alias("__sig"),
         )
-        .persist()
     )
-    _PERSISTED.append(sig)
 
     bands = (
         sig.select(
@@ -1122,8 +1101,7 @@ def containment_pairs(
     # the distinct postings feed both self-join sides — persist so the
     # tokenize/window/distinct chain runs once (same recompute-dominated
     # profile ngram_jaccard_pairs measured; release via release_cached())
-    post = grams.select(id_col, "block", "shingle").distinct().persist()
-    _PERSISTED.append(post)
+    post = keep(grams.select(id_col, "block", "shingle").distinct())
     if max_df is not None:
         wfreq = Window.partitionBy("block", "shingle")
         post = post.withColumn("df", F.count(F.lit(1)).over(wfreq)).filter(
@@ -1225,8 +1203,7 @@ def longest_shared_span(
             .filter(F.col("df") <= max_df)
             .drop("df")
         )
-    post = post.persist()
-    _PERSISTED.append(post)
+    post = keep(post)
     a = post.select(
         "block", "h", F.col(id_col).alias("__ia"), F.col("p").alias("pa")
     )

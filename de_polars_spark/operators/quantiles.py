@@ -42,6 +42,15 @@ bracket rows with equal values interpolate to the same result.
 ``with_global_rank`` exposes the rank itself (every row), for consumers
 that need full positional structure (e.g. exact NTILE / equi-depth
 histograms) without a single-task global sort.
+
+The probe (phases 1-3: sampled bounds and exact per-bucket counts) is
+memoized in-process in one bounded ``sources/artifacts.Memo``, keyed by
+the input frame's ``plan_version`` (optimized plan, the files' manifest
+and listing, the SQL conf), the probe kind, keys, value column and bucket
+count: a repeated call over unchanged data skips both probe jobs, and a
+filtered frame, a changed file or another conf is a new key. A frame
+with no version (an RDD leaf, a cached table, a nondeterministic plan)
+is probed fresh. ``clear_probe_memo`` empties it.
 """
 
 from __future__ import annotations
@@ -53,32 +62,23 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from de_polars_spark.sources.artifacts import manifest_tag
+from de_polars_spark.sources.artifacts import Memo, plan_version
 
 #: range-probe sample: error only skews bucket SIZES (load balance),
 #: never the computed ranks
 _BOUNDS_SAMPLE = 0.02
 _BOUNDS_SEED = 421
 
-#: opt-in memo for the probe phase (sampled bounds + exact per-bucket
-#: counts): callers that run the SAME logical probe repeatedly in one
-#: process (e.g. a median pass and a quantile profile over the same
-#: table/keys/value) pass ``probe_memo_key`` to pay the two probe jobs
-#: once. The operators append keys, value column, bucket count AND a
-#: file-manifest fingerprint of the input files (``manifest_tag``), so a
-#: caller that mutates the table between calls gets a fresh probe, not
-#: a stale memo — the caller's key is a logical label only. Driver state is the same
-#: G + G x B rows the probe already collects — memoizing adds no new
-#: driver-memory class. Cleared via clear_probe_memo() (bench.py does,
-#: so artifact honesty matches the pair-graph/KPI pattern: the build is
-#: paid under an explicit "artifact:quantile_probe" row, consumers
-#: measure warm in every run shape).
-_PROBE_MEMO: dict = {}
+#: probes the memo keeps (least recently used out first); an entry is the
+#: G + G x B rows the probe collects anyway. bench.py clears it, then pays
+#: the build under its own "artifact:quantile_probe" row.
+MEMO_SIZE = 16
+_PROBE_MEMO = Memo(MEMO_SIZE)
 
 
-def clear_probe_memo() -> None:
-    """Drop every memoized probe (bench/test isolation)."""
-    _PROBE_MEMO.clear()
+def clear_probe_memo() -> int:
+    """Drop every memoized probe; returns the count."""
+    return _PROBE_MEMO.clear()
 
 
 def _default_buckets(df: DataFrame) -> int:
@@ -86,39 +86,35 @@ def _default_buckets(df: DataFrame) -> int:
 
 
 def _memo_key(
-    prefix: str | None, kind: str, keys: Sequence[str], value_col: str,
-    n_buckets: int, df: DataFrame,
-) -> str | None:
-    """The full probe-memo key for one logical probe (see ``_PROBE_MEMO``)."""
-    if prefix is None:
+    df: DataFrame, kind: str, keys: Sequence[str], value_col: str, n_buckets: int
+) -> tuple | None:
+    """The probe-memo key of one probe over ``df``, or ``None`` when ``df``
+    has no ``plan_version``."""
+    version = plan_version(df)
+    if version is None:
         return None
-    return (
-        f"{prefix}|{kind}|{','.join(keys)}|{value_col}"
-        f"|B={n_buckets}|{manifest_tag(df.inputFiles())}"
-    )
+    return (version, kind, tuple(keys), value_col, n_buckets)
 
 
 def probe_bounds(
     df: DataFrame,
     keys: Sequence[str],
     value_col: str,
-    probe_memo_key: str,
     n_buckets: int | None = None,
     kind: str = "quant",
 ) -> list | None:
     """The memoized sampled bounds rows ``(*keys, __blo, __bhi)`` of a
     previous :func:`exact_quantiles` / :func:`with_global_rank` probe over
-    the SAME relation/keys/value, or ``None`` when not memoized.
+    the SAME data/keys/value, or ``None`` when not memoized.
 
     Lets a caller derive a DIFFERENT probe's bounds arithmetically
     (e.g. ``|x - median|`` bounds from ``x`` bounds) instead of paying a
     fresh sample scan — valid because bounds only balance load, they
     never affect a computed rank or quantile (module contract above)."""
-    keys = list(keys)
     if n_buckets is None:
         n_buckets = _default_buckets(df)
-    key = _memo_key(probe_memo_key, kind, keys, value_col, n_buckets, df)
-    hit = _PROBE_MEMO.get(key)
+    key = _memo_key(df, kind, keys, value_col, n_buckets)
+    hit = _PROBE_MEMO.get(key) if key is not None else None
     return list(hit[0]) if hit is not None else None
 
 
@@ -189,8 +185,8 @@ def _bucketize(df, keys, value_col, n_buckets, memo_key=None, bounds_rows=None):
     operator targets LOW-cardinality group keys; a high-cardinality key
     never needed a distributed rank in the first place).
 
-    ``memo_key`` (opt-in, see ``_PROBE_MEMO``) reuses a previous call's
-    probe — both bounded collects are skipped; the tagged frame is
+    ``memo_key`` (``_memo_key``; ``None`` probes fresh) reuses a previous
+    call's probe — both bounded collects are skipped; the tagged frame is
     rebuilt lazily (free) from the memoized bounds rows.
 
     ``bounds_rows`` (opt-in): caller-supplied sampled-range rows
@@ -216,8 +212,9 @@ def _bucketize(df, keys, value_col, n_buckets, memo_key=None, bounds_rows=None):
             "__bucket", _bucket_expr(value_col, n_buckets).cast("int")
         ).drop("__blo", "__bhi")
 
-    if memo_key is not None and memo_key in _PROBE_MEMO:
-        b_rows, b_schema, sizes, offsets = _PROBE_MEMO[memo_key]
+    hit = _PROBE_MEMO.get(memo_key) if memo_key is not None else None
+    if hit is not None:
+        b_rows, b_schema, sizes, offsets = hit
         bounds = F.broadcast(spark.createDataFrame(b_rows, b_schema))
         return _tag(bounds), sizes, offsets
 
@@ -274,7 +271,7 @@ def _bucketize(df, keys, value_col, n_buckets, memo_key=None, bounds_rows=None):
             cum += buckets[b]
         offsets[key] = offs
     if memo_key is not None:
-        _PROBE_MEMO[memo_key] = (bounds_rows, agg_schema, sizes, offsets)
+        _PROBE_MEMO.put(memo_key, (bounds_rows, agg_schema, sizes, offsets))
     return tagged, sizes, offsets
 
 
@@ -304,23 +301,19 @@ def with_global_rank(
     value_col: str,
     tiebreaks: Sequence[str] = (),
     n_buckets: int | None = None,
-    probe_memo_key: str | None = None,
 ) -> DataFrame:
     """Attach ``__rn`` (0-based exact rank of ``value_col`` + tiebreaks
     within each key group) and ``__n`` (exact group size) to every row.
 
     ``n_buckets`` defaults to the session's shuffle parallelism so the
     per-bucket local sorts stay at ~(group size / parallelism) rows at
-    any scale; raise it for very large groups.
-
-    ``probe_memo_key``: opt-in probe reuse across calls whose input
-    relation is IDENTICAL (the caller's contract — e.g. immutable
-    testdata); keys/value/buckets are appended defensively.
+    any scale; raise it for very large groups. The probe is memoized
+    (``_PROBE_MEMO``).
     """
     keys = list(keys)
     if n_buckets is None:
         n_buckets = _default_buckets(df)
-    memo_key = _memo_key(probe_memo_key, "rank", keys, value_col, n_buckets, df)
+    memo_key = _memo_key(df, "rank", keys, value_col, n_buckets)
     tagged, sizes, offsets = _bucketize(
         df, keys, value_col, n_buckets, memo_key=memo_key
     )
@@ -345,18 +338,15 @@ def exact_quantiles(
     fractions: Sequence[float],
     round_dp: int = 6,
     n_buckets: int | None = None,
-    probe_memo_key: str | None = None,
     bounds_rows: Sequence | None = None,
 ) -> DataFrame:
     """One row per key group: ``p<frac>`` columns + ``n_items``.
 
     Output column names: ``p25`` for 0.25, ``p999`` for 0.999, etc.
 
-    ``probe_memo_key``: opt-in probe reuse across calls whose input
-    relation is IDENTICAL (the caller's contract — e.g. immutable
-    testdata); keys/value/buckets are appended defensively. The probe
-    is independent of ``fractions`` (bounds + counts only), so a median
-    pass and a multi-point profile over the same relation share it.
+    The probe is memoized (``_PROBE_MEMO``) and is independent of
+    ``fractions`` (bounds + counts only), so a median pass and a
+    multi-point profile over the same data share it.
 
     ``bounds_rows``: opt-in caller-supplied sampled ranges
     ``(*keys, lo, hi)`` replacing the probe's sample scan — e.g.
@@ -367,7 +357,7 @@ def exact_quantiles(
     if n_buckets is None:
         n_buckets = _default_buckets(df)
     src = df.select(*keys, F.col(value_col).alias("__v"))
-    memo_key = _memo_key(probe_memo_key, "quant", keys, value_col, n_buckets, df)
+    memo_key = _memo_key(df, "quant", keys, value_col, n_buckets)
     tagged, sizes, offsets = _bucketize(
         src, keys, "__v", n_buckets, memo_key=memo_key, bounds_rows=bounds_rows
     )

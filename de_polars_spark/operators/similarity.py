@@ -22,44 +22,31 @@
   in-process, keyed by the corpus's data version (``sources/artifacts.
   plan_version``: plan, files, listing, SQL conf) and the exact centroid
   table, so a repeated call over unchanged files only probes and scores.
+  The cache is one ``sources/artifacts.Memo`` of ``MEMO_SIZE`` entries
+  that unpersists what it evicts (``ivf_cache_info``, ``clear_ivf_cache``).
   ``build_ivf_index`` persists the same assignment as a cell-partitioned
   parquet index for use across processes. At 100 TB you would fit the
   centroids with k-means (e.g. one MLlib pass over a sample); the
   deterministic sample-fit used here keeps the operator oracle-checkable.
+
+Per-call intermediates that several branches read (the margin miners'
+scored pairs) are persisted through ``sources/artifacts.keep`` and freed
+by ``release_cached``, the package's one release (``dedup`` exports the
+same function).
 """
 
 from __future__ import annotations
 
 import hashlib
-import threading
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from de_polars_spark.functions import vectors as VX
 from de_polars_spark.functions.local_relation import literal_column, values_df
-from de_polars_spark.sources.artifacts import plan_version
-
-
-#: per-call intermediates persisted by operators in this module (the
-#: margin miner's scored A x B relation feeds three consumers). Call
-#: :func:`release_cached` between jobs in long sessions.
-_SIM_PERSISTED: list = []
-
-
-def release_cached() -> int:
-    """Unpersist every per-call intermediate this module persisted; returns
-    the count. The IVF cache is not one: it keeps its entries across calls
-    (:func:`clear_ivf_cache` drops them)."""
-    n = 0
-    while _SIM_PERSISTED:
-        try:
-            _SIM_PERSISTED.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+from de_polars_spark.sources.artifacts import Memo, keep, plan_version, unpersist
+# the package's one release of per-call persisted frames, under this name too
+from de_polars_spark.sources.artifacts import release_cached  # noqa: F401
 
 
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -167,11 +154,11 @@ def _normed(df: DataFrame, id_col: str, vec_col: str, label_col, side: str):
     non-cheap fold un-inlined, so the row norm is computed once, not once
     per centroid."""
     v, n = ("cv", "cn") if side == "neighbor" else ("qv", "qn")
-    keep = [F.col(id_col).alias(f"{side}_id")]
+    cols = [F.col(id_col).alias(f"{side}_id")]
     if label_col is not None:
-        keep.append(F.col(label_col).alias(f"{side}_label"))
-    names = [f"{side}_id", f"{side}_label"][: len(keep)]
-    out = df.select(*keep, VX.as_double(F.col(vec_col)).alias(v))
+        cols.append(F.col(label_col).alias(f"{side}_label"))
+    names = [f"{side}_id", f"{side}_label"][: len(cols)]
+    out = df.select(*cols, VX.as_double(F.col(vec_col)).alias(v))
     return out.select(*names, v, VX.norm(F.col(v)).alias(n)), [*names, v, n]
 
 
@@ -207,18 +194,10 @@ def _probe_cells(
     )
 
 
-#: assigned corpora ``ivf_topk`` keeps (least recently used out first)
+#: assigned corpora ``ivf_topk`` keeps (least recently used out first,
+#: unpersisted as they leave)
 MEMO_SIZE = 4
-_IVF_CACHE: OrderedDict = OrderedDict()
-_IVF_LOCK = threading.Lock()
-_IVF_COUNTS = {"hits": 0, "misses": 0}
-
-
-def _unpersist(df: DataFrame) -> None:
-    try:
-        df.unpersist()
-    except Exception:
-        pass  # its session is gone, and its blocks with it
+_IVF_MEMO = Memo(MEMO_SIZE, on_evict=unpersist)
 
 
 def _assigned_corpus(
@@ -240,45 +219,29 @@ def _assigned_corpus(
         return _assign_cells(corpus, id_col, vec_col, centroids)
     table = tuple((int(cid), tuple(float(x) for x in vec)) for cid, vec in centroids)
     key = (corpus.sparkSession.sparkContext.applicationId, version, id_col, vec_col, table)
-    with _IVF_LOCK:
-        hit = _IVF_CACHE.get(key)
-        if hit is not None:
-            _IVF_CACHE.move_to_end(key)
-            _IVF_COUNTS["hits"] += 1
-            return hit
-        _IVF_COUNTS["misses"] += 1
+    hit = _IVF_MEMO.get(key)
+    if hit is not None:
+        return hit
     digest = hashlib.md5(repr(version[1:]).encode()).hexdigest()
     built = _assign_cells(corpus, id_col, vec_col, centroids).withColumn(
         "data_version", F.lit(digest)
     )
-    # two racing misses both build; the first stored is the one persisted
-    with _IVF_LOCK:
-        stored = _IVF_CACHE.setdefault(key, built)
-        _IVF_CACHE.move_to_end(key)
-        if stored is built:
-            built.persist()
-            while len(_IVF_CACHE) > MEMO_SIZE:
-                _unpersist(_IVF_CACHE.popitem(last=False)[1])
-    return stored
+    # racing misses build equal plans, which Spark caches once; the first
+    # stored is the one kept (and unpersisted when it leaves)
+    return _IVF_MEMO.put(key, built.persist())
 
 
 def clear_ivf_cache() -> int:
     """Unpersist and drop every assigned corpus the IVF cache holds;
     returns the count. :func:`release_cached` leaves the cache alone."""
-    with _IVF_LOCK:
-        held = list(_IVF_CACHE.values())
-        _IVF_CACHE.clear()
-    for df in held:
-        _unpersist(df)
-    return len(held)
+    return _IVF_MEMO.clear()
 
 
 def ivf_cache_info() -> dict:
     """Hits, misses and entries of the IVF cache (see :func:`ivf_topk`);
     :func:`release_cached` does not touch it, :func:`clear_ivf_cache`
     empties it."""
-    with _IVF_LOCK:
-        return {**_IVF_COUNTS, "size": len(_IVF_CACHE), "maxsize": MEMO_SIZE}
+    return _IVF_MEMO.info()
 
 
 def ivf_topk(
@@ -639,8 +602,7 @@ def margin_mutual_pairs_ivf(
             F.max("in_ba").alias("in_ba"),
         )
     )
-    cand = cand.persist()
-    _SIM_PERSISTED.append(cand)
+    cand = keep(cand)
     wa = Window.partitionBy("id_a").orderBy(F.col("cosine").desc(), F.col("id_b"))
     wb = Window.partitionBy("id_b").orderBy(F.col("cosine").desc(), F.col("id_a"))
     r_ab = cand.filter("in_ab").withColumn("rank_a", F.row_number().over(wa))
@@ -908,8 +870,7 @@ def margin_mutual_pairs(
     ranked = scored.withColumn("rank_a", F.row_number().over(wa)).withColumn(
         "rank_b", F.row_number().over(wb)
     )
-    ranked = ranked.persist()
-    _SIM_PERSISTED.append(ranked)
+    ranked = keep(ranked)
     avg_a = (
         ranked.filter(F.col("rank_a") <= k)
         .groupBy("id_a")

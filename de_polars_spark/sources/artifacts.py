@@ -16,7 +16,12 @@ pattern of materializing view results to parquet
 
 :func:`plan_version` is the in-process counterpart for caches of Spark
 results: what a DataFrame's answer depends on, or ``None`` when that cannot
-be told. The SQL response memo and the IVF cell-assignment cache share it.
+be told. :class:`Memo` is the one in-process cache: a bounded, locked LRU
+with hit and miss counts. The API response memo, the IVF cell-assignment
+cache and the quantile probe memo are each one ``Memo`` keyed by a
+``plan_version`` (the GET routes by the CUR's ``manifest_tag``).
+:func:`keep` and :func:`release_cached` are the one list of per-call
+persisted frames.
 """
 
 from __future__ import annotations
@@ -27,7 +32,8 @@ import hashlib
 import os
 import shutil
 import threading
-from typing import Callable, Iterable, Iterator, NamedTuple, Optional
+from collections import OrderedDict
+from typing import Any, Callable, Hashable, Iterable, Iterator, NamedTuple, Optional
 from urllib.parse import urlsplit
 
 #: plan leaves a versioned plan may read: a file scan, versioned by the
@@ -209,3 +215,89 @@ def plan_version(df) -> Optional[PlanVersion]:
     conf = df.sparkSession._jsparkSession.sessionState().conf().getAllConfs()
     return PlanVersion(_SameResult(plan), manifest_tag(roots), tuple(listed),
                        hashlib.md5(conf.toString().encode()).hexdigest())
+
+
+class Memo:
+    """A bounded in-process LRU, safe across threads.
+
+    :meth:`get` counts a hit or a miss; :meth:`put` keeps the first value
+    stored under a key, so racing writers agree on one. Entries past
+    ``maxsize`` leave least recently used first, and every entry that
+    leaves (by eviction or :meth:`clear`) is passed to ``on_evict``, outside
+    the lock. ``None`` is never a stored value: it is what a miss reads."""
+
+    def __init__(self, maxsize: int, on_evict: Optional[Callable[[Any], object]] = None):
+        self.maxsize = maxsize
+        self.on_evict = on_evict or (lambda value: None)
+        self.hits = self.misses = 0
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, key: Hashable) -> Any:
+        """The value stored under ``key``, made most recently used, or
+        ``None``."""
+        with self._lock:
+            value = self._entries.get(key)
+            if value is None:
+                self.misses += 1
+            else:
+                self.hits += 1
+                self._entries.move_to_end(key)
+        return value
+
+    def put(self, key: Hashable, value: Any) -> Any:
+        """Store ``value`` unless ``key`` holds one already; returns the
+        value that is stored."""
+        with self._lock:
+            stored = self._entries.setdefault(key, value)
+            self._entries.move_to_end(key)
+            evicted = [self._entries.popitem(last=False)[1]
+                       for _ in range(len(self._entries) - self.maxsize)]
+        for old in evicted:
+            self.on_evict(old)
+        return stored
+
+    def clear(self) -> int:
+        """Drop every entry; returns how many there were."""
+        with self._lock:
+            evicted = list(self._entries.values())
+            self._entries.clear()
+        for old in evicted:
+            self.on_evict(old)
+        return len(evicted)
+
+    def info(self) -> dict:
+        with self._lock:
+            return {"hits": self.hits, "misses": self.misses,
+                    "size": len(self._entries), "maxsize": self.maxsize}
+
+
+def unpersist(df) -> bool:
+    """``df.unpersist()``; ``False`` when its session is gone (and its
+    blocks with it)."""
+    try:
+        df.unpersist()
+        return True
+    except Exception:
+        return False
+
+
+#: frames persisted for the length of one call (:func:`keep`)
+_KEPT: list = []
+
+
+def keep(df):
+    """``df.persist()``, remembered until :func:`release_cached`: for an
+    intermediate that several branches of one query read."""
+    _KEPT.append(df.persist())
+    return df
+
+
+def release_cached() -> int:
+    """Unpersist every frame :func:`keep` persisted; returns how many were
+    released. Call it between jobs in a long session, while none runs.
+    The IVF cache is not released here (``similarity.clear_ivf_cache``)."""
+    n = 0
+    while _KEPT:
+        n += unpersist(_KEPT.pop())
+    return n

@@ -15,7 +15,7 @@ import threading
 import pytest
 
 from de_polars_spark.inventory import llm_ops as L
-from de_polars_spark.sources.artifacts import publish
+from de_polars_spark.sources.artifacts import Memo, publish
 
 SF = "/root/testdata/sf0.001"
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "de_polars_spark")
@@ -144,6 +144,109 @@ def test_only_the_artifacts_module_fingerprints_files():
             if isinstance(node, ast.Attribute) and node.attr in stat_times
         ]
     assert not offenders, offenders
+
+
+def test_memo_is_an_lru_that_keeps_the_first_value_and_evicts_through_the_hook():
+    evicted = []
+    memo = Memo(2, on_evict=evicted.append)
+    assert memo.get("a") is None
+    assert memo.put("a", 1) == 1 and memo.put("a", 9) == 1  # the first writer's
+    memo.put("b", 2)
+    assert memo.get("a") == 1  # now "b" is the least recently used
+    memo.put("c", 3)
+    assert evicted == [2] and memo.get("b") is None
+    assert memo.info() == {"hits": 1, "misses": 2, "size": 2, "maxsize": 2}
+    assert memo.clear() == 2 and sorted(evicted) == [1, 2, 3]
+    assert memo.info()["size"] == 0
+
+
+def test_memo_counts_and_evictions_hold_under_racing_threads():
+    """More threads than cores hammer one small memo with a short switch
+    interval: every lookup is counted once, every value stored but not
+    held is evicted exactly once, and racing writers get one value."""
+    import sys
+
+    evicted = []
+    memo = Memo(3, on_evict=evicted.append)
+    n_threads, n_ops = min(64, 4 * (os.cpu_count() or 1)), 3000
+    start = threading.Barrier(n_threads)
+    stored, wrong = set(), []
+    lock = threading.Lock()
+
+    def work(t):
+        start.wait()
+        for i in range(n_ops):
+            key = i % 7
+            value = (key, t, i)
+            if memo.get(key) is None:
+                got = memo.put(key, value)
+                with lock:
+                    if got is value:
+                        stored.add(value)
+                    if got[0] != key:
+                        wrong.append(got)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not wrong
+    info = memo.info()
+    assert info["hits"] + info["misses"] == n_threads * n_ops
+    held = [memo.get(k) for k in range(7)]
+    assert len(evicted) == len(set(evicted))
+    assert set(evicted) | {v for v in held if v is not None} == stored
+    assert info["size"] == 3
+
+
+def test_only_the_artifacts_module_keeps_a_cache_or_a_persist_list():
+    """Guard: the package's one in-process LRU is ``sources/artifacts.Memo``
+    and its one list of per-call persisted frames is behind
+    ``sources/artifacts.keep``, so no hand-rolled memo (an ``OrderedDict``
+    with ``move_to_end``) or module-level ``*PERSISTED`` list can reappear."""
+    offenders = []
+    for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, PKG)
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        if rel != os.path.join("sources", "artifacts.py"):
+            offenders += [
+                f"{rel}:{node.lineno}"
+                for node in ast.walk(tree)
+                if (isinstance(node, ast.Name) and node.id == "OrderedDict")
+                or (isinstance(node, ast.Attribute)
+                    and node.attr in ("OrderedDict", "move_to_end"))
+                or (isinstance(node, ast.ImportFrom)
+                    and any(a.name == "OrderedDict" for a in node.names))
+            ]
+        for node in tree.body:
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target] if isinstance(node, ast.AnnAssign) else [])
+            offenders += [f"{rel}:{node.lineno}" for t in targets
+                          if isinstance(t, ast.Name) and t.id.endswith("PERSISTED")]
+    assert not offenders, offenders
+
+
+def test_recall_query_releases_its_persisted_corpus(spark):
+    """A recall query ``keep``s its derived corpus for its branches; after
+    the query, ``release_cached`` leaves none of it cached."""
+    from pyspark import StorageLevel
+
+    from de_polars_spark.inventory import recall_clustered as RC
+    from de_polars_spark.sources.artifacts import release_cached
+
+    release_cached()
+    RC.q_ann_recall_eval_clustered(spark, SF).collect()
+    corpus = RC.clustered_embeddings(spark, SF)  # the same plan: its cache, if any
+    assert corpus.storageLevel != StorageLevel.NONE
+    assert release_cached() >= 1
+    assert corpus.storageLevel == StorageLevel.NONE
 
 
 def test_manifest_tag_follows_the_files(tmp_path):

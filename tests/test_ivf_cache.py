@@ -24,7 +24,8 @@ CENTS = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0]), (2, [0.0, 0.0, 1.
 def empty_cache(monkeypatch):
     """Each test starts with an empty cache and zeroed counters."""
     similarity.clear_ivf_cache()
-    monkeypatch.setattr(similarity, "_IVF_COUNTS", {"hits": 0, "misses": 0})
+    monkeypatch.setattr(similarity._IVF_MEMO, "hits", 0)
+    monkeypatch.setattr(similarity._IVF_MEMO, "misses", 0)
     yield
     similarity.clear_ivf_cache()
 
@@ -162,7 +163,7 @@ def test_release_cached_keeps_the_entry_and_clear_unpersists_it(spark, corpus_di
 
 def test_lru_evicts_and_unpersists_the_least_recently_used(spark, corpus_dir, queries,
                                                            monkeypatch):
-    monkeypatch.setattr(similarity, "MEMO_SIZE", 2)
+    monkeypatch.setattr(similarity._IVF_MEMO, "maxsize", 2)
     corpus = spark.read.parquet(corpus_dir)
     tables = [[(cid, [x + d for x in v]) for cid, v in CENTS] for d in (0.0, 0.25, 0.5)]
     oldest = _stored(corpus, tables[0])

@@ -998,38 +998,68 @@ def test_global_rank_nan_sorts_last(spark):
     ]
 
 
-def test_quantile_probe_memo_reuse(spark):
-    """probe_memo_key pays the bounds+counts jobs once: a second call
-    over the same relation (even with different fractions) reuses the
-    memo and returns identical results."""
+def _quantile_parquet(spark, tmp_path, rows):
+    path = str(tmp_path / "q.parquet")
+    spark.createDataFrame(rows, "g string, v double").write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _medians(df, fractions=(0.5,), **kw) -> dict:
+    from de_polars_spark.operators import quantiles as Q
+
+    return {r["g"]: r["p50"] for r in Q.exact_quantiles(df, ["g"], "v", fractions, **kw).collect()}
+
+
+def test_probe_memo_follows_the_data_not_a_label(spark, tmp_path):
+    """The probe memo is keyed by the frame's data version: a repeated call
+    reuses the probe, and a filtered frame over the same files is probed
+    afresh instead of answered from the unfiltered frame's counts."""
     from de_polars_spark.operators import quantiles as Q
 
     Q.clear_probe_memo()
-    df = spark.createDataFrame(
-        [("a", float(i)) for i in range(101)]
-        + [("b", float(2 * i)) for i in range(51)],
-        "g string, v double",
-    )
-    cold = {
-        r["g"]: r["p50"]
-        for r in Q.exact_quantiles(
-            df, ["g"], "v", [0.5], probe_memo_key="t"
-        ).collect()
-    }
-    assert len(Q._PROBE_MEMO) == 1
-    # different fractions, same probe (bounds+counts are fraction-free)
-    warm = {
-        r["g"]: r["p50"]
-        for r in Q.exact_quantiles(
-            df, ["g"], "v", [0.25, 0.5], probe_memo_key="t"
-        ).collect()
-    }
-    assert cold == warm == {"a": 50.0, "b": 50.0}
-    # a different bucket count must NOT collide (defensive key suffix)
-    Q.exact_quantiles(df, ["g"], "v", [0.5], n_buckets=7, probe_memo_key="t")
-    assert len(Q._PROBE_MEMO) == 2
+    df = _quantile_parquet(spark, tmp_path, [("a", float(i)) for i in range(101)])
+    before = Q._PROBE_MEMO.info()
+    assert _medians(df) == _medians(df) == {"a": 50.0}
+    after = Q._PROBE_MEMO.info()
+    assert (after["hits"] - before["hits"], after["misses"] - before["misses"]) == (1, 1)
+    assert _medians(df.filter("v >= 50")) == {"a": 75.0}
+    assert Q._PROBE_MEMO.info()["misses"] - after["misses"] == 1
+    assert Q._PROBE_MEMO.info()["size"] == 2
     Q.clear_probe_memo()
-    assert not Q._PROBE_MEMO
+
+
+def test_quantile_probe_memo_reuse(spark, tmp_path):
+    """A second call over the same data (even with different fractions)
+    reuses the probe and returns identical results."""
+    from de_polars_spark.operators import quantiles as Q
+
+    Q.clear_probe_memo()
+    df = _quantile_parquet(
+        spark, tmp_path,
+        [("a", float(i)) for i in range(101)] + [("b", float(2 * i)) for i in range(51)],
+    )
+    cold = _medians(df)
+    assert Q._PROBE_MEMO.info()["size"] == 1
+    # different fractions, same probe (bounds+counts are fraction-free)
+    warm = _medians(df, (0.25, 0.5))
+    assert cold == warm == {"a": 50.0, "b": 50.0}
+    # a different bucket count must NOT collide
+    Q.exact_quantiles(df, ["g"], "v", [0.5], n_buckets=7)
+    assert Q._PROBE_MEMO.info()["size"] == 2
+    assert Q.clear_probe_memo() == 2
+    assert Q._PROBE_MEMO.info()["size"] == 0
+
+
+def test_frame_without_a_version_is_probed_fresh(spark):
+    """A frame read from driver rows (an RDD leaf) has no data version: it
+    is answered right and its probe is not stored."""
+    from de_polars_spark.operators import quantiles as Q
+
+    Q.clear_probe_memo()
+    df = spark.createDataFrame([("a", float(i)) for i in range(101)], "g string, v double")
+    assert _medians(df) == _medians(df) == {"a": 50.0}
+    assert Q.probe_bounds(df, ["g"], "v") is None
+    assert Q._PROBE_MEMO.info()["size"] == 0
 
 
 def test_quantile_bounds_rows_load_balance_only(spark):
@@ -1065,16 +1095,14 @@ def test_quantile_bounds_rows_load_balance_only(spark):
         assert got == expect, hint
 
 
-def test_probe_bounds_returns_memoized_rows(spark):
+def test_probe_bounds_returns_memoized_rows(spark, tmp_path):
     from de_polars_spark.operators import quantiles as Q
 
     Q.clear_probe_memo()
-    df = spark.createDataFrame(
-        [("a", float(i)) for i in range(200)], "g string, v double"
-    )
-    assert Q.probe_bounds(df, ["g"], "v", "k") is None  # not yet memoized
-    Q.exact_quantiles(df, ["g"], "v", [0.5], probe_memo_key="k")
-    rows = Q.probe_bounds(df, ["g"], "v", "k")
+    df = _quantile_parquet(spark, tmp_path, [("a", float(i)) for i in range(200)])
+    assert Q.probe_bounds(df, ["g"], "v") is None  # not yet memoized
+    Q.exact_quantiles(df, ["g"], "v", [0.5])
+    rows = Q.probe_bounds(df, ["g"], "v")
     assert rows is not None and len(rows) == 1
     r = rows[0]
     assert r["g"] == "a" and r["__blo"] >= 0.0 and r["__bhi"] <= 199.0

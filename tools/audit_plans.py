@@ -201,8 +201,7 @@ def main() -> None:
 
     only = set(sys.argv[1:])
     rows, flags, justified = [], [], []
-    from de_polars_spark.operators.dedup import release_cached as _rel_dedup
-    from de_polars_spark.operators.similarity import release_cached as _rel_sim
+    from de_polars_spark.sources.artifacts import release_cached
 
     qs = entry_mod.queries()
     # run the heaviest spillers FIRST: a 200-plan sf1 session accumulates
@@ -229,8 +228,7 @@ def main() -> None:
             # internally; 200 executed plans otherwise accumulate
             # cached postings until the storage pressure distorts (or
             # kills) late queries
-            _rel_dedup()
-            _rel_sim()
+            release_cached()
             # and drop py4j refs promptly (same rationale as bench.py):
             # ContextCleaner can only release finished plans' broadcast
             # blocks once the driver-side references are GC'd — at sf1

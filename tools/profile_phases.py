@@ -56,8 +56,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from de_polars_spark.inventory import QUERIES
-    from de_polars_spark.operators.dedup import release_cached as _rd
-    from de_polars_spark.operators.similarity import release_cached as _rs
+    from de_polars_spark.sources.artifacts import release_cached
 
     unknown = [n for n in names if n not in QUERIES]
     if unknown:
@@ -80,8 +79,7 @@ def main() -> None:
             t2 = time.perf_counter()
             df.collect()
             t3 = time.perf_counter()
-            _rd()
-            _rs()
+            release_cached()
             import gc
 
             gc.collect()
