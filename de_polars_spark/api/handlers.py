@@ -184,8 +184,8 @@ class FinOpsHandlers:
         ``.sql`` is a statement, never a file path). Its rows come from the
         response memo when ``_sql_key`` gives a key that is stored, and
         then no Spark job runs. ``data_version()`` runs before the analysis,
-        so a changed CUR is registered again before the statement is
-        planned. ``force_s3``, a CUR root that is not local, a
+        so every engine-registered view whose files changed (the CUR among
+        them) is read again before the statement is planned. ``force_s3``, a CUR root that is not local, a
         ``data_version()`` that fails and a statement ``_sql_key`` refuses
         are answered fresh; errors are never stored.
         The metadata and timing are each request's own."""

@@ -9,9 +9,7 @@ module so CURRENT_DATE-relative analytics are deterministic under test.
 
 from __future__ import annotations
 
-import threading
 from typing import Any, Optional
-from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -25,14 +23,6 @@ from de_polars_spark.analytics.spend import SpendAnalytics
 from de_polars_spark.config import DataConfig, DataExportType
 from de_polars_spark.engine.core import SparkEngine
 from de_polars_spark.engine.session import get_spark
-from de_polars_spark.sources.artifacts import manifest_tag
-
-
-def _local_manifest(root: str) -> Optional[str]:
-    """``manifest_tag`` of a local root; ``None`` for any other URI."""
-    if urlsplit(root).scheme not in ("", "file"):
-        return None
-    return manifest_tag([root])
 
 
 class FinOpsEngine:
@@ -51,36 +41,22 @@ class FinOpsEngine:
         now: Optional[str] = None,
     ):
         self.spark = spark or get_spark("finops-engine")
-        # fingerprinted before Spark lists the files, so a change that lands
-        # in between shows up as a new version on the next data_version()
-        self._manifest = _local_manifest(SparkEngine._resolve_root(config, False))
         self.engine = SparkEngine(self.spark, config)
         self.config = config
         self.now = now
-        self._modules: dict[str, Any] = {}
-        self._version_lock = threading.Lock()
+        # module name -> (the CUR version it was built over, the module)
+        self._modules: dict[str, tuple[Optional[str], Any]] = {}
 
     def data_version(self) -> Optional[tuple[str, str]]:
-        """What the answers over ``config.table_name`` depend on:
-        ``(file manifest of its root, effective date)``, or ``None`` when the
-        root is not a local path and so cannot be fingerprinted.
-
-        The manifest comes from a fresh walk of the root, not from Spark's
-        listing, which is the one taken at registration. When it differs
-        from the registered one, the table is registered again and the
-        analytics modules are dropped, so the KPI view chain is rebuilt over
-        the new files (a temp view keeps its inputs' plans). The date is
+        """What the answers over ``config.table_name`` depend on: ``(file
+        manifest of its root, effective date)``, or ``None`` when the root is
+        not a local path. ``SparkEngine.refresh()`` first reads again every
+        engine view whose files changed, the CUR among them. The date is
         ``now``, or today in the session time zone, the clock Spark's
         ``CURRENT_DATE`` reads."""
-        tag = _local_manifest(self.engine._registered[self.config.table_name])
-        if tag is None:
-            return None
-        with self._version_lock:
-            if tag != self._manifest:
-                self.engine.register(self.config)
-                self._modules.clear()
-                self._manifest = tag
-        return tag, self.now or self._session_today()
+        self.engine.refresh()
+        tag = self.engine.version(self.config.table_name)
+        return None if tag is None else (tag, self.now or self._session_today())
 
     def _session_today(self) -> str:
         jvm = self.spark._jvm
@@ -93,9 +69,13 @@ class FinOpsEngine:
     # lazy analytics modules (finops_engine.py:66-113)                    #
     # ------------------------------------------------------------------ #
     def _module(self, name: str, cls):
-        if name not in self._modules:
-            self._modules[name] = cls(self.engine, now=self.now)
-        return self._modules[name]
+        """Module ``name``, built again when the CUR was read again since,
+        so the KPI module creates its view chain over the new read."""
+        version = self.engine.version(self.config.table_name)
+        built = self._modules.get(name)
+        if built is None or built[0] != version:
+            built = self._modules[name] = (version, cls(self.engine, now=self.now))
+        return built[1]
 
     @property
     def kpi(self) -> KPISummary:

@@ -8,6 +8,9 @@ Capability parity with the reference's DuckDBEngine + FinOpsEngine.query
   reference eagerly copies every parquet file into an in-memory DuckDB
   table per query (duckdb_engine.py:151-157) — an anti-pattern at 100 TB;
   here Catalyst prunes partitions/columns and pushes filters to the scan.
+- Each ``register*`` is one ``_register`` into one registry. A view keeps
+  the file listing Spark took when it was read, so ``refresh()`` reads
+  again each view whose local files changed (not a ``register_dataframe``).
 - Date-range pruning is a WHERE on the hive partition column, which
   Catalyst turns into partition pruning (no file listing gymnastics;
   reference did string-compare pruning over S3 CommonPrefixes,
@@ -20,26 +23,63 @@ Capability parity with the reference's DuckDBEngine + FinOpsEngine.query
 from __future__ import annotations
 
 import os
-from typing import Optional
+import threading
+from typing import Callable, Optional
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from de_polars_spark.config import PARTITION_FORMAT, DataConfig
 from de_polars_spark.engine.dialect import translate_duckdb_sql
+from de_polars_spark.sources.artifacts import manifest_tag
 
 
 class SparkEngine:
     def __init__(self, spark: SparkSession, config: Optional[DataConfig] = None):
         self.spark = spark
         self.config = config
-        self._registered: dict[str, str] = {}  # view name -> source description
+        # view name -> (roots, read, their manifest_tag or None if not local)
+        self._registered: dict[str, tuple] = {}
+        self._lock = threading.RLock()
         if config is not None:
             self.register(config)
 
     # ------------------------------------------------------------------ #
     # registration                                                        #
     # ------------------------------------------------------------------ #
+    def _register(self, name: str, roots: tuple, read: Callable[[], DataFrame]) -> DataFrame:
+        """``read()`` as the view ``name``; files that land during the read
+        are a change the next :meth:`refresh` sees."""
+        local = bool(roots) and all(urlsplit(r).scheme in ("", "file") for r in roots)
+        with self._lock:
+            manifest = manifest_tag(roots) if local else None
+            df = read()
+            df.createOrReplaceTempView(name)
+            self._registered[name] = (roots, read, manifest)
+        return df
+
+    def refresh(self) -> set[str]:
+        """Read again the views whose files changed; returns their names. The
+        walk runs outside the lock; under it, a view is read again only if
+        its manifest still differs, so racing callers read a change once."""
+        walked = [(name, roots, tag)
+                  for name, (roots, _, manifest) in list(self._registered.items())
+                  if manifest is not None and (tag := manifest_tag(roots)) != manifest]
+        changed = set()
+        with self._lock:
+            for name, roots, tag in walked:
+                now_roots, read, manifest = self._registered[name]
+                if now_roots == roots and manifest != tag:
+                    self._register(name, roots, read)
+                    changed.add(name)
+        return changed
+
+    def version(self, name: str) -> Optional[str]:
+        """The manifest ``name`` was last read under (``None``: unversioned)."""
+        entry = self._registered.get(name)
+        return entry[2] if entry else None
+
     def register(self, config: DataConfig, force_s3: bool = False) -> DataFrame:
         """Register ``config.table_name`` as a temp view over its parquet root.
 
@@ -47,75 +87,48 @@ class SparkEngine:
         prefer local when present unless ``force_s3``.
         """
         root = self._resolve_root(config, force_s3)
-        reader = self.spark.read
-        for k, v in config.extra_read_options.items():
-            reader = reader.option(k, v)
-        df = reader.parquet(root)
-        df = self._apply_date_range(df, config)
-        df.createOrReplaceTempView(config.table_name)
-        self._registered[config.table_name] = root
-        return df
+        return self._register(config.table_name, (root,), lambda: self._apply_date_range(
+            self.spark.read.options(**config.extra_read_options).parquet(root), config
+        ))
 
     def register_path(self, name: str, *paths: str) -> DataFrame:
         """Register a view over one or more parquet paths (multi-path read
         is the reference's implicit UNION ALL, duckdb_engine.py:157)."""
-        df = self.spark.read.parquet(*paths)
-        df.createOrReplaceTempView(name)
-        self._registered[name] = ",".join(paths)
-        return df
+        return self._register(name, paths, lambda: self.spark.read.parquet(*paths))
 
     def register_dataframe(self, name: str, df: DataFrame) -> DataFrame:
         """Register an API-built DataFrame (e.g. pricing tables) as a view —
         the reference documented this but stubbed it
         (duckdb_engine.py:184-196); here it actually works."""
-        df.createOrReplaceTempView(name)
-        self._registered[name] = "<dataframe>"
-        return df
+        return self._register(name, (), lambda: df)
 
     def register_csv(self, name: str, *paths: str, **options: str) -> DataFrame:
         """CSV source incl. gzip (the reference discovered ``.gz`` files
         but never parsed them, s3_data_manager.py:56-58,206-216 — Spark's
         CSV reader decompresses by extension natively)."""
-        reader = self.spark.read.option("header", "true").option(
-            "inferSchema", "true"
-        )
-        for key, value in options.items():
-            reader = reader.option(key, value)
-        df = reader.csv(list(paths))
-        df.createOrReplaceTempView(name)
-        self._registered[name] = ",".join(paths)
-        return df
+        options = {"header": "true", "inferSchema": "true", **options}
+        return self._register(
+            name, paths, lambda: self.spark.read.options(**options).csv(list(paths)))
 
     def register_orc(self, name: str, *paths: str) -> DataFrame:
         """ORC source (beyond reference, which was parquet/gz-only —
         s3_data_manager.py:56-58): Spark's native vectorized ORC reader,
         same pushdown/pruning as parquet."""
-        df = self.spark.read.orc(*paths)
-        df.createOrReplaceTempView(name)
-        self._registered[name] = ",".join(paths)
-        return df
+        return self._register(name, paths, lambda: self.spark.read.orc(*paths))
 
     def register_json(self, name: str, *paths: str, **options: str) -> DataFrame:
         """JSON-lines source (one object per line; Spark infers the
         schema and decompresses .gz by extension)."""
-        reader = self.spark.read
-        for key, value in options.items():
-            reader = reader.option(key, value)
-        df = reader.json(list(paths))
-        df.createOrReplaceTempView(name)
-        self._registered[name] = ",".join(paths)
-        return df
+        return self._register(
+            name, paths, lambda: self.spark.read.options(**options).json(list(paths)))
 
     def list_partitions(self, table_name: Optional[str] = None) -> list[str]:
         """Distinct partition values for the registered table's hive
         partition column (reference listed S3 CommonPrefixes,
         s3_data_manager.py:65-99; here the column IS the partition, so a
         distinct over it is partition-pruned metadata work)."""
-        name = table_name or (self.config.table_name if self.config else None)
-        if not name:
-            raise ValueError("no table registered")
         col = self.config.partition_column if self.config else None
-        df = self.spark.table(name)
+        df = self.spark.table(self._table(table_name))
         if col is None or col not in df.columns:
             return []
         return sorted(
@@ -223,19 +236,22 @@ class SparkEngine:
     # ------------------------------------------------------------------ #
     # introspection (duckdb_engine.py:315-376 parity)                     #
     # ------------------------------------------------------------------ #
-    def get_schema(self, table_name: Optional[str] = None) -> dict[str, str]:
+    def _table(self, table_name: Optional[str]) -> str:
         name = table_name or (self.config.table_name if self.config else None)
         if not name:
             raise ValueError("no table registered")
-        df = self.spark.table(name)
+        return name
+
+    def get_schema(self, table_name: Optional[str] = None) -> dict[str, str]:
+        df = self.spark.table(self._table(table_name))
         return {f.name: f.dataType.simpleString() for f in df.schema.fields}
 
     def sample(self, n: int = 10, table_name: Optional[str] = None) -> DataFrame:
-        name = table_name or (self.config.table_name if self.config else None)
-        return self.spark.table(name).limit(n)
+        return self.spark.table(self._table(table_name)).limit(n)
 
     def catalog(self) -> dict:
         return {
-            "tables": dict(self._registered),
+            "tables": {name: ",".join(roots) or "<dataframe>"
+                       for name, (roots, _, _) in self._registered.items()},
             "schemas": {t: self.get_schema(t) for t in self._registered},
         }

@@ -1026,9 +1026,9 @@ def q_median_abs_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_returnflag", F.col("p50").alias("__med"))
     # materialize the G-row median (bounded: one row per return flag)
     # so the second exact_quantiles pass doesn't re-run the first
-    # pipeline once per downstream branch
+    # pipeline once per downstream branch (a local relation: memoizable)
     med_rows = med_q.collect()
-    med = spark.createDataFrame(med_rows, med_q.schema)
+    med = values_df(spark, med_rows, "l_returnflag string, __med double")
     dev = (
         t["lineitem"]
         .join(F.broadcast(med), "l_returnflag")

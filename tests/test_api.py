@@ -633,7 +633,7 @@ class TestResponseMemo:
     def test_non_local_root_bypasses_the_memo(self, memo_engines, cur_root):
         h = memo_engines(cur_root)
         # as after a force_s3 request: the table's root is an object store
-        h.engine.engine._registered["memo_cur"] = "s3a://finops-bucket/cur"
+        h.engine.engine._registered["memo_cur"] = (("s3a://finops-bucket/cur",), None, None)
         assert h.engine.data_version() is None
         assert h.mcp_tools() == h.mcp_tools()
         assert h.memo_info() == {"hits": 0, "misses": 0, "size": 0,
@@ -643,6 +643,44 @@ class TestResponseMemo:
         h = memo_engines(cur_root, now=None)
         _, today = h.engine.data_version()
         assert today == spark.sql("SELECT CAST(current_date() AS STRING)").first()[0]
+
+
+def test_racing_data_versions_read_an_appended_cur_once(memo_engines, cur_root,
+                                                       cur_partitions, monkeypatch):
+    """More threads than cores ask for the data version right after one
+    append: the CUR is read again once, they all get the same version, and
+    the answers afterwards are a fresh engine's."""
+    h = memo_engines(cur_root)
+    before = h.engine.data_version()
+    h.kpi_summary()  # modules built over the read without the new month
+    h.spend_invoice_summary()
+    shutil.copytree(os.path.join(cur_partitions, HELD_OUT), os.path.join(cur_root, HELD_OUT))
+    engine, reads = h.engine.engine, []
+    register = engine._register
+    monkeypatch.setattr(engine, "_register", lambda *a: reads.append(a[0]) or register(*a))
+    n = min(16, 4 * (os.cpu_count() or 1))
+    start = threading.Barrier(n)
+    versions, errors = [], []
+
+    def run():
+        try:
+            start.wait(timeout=30)
+            versions.append(h.engine.data_version())
+        except Exception as exc:  # surfaced below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run) for _ in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not errors, errors
+    assert reads == ["memo_cur"], reads
+    assert len(versions) == n and len(set(versions)) == 1 and versions[0] != before
+    answers = (h.kpi_summary(), h.spend_invoice_summary())
+    assert "1998-09" in [t["month"] for t in answers[1]["trend_data"]]
+    fresh = memo_engines(cur_root)
+    assert answers == (fresh.kpi_summary(), fresh.spend_invoice_summary())
 
 
 @contextlib.contextmanager
@@ -866,7 +904,7 @@ class TestSqlMemo:
 
     def test_non_local_root_bypasses_the_memo(self, memo_engines, cur_root):
         h = memo_engines(cur_root)
-        h.engine.engine._registered["memo_cur"] = "s3a://finops-bucket/cur"
+        h.engine.engine._registered["memo_cur"] = (("s3a://finops-bucket/cur",), None, None)
         self._twice_unmemoized(h, self.COUNT)
 
     @pytest.mark.parametrize("sql", ["DROP TABLE memo_cur", "SELEC COUNT(*) FROM"])

@@ -146,6 +146,23 @@ def test_only_the_artifacts_module_fingerprints_files():
     assert not offenders, offenders
 
 
+def test_one_registry_versions_every_engine_view():
+    """Guard: every view ``SparkEngine`` registers goes through its one
+    ``_register``, and ``FinOpsEngine`` keeps no lock or file manifest of
+    its own next to the engine's registry."""
+    with open(os.path.join(PKG, "engine", "core.py")) as f:
+        assert f.read().count("createOrReplaceTempView") == 1
+    with open(os.path.join(PKG, "client.py")) as f:
+        tree = ast.parse(f.read())
+    imported = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            imported |= {node.module} | {a.name for a in node.names}
+        elif isinstance(node, ast.Import):
+            imported |= {a.name for a in node.names}
+    assert not imported & {"threading", "manifest_tag"}, imported
+
+
 def test_memo_is_an_lru_that_keeps_the_first_value_and_evicts_through_the_hook():
     evicted = []
     memo = Memo(2, on_evict=evicted.append)

@@ -197,3 +197,63 @@ def test_scripts_take_their_session_size_from_session_size(script):
     assert "cpus, driver_mem = session_size()" in src
     for var in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"):
         assert f'os.environ.get("{var}"' not in src, var
+
+
+def _write_ids(spark, fmt: str, path: str, lo: int, hi: int, mode: str) -> None:
+    writer = spark.range(lo, hi).coalesce(1).write.mode(mode)
+    getattr(writer.option("header", "true") if fmt == "csv" else writer, fmt)(path)
+
+
+@pytest.mark.parametrize(
+    "fmt, method",
+    [("parquet", "register_path"), ("orc", "register_orc"),
+     ("json", "register_json"), ("csv", "register_csv")],
+)
+def test_refresh_reads_again_a_view_whose_files_changed(spark, tmp_path, fmt, method):
+    path, name = str(tmp_path / fmt), f"refreshed_{fmt}"
+    _write_ids(spark, fmt, path, 0, 3, "error")
+    engine = SparkEngine(spark)
+    getattr(engine, method)(name, path)
+    version = engine.version(name)
+    total = f"SELECT SUM(id) FROM {name}"
+    _write_ids(spark, fmt, path, 3, 10, "append")
+    # the view keeps the listing Spark took when it was read
+    assert spark.sql(total).first()[0] == 3
+    assert engine.refresh() == {name}
+    assert spark.sql(total).first()[0] == 45
+    assert engine.version(name) not in (None, version)
+    assert engine.refresh() == set()
+
+
+def test_ad_hoc_sql_sees_files_appended_to_a_registered_view(spark, sf_dir, tmp_path):
+    from de_polars_spark.api.handlers import FinOpsHandlers
+    from de_polars_spark.client import FinOpsEngine
+
+    h = FinOpsHandlers(FinOpsEngine(
+        DataConfig(export_type=DataExportType.GENERIC, table_name="refreshed_cur",
+                   local_data_path=os.path.join(sf_dir, "orders.parquet")),
+        spark=spark, now="1998-10-01",
+    ))
+    side = str(tmp_path / "side")
+    _write_ids(spark, "parquet", side, 0, 3, "error")
+    h.engine.engine.register_path("refreshed_side", side)
+    sql = "SELECT SUM(id) AS s FROM refreshed_side"
+    assert h.sql_query(sql)["data"][0]["s"] == 3
+    _write_ids(spark, "parquet", side, 3, 10, "append")
+    # no GET and no registration in between
+    assert h.sql_query(sql)["data"][0]["s"] == 45
+
+
+def test_views_not_read_from_local_files_are_not_versioned(spark):
+    engine = SparkEngine(spark)
+    engine.register_dataframe("unversioned_rows", spark.range(3))
+    assert engine.version("unversioned_rows") is None
+    assert engine.version("never_registered") is None
+    assert engine.refresh() == set()
+    assert engine.catalog()["tables"] == {"unversioned_rows": "<dataframe>"}
+
+
+@pytest.mark.parametrize("call", ["get_schema", "sample", "list_partitions"])
+def test_default_table_without_one_registered_is_an_error(spark, call):
+    with pytest.raises(ValueError, match="no table registered"):
+        getattr(SparkEngine(spark), call)()

@@ -1050,6 +1050,26 @@ def test_quantile_probe_memo_reuse(spark, tmp_path):
     assert Q._PROBE_MEMO.info()["size"] == 0
 
 
+def test_median_abs_deviation_probes_nothing_the_second_time(spark, sf_dir, monkeypatch):
+    """The deviation pass joins the medians as a local relation, so it has a
+    data version: each of the query's probes has a memo key, and a second
+    run is answered from the memo with no new probe."""
+    from de_polars_spark.inventory import relational_ext as R
+    from de_polars_spark.operators import quantiles as Q
+
+    memo_key, keys = Q._memo_key, []
+    monkeypatch.setattr(Q, "_memo_key", lambda *a: keys.append(memo_key(*a)) or keys[-1])
+    Q.clear_probe_memo()
+    first = sorted(R.q_median_abs_deviation(spark, sf_dir).collect())
+    before = Q._PROBE_MEMO.info()
+    assert sorted(R.q_median_abs_deviation(spark, sf_dir).collect()) == first
+    after = Q._PROBE_MEMO.info()
+    assert keys and None not in keys
+    assert after["misses"] == before["misses"]
+    assert after["hits"] - before["hits"] == len(keys) // 2
+    Q.clear_probe_memo()
+
+
 def test_frame_without_a_version_is_probed_fresh(spark):
     """A frame read from driver rows (an RDD leaf) has no data version: it
     is answered right and its probe is not stored."""
