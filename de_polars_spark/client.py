@@ -44,8 +44,7 @@ class FinOpsEngine:
         self.engine = SparkEngine(self.spark, config)
         self.config = config
         self.now = now
-        # module name -> (the CUR version it was built over, the module)
-        self._modules: dict[str, tuple[Optional[str], Any]] = {}
+        self._modules: dict[str, Any] = {}
 
     def data_version(self) -> Optional[tuple[str, str]]:
         """What the answers over ``config.table_name`` depend on: ``(file
@@ -69,13 +68,14 @@ class FinOpsEngine:
     # lazy analytics modules (finops_engine.py:66-113)                    #
     # ------------------------------------------------------------------ #
     def _module(self, name: str, cls):
-        """Module ``name``, built again when the CUR was read again since,
-        so the KPI module creates its view chain over the new read."""
-        version = self.engine.version(self.config.table_name)
-        built = self._modules.get(name)
-        if built is None or built[0] != version:
-            built = self._modules[name] = (version, cls(self.engine, now=self.now))
-        return built[1]
+        """Module ``name``, built once per engine. A CUR read again needs no
+        rebuild: the modules read the table by name at each call, and the
+        KPI chain is SQL-text temp views, which Spark resolves again at
+        each use."""
+        module = self._modules.get(name)
+        if module is None:
+            module = self._modules[name] = cls(self.engine, now=self.now)
+        return module
 
     @property
     def kpi(self) -> KPISummary:

@@ -35,6 +35,24 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda x: x != F.lit(""))
 
 
+def ngrams(text: Column, n: int) -> Column:
+    """The word ``n``-grams of ``text`` in order, as ``array<string>``:
+    the ``n``-token windows of :func:`tokens`, joined by one space. A text
+    with fewer than ``n`` tokens gives an empty array, NULL gives NULL.
+
+    One overlapping lookahead over the space-padded, space-collapsed text:
+    each single space opens exactly one window, so the grams come out per
+    row with no window function (no shuffle) and stay in whole-stage
+    codegen. The pattern is a literal, compiled once per task."""
+    if n < 1:
+        raise ValueError(f"n={n}: an n-gram has at least one word")
+    pattern = "(?= ([^ ]+" + "(?: [^ ]+)" * (n - 1) + ") )"
+    spaced = F.regexp_replace(
+        F.concat(F.lit(" "), text, F.lit(" ")), F.lit(" +"), F.lit(" ")
+    )
+    return F.regexp_extract_all(spaced, F.lit(pattern), 1)
+
+
 def hash60(s: Column) -> Column:
     """60-bit integer hash reproducible in any md5-capable engine."""
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from de_polars_spark.inventory.dialect_macros import render
+from de_polars_spark.inventory.llm_ops import _shingles
 from de_polars_spark.operators import corpus, vectors
 from de_polars_spark.sources.registry import register_testdata
 
@@ -32,15 +33,6 @@ ORACLES: dict = {}
 
 _TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
 _OVERLAP_N = 5
-
-
-def _shingles(n: int) -> str:
-    gram = " || ' ' || ".join(f"toks[i+{j}]" if j else "toks[i]" for j in range(n))
-    return (
-        f"CASE WHEN len(toks) >= {n} THEN "
-        f"list_distinct(list_transform(generate_series(1, len(toks) - {n - 1}), "
-        f"i -> {gram})) ELSE []::VARCHAR[] END"
-    )
 
 
 # ---------------------------------------------------------------- #

@@ -28,6 +28,9 @@ _TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
 def _shingles(n: int = 2) -> str:
+    """DuckDB list of the DISTINCT word ``n``-grams of ``toks`` (the
+    oracle side of ``functions/text.ngrams``), shared by every inventory
+    module's oracle."""
     gram = " || ' ' || ".join(f"toks[i+{j}]" if j else "toks[i]" for j in range(n))
     return (
         f"CASE WHEN len(toks) >= {n} THEN "
@@ -128,7 +131,7 @@ def _pair_graph_key() -> str:
     import inspect
 
     impl = (
-        inspect.getsource(dedup._gram_strings)
+        inspect.getsource(TX.ngrams)
         + inspect.getsource(dedup._minhash_sig_df)
         + inspect.getsource(dedup.minhash_lsh_pairs)
     )
@@ -1459,31 +1462,13 @@ _CONTAM_N = 5
 
 
 def q_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from de_polars_spark.functions import text as _TX
-
     t = register_testdata(spark, sf_dir)
-    # n-grams via one window pass of LEADs over exploded tokens: the
-    # array-HOF shingle build (transform + element_at concat) evaluates
-    # interpreted and cost ~8s alone at sf0.1; posexplode + lead stays
-    # inside whole-stage codegen (one doc_id shuffle) and the shared
-    # shingle relation is checkpointed so the benchmark and corpus
-    # branches don't recompute it
-    tok = t["documents"].select(
-        "doc_id", F.posexplode(_TX.tokens(F.col("text"))).alias("p", "tok")
-    )
-    w = Window.partitionBy("doc_id").orderBy("p")
-    leads = [F.lead("tok", i).over(w) for i in range(1, _CONTAM_N)]
-    gram = F.concat_ws(" ", F.col("tok"), *leads)
+    # the shared shingle relation is checkpointed so the benchmark and
+    # corpus branches don't recompute it
     ex = (
-        tok.select(
-            "doc_id",
-            gram.alias("__g"),
-            leads[-1].alias("__last"),
-        )
-        .where(F.col("__last").isNotNull())
-        .select("doc_id", _TX.hash60(F.col("__g")).alias("g"))
+        t["documents"]
+        .select("doc_id", F.explode(TX.ngrams(F.col("text"), _CONTAM_N)).alias("__g"))
+        .select("doc_id", TX.hash60(F.col("__g")).alias("g"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -1527,38 +1512,16 @@ ORACLES["benchmark_contamination"] = _contam_oracle()
 # One explode + two aggregations, all map-side combinable.          #
 # ---------------------------------------------------------------- #
 def q_text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from de_polars_spark.functions import text as _TX
-
     t = register_testdata(spark, sf_dir)
-    # positional (NON-distinct) bigrams via LEAD over exploded tokens —
-    # whole-stage codegen, one doc-keyed shuffle (the array-HOF form
-    # evaluated interpreted; see benchmark_contamination note)
-    tok = t["documents"].select(
-        "doc_id", F.posexplode(_TX.tokens(F.col("text"))).alias("p", "tok")
+    docs = t["documents"]
+    per_doc = docs.select("doc_id", TX.tokens(F.col("text")).alias("toks")).select(
+        "doc_id",
+        F.size("toks").cast("bigint").alias("n_toks"),
+        F.size(F.array_distinct("toks")).alias("n_distinct"),
     )
-    w = Window.partitionBy("doc_id").orderBy("p")
-    grams = (
-        tok.select(
-            "doc_id",
-            F.col("tok"),
-            F.lead("tok", 1).over(w).alias("__nxt"),
-        )
-        .withColumn(
-            "bg",
-            F.when(
-                F.col("__nxt").isNotNull(),
-                F.concat_ws(" ", "tok", "__nxt"),
-            ),
-        )
-    )
-    per_doc = grams.groupBy("doc_id").agg(
-        F.count("*").alias("n_toks"),
-        F.countDistinct("tok").alias("n_distinct"),
-    )
+    # positional (NON-distinct) bigrams
     top_bg = (
-        grams.where(F.col("bg").isNotNull())
+        docs.select("doc_id", F.explode(TX.ngrams(F.col("text"), 2)).alias("bg"))
         .groupBy("doc_id", "bg")
         .agg(F.count("*").alias("c"))
         .groupBy("doc_id")
@@ -4231,8 +4194,8 @@ ORACLES["dsir_importance_select"] = _dsir_oracle()
 # rounds over the word stream (the collocation/phrase analogue of   #
 # byte-pair encoding — each round counts adjacent symbol pairs,     #
 # merges the most frequent one corpus-wide, and re-segments).       #
-# Spark shape per round: ONE pair-count shuffle (posexplode + LEAD  #
-# window — the codegen n-gram pattern) and a broadcast 1-row        #
+# Spark shape per round: ONE pair-count shuffle (adjacent symbols   #
+# zipped per doc, no window) and a broadcast 1-row                  #
 # argmax crossJoined into the re-segmentation replace — the whole   #
 # k-round chain stays in ONE lazy plan, zero driver round-trips.    #
 # Symbols ride in a \x02tok\x03-delimited string, so the pair       #

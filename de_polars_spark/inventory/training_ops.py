@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from de_polars_spark.functions import text as TX
 from de_polars_spark.inventory.dialect_macros import render
+from de_polars_spark.inventory.llm_ops import _shingles
 from de_polars_spark.operators import dedup, similarity, vectors
 from de_polars_spark.sources.registry import register_testdata
 
@@ -77,20 +78,11 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _gram_list(n: int) -> str:
-    gram = " || ' ' || ".join(f"toks[i+{j}]" if j else "toks[i]" for j in range(n))
-    return (
-        f"CASE WHEN len(toks) >= {n} THEN "
-        f"list_distinct(list_transform(generate_series(1, len(toks) - {n - 1}), "
-        f"i -> {gram})) ELSE []::VARCHAR[] END"
-    )
-
-
 QUERIES["dedup_containment"] = q_dedup_containment
 ORACLES["dedup_containment"] = f"""
     WITH toks AS (SELECT doc_id, lang AS block, {_TOKS} AS toks FROM documents),
     post AS (
-        SELECT doc_id, block, unnest({_gram_list(_CONT_N)}) AS g FROM toks
+        SELECT doc_id, block, unnest({_shingles(_CONT_N)}) AS g FROM toks
     ),
     sizes AS (SELECT doc_id, block, COUNT(*) AS n_sh FROM post GROUP BY 1, 2),
     inter AS (

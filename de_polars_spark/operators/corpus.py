@@ -18,8 +18,8 @@ beyond-parity LLM-pipeline operators (BASELINE.json north star).
 Scale shape: everything funnels through hash-keyed aggregations whose
 output cardinality is bounded by vocabulary / source-pair counts, never
 by corpus size — the explode stages are map-side, every shuffle carries
-a map-side partial aggregate, and the only window over an unbounded
-input partitions per document. Determinism: float sums go through
+a map-side partial aggregate, and no window runs over an unbounded
+input. Determinism: float sums go through
 DECIMAL(38,6) (order-independent), ranks carry total-order tiebreaks,
 outputs round to 6dp.
 """
@@ -55,8 +55,8 @@ def source_overlap_matrix(
     ``shared_grams``, each side's distinct-gram count, and
     ``jaccard = shared / (n_a + n_b - shared)``.
 
-    Scale shape: grams build per-document (posexplode + LEAD window,
-    whole-stage codegen — no interpreted HOF lambdas), collapse to
+    Scale shape: grams build per row (``TX.ngrams``, a regex column in
+    whole-stage codegen — no window, no interpreted HOF lambdas), collapse to
     DISTINCT (source, gram-hash) in one shuffle, then ONE groupBy on
     the gram hash emits in-executor source pairs via sorted
     ``collect_set`` (no self-join): per-gram pair fan-out is bounded by
@@ -64,29 +64,17 @@ def source_overlap_matrix(
     aggregate is map-side combinable. The 60-bit md5 gram hash keeps
     shuffle rows fixed-width regardless of shingle text length.
 
-    PRECONDITION: ``id_col`` must be unique (one text per id) — the
-    gram window partitions per document (see ``_gram_strings``).
+    Each row shingles on its own, so ``id_col`` is not read: rows that
+    share an id (two crawls numbering from 1) never splice into a gram.
     """
-    tok = df.select(
-        F.col(id_col),
-        F.col(source_col).alias("__src"),
-        F.posexplode(TX.tokens(F.col(text_col))).alias("p", "tok"),
-    )
-    if shingle_n == 1:
-        grams = tok.select("__src", TX.hash60(F.col("tok")).alias("h"))
-    else:
-        wd = Window.partitionBy(id_col).orderBy("p")
-        leads = [F.lead("tok", i).over(wd) for i in range(1, shingle_n)]
-        grams = (
-            tok.select(
-                F.col("__src"),
-                TX.hash60(F.concat_ws(" ", F.col("tok"), *leads)).alias("h"),
-                leads[-1].alias("__last"),
-            )
-            .where(F.col("__last").isNotNull())
-            .drop("__last")
+    sh = (
+        df.select(
+            F.col(source_col).alias("__src"),
+            F.explode(TX.ngrams(F.col(text_col), shingle_n)).alias("__g"),
         )
-    sh = grams.distinct()
+        .select("__src", TX.hash60(F.col("__g")).alias("h"))
+        .distinct()
+    )
     totals = sh.groupBy("__src").agg(F.count(F.lit(1)).alias("n"))
     pairs = (
         sh.groupBy("h")

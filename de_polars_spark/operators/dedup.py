@@ -21,7 +21,10 @@ shingle arrays are materialized as real columns in chained selects —
 interpreted HOF evaluation re-executes inlined subexpressions per element,
 which made the naive forms 8-16× slower. Per-row signature work is all
 JVM expression trees; the only shuffles are the bucket groupBys, which is
-the minimum any candidate-pair algorithm needs.
+the minimum any candidate-pair algorithm needs. Word n-grams ("shingles")
+all come from one column, ``functions/text.ngrams``: a per-row regex, no
+window, so each row shingles on its own and no shuffle precedes the
+consumer's own aggregation.
 
 At 100 TB the known hazard is posting-list / bucket skew (boilerplate
 shingles, near-identical boilerplate docs): both pair generators go
@@ -93,46 +96,6 @@ def _bucket_pairs(ids: Column) -> Column:
     )
 
 
-def _gram_strings(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int
-) -> DataFrame:
-    """``(id, __g)`` word n-gram STRINGS, possibly repeated per doc.
-
-    posexplode + LEAD over a per-row window instead of the array-HOF
-    shingle build: higher-order-function lambdas evaluate interpreted
-    (outside whole-stage codegen) and dominate at corpus scale; the
-    window form stays codegen'd and costs one shuffle, which the
-    consumers' per-doc aggregations need anyway. Docs with fewer
-    than ``shingle_n`` tokens emit no rows.
-
-    The window partitions on ``(id, physical row)`` — a per-row tag
-    rides along so DUPLICATE-ID inputs shingle each row independently
-    instead of interleaving token positions into fabricated cross-row
-    n-grams (the r4-documented precondition, now removed; for
-    unique-id inputs the tag is constant per id and the output is
-    unchanged). The tag's values are irrelevant — only within-row
-    equality matters — so monotonically_increasing_id's instability
-    across stage retries is harmless here."""
-    tok = df.withColumn("__row", F.monotonically_increasing_id()).select(
-        F.col(id_col),
-        "__row",
-        F.posexplode(TX.tokens(F.col(text_col))).alias("p", "tok"),
-    )
-    if shingle_n == 1:
-        return tok.select(F.col(id_col), F.col("tok").alias("__g"))
-    wd = Window.partitionBy(id_col, "__row").orderBy("p")
-    leads = [F.lead("tok", i).over(wd) for i in range(1, shingle_n)]
-    return (
-        tok.select(
-            F.col(id_col),
-            F.concat_ws(" ", F.col("tok"), *leads).alias("__g"),
-            leads[-1].alias("__last"),
-        )
-        .where(F.col("__last").isNotNull())
-        .drop("__last")
-    )
-
-
 def _minhash_sig_df(
     df: DataFrame, id_col: str, text_col: str, n_hashes: int, shingle_n: int
 ) -> DataFrame:
@@ -149,7 +112,9 @@ def _minhash_sig_df(
     literals, so building it costs the same py4j round trips for any
     ``n_hashes``; the struct is built once per doc after the aggregation
     and unpacked by the projection above it."""
-    grams = _gram_strings(df, id_col, text_col, shingle_n)
+    grams = df.select(
+        F.col(id_col), F.explode(TX.ngrams(F.col(text_col), shingle_n)).alias("__g")
+    )
     slots = ", ".join(
         f"'mh{i}', min(md5(concat(__g, {sql_literal(f'#{i}')})))"
         for i in range(n_hashes)
@@ -519,33 +484,7 @@ def ngram_jaccard_pairs(
     # so the engine-reproducibility md5 buys is unused here and xxhash64
     # is a single native codegen call per shingle instead of
     # md5 -> substring -> base-16 conv.
-    #
-    # Gram construction is posexplode + LEAD over a per-doc window, not
-    # the array-HOF shingle build: higher-order-function lambdas evaluate
-    # interpreted (outside whole-stage codegen) and dominated the old
-    # plan's runtime; the window form pays one id_col shuffle and stays
-    # codegen'd (same trick as ngram_duplication_profile, ~5x there).
-    tok = df.select(
-        F.col(id_col),
-        F.col(block_col).alias("block"),
-        F.posexplode(TX.tokens(F.col(text_col))).alias("p", "tok"),
-    )
-    if shingle_n > 1:
-        # block joins id_col in the partition key so the same id listed
-        # under two blocks windows separately (LEAD would otherwise
-        # fabricate cross-row shingles from the interleaved positions)
-        wd = Window.partitionBy(id_col, "block").orderBy("p")
-        leads = [F.lead("tok", i).over(wd) for i in range(1, shingle_n)]
-        grams = tok.select(
-            id_col,
-            "block",
-            F.xxhash64(F.concat_ws(" ", F.col("tok"), *leads)).alias("shingle"),
-            leads[-1].alias("__last"),
-        ).where(F.col("__last").isNotNull())
-    else:
-        grams = tok.select(
-            id_col, "block", F.xxhash64("tok").alias("shingle")
-        )
+    grams = _hashed_gram_postings(df, id_col, text_col, block_col, shingle_n)
     ex = keep(grams.select(id_col, "block", "shingle").distinct())
     # per-doc shingle sets for the verification join, rebuilt from the
     # (already distinct) postings; docs with no shingles can never be
@@ -979,31 +918,11 @@ def ngram_duplication_profile(
     Output: ``(id, n_ngrams, n_shared, dup_ratio)``; docs with fewer
     than ``n`` tokens have no n-grams and emit no row.
     """
-    # n-grams via posexplode + LEAD window, NOT the array-HOF shingle
-    # build: higher-order-function lambdas evaluate interpreted (outside
-    # whole-stage codegen) and dominated this query's runtime; the window
-    # form stays codegen'd end to end (one id_col shuffle; same trick as
-    # benchmark_contamination, measured ~5x there)
-    tok = df.select(
-        F.col(id_col), F.posexplode(TX.tokens(F.col(text_col))).alias("p", "tok")
+    ex = (
+        df.select(F.col(id_col), F.explode(TX.ngrams(F.col(text_col), n)).alias("__g"))
+        .select(id_col, F.xxhash64("__g").alias("g"))
+        .distinct()
     )
-    if n == 1:
-        # unigrams need no LEAD window (and leads[-1] below would not
-        # exist): hash each token directly — same branch as _gram_strings
-        ex = tok.select(id_col, F.xxhash64("tok").alias("g")).distinct()
-    else:
-        wd = Window.partitionBy(id_col).orderBy("p")
-        leads = [F.lead("tok", i).over(wd) for i in range(1, n)]
-        ex = (
-            tok.select(
-                id_col,
-                F.xxhash64(F.concat_ws(" ", F.col("tok"), *leads)).alias("g"),
-                leads[-1].alias("__last"),
-            )
-            .where(F.col("__last").isNotNull())
-            .select(id_col, "g")
-            .distinct()
-        )
     w = Window.partitionBy("g")
     return (
         ex.withColumn("__nd", F.count(F.lit(1)).over(w))
@@ -1030,33 +949,15 @@ def _hashed_gram_postings(
     block_col: str,
     shingle_n: int,
 ) -> DataFrame:
-    """``(id, block, p, shingle)`` xxhash64'd word n-grams with their
-    token position — the block-aware, position-keeping sibling of
-    :func:`_gram_strings` (same codegen'd posexplode + LEAD build, same
-    unique-``(id, block)`` precondition), shared by the posting-join
-    miners below. Drop ``p``/dedupe downstream as the consumer needs."""
-    tok = df.select(
+    """``(id, block, p, shingle)``: each row's xxhash64'd word n-grams
+    with the position of their first token, shared by the Jaccard, the
+    containment and the shared-span miners. Drop ``p``/dedupe downstream
+    as the consumer needs."""
+    return df.select(
         F.col(id_col),
         F.col(block_col).alias("block"),
-        F.posexplode(TX.tokens(F.col(text_col))).alias("p", "tok"),
-    )
-    if shingle_n == 1:
-        return tok.select(
-            F.col(id_col), "block", "p", F.xxhash64("tok").alias("shingle")
-        )
-    wd = Window.partitionBy(id_col, "block").orderBy("p")
-    leads = [F.lead("tok", i).over(wd) for i in range(1, shingle_n)]
-    return (
-        tok.select(
-            F.col(id_col),
-            "block",
-            "p",
-            F.xxhash64(F.concat_ws(" ", F.col("tok"), *leads)).alias("shingle"),
-            leads[-1].alias("__last"),
-        )
-        .where(F.col("__last").isNotNull())
-        .drop("__last")
-    )
+        F.posexplode(TX.ngrams(F.col(text_col), shingle_n)).alias("p", "__g"),
+    ).select(id_col, "block", "p", F.xxhash64("__g").alias("shingle"))
 
 
 def containment_pairs(
@@ -1075,8 +976,8 @@ def containment_pairs(
     original resemblance paper treats containment as the second primary
     measure for exactly this case).
 
-    Shape: distinct per-doc shingle postings (posexplode + LEAD gram
-    build, codegen'd, same as :func:`ngram_jaccard_pairs`), then ONE
+    Shape: distinct per-doc shingle postings (the per-row gram build
+    shared with :func:`ngram_jaccard_pairs`), then ONE
     self-join of the postings on ``(block, shingle)`` feeding a map-side
     combinable pair count — the candidate space IS the co-occurrence
     join, no all-pairs expansion ever materializes. The prefix-filter
@@ -1091,15 +992,10 @@ def containment_pairs(
     Output: ``(id_small, id_large, n_common, n_small, n_large,
     containment)`` for pairs with containment >= threshold; ties in set
     size break toward the smaller id as ``id_small``.
-
-    PRECONDITION: ``(id_col, block_col)`` must be unique in ``df`` (one
-    text per id per block) — the gram build windows on that pair, so
-    duplicate rows would interleave token positions and fabricate
-    cross-row shingles (same constraint as :func:`_gram_strings`).
     """
     grams = _hashed_gram_postings(df, id_col, text_col, block_col, shingle_n)
     # the distinct postings feed both self-join sides — persist so the
-    # tokenize/window/distinct chain runs once (same recompute-dominated
+    # tokenize/gram/distinct chain runs once (same recompute-dominated
     # profile ngram_jaccard_pairs measured; release via release_cached())
     post = keep(grams.select(id_col, "block", "shingle").distinct())
     if max_df is not None:
@@ -1185,9 +1081,6 @@ def longest_shared_span(
     caps Zipfian grams before the join (None = exact); candidate volume
     is bounded by per-gram co-occurrence exactly like
     :func:`containment_pairs`.
-
-    PRECONDITION: ``(id_col, block_col)`` unique in ``df`` (the LEAD
-    gram build windows on that pair — see :func:`_gram_strings`).
 
     Output: ``(id_a, id_b, n_shared_positions, longest_span_tokens)``
     per pair sharing at least one n-gram (implied minimum span =

@@ -573,6 +573,25 @@ class TestResponseMemo:
                         os.path.join(cur_root, HELD_OUT))
         assert h.kpi_summary(billing_period=period)["summary_metadata"]["records_analyzed"] > 0
 
+    def test_an_append_reuses_the_kpi_view_chain(self, memo_engines, cur_root,
+                                                 cur_partitions, monkeypatch):
+        # the chain is SQL-text temp views, resolved again at each use, so
+        # the CUR read again needs no second registration
+        from de_polars_spark.analytics import kpi as kpi_module
+
+        calls = []
+        register = kpi_module.register_kpi_views
+        monkeypatch.setattr(kpi_module, "register_kpi_views",
+                            lambda *a, **k: calls.append(a) or register(*a, **k))
+        h = memo_engines(cur_root)
+        before = h.kpi_summary()["summary_metadata"]["records_analyzed"]
+        shutil.copytree(os.path.join(cur_partitions, HELD_OUT),
+                        os.path.join(cur_root, HELD_OUT))
+        after = h.kpi_summary()
+        assert len(calls) == 1, calls
+        assert after["summary_metadata"]["records_analyzed"] > before
+        assert after == memo_engines(cur_root).kpi_summary()
+
     def test_lru_evicts_the_least_recently_used_past_the_bound(
             self, memo_engines, cur_root, monkeypatch):
         monkeypatch.setattr(handlers_module, "MEMO_SIZE", 2)

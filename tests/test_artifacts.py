@@ -163,6 +163,27 @@ def test_one_registry_versions_every_engine_view():
     assert not imported & {"threading", "manifest_tag"}, imported
 
 
+def test_one_ngram_builder_forms_every_word_gram():
+    """Guard: word n-grams are formed only by ``functions/text.ngrams``, so
+    no posexplode + LEAD copy of the gram build can reappear, and the
+    MinHash pair graph's cache key follows that one builder."""
+    import inspect
+
+    from de_polars_spark.functions import text as TX
+
+    banned = ('F.lead("tok"', "posexplode(TX.tokens", "posexplode(_TX.tokens")
+    offenders = []
+    for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            offenders += [
+                f"{os.path.relpath(path, PKG)}:{lineno}"
+                for lineno, line in enumerate(f, 1)
+                if any(b in line for b in banned)
+            ]
+    assert not offenders, offenders
+    assert inspect.getsource(TX.ngrams) in L._pair_graph_key()
+
+
 def test_memo_is_an_lru_that_keeps_the_first_value_and_evicts_through_the_hook():
     evicted = []
     memo = Memo(2, on_evict=evicted.append)

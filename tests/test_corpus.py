@@ -61,6 +61,21 @@ def test_source_overlap_matches_model(spark, docs):
     assert got == expect
 
 
+def test_source_overlap_rows_sharing_an_id_shingle_apart(spark):
+    # two crawls both numbering from 1: s1's doc 1 and s2's doc 1 give
+    # "a b" and "c d", never a spliced "a c" or "b d" that s3 holds
+    df = spark.createDataFrame(
+        [(1, "s1", "a b"), (1, "s2", "c d"), (2, "s3", "a c a x b d b"),
+         (3, "s4", "a b")],
+        "doc_id int, source string, text string",
+    )
+    got = {
+        (r.source_a, r.source_b): (r.shared_grams, r.n_grams_a, r.n_grams_b)
+        for r in source_overlap_matrix(df, "doc_id", "source", "text", 2).collect()
+    }
+    assert got == {("s1", "s4"): (1, 1, 1)}
+
+
 def test_zipf_slope_matches_least_squares(spark):
     # frequencies 16,8,4,2,1 over ranks 1..5 -> fit by hand
     counts = {"a": 16, "b": 8, "c": 4, "d": 2, "e": 1}

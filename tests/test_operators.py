@@ -48,17 +48,17 @@ def test_ngram_jaccard_exact_similarity(docs):
 
 
 def test_gram_strings_duplicate_ids_do_not_interleave(spark):
-    # two physical rows sharing an id must shingle independently — the
-    # old id-partitioned LEAD window interleaved their token positions
-    # and fabricated cross-row n-grams (r4 ADVICE carried item)
-    from de_polars_spark.operators.dedup import _gram_strings
-
+    # two physical rows sharing an id must shingle independently — an
+    # id-partitioned LEAD window would interleave their token positions
+    # and fabricate cross-row n-grams
     df = spark.createDataFrame(
         [(1, "a b"), (1, "c d"), (2, "e f")], "doc_id bigint, text string"
     )
     grams = {
-        (r["doc_id"], r["__g"])
-        for r in _gram_strings(df, "doc_id", "text", 2).collect()
+        (r["doc_id"], r["g"])
+        for r in df.select(
+            "doc_id", F.explode(T.ngrams(F.col("text"), 2)).alias("g")
+        ).collect()
     }
     assert grams == {(1, "a b"), (1, "c d"), (2, "e f")}
 
@@ -552,6 +552,19 @@ def test_ngram_duplication_profile_unigrams(spark):
     assert out[1] == (3, 2)  # a, b shared with doc 2
     assert out[2] == (3, 2)
     assert out[3] == (3, 0)
+
+
+def test_ngram_duplication_profile_rows_sharing_an_id_shingle_apart(spark):
+    # doc 1 is two rows (two crawls both numbering from 1): its bigrams
+    # are "a b" and "c d", never a spliced "a c" or "b d"
+    docs = spark.createDataFrame(
+        [(1, "a b"), (1, "c d"), (2, "a c a x b d b")], "doc_id int, text string"
+    )
+    out = {
+        r["doc_id"]: (r["n_ngrams"], r["n_shared"])
+        for r in dedup.ngram_duplication_profile(docs, "doc_id", "text", n=2).collect()
+    }
+    assert out == {1: (2, 0), 2: (6, 0)}
 
 
 def test_ivf_index_roundtrip(spark, tmp_path):

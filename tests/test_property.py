@@ -281,6 +281,42 @@ def test_select_canonical_matches_model(spark, members):
         assert got[c] == (best[0], best[1], len(dropped), sum(dropped))
 
 
+# raw texts with runs of spaces, tabs and newlines inside tokens and
+# between them, the empty string and NULL
+_raw_text = st.one_of(
+    st.none(),
+    st.lists(
+        st.sampled_from(["a", "bb", "é", " ", "   ", "\t", "\n"]), max_size=12
+    ).map("".join),
+)
+
+
+@given(texts=st.lists(_raw_text, min_size=1, max_size=6), n=st.integers(1, 8))
+@settings(**_SETTINGS)
+def test_ngrams_match_python_model(spark, texts, n):
+    """``TX.ngrams`` with its positions is the list of ``n``-token windows
+    of the space-split tokens; NULL text gives a NULL array."""
+    from de_polars_spark.functions import text as TX
+
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    rows = (
+        df.select("id", TX.ngrams(F.col("text"), n).alias("g"))
+        .select("id", F.isnull("g").alias("is_null"), F.posexplode_outer("g"))
+        .collect()
+    )
+    grams: dict = {}
+    nulls = {}
+    for r in rows:
+        nulls[r.id] = r.is_null
+        if r.pos is not None:
+            grams.setdefault(r.id, []).append((r.pos, r.col))
+    for i, s in enumerate(texts):
+        assert nulls[i] == (s is None), repr(s)
+        t = [w for w in (s or "").split(" ") if w]
+        expect = [(p, " ".join(t[p : p + n])) for p in range(len(t) - n + 1)]
+        assert sorted(grams.get(i, [])) == expect, (repr(s), n)
+
+
 # tokens drawn from a tiny vocabulary so duplicate grams and shared
 # shingles across docs actually occur
 _token = st.sampled_from(["a", "bb", "ccc", "d", "e"])
@@ -290,7 +326,7 @@ _doc = st.lists(_token, min_size=0, max_size=10)
 @given(docs=st.lists(_doc, min_size=1, max_size=6))
 @settings(**_SETTINGS)
 def test_minhash_signature_matches_python_model(spark, docs):
-    """The LEAD-window + MIN-aggregate signature must equal the naive
+    """The n-gram + MIN-aggregate signature must equal the naive
     per-doc python minhash over distinct 2-gram strings."""
     import hashlib
 
