@@ -6,7 +6,6 @@ whole serving contract and is what the tests exercise.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from fastapi import Body, FastAPI, HTTPException, Query
@@ -231,16 +230,8 @@ def create_finops_app(
 
 
 def create_finops_app_from_env() -> FastAPI:
-    """Env-driven factory (fastapi_app.py:176-226)."""
-    kwargs = {}
-    if region := os.getenv("FINOPS_AWS_REGION"):
-        kwargs["aws_region"] = region
-    if table := os.getenv("FINOPS_TABLE_NAME"):
-        kwargs["table_name"] = table
-    return create_finops_app(
-        local_data_path=os.getenv("FINOPS_LOCAL_PATH"),
-        s3_bucket=os.getenv("FINOPS_S3_BUCKET"),
-        s3_data_prefix=os.getenv("FINOPS_S3_PREFIX", ""),
-        data_export_type=os.getenv("FINOPS_DATA_TYPE", "GENERIC"),
-        **kwargs,
-    )
+    """Env-driven factory (fastapi_app.py:176-226): ``DataConfig.from_env``."""
+    config = DataConfig.from_env()
+    if config is None:
+        raise ValueError("set FINOPS_LOCAL_PATH and/or FINOPS_S3_BUCKET")
+    return build_app(FinOpsEngine(config))

@@ -22,7 +22,7 @@ from de_polars_spark.analytics.optimization import OptimizationEngine
 from de_polars_spark.analytics.spend import SpendAnalytics
 from de_polars_spark.config import DataConfig, DataExportType
 from de_polars_spark.engine.core import SparkEngine
-from de_polars_spark.engine.session import get_spark
+from de_polars_spark.engine.session import get_spark, new_session
 
 
 class FinOpsEngine:
@@ -32,6 +32,12 @@ class FinOpsEngine:
         engine = FinOpsEngine(config)
         engine.kpi.get_comprehensive_summary()
         engine.query("SELECT * FROM CUR LIMIT 10")
+
+    Built without ``spark``, an engine has a session of its own on the
+    :func:`get_spark` context: its temp views (the CUR, the KPI chain) and
+    SQL conf are its own, so two engines never answer from each other's
+    data. Built with ``spark``, it registers its views in that session
+    and shares them with whatever else uses it.
     """
 
     def __init__(
@@ -40,7 +46,7 @@ class FinOpsEngine:
         spark: Optional[SparkSession] = None,
         now: Optional[str] = None,
     ):
-        self.spark = spark or get_spark("finops-engine")
+        self.spark = spark or new_session(get_spark("finops-engine"))
         self.engine = SparkEngine(self.spark, config)
         self.config = config
         self.now = now

@@ -9,6 +9,7 @@ never eagerly materializes files into an in-memory table.
 
 from __future__ import annotations
 
+import os
 import re
 from dataclasses import dataclass, field
 from enum import Enum
@@ -72,6 +73,26 @@ class DataConfig:
             )
         if not self.local_data_path and not self.s3_bucket:
             raise ValueError("need local_data_path and/or s3_bucket")
+
+    @classmethod
+    def from_env(cls) -> Optional["DataConfig"]:
+        """The config the ``FINOPS_*`` variables describe (reference
+        fastapi_app.py:176-226), or ``None`` when neither
+        ``FINOPS_LOCAL_PATH`` nor ``FINOPS_S3_BUCKET`` is set.
+        ``FINOPS_S3_PREFIX``, ``FINOPS_DATA_TYPE``, ``FINOPS_AWS_REGION`` and
+        ``FINOPS_TABLE_NAME`` replace the defaults when set."""
+        env = os.environ
+        if not (env.get("FINOPS_LOCAL_PATH") or env.get("FINOPS_S3_BUCKET")):
+            return None
+        optional = {"aws_region": env.get("FINOPS_AWS_REGION"),
+                    "table_name": env.get("FINOPS_TABLE_NAME")}
+        return cls(
+            local_data_path=env.get("FINOPS_LOCAL_PATH"),
+            s3_bucket=env.get("FINOPS_S3_BUCKET"),
+            s3_data_prefix=env.get("FINOPS_S3_PREFIX", ""),
+            export_type=DataExportType(env.get("FINOPS_DATA_TYPE", "GENERIC")),
+            **{k: v for k, v in optional.items() if v},
+        )
 
     @property
     def partition_column(self) -> Optional[str]:

@@ -200,11 +200,24 @@ class SparkEngine:
         ``ParsedStatement``, or any ``InsertInto*`` node (InsertIntoDir is
         neither of the former two) is rejected. The text is always SQL,
         never a file path.
+
+        The parser reads the SQL conf of the thread's active session (a
+        CAST takes its ANSI mode there), so this engine's session is made
+        active while it parses.
         """
-        plan = self.spark._jsparkSession.sessionState().sqlParser().parsePlan(
-            translate_duckdb_sql(sql)
-        )
         jvm = self.spark._jvm
+        sessions = jvm.org.apache.spark.sql.SparkSession
+        active = sessions.getActiveSession()
+        sessions.setActiveSession(self.spark._jsparkSession)
+        try:
+            plan = self.spark._jsparkSession.sessionState().sqlParser().parsePlan(
+                translate_duckdb_sql(sql)
+            )
+        finally:
+            if active.isDefined():
+                sessions.setActiveSession(active.get())
+            else:
+                sessions.clearActiveSession()
         name = plan.getClass().getSimpleName()
         for iface in (
             "org.apache.spark.sql.catalyst.plans.logical.Command",

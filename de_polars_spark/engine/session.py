@@ -11,8 +11,13 @@ or rely on AQE coalescing from a high initial value).
 from __future__ import annotations
 
 import os
+import threading
+import weakref
+from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 _DEFAULTS: dict[str, str] = {
     # AQE: re-plan at runtime — broadcast switch, partition coalesce, skew split.
@@ -85,3 +90,52 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def new_session(parent: SparkSession) -> SparkSession:
+    """A session of its own on ``parent``'s SparkContext (its own temp
+    views, functions and SQL conf) whose conf starts as a copy of
+    ``parent``'s.
+
+    ``newSession()`` alone starts from the SparkContext's conf. That holds
+    what :func:`get_spark` sets only when get_spark made the context;
+    after another builder made it, a bare new session would have ANSI on,
+    Spark's default shuffle width and codegen split threshold."""
+    child = parent.newSession()
+    theirs = child.conf.getAll
+    for key, value in parent.conf.getAll.items():
+        if theirs.get(key) != value and child.conf.isModifiable(key):
+            child.conf.set(key, value)
+    return child
+
+
+#: session -> {key: (source, value)} (:func:`registered`)
+_REGISTRY: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+_REGISTRY_LOCK = threading.Lock()
+
+
+def registered(spark: SparkSession, key: str, source: Hashable,
+               register: Callable[[], T]) -> T:
+    """What ``register()`` returned when it last registered ``key`` in
+    ``spark`` from ``source``; it runs again when the source differs.
+
+    A session keeps one entry per key, the last source only, so a switch
+    A -> B -> A registers again each time: the temp view names are shared.
+    The entries are weakly keyed by the session object and go with it, so
+    two sessions of one application each register their own views and
+    conf, and no entry outlives its session to be found by another."""
+    with _REGISTRY_LOCK:
+        entries = _REGISTRY.setdefault(spark, {})
+    entry = entries.get(key)
+    if entry is not None and entry[0] == source:
+        return entry[1]
+    value = register()
+    entries[key] = (source, value)
+    return value
+
+
+def forget(spark: SparkSession, key: str) -> None:
+    """Drop ``spark``'s entry for ``key``: the next :func:`registered`
+    call registers again."""
+    with _REGISTRY_LOCK:
+        _REGISTRY.get(spark, {}).pop(key, None)

@@ -41,7 +41,7 @@ _OVERLAP_N = 5
 def q_cross_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = register_testdata(spark, sf_dir)
     return corpus.source_overlap_matrix(
-        t["documents"], "doc_id", "source", "text", shingle_n=_OVERLAP_N
+        t["documents"], "source", "text", shingle_n=_OVERLAP_N
     )
 
 

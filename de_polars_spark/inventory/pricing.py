@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from de_polars_spark.engine.session import registered
 from de_polars_spark.inventory.dialect_macros import render
 from de_polars_spark.inventory.kpi_views import CUR_EXT_CTE, _ensure_cur_ext
 from de_polars_spark.sources.pricing import (
@@ -25,15 +26,13 @@ from de_polars_spark.sources.pricing import (
 QUERIES: dict = {}
 ORACLES: dict = {}
 
-_PRICING_READY: set[int] = set()
-
 
 def _ensure_pricing_views(spark: SparkSession) -> None:
-    if id(spark) in _PRICING_READY:
-        return
-    for name, df in build_pricing_tables(spark).items():
-        df.createOrReplaceTempView(name)
-    _PRICING_READY.add(id(spark))
+    def register() -> None:
+        for name, df in build_pricing_tables(spark).items():
+            df.createOrReplaceTempView(name)
+
+    registered(spark, "pricing", None, register)
 
 
 #: README.md:558-579 cost-efficiency join (actual vs theoretical on-demand)

@@ -40,7 +40,6 @@ def _dsum(col: Column) -> Column:
 
 def source_overlap_matrix(
     df: DataFrame,
-    id_col: str,
     source_col: str,
     text_col: str,
     shingle_n: int = 5,
@@ -64,8 +63,8 @@ def source_overlap_matrix(
     aggregate is map-side combinable. The 60-bit md5 gram hash keeps
     shuffle rows fixed-width regardless of shingle text length.
 
-    Each row shingles on its own, so ``id_col`` is not read: rows that
-    share an id (two crawls numbering from 1) never splice into a gram.
+    Each row shingles on its own, so rows that share an id (two crawls
+    numbering from 1) never splice into a gram.
     """
     sh = (
         df.select(

@@ -1,5 +1,5 @@
-"""Display formatting, export sinks, data-quality validation, and
-profiling utilities (reference: de_polars/utils/__init__.py:1-19).
+"""Display formatting, export sinks and data-quality validation
+utilities (reference: de_polars/utils/__init__.py:1-19).
 
 Driver-side presentation stays pure Python; anything touching data is a
 Spark DataFrame op with the collect confined to the API/report edge.
@@ -16,7 +16,6 @@ from de_polars_spark.utils.formatters import (
     format_relative_date,
     get_date_range_description,
 )
-from de_polars_spark.utils.performance import QueryProfiler, query_profiler
 from de_polars_spark.utils.validators import (
     validate_cost_data,
     validate_date_range,
@@ -35,8 +34,6 @@ __all__ = [
     "format_billing_period",
     "format_relative_date",
     "get_date_range_description",
-    "QueryProfiler",
-    "query_profiler",
     "validate_cost_data",
     "validate_date_range",
     "validate_local_path",

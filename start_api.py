@@ -46,41 +46,30 @@ def check_environment() -> None:
 
 
 def build_engine():
-    """Env-driven engine construction (mirrors create_finops_app_from_env)."""
+    """The engine ``DataConfig.from_env()`` describes; with no data source
+    set, the demo engine over the synthesized sample CUR."""
     from de_polars_spark.client import FinOpsEngine
-    from de_polars_spark.config import DataConfig, DataExportType
+    from de_polars_spark.config import DataConfig
 
-    kwargs = {}
-    if region := os.getenv("FINOPS_AWS_REGION"):
-        kwargs["aws_region"] = region
-    if table := os.getenv("FINOPS_TABLE_NAME"):
-        kwargs["table_name"] = table
-    if not (os.getenv("FINOPS_LOCAL_PATH") or os.getenv("FINOPS_S3_BUCKET")):
-        # demo mode: synthesize the sample CUR table so every finops
-        # route (spend/kpi/optimization/...) serves real rows, not just
-        # /health — same bootstrap the API tests use
-        bootstrap = FinOpsEngine(
-            DataConfig(local_data_path="/root/testdata/sf0.001")
-        )
-        from de_polars_spark.inventory.kpi_views import _ensure_cur_ext
+    config = DataConfig.from_env()
+    if config is not None:
+        return FinOpsEngine(config)
+    # demo mode: synthesize the sample CUR table so every finops
+    # route (spend/kpi/optimization/...) serves real rows, not just
+    # /health — same bootstrap the API tests use
+    from de_polars_spark.engine.session import get_spark
+    from de_polars_spark.inventory.kpi_views import _ensure_cur_ext
 
-        path = _ensure_cur_ext(bootstrap.spark, "/root/testdata/sf0.001")
-        return FinOpsEngine(
-            DataConfig(local_data_path=path, table_name="CUR"),
-            spark=bootstrap.spark,
-            # the sample CUR derives from TPC-H's 1992-1998 dates; pin
-            # "now" inside that window so trailing-month endpoints
-            # return rows instead of empty frames
-            now="1998-10-01",
-        )
-    config = DataConfig(
-        local_data_path=os.getenv("FINOPS_LOCAL_PATH"),
-        s3_bucket=os.getenv("FINOPS_S3_BUCKET"),
-        s3_data_prefix=os.getenv("FINOPS_S3_PREFIX", ""),
-        export_type=DataExportType(os.getenv("FINOPS_DATA_TYPE", "GENERIC")),
-        **kwargs,
+    spark = get_spark("finops-engine")
+    return FinOpsEngine(
+        DataConfig(local_data_path=_ensure_cur_ext(spark, "/root/testdata/sf0.001"),
+                   table_name="CUR"),
+        spark=spark,
+        # the sample CUR derives from TPC-H's 1992-1998 dates; pin
+        # "now" inside that window so trailing-month endpoints
+        # return rows instead of empty frames
+        now="1998-10-01",
     )
-    return FinOpsEngine(config)
 
 
 def _coerce(v: str, annotation=None):

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import pytest
 
-import contextlib
 import os
 import shutil
 import threading
@@ -20,6 +19,7 @@ from de_polars_spark.api import handlers as handlers_module
 from de_polars_spark.api.handlers import MAX_LIMIT, ApiError, FinOpsHandlers, ROUTES
 from de_polars_spark.client import FinOpsEngine
 from de_polars_spark.config import DataConfig, DataExportType
+from de_polars_spark.engine.session import new_session
 
 
 @pytest.fixture(scope="module")
@@ -29,7 +29,7 @@ def finops(spark, sf_dir):
     path = _ensure_cur_ext(spark, sf_dir)
     engine = FinOpsEngine(
         DataConfig(local_data_path=path, table_name="CUR"),
-        spark=spark,
+        spark=new_session(spark),
         now="1998-10-01",
     )
     return engine
@@ -367,6 +367,56 @@ class TestStdlibLauncher:
         assert served.memo_info()["hits"] == hits + 1
 
 
+class TestConfigFromEnv:
+    """``DataConfig.from_env``, the one reader of the ``FINOPS_*`` variables
+    (``start_api.build_engine`` and the FastAPI env factory call it)."""
+
+    VALUES = {"FINOPS_LOCAL_PATH": "/data/cur", "FINOPS_S3_BUCKET": "bucket",
+              "FINOPS_S3_PREFIX": "exports/cur", "FINOPS_DATA_TYPE": "FOCUS1.0",
+              "FINOPS_AWS_REGION": "eu-west-1", "FINOPS_TABLE_NAME": "focus"}
+
+    @pytest.fixture()
+    def env(self, monkeypatch):
+        for name in self.VALUES:
+            monkeypatch.delenv(name, raising=False)
+        return monkeypatch
+
+    def test_every_variable_is_read(self, env):
+        for name, value in self.VALUES.items():
+            env.setenv(name, value)
+        assert DataConfig.from_env() == DataConfig(
+            local_data_path="/data/cur", s3_bucket="bucket", s3_data_prefix="exports/cur",
+            export_type=DataExportType.FOCUS_1_0, aws_region="eu-west-1", table_name="focus")
+
+    def test_unset_or_empty_variables_keep_the_defaults(self, env):
+        assert DataConfig.from_env() is None
+        env.setenv("FINOPS_S3_BUCKET", "bucket")
+        env.setenv("FINOPS_TABLE_NAME", "")
+        assert DataConfig.from_env() == DataConfig(s3_bucket="bucket")
+        env.setenv("FINOPS_DATA_TYPE", "CUR3")
+        with pytest.raises(ValueError):
+            DataConfig.from_env()
+
+    def test_start_api_serves_the_configured_data(self, env, built_spark, tmp_path):
+        import start_api
+
+        root = str(tmp_path / "cur")
+        built_spark.range(1, 3).coalesce(1).write.parquet(root)
+        env.setenv("FINOPS_LOCAL_PATH", root)
+        env.setenv("FINOPS_TABLE_NAME", "env_cur")
+        engine = start_api.build_engine()
+        assert engine.config == DataConfig.from_env()
+        assert engine.query("SELECT SUM(id) FROM env_cur").first()[0] == 3
+
+    def test_start_api_demo_mode_serves_the_sample_cur(self, env, built_spark):
+        import start_api
+
+        engine = start_api.build_engine()
+        assert engine.spark is built_spark and engine.now == "1998-10-01"
+        assert os.path.basename(engine.config.local_data_path).startswith("cur_ext_")
+        assert engine.query("SELECT COUNT(*) FROM CUR").first()[0] > 0
+
+
 class TestFastApiRouteParity:
     """The FastAPI factory (api/fastapi_app.py) is the production path
     but fastapi isn't installed in this sandbox — a STATIC source parse
@@ -467,21 +517,19 @@ def cur_root(cur_partitions, tmp_path):
     return root
 
 
-@pytest.fixture(autouse=False)
+@pytest.fixture()
 def memo_engines(spark):
-    """Engines over ``memo_cur``; afterwards the KPI view chain, which these
-    register over their data, is marked stale for the inventory queries."""
-    from de_polars_spark.inventory import kpi_views as kv
+    """Engines over ``memo_cur``, each in a session of its own: the views
+    it registers (the KPI view chain among them) go with it."""
 
     def serve(root: str, now: str | None = "1998-10-01") -> FinOpsHandlers:
         return FinOpsHandlers(FinOpsEngine(
             DataConfig(export_type=DataExportType.FOCUS_1_0, local_data_path=root,
                        table_name="memo_cur"),
-            spark=spark, now=now,
+            spark=new_session(spark), now=now,
         ))
 
-    yield serve
-    kv._KPI_VIEWS_READY.pop(spark.sparkContext.applicationId, None)
+    return serve
 
 
 def _part_file(root: str, partition: str) -> str:
@@ -702,15 +750,16 @@ def test_racing_data_versions_read_an_appended_cur_once(memo_engines, cur_root,
     assert answers == (fresh.kpi_summary(), fresh.spend_invoice_summary())
 
 
-@contextlib.contextmanager
-def _session_conf(spark, key: str, value: str):
-    """``key`` set to ``value`` in the session for the block."""
-    old = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+def test_engines_built_without_a_session_keep_their_own_kpi_views(
+        built_spark, cur_root, cur_partitions):
+    """Each engine's KPI chain reads its own CUR: A's summary, computed
+    again after B's, is still A's."""
+    ha, hb = (FinOpsHandlers(FinOpsEngine(
+        DataConfig(export_type=DataExportType.FOCUS_1_0, local_data_path=root),
+        now="1998-10-01")) for root in (cur_root, cur_partitions))
+    a = ha.kpi_summary()
+    assert hb.kpi_summary() != a
+    assert ha.engine.kpi.get_comprehensive_summary() == a
 
 
 def _jobs_run(spark, group: str, fn):
@@ -787,13 +836,13 @@ class TestSqlMemo:
             "SELECT memo_nondeterministic(id) AS v FROM range(3)",
         ],
     )
-    def test_nondeterministic_statements_are_never_stored(self, memo_engines, cur_root,
-                                                          spark, sql):
+    def test_nondeterministic_statements_are_never_stored(self, memo_engines, cur_root, sql):
         from pyspark.sql import functions as F
 
-        spark.udf.register("memo_nondeterministic",
-                           F.udf(lambda x: x, "bigint").asNondeterministic())
-        self._twice_unmemoized(memo_engines(cur_root), sql)
+        h = memo_engines(cur_root)
+        h.engine.spark.udf.register("memo_nondeterministic",
+                                    F.udf(lambda x: x, "bigint").asNondeterministic())
+        self._twice_unmemoized(h, sql)
 
     def test_failed_execution_is_never_stored(self, memo_engines, cur_root):
         h = memo_engines(cur_root)
@@ -804,111 +853,105 @@ class TestSqlMemo:
         assert h.memo_info()["hits"] == 0 and h.memo_info()["size"] == 0
 
     def test_table_read_only_by_a_scalar_subquery_is_versioned(
-            self, memo_engines, cur_root, spark, tmp_path):
+            self, memo_engines, cur_root, tmp_path):
         h = memo_engines(cur_root)
+        spark = h.engine.spark
         side, other = str(tmp_path / "side"), str(tmp_path / "other")
         spark.range(3).coalesce(1).write.parquet(side)
         spark.range(10).coalesce(1).write.parquet(other)
         sql = "SELECT 1 AS one, (SELECT SUM(id) FROM memo_side) AS s"
-        try:
-            spark.read.parquet(side).createOrReplaceTempView("memo_side")
-            assert h.sql_query(sql)["data"][0]["s"] == 3
-            assert h.sql_query(sql)["data"][0]["s"] == 3
-            assert h.memo_info()["hits"] == 1
-            # the file rewritten in place; the view registered again over
-            # the same path gives a plan that is sameResult with the old one
-            src, dst = _part_file(other, ""), _part_file(side, "")
-            for a, b in ((src, dst), (_crc(src), _crc(dst))):
-                shutil.copyfile(a, b)
-            spark.read.parquet(side).createOrReplaceTempView("memo_side")
-            assert h.sql_query(sql)["data"][0]["s"] == 45
-            assert h.memo_info()["hits"] == 1 and h.memo_info()["misses"] == 2
-        finally:
-            spark.catalog.dropTempView("memo_side")
+        spark.read.parquet(side).createOrReplaceTempView("memo_side")
+        assert h.sql_query(sql)["data"][0]["s"] == 3
+        assert h.sql_query(sql)["data"][0]["s"] == 3
+        assert h.memo_info()["hits"] == 1
+        # the file rewritten in place; the view registered again over
+        # the same path gives a plan that is sameResult with the old one
+        src, dst = _part_file(other, ""), _part_file(side, "")
+        for a, b in ((src, dst), (_crc(src), _crc(dst))):
+            shutil.copyfile(a, b)
+        spark.read.parquet(side).createOrReplaceTempView("memo_side")
+        assert h.sql_query(sql)["data"][0]["s"] == 45
+        assert h.memo_info()["hits"] == 1 and h.memo_info()["misses"] == 2
 
     def test_files_appended_before_the_table_is_listed_again_miss(
-            self, memo_engines, cur_root, spark, tmp_path):
+            self, memo_engines, cur_root, tmp_path):
         h = memo_engines(cur_root)
+        spark = h.engine.spark
         side = str(tmp_path / "side")
         spark.range(3).coalesce(1).write.parquet(side)
         sql = "SELECT SUM(id) AS s FROM memo_side"
-        try:
-            spark.read.parquet(side).createOrReplaceTempView("memo_side")
-            spark.range(3, 10).coalesce(1).write.mode("append").parquet(side)
-            # Spark reads the listing taken when the view was registered
-            assert h.sql_query(sql)["data"][0]["s"] == 3
-            spark.read.parquet(side).createOrReplaceTempView("memo_side")
-            assert h.sql_query(sql)["data"][0]["s"] == 45
-            assert h.memo_info()["hits"] == 0
-        finally:
-            spark.catalog.dropTempView("memo_side")
+        spark.read.parquet(side).createOrReplaceTempView("memo_side")
+        spark.range(3, 10).coalesce(1).write.mode("append").parquet(side)
+        # Spark reads the listing taken when the view was registered
+        assert h.sql_query(sql)["data"][0]["s"] == 3
+        spark.read.parquet(side).createOrReplaceTempView("memo_side")
+        assert h.sql_query(sql)["data"][0]["s"] == 45
+        assert h.memo_info()["hits"] == 0
 
-    def test_view_replaced_with_other_logic_misses(self, memo_engines, cur_root, spark):
+    def test_view_replaced_with_other_logic_misses(self, memo_engines, cur_root):
         h = memo_engines(cur_root)
         sql = "SELECT COUNT(*) AS n FROM memo_view"
         view = "CREATE OR REPLACE TEMP VIEW memo_view AS SELECT * FROM memo_cur WHERE "
-        try:
-            spark.sql(view + "billing_period < '1998-01'")
-            before = h.sql_query(sql)["data"][0]["n"]
-            spark.sql(view + "billing_period >= '1998-01'")
-            after = h.sql_query(sql)["data"][0]["n"]
-        finally:
-            spark.catalog.dropTempView("memo_view")
+        h.engine.spark.sql(view + "billing_period < '1998-01'")
+        before = h.sql_query(sql)["data"][0]["n"]
+        h.engine.spark.sql(view + "billing_period >= '1998-01'")
+        after = h.sql_query(sql)["data"][0]["n"]
         assert h.memo_info()["hits"] == 0 and h.memo_info()["misses"] == 2
         total = h.sql_query(self.COUNT)["data"][0]["n"]
         assert before > 0 and after > 0 and before + after == total
 
-    def test_changed_session_time_zone_misses(self, memo_engines, cur_root, spark):
+    def test_changed_session_time_zone_misses(self, memo_engines, cur_root):
         h = memo_engines(cur_root)
+        conf = h.engine.spark.conf
         sql = "SELECT date_format(timestamp_seconds(id), 'yyyy-MM-dd HH:mm') AS t FROM range(1)"
-        with _session_conf(spark, "spark.sql.session.timeZone", "UTC"):
-            utc = h.sql_query(sql)["data"][0]["t"]
-        with _session_conf(spark, "spark.sql.session.timeZone", "America/Los_Angeles"):
-            pacific = h.sql_query(sql)["data"][0]["t"]
+        conf.set("spark.sql.session.timeZone", "UTC")
+        utc = h.sql_query(sql)["data"][0]["t"]
+        conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        pacific = h.sql_query(sql)["data"][0]["t"]
         assert (utc, pacific) == ("1970-01-01 00:00", "1969-12-31 16:00")
         assert h.memo_info()["hits"] == 0 and h.memo_info()["misses"] == 2
 
-    def test_changed_ansi_mode_misses(self, memo_engines, cur_root, spark):
+    def test_changed_ansi_mode_misses(self, memo_engines, cur_root):
         h = memo_engines(cur_root)
+        conf = h.engine.spark.conf
         sql = "SELECT CAST(concat('x', id) AS INT) AS v FROM range(1)"
-        with _session_conf(spark, "spark.sql.ansi.enabled", "false"):
-            assert h.sql_query(sql)["data"] == [{"v": None}]
-        with _session_conf(spark, "spark.sql.ansi.enabled", "true"):
-            with pytest.raises(ApiError) as err:
-                h.sql_query(sql)
+        conf.set("spark.sql.ansi.enabled", "false")
+        assert h.sql_query(sql)["data"] == [{"v": None}]
+        conf.set("spark.sql.ansi.enabled", "true")
+        with pytest.raises(ApiError) as err:
+            h.sql_query(sql)
         assert "CAST_INVALID_INPUT" in err.value.detail["error"]
         assert h.memo_info()["hits"] == 0 and h.memo_info()["misses"] == 2
 
-    def test_conf_the_plan_does_not_show_misses(self, memo_engines, cur_root, spark):
+    def test_conf_the_plan_does_not_show_misses(self, memo_engines, cur_root):
         # the two plans are sameResult: only the conf digest tells them apart
         h = memo_engines(cur_root)
+        conf = h.engine.spark.conf
         sql = "SELECT to_date(concat('2020-1-', id + 1), 'yyyy-MM-dd') AS v FROM range(1)"
         policy = "spark.sql.legacy.timeParserPolicy"
-        with _session_conf(spark, "spark.sql.ansi.enabled", "false"):
-            with _session_conf(spark, policy, "LEGACY"):
-                assert h.sql_query(sql)["data"] == [{"v": "2020-01-01T00:00:00.000"}]
-            with _session_conf(spark, policy, "CORRECTED"):
-                assert h.sql_query(sql)["data"] == [{"v": None}]
+        conf.set("spark.sql.ansi.enabled", "false")
+        conf.set(policy, "LEGACY")
+        assert h.sql_query(sql)["data"] == [{"v": "2020-01-01T00:00:00.000"}]
+        conf.set(policy, "CORRECTED")
+        assert h.sql_query(sql)["data"] == [{"v": None}]
         assert h.memo_info()["hits"] == 0 and h.memo_info()["misses"] == 2
 
-    def test_rdd_leaf_bypasses_the_memo(self, memo_engines, cur_root, spark):
+    def test_rdd_leaf_bypasses_the_memo(self, memo_engines, cur_root):
         h = memo_engines(cur_root)
+        spark = h.engine.spark
         rdd = spark.sparkContext.parallelize([(1,), (2,)])
         spark.createDataFrame(rdd, "a int").createOrReplaceTempView("memo_rdd")
-        try:
-            outs = self._twice_unmemoized(h, "SELECT SUM(a) AS s FROM memo_rdd")
-        finally:
-            spark.catalog.dropTempView("memo_rdd")
+        outs = self._twice_unmemoized(h, "SELECT SUM(a) AS s FROM memo_rdd")
         assert [o["data"] for o in outs] == [[{"s": 3}]] * 2
 
-    def test_cached_view_bypasses_the_memo(self, memo_engines, cur_root, spark):
+    def test_cached_view_bypasses_the_memo(self, memo_engines, cur_root):
         h = memo_engines(cur_root)
+        spark = h.engine.spark
         spark.sql("CACHE TABLE memo_cached AS SELECT id FROM range(5)")
         try:
             outs = self._twice_unmemoized(h, "SELECT SUM(id) AS s FROM memo_cached")
-        finally:
+        finally:  # the cached blocks are the application's, not the session's
             spark.sql("UNCACHE TABLE memo_cached")
-            spark.catalog.dropTempView("memo_cached")
         assert [o["data"] for o in outs] == [[{"s": 10}]] * 2
 
     def test_force_s3_bypasses_the_memo(self, memo_engines, cur_root, monkeypatch):

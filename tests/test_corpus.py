@@ -46,7 +46,7 @@ def test_source_overlap_matches_model(spark, docs):
     )
     got = {
         (r.source_a, r.source_b): (r.shared_grams, r.n_grams_a, r.n_grams_b)
-        for r in source_overlap_matrix(df, "doc_id", "source", "text", n).collect()
+        for r in source_overlap_matrix(df, "source", "text", n).collect()
     }
     sets: dict[str, set[str]] = {}
     for src, text in docs:
@@ -71,7 +71,7 @@ def test_source_overlap_rows_sharing_an_id_shingle_apart(spark):
     )
     got = {
         (r.source_a, r.source_b): (r.shared_grams, r.n_grams_a, r.n_grams_b)
-        for r in source_overlap_matrix(df, "doc_id", "source", "text", 2).collect()
+        for r in source_overlap_matrix(df, "source", "text", 2).collect()
     }
     assert got == {("s1", "s4"): (1, 1, 1)}
 

@@ -3,12 +3,15 @@
 The chain pinned as parquet artifacts (the reference's own pattern,
 data_partitioner.py:105-142) must serve the same rows as the virtual
 chain. And switching sf_dir A -> B -> A in one session must re-register
-cur_ext + rebuild the views each time, not serve the previous dir's data
-from the session caches.
+cur_ext + rebuild the views each time, not serve the previous dir's data.
+Each test registers in a session of its own.
 """
 
 from __future__ import annotations
 
+import pytest
+
+from de_polars_spark.engine.session import new_session
 from de_polars_spark.inventory import kpi_views as kv
 from de_polars_spark.testing import compare
 from de_polars_spark.views.kpi import register_kpi_views
@@ -17,13 +20,13 @@ SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
 
 
-def _reset(spark):
-    kv._KPI_VIEWS_READY.pop(spark.sparkContext.applicationId, None)
-    kv._CUR_ACTIVE.pop(id(spark), None)
+@pytest.fixture()
+def spark(spark):
+    """A session of this test's own on the shared one's context."""
+    return new_session(spark)
 
 
 def test_pinned_and_virtual_chains_agree(spark, tmp_path):
-    _reset(spark)
     kv._ensure_cur_ext(spark, SF_A)
     views = ("kpi_tracker", "summary_view")
 
@@ -32,7 +35,6 @@ def test_pinned_and_virtual_chains_agree(spark, tmp_path):
     assert (tmp_path / "kpi" / "kpi_tracker").is_dir()
     register_kpi_views(spark, "cur_ext", kv.NOW_DATE)
     virtual = {v: spark.table(v).toPandas() for v in views}
-    _reset(spark)  # the session's views no longer match the ready marker
 
     for v in views:
         assert len(pinned[v]) > 0, v
@@ -41,7 +43,6 @@ def test_pinned_and_virtual_chains_agree(spark, tmp_path):
 
 
 def test_cur_ext_follows_sf_dir_switch(spark):
-    _reset(spark)
     kv._ensure_cur_ext(spark, SF_A)
     n_a = spark.table("cur_ext").count()
     kv._ensure_cur_ext(spark, SF_B)
@@ -51,19 +52,18 @@ def test_cur_ext_follows_sf_dir_switch(spark):
     # registered over B and the materialized KPI views marked ready
     kv._ensure_cur_ext(spark, SF_A)
     assert spark.table("cur_ext").count() == n_a
-    _reset(spark)
 
 
 def test_kpi_views_rebuilt_on_sf_dir_switch(spark):
-    _reset(spark)
     kv._ensure_kpi_views(spark, SF_A)
-    app = spark.sparkContext.applicationId
-    assert kv._KPI_VIEWS_READY.get(app) == SF_A
-    # registering another dir's cur_ext must invalidate the ready marker
-    # so the next KPI query rebuilds the views over the new data
     kv._ensure_cur_ext(spark, SF_B)
-    assert kv._KPI_VIEWS_READY.get(app) is None
-    _reset(spark)
+    kv._ensure_kpi_views(spark, SF_B)
+    fresh = new_session(spark)
+    kv._ensure_kpi_views(fresh, SF_B)
+    got, want = (s.table("kpi_tracker").toPandas() for s in (spark, fresh))
+    assert len(want) > 0
+    problems = compare(got, want)
+    assert not problems, "; ".join(problems)
 
 
 def test_kpi_artifacts_follow_a_rewritten_lineitem(spark, tmp_path):
@@ -82,14 +82,12 @@ def test_kpi_artifacts_follow_a_rewritten_lineitem(spark, tmp_path):
     sf.mkdir()
     shutil.copy(os.path.join(SF_A, "lineitem.parquet"), sf)
     query = kv.QUERIES["kpi_view_summary"]
-    _reset(spark)
     try:
         before = query(spark, str(sf)).toPandas()
         table = pq.read_table(sf / "lineitem.parquet")
         pq.write_table(table.slice(0, table.num_rows // 2), sf / "lineitem.parquet")
         after = query(spark, str(sf)).toPandas()
     finally:
-        _reset(spark)
         for path in glob.glob(os.path.join(cache_root(), f"*_{sf.name}_*")):
             shutil.rmtree(path, ignore_errors=True)
     assert len(before) > 0 and len(after) > 0
@@ -137,8 +135,6 @@ def test_rollup_is_incrementally_maintainable(spark):
     merged = merged_src.groupBy(*keys).agg(
         *[F.sum(c).alias(c) for c in measure_cols]
     )
-    # restore the full-table chain for other tests
-    register_kpi_views(spark, "cur_ext", kv.NOW_DATE)
 
     full_pdf = full.toPandas()
     merged_pdf = merged.select(*full.columns).toPandas()

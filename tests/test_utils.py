@@ -1,5 +1,5 @@
-"""Unit tests for de_polars_spark.utils (formatters/exports/validators/
-performance) — behavior contracts from reference de_polars/utils/."""
+"""Unit tests for de_polars_spark.utils (formatters/exports/validators)
+— behavior contracts from reference de_polars/utils/."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import pytest
 
 from de_polars_spark.utils import (
     DataExporter,
-    QueryProfiler,
     ReportGenerator,
     format_billing_period,
     format_currency,
@@ -200,25 +199,3 @@ class TestExports:
         )["executive_summary"]["risk_assessment"]
         assert high["risk_level"] == "HIGH"
 
-
-class TestPerformance:
-    def test_profiler(self):
-        prof = QueryProfiler()
-
-        @prof.profile_query("demo")
-        def ok():
-            return 42
-
-        @prof.profile_query("boom")
-        def bad():
-            raise RuntimeError("nope")
-
-        assert ok() == 42 and ok() == 42
-        with pytest.raises(RuntimeError):
-            bad()
-        stats = prof.get_query_stats("demo")["demo"]
-        assert stats["total_executions"] == 2
-        assert stats["success_rate"] == 100.0
-        summary = prof.get_performance_summary()
-        assert summary["total_queries"] == 2
-        assert summary["success_rate"] == pytest.approx(66.7, abs=0.1)
