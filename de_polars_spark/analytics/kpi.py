@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from de_polars_spark.analytics.base import AnalyticsModule
+from de_polars_spark.engine.session import registered
 from de_polars_spark.views.kpi import VIEW_CHAIN, register_kpi_views
 
 #: tracker money columns aggregated into the API response, grouped by
@@ -59,14 +60,14 @@ _INT_COLS = {"rds_license", "rds_no_license"}
 class KPISummary(AnalyticsModule):
     """engine.kpi — the flagship dashboard view."""
 
-    def __init__(self, *args, **kwargs):
-        super().__init__(*args, **kwargs)
-        self._views_ready = False
-
     def _ensure_views(self) -> None:
-        if not self._views_ready:
-            register_kpi_views(self.engine.spark, self.table, now=self.now)
-            self._views_ready = True
+        """Register the chain over this module's table and date in the
+        session, again whenever something else (another engine sharing the
+        session, or the inventory's pinned chain) registered its own under
+        the same view names since."""
+        spark = self.engine.spark
+        registered(spark, "kpi_views", (self.table, self.now),
+                   lambda: register_kpi_views(spark, self.table, now=self.now))
 
     def view_names(self) -> list[str]:
         return [name for name, _ in VIEW_CHAIN]

@@ -1,11 +1,13 @@
 """REST serving layer (reference de_polars/api/).
 
 ``handlers`` is the framework-free core: every endpoint is a plain
-callable returning ``(status_code, payload)``, testable without any web
-framework. ``fastapi_app`` wires the same handlers into FastAPI when the
-optional dependency is installed (it is not part of this environment's
-baseline, exactly as uvicorn/fastapi are optional extras in the
-reference's requirements).
+method returning a JSON-serializable dict (errors raise ``ApiError``),
+testable without any web framework, and ``FinOpsHandlers.handle`` turns
+one HTTP request into ``(status_code, payload)``. ``start_api.py``'s
+stdlib server and ``fastapi_app`` are thin adapters over ``handle``;
+``fastapi_app`` imports only when the optional dependency is installed
+(uvicorn/fastapi are optional extras, as in the reference's
+requirements).
 """
 
 from de_polars_spark.api.handlers import ApiError, FinOpsHandlers, ROUTES

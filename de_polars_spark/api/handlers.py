@@ -2,9 +2,15 @@
 8 routers + health/root: fastapi_app.py:36-117).
 
 Each handler returns a JSON-serializable dict; errors raise ``ApiError``
-with an HTTP status. The FastAPI wrapper (fastapi_app.py here) maps these
-1:1 onto routes; tests drive the handlers directly so the full serving
-contract is exercised without the optional web dependency.
+with an HTTP status. A route's parameters, their types and defaults are
+declared once, in its method's signature: every route is wrapped to bind
+its call against it, coerce string values to the hinted ``int``, ``float``
+or ``bool`` and answer a bind or coercion failure with 422.
+``FinOpsHandlers.handle`` is the HTTP edge both servers (``start_api.py``
+and ``fastapi_app.py``) adapt: it looks the request up in ``ROUTES``, reads
+the JSON body and maps exceptions to statuses. Tests drive the handlers
+directly, so the full serving contract is exercised without the optional
+web dependency.
 
 Every GET route but ``health`` and ``root``, and ad-hoc SQL, answer from
 one response memo when they can: dashboard users repeat the same requests.
@@ -26,7 +32,9 @@ import functools
 import inspect
 import io
 import json
+import logging
 import time
+import typing
 from typing import Any, Callable, Optional
 
 from de_polars_spark.analytics.base import RequestError
@@ -39,6 +47,8 @@ MAX_SQL_LENGTH = 10_000
 #: responses the memo keeps (least recently used out first); a dashboard
 #: session repeats a handful of distinct GETs and SQL statements
 MEMO_SIZE = 64
+
+log = logging.getLogger(__name__)
 
 
 class ApiError(Exception):
@@ -84,6 +94,41 @@ def _result_part(pdf, format: str) -> dict:
     return {"data": data, "schema": schema, "row_count": len(pdf)}
 
 
+def _coerce(param: str, value: Any, types: tuple) -> Any:
+    """``value`` as the ``bool``, ``int`` or ``float`` in ``types`` (a
+    parameter's hint, unpacked): a string (query string or JSON) is parsed,
+    any other value must already be one, or ``None`` where ``types`` allows
+    it; 422 otherwise. Parameters hinted otherwise take ``value`` as given."""
+    to = next((t for t in (bool, int, float) if t in types), None)
+    if to is None or (value is None and type(None) in types):
+        return value
+    if isinstance(value, str):
+        if to is bool and value.lower() in ("true", "false", "1", "0"):
+            return value.lower() in ("true", "1")
+        if to is not bool:
+            try:
+                return to(value)
+            except ValueError:
+                pass
+    elif isinstance(value, to) or (to is float and isinstance(value, int)):
+        return value
+    raise ApiError(422, f"{param}={value!r} is not a valid {to.__name__}")
+
+
+def _json_object(body: bytes) -> dict:
+    """The members of a JSON object request body (none for an empty body);
+    400 for anything else."""
+    if not body:
+        return {}
+    try:
+        payload = json.loads(body)
+    except ValueError as exc:
+        raise ApiError(400, f"body is not valid JSON: {exc}") from None
+    if not isinstance(payload, dict):
+        raise ApiError(400, "body must be a JSON object")
+    return payload
+
+
 class FinOpsHandlers:
     """All routes over one FinOpsEngine (the app factory's engine)."""
 
@@ -91,40 +136,73 @@ class FinOpsHandlers:
         self.engine = engine
         self._responses = Memo(MEMO_SIZE)
         for (method, _), name in ROUTES.items():
-            if name not in ("health", "root"):
-                setattr(self, name, self._route(name, getattr(self, name), method == "GET"))
+            memoize = method == "GET" and name not in ("health", "root")
+            setattr(self, name, self._route(name, getattr(self, name), memoize))
 
     def memo_info(self) -> dict:
         return self._responses.info()
 
+    def handle(self, method: str, path: str, params: dict, body: bytes = b"") -> tuple[int, Any]:
+        """One HTTP request's ``(status, JSON-able body)``, for every server.
+
+        ``params`` are the query string's values; the members of a JSON
+        object ``body`` are added over them. 404 for a route not in
+        ``ROUTES``, 400 for a body that is not a JSON object, an
+        ``ApiError``'s own status, and 500 for any other exception. The
+        route is looked up on the instance, so a wrapper set on it sees
+        the call."""
+        name = ROUTES.get((method, path))
+        if name is None:
+            return 404, {"detail": "Not Found"}
+        try:
+            return 200, getattr(self, name)(**{**params, **_json_object(body)})
+        except ApiError as exc:
+            return exc.status_code, {"detail": exc.detail}
+        except Exception as exc:  # noqa: BLE001 — the server answers every request
+            log.exception("%s %s failed", method, path)
+            return 500, {"detail": str(exc)}
+
     def _route(self, name: str, fn: Callable, memoize: bool) -> Callable:
-        """``fn`` with request errors answered as 422 and, for GET routes,
-        its responses memoized under ``(name, bound arguments, data
+        """``fn`` with its arguments bound against its signature, string
+        values coerced to the hinted ``int``, ``float`` or ``bool``, and a
+        bind, coercion or request error answered as 422. For GET routes its
+        responses are memoized under ``(name, bound arguments, data
         version)``. Exceptions, and responses that report a swallowed
         failure (a top-level ``error``), are never stored. Two concurrent
         misses may both compute; both answers are right."""
         sig = inspect.signature(fn)
+        hints = typing.get_type_hints(fn)
+        types = {p: typing.get_args(hints.get(p)) or (hints.get(p),) for p in sig.parameters}
 
-        def call(*args, **kwargs):
+        def bind(args, kwargs) -> inspect.BoundArguments:
             try:
-                return fn(*args, **kwargs)
+                bound = sig.bind(*args, **kwargs)
+            except TypeError as exc:
+                raise ApiError(422, f"{name}: {exc}") from None
+            for param, value in bound.arguments.items():
+                bound.arguments[param] = _coerce(param, value, types[param])
+            bound.apply_defaults()
+            return bound
+
+        def call(bound: inspect.BoundArguments):
+            try:
+                return fn(*bound.args, **bound.kwargs)
             except RequestError as exc:
                 raise ApiError(422, str(exc)) from exc
 
         @functools.wraps(fn)
         def route(*args, **kwargs):
+            bound = bind(args, kwargs)
             if not memoize:
-                return call(*args, **kwargs)
-            bound = sig.bind(*args, **kwargs)
-            bound.apply_defaults()
+                return call(bound)
             version = self.engine.data_version()
             if version is None:
-                return call(*args, **kwargs)
+                return call(bound)
             key = (name, tuple(bound.arguments.items()), version)
             hit = self._responses.get(key)
             if hit is not None:
                 return copy.deepcopy(hit)
-            result = call(*args, **kwargs)
+            result = call(bound)
             if not (isinstance(result, dict) and "error" in result):
                 self._responses.put(key, copy.deepcopy(result))
             return result
@@ -466,7 +544,7 @@ class FinOpsHandlers:
         return self.engine.ai.get_optimization_insights(min_spend=min_spend)
 
     def ai_custom_analysis(self, query: str, focus: str = "cost") -> dict:
-        return self.engine.ai.analyze_custom_query(query, focus=focus)
+        return self.engine.ai.analyze_custom_query(query, analysis_type=focus)
 
     def ai_forecasting(self, forecast_months: int = 6) -> dict:
         return self.engine.ai.get_forecasting(forecast_months=forecast_months)
@@ -487,9 +565,10 @@ class FinOpsHandlers:
         return self.engine.mcp.get_mcp_stream_config()
 
 
-#: (method, path) -> handler attribute; the FastAPI factory and tests
-#: iterate this single source of truth (route census mirrors the
-#: reference's 8 routers under /api/v1/finops, fastapi_app.py:85-92).
+#: (method, path) -> handler attribute: the one list of paths, which
+#: ``FinOpsHandlers.handle``, the FastAPI factory and the tests read (route
+#: census mirrors the reference's 8 routers under /api/v1/finops,
+#: fastapi_app.py:85-92).
 ROUTES: dict[tuple[str, str], str] = {
     ("GET", "/health"): "health",
     ("GET", "/"): "root",

@@ -61,17 +61,27 @@ def session_size() -> tuple[int, str]:
     return cpus, mem
 
 
+def _sql_conf(shuffle_partitions: int) -> dict[str, str]:
+    """The package's SQL conf: :data:`_DEFAULTS` and the shuffle width."""
+    return {**_DEFAULTS, "spark.sql.shuffle.partitions": str(shuffle_partitions)}
+
+
 def get_spark(
     app_name: str = "de_polars_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the session.
+    """Build the session, or return the one that already exists unchanged.
 
     ``master`` defaults to ``local[N]`` with N from :func:`session_size`;
-    on a cluster, leave unset and submit normally.
+    on a cluster, leave unset and submit normally. The conf and the log
+    level apply only to a session this call creates: ``getOrCreate`` would
+    apply the conf to an existing one, under every other user of it.
     """
+    existing = SparkSession._instantiatedSession  # what getOrCreate returns
+    if existing is not None and existing._sc._jsc is not None:
+        return existing
     cpus, driver_mem = session_size()
     if master is None:
         master = f"local[{cpus}]"
@@ -79,8 +89,7 @@ def get_spark(
         shuffle_partitions = cpus
 
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULTS)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf = _sql_conf(shuffle_partitions)
     conf.setdefault("spark.driver.memory", driver_mem)
     conf.setdefault("spark.ui.enabled", "false")
     if extra_conf:
@@ -94,18 +103,15 @@ def get_spark(
 
 def new_session(parent: SparkSession) -> SparkSession:
     """A session of its own on ``parent``'s SparkContext (its own temp
-    views, functions and SQL conf) whose conf starts as a copy of
-    ``parent``'s.
+    views, functions and SQL conf) with the package's SQL conf set.
 
-    ``newSession()`` alone starts from the SparkContext's conf. That holds
-    what :func:`get_spark` sets only when get_spark made the context;
-    after another builder made it, a bare new session would have ANSI on,
-    Spark's default shuffle width and codegen split threshold."""
+    ``newSession()`` alone starts from the SparkContext's conf, which holds
+    the package's only when :func:`get_spark` made the context; after
+    another builder made it, a bare new session would have ANSI on, Spark's
+    default shuffle width and codegen split threshold."""
     child = parent.newSession()
-    theirs = child.conf.getAll
-    for key, value in parent.conf.getAll.items():
-        if theirs.get(key) != value and child.conf.isModifiable(key):
-            child.conf.set(key, value)
+    for key, value in _sql_conf(session_size()[0]).items():
+        child.conf.set(key, value)
     return child
 
 

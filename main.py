@@ -2,8 +2,9 @@
 
 Mirrors the reference's ``main.py`` (``/root/reference/main.py``):
 expose an ``app`` for ``uvicorn main:app``. The engine comes from
-``start_api.build_engine`` — the SAME factory the stdlib fallback
-server uses, so the two serving paths cannot drift: with FINOPS_* env
+``start_api.build_engine`` and every request goes through
+``FinOpsHandlers.handle`` — the SAME factory and HTTP edge the stdlib
+fallback server uses, so the two serving paths cannot drift: with FINOPS_* env
 set it builds the configured engine (and FAILS LOUDLY on a bad
 configuration instead of silently serving sample data); with no env it
 bootstraps the demo engine (synthesized sample CUR, clock pinned

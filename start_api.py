@@ -7,13 +7,13 @@ start the server. Two serving paths:
 
 - **FastAPI + uvicorn** when installed (production path, identical to
   the reference: ``uvicorn main:app``).
-- A **stdlib fallback server** otherwise (this container ships
-  neither): a threaded ``http.server`` dispatching the framework-free
-  route table (``de_polars_spark.api.handlers.ROUTES``) straight to the
-  same ``FinOpsHandlers`` methods the FastAPI routes call. Every JSON
-  endpoint — ``/health``, spend, KPI, optimization, allocation,
-  discounts, AI, MCP — serves for real; only the OpenAPI docs UI needs
-  the FastAPI path.
+- A **stdlib fallback server** otherwise: a threaded ``http.server``
+  that hands each request's method, path, query string and body to
+  ``FinOpsHandlers.handle``, the HTTP edge the FastAPI app calls too
+  (route lookup in ``ROUTES``, parameter binding and coercion, status
+  mapping). Every JSON endpoint — ``/health``, spend, KPI, optimization,
+  allocation, discounts, AI, MCP — serves for real; only the OpenAPI docs
+  UI needs the FastAPI path.
 
 Usage::
 
@@ -72,77 +72,24 @@ def build_engine():
     )
 
 
-def _coerce(v: str, annotation=None):
-    """Query-string params arrive as strings; convert them to the
-    handler's DECLARED parameter type (FastAPI behavior). String-typed
-    (or unannotated) params pass through untouched — numeric-looking
-    ids like '0123' must not be mangled to 123."""
-    import typing
-
-    targets = set()
-    for t in typing.get_args(annotation) or (annotation,):
-        if t in (int, float, bool):
-            targets.add(t)
-    if bool in targets and v.lower() in ("true", "false", "1", "0"):
-        return v.lower() in ("true", "1")
-    if int in targets:
-        try:
-            return int(v)
-        except ValueError:
-            pass
-    if float in targets:
-        try:
-            return float(v)
-        except ValueError:
-            pass
-    return v
-
-
 def make_handler_class(handlers):
-    from de_polars_spark.api.handlers import ApiError, ROUTES
+    """A ``BaseHTTPRequestHandler`` that passes each request's query string
+    and body to ``handlers.handle`` and writes out its answer as JSON."""
 
     class Handler(BaseHTTPRequestHandler):
-        def _respond(self, status: int, payload) -> None:
+        def _dispatch(self) -> None:
+            split = urlsplit(self.path)
+            length = int(self.headers.get("Content-Length") or 0)
+            status, payload = handlers.handle(
+                self.command, split.path, dict(parse_qsl(split.query)),
+                self.rfile.read(length) if length > 0 else b"",
+            )
             body = json.dumps(payload, default=str).encode()
             self.send_response(status)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
-
-        def _dispatch(self) -> None:
-            import typing
-
-            split = urlsplit(self.path)
-            name = ROUTES.get((self.command, split.path))
-            if name is None:
-                self._respond(404, {"detail": "Not Found"})
-                return
-            fn = getattr(handlers, name)
-            try:
-                # handlers.py uses `from __future__ import annotations`,
-                # so resolve the string annotations to real types
-                hints = typing.get_type_hints(fn)
-            except Exception:  # unresolvable hints -> treat as untyped
-                hints = {}
-            kwargs = {
-                k: _coerce(v, hints.get(k))
-                for k, v in parse_qsl(split.query)
-            }
-            if self.command == "POST":
-                length = int(self.headers.get("Content-Length") or 0)
-                if length:
-                    payload = json.loads(self.rfile.read(length) or b"{}")
-                    if isinstance(payload, dict):
-                        kwargs.update(payload)
-            try:
-                self._respond(200, getattr(handlers, name)(**kwargs))
-            except ApiError as exc:
-                self._respond(exc.status_code, {"detail": exc.detail})
-            except TypeError as exc:  # bad/missing params
-                self._respond(422, {"detail": str(exc)})
-            except Exception as exc:  # noqa: BLE001 — server must not die
-                self._respond(500, {"detail": str(exc)})
 
         do_GET = do_POST = do_PUT = do_DELETE = _dispatch
 

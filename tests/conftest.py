@@ -37,20 +37,10 @@ def spark():
 @pytest.fixture()
 def built_spark(spark):
     """``engine.session.get_spark()``: here the shared session above, made
-    by another builder, which get_spark configures; its SQL conf is put
-    back afterwards, so the other tests keep the one they were written
-    against."""
+    by another builder, which get_spark returns as it is."""
     from de_polars_spark.engine.session import get_spark
 
-    before = spark.conf.getAll
-    yield get_spark("finops-engine")
-    for key, value in spark.conf.getAll.items():
-        if before.get(key) != value and spark.conf.isModifiable(key):
-            if key in before:
-                spark.conf.set(key, before[key])
-            else:
-                spark.conf.unset(key)
-    spark.sparkContext.setLogLevel("ERROR")
+    return get_spark("finops-engine")
 
 
 @pytest.fixture(scope="session")

@@ -262,6 +262,40 @@ class TestOtherRouters:
         }
 
 
+def _http(server: str, method: str, path: str, params: dict | None = None,
+          body: bytes | None = None) -> tuple[int, object]:
+    """``(status, decoded body)`` of one request; GET parameters go in the
+    query string, POST ones in a JSON body."""
+    import json
+    import urllib.error
+    import urllib.parse
+    import urllib.request
+
+    url = f"{server}{path}"
+    if method == "GET" and params:
+        url += "?" + urllib.parse.urlencode(params)
+    elif params is not None:
+        body = json.dumps(params).encode()
+    req = urllib.request.Request(url, data=body, method=method,
+                                 headers={"Content-Type": "application/json"})
+    try:
+        with urllib.request.urlopen(req, timeout=120) as r:
+            return r.status, json.loads(r.read())
+    except urllib.error.HTTPError as err:
+        return err.code, json.loads(err.read())
+
+
+def _serve(handlers):
+    """start_api's stdlib server over ``handlers`` on a free port."""
+    import http.server
+
+    import start_api as launcher
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), launcher.make_handler_class(handlers))
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv
+
+
 class TestStdlibLauncher:
     """start_api.py's fallback server: the route table over real HTTP."""
 
@@ -271,17 +305,10 @@ class TestStdlibLauncher:
 
     @pytest.fixture(scope="class")
     def server(self, served):
-        import start_api as launcher
-
-        httpd = __import__("http.server", fromlist=["ThreadingHTTPServer"])
-        srv = httpd.ThreadingHTTPServer(
-            ("127.0.0.1", 0), launcher.make_handler_class(served),
-        )
-        import threading
-
-        threading.Thread(target=srv.serve_forever, daemon=True).start()
+        srv = _serve(served)
         yield f"http://127.0.0.1:{srv.server_address[1]}"
         srv.shutdown()
+        srv.server_close()
 
     def test_health_and_query_over_http(self, server):
         import json
@@ -335,6 +362,22 @@ class TestStdlibLauncher:
         assert needle in json.loads(ei.value.read())["detail"]
         assert served.memo_info()["size"] == size
 
+    def test_custom_analysis_answers_over_http(self, server):
+        status, out = _http(server, "POST", "/api/v1/finops/ai/custom-analysis",
+                            {"query": "which services have the highest cost", "focus": "cost"})
+        assert status == 200, out
+        assert (out["analysis_type"], out["analysis_focus"]) == ("cost", "highest_cost_services")
+
+    @pytest.mark.parametrize("body", [b"{not json", b"[1, 2]", b"\xff"])
+    def test_a_malformed_body_is_400(self, server, body):
+        status, out = _http(server, "POST", "/api/v1/finops/sql/query", body=body)
+        assert status == 400 and "JSON" in out["detail"]
+
+    @pytest.mark.parametrize("query", ["limit=abc", "limit=2.5"])
+    def test_an_unparsable_parameter_is_422(self, server, query):
+        status, out = _http(server, "GET", f"/api/v1/finops/spend/regions/top?{query}")
+        assert status == 422 and "limit" in out["detail"]
+
     def test_repeated_get_is_served_from_the_memo(self, server, served):
         import json
         import urllib.request
@@ -365,6 +408,87 @@ class TestStdlibLauncher:
         hits = served.memo_info()["hits"]
         assert post() == first and first["row_count"] > 0
         assert served.memo_info()["hits"] == hits + 1
+
+
+def _stub_engine():
+    """A ``FinOpsEngine`` with no Spark behind it: autospec'd, with each
+    analytics module an autospec'd instance of its class, so a call that
+    passes an argument its target does not take raises ``TypeError``."""
+    import typing
+    from unittest import mock
+
+    import pandas as pd
+
+    from de_polars_spark.engine.core import SparkEngine
+
+    engine = mock.create_autospec(FinOpsEngine, instance=True)
+    for name in ("kpi", "spend", "optimization", "allocation", "discounts", "ai", "mcp"):
+        module = typing.get_type_hints(getattr(FinOpsEngine, name).fget)["return"]
+        setattr(engine, name, mock.create_autospec(module, instance=True))
+    engine.engine = mock.create_autospec(SparkEngine, instance=True)
+    engine.config = DataConfig(local_data_path="/nonexistent", table_name="CUR")
+    engine.data_version.return_value = None
+    engine.query_plan.return_value.limit.return_value.toPandas.return_value = pd.DataFrame(
+        {"n": [1]})
+    return engine
+
+
+def _required(name: str) -> dict:
+    """A value for each parameter of route ``name`` that has no default."""
+    import inspect
+    import typing
+
+    fn = getattr(FinOpsHandlers, name)
+    hints = typing.get_type_hints(fn)
+    sample = {str: "SELECT 1", float: 1000.0, int: 1}
+    return {p: sample[hints[p]] for p, v in inspect.signature(fn).parameters.items()
+            if p != "self" and v.default is v.empty}
+
+
+class TestRouteContract:
+    """Every ``ROUTES`` entry, called with its required parameters, reaches
+    the engine with arguments the engine's methods take. No Spark runs."""
+
+    @pytest.fixture(scope="class")
+    def stub(self):
+        return FinOpsHandlers(_stub_engine())
+
+    @pytest.fixture(scope="class")
+    def server(self, stub):
+        srv = _serve(stub)
+        yield f"http://127.0.0.1:{srv.server_address[1]}"
+        srv.shutdown()
+        srv.server_close()
+
+    @pytest.mark.parametrize("route", sorted(ROUTES), ids="{0[0]} {0[1]}".format)
+    def test_every_route_answers_with_its_required_parameters(self, stub, server, route):
+        method, path = route
+        params = _required(ROUTES[route])
+        status, out = _http(server, method, path, params)
+        assert status == 200, out
+        status, out = stub.handle(method, path, params)
+        assert status == 200, out
+
+    def test_a_type_error_inside_a_route_is_500(self, stub, server, monkeypatch):
+        monkeypatch.setattr(stub.engine.spend.get_top_regions, "side_effect",
+                            TypeError("unsupported operand"))
+        status, out = _http(server, "GET", "/api/v1/finops/spend/regions/top")
+        assert status == 500 and "unsupported operand" in out["detail"]
+
+    def test_a_missing_or_unknown_parameter_is_422(self, stub):
+        assert stub.handle("POST", "/api/v1/finops/sql/query", {})[0] == 422
+        assert stub.handle("GET", "/api/v1/finops/spend/regions/top", {"top": "3"})[0] == 422
+        assert stub.handle("GET", "/api/v1/finops/nope", {})[0] == 404
+
+    def test_parameters_are_coerced_to_their_hints(self, stub):
+        stub.handle("GET", "/api/v1/finops/ai/anomaly-detection",
+                    {"sensitivity": "1.5", "lookback_days": "90"})
+        stub.engine.ai.get_anomaly_detection.assert_called_with(
+            sensitivity=1.5, lookback_days=90)
+        status, out = stub.handle("POST", "/api/v1/finops/sql/query", {"force_s3": "true"},
+                                  b'{"sql": "SELECT 1", "limit": "5"}')
+        assert status == 200 and out["query_metadata"]["limit_applied"] == 5
+        assert stub.engine.query_plan.call_args.kwargs == {"force_s3": True}
 
 
 class TestConfigFromEnv:
@@ -418,37 +542,9 @@ class TestConfigFromEnv:
 
 
 class TestFastApiRouteParity:
-    """The FastAPI factory (api/fastapi_app.py) is the production path
-    but fastapi isn't installed in this sandbox — a STATIC source parse
-    keeps its route table from drifting from the tested handlers.ROUTES
-    (VERDICT r5 'What's missing' #4), and the dynamic variant runs
-    wherever fastapi is importable."""
-
-    _PREFIX = "/api/v1/finops"
-
-    def _static_routes(self):
-        import pathlib
-        import re
-
-        import de_polars_spark.api as api_pkg
-
-        src = (pathlib.Path(api_pkg.__file__).parent / "fastapi_app.py").read_text()
-        pat = re.compile(r'@app\.(get|post)\(\s*(f?)"([^"]+)"')
-        routes = set()
-        for m in pat.finditer(src):
-            method, isf, path = m.group(1).upper(), m.group(2), m.group(3)
-            if isf:
-                path = path.replace("{p}", self._PREFIX)
-            routes.add((method, path))
-        return routes
-
-    def test_static_route_parity_with_handlers(self):
-        static = self._static_routes()
-        declared = set(ROUTES)
-        assert static == declared, (
-            f"fastapi-only: {sorted(static - declared)}; "
-            f"handlers-only: {sorted(declared - static)}"
-        )
+    """The FastAPI factory (api/fastapi_app.py) is the production path but
+    fastapi is an optional extra: it builds one endpoint per ``ROUTES``
+    entry, which this test checks wherever fastapi is importable."""
 
     def test_dynamic_route_parity_when_fastapi_present(self, finops):
         pytest.importorskip(
@@ -760,6 +856,23 @@ def test_engines_built_without_a_session_keep_their_own_kpi_views(
     a = ha.kpi_summary()
     assert hb.kpi_summary() != a
     assert ha.engine.kpi.get_comprehensive_summary() == a
+
+
+def test_kpi_summary_survives_the_inventory_chain_in_its_session(memo_engines, cur_root,
+                                                                 sf_dir):
+    """The inventory's pinned chain over ``cur_ext`` registers the same view
+    names: the engine's next summary registers its own chain again, and
+    the inventory's next call its own."""
+    from de_polars_spark.inventory.kpi_views import _ensure_kpi_views
+
+    engine = memo_engines(cur_root).engine
+    before = engine.kpi.get_comprehensive_summary()
+    _ensure_kpi_views(engine.spark, sf_dir)
+    pinned = engine.spark.table("kpi_tracker").count()
+    assert engine.kpi.get_comprehensive_summary() == before
+    assert engine.spark.table("kpi_tracker").count() != pinned
+    _ensure_kpi_views(engine.spark, sf_dir)
+    assert engine.spark.table("kpi_tracker").count() == pinned
 
 
 def _jobs_run(spark, group: str, fn):

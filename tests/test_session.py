@@ -11,7 +11,7 @@ import os
 from de_polars_spark.api.handlers import FinOpsHandlers
 from de_polars_spark.client import FinOpsEngine
 from de_polars_spark.config import DataConfig
-from de_polars_spark.engine.session import new_session, registered
+from de_polars_spark.engine.session import get_spark, new_session, registered, session_size
 from de_polars_spark.inventory import kpi_views as kv
 from de_polars_spark.inventory import pricing
 from de_polars_spark.sources.artifacts import plan_version
@@ -20,9 +20,10 @@ from de_polars_spark.sources.registry import register_testdata
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "de_polars_spark")
 
 #: the confs get_spark sets that a bare ``newSession()`` loses when
-#: another builder made the SparkContext
+#: another builder made the SparkContext, and the package's values of them
 SIZED = ("spark.sql.ansi.enabled", "spark.sql.shuffle.partitions",
          "spark.sql.codegen.methodSplitThreshold")
+PACKAGE = ["false", str(session_size()[0]), "256"]
 
 
 def _ids(spark, path: str, hi: int) -> str:
@@ -57,15 +58,21 @@ def test_registered_runs_again_only_for_a_new_source(spark):
     assert calls == [1, 3, 4, 5]
 
 
-def test_new_session_starts_from_the_parent_conf(spark):
+def test_new_session_sets_the_package_conf(spark):
     parent = spark.newSession()
-    for key, value in zip(SIZED, ("false", "3", "256")):
+    for key, value in zip(SIZED, ("true", "3", "1024")):
         parent.conf.set(key, value)
     child = new_session(parent)
-    assert [child.conf.get(k) for k in SIZED] == ["false", "3", "256"]
-    assert [parent.newSession().conf.get(k) for k in SIZED] != ["false", "3", "256"]
+    assert [child.conf.get(k) for k in SIZED] == PACKAGE
     child.conf.set("spark.sql.shuffle.partitions", "5")
     assert parent.conf.get("spark.sql.shuffle.partitions") == "3"
+
+
+def test_get_spark_and_an_engine_leave_the_session_they_did_not_make_alone(spark, tmp_path):
+    before = spark.conf.getAll
+    assert get_spark("finops-engine") is spark
+    FinOpsEngine(DataConfig(local_data_path=_ids(spark, str(tmp_path / "a"), 3)))
+    assert spark.conf.getAll == before
 
 
 def test_an_engine_built_without_a_session_has_its_own(built_spark, tmp_path):
@@ -73,7 +80,7 @@ def test_an_engine_built_without_a_session_has_its_own(built_spark, tmp_path):
                                      table_name="own_cur"))
     assert engine.spark is not built_spark
     assert not built_spark.catalog.tableExists("own_cur")
-    assert [engine.spark.conf.get(k) for k in SIZED] == [built_spark.conf.get(k) for k in SIZED]
+    assert [engine.spark.conf.get(k) for k in SIZED] == PACKAGE
     # the memo key's conf digest is the engine session's
     df = engine.query("SELECT SUM(id) AS s FROM own_cur")
     digest = plan_version(df).conf
