@@ -248,9 +248,6 @@ def main() -> None:
     _pay("quantile_probe", _warm_quantile_probes)
 
     from de_polars_spark.operators.similarity import clear_ivf_cache
-    from de_polars_spark.sources.artifacts import release_cached
-
-    release_cached()  # builds persist shingle relations; queries start clean
 
     import gc
 
@@ -277,13 +274,14 @@ def main() -> None:
             if rep == 0:
                 timings_first[name] = round(elapsed, 4)
             best = elapsed if best is None else min(best, elapsed)
-            release_cached()  # operators persist per-call intermediates; no cross-query reuse
             # each query pays for its own IVF cell assignment, as before the cache
             clear_ivf_cache()
             # drop py4j refs promptly so ContextCleaner can release finished
-            # queries' RDDs/broadcasts — a 100-query session otherwise carries
-            # a cleanup backlog into the tail queries (measured as multi-second
-            # jitter on the late KPI queries)
+            # queries' RDDs/broadcasts and the blocks of their local
+            # checkpoints (the operators' per-call intermediates) — a
+            # 100-query session otherwise carries a cleanup backlog into the
+            # tail queries (measured as multi-second jitter on the late KPI
+            # queries)
             gc.collect()
         timings[name] = round(best, 4)
 

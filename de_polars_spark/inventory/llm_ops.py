@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from de_polars_spark.functions import text as TX
 from de_polars_spark.functions.local_relation import values_df
 from de_polars_spark.operators import dedup, multimodal, sampling, similarity
-from de_polars_spark.sources.artifacts import artifact_path, keep, publish
+from de_polars_spark.sources.artifacts import artifact_path, publish
 from de_polars_spark.sources.registry import register_testdata
 
 QUERIES: dict = {}
@@ -3547,7 +3547,7 @@ def q_dedup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id_a").cast("bigint").alias("a"),
         F.col("id_b").cast("bigint").alias("b"),
     )
-    pairs = keep(pairs)
+    pairs = pairs.localCheckpoint()
     deg = (
         pairs.select(F.col("a").alias("n"))
         .unionAll(pairs.select(F.col("b").alias("n")))

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_polars_spark.operators import similarity
-from de_polars_spark.sources.artifacts import keep
 from de_polars_spark.sources.registry import register_testdata
 from de_polars_spark.inventory.training_ops import (
     _BITEXT_K,
@@ -109,9 +108,9 @@ _RC_QMOD = 25
 
 
 def q_ann_recall_eval_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # persist: exact baseline, centroid sampler, and IVF probe all
+    # checkpoint: exact baseline, centroid sampler, and IVF probe all
     # re-reference the derived corpus (window+join lineage)
-    corpus = keep(clustered_embeddings(spark, sf_dir))
+    corpus = clustered_embeddings(spark, sf_dir).localCheckpoint()
     queries = corpus.filter(F.col("vec_id") % _RC_QMOD == 0)
     exact = similarity.cosine_topk(
         corpus, queries, "vec_id", "embedding", k=_RC_K
@@ -367,10 +366,10 @@ def _bitext_ivf_ctes(p: str, src: str = "e") -> str:
 def q_bitext_ivf_pair_recall_clustered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # persist the derived corpus: BOTH miners (and the centroid sampler
+    # checkpoint the derived corpus: BOTH miners (and the centroid sampler
     # inside each) re-reference it many times, and re-deriving the
     # window+join lineage per action is pure waste
-    corpus = keep(paired_bitext_embeddings(spark, sf_dir))
+    corpus = paired_bitext_embeddings(spark, sf_dir).localCheckpoint()
     exact = similarity.margin_mutual_pairs(
         corpus, "vec_id", "embedding", "label", 0, 1, k=_BITEXT_K
     ).select("id_a", "id_b")
@@ -446,7 +445,7 @@ def q_ann_pq_recall_eval_clustered(
     )
     from de_polars_spark.operators import pq as PQ
 
-    corpus = keep(clustered_embeddings(spark, sf_dir))
+    corpus = clustered_embeddings(spark, sf_dir).localCheckpoint()
     cbs = PQ.fit_pq(
         corpus, "vec_id", "embedding", _pq_seeds(corpus), _PQ_M, _PQ_DSUB,
         iterations=_PQ_ITERS,
@@ -593,7 +592,7 @@ def q_ann_pq_recall_eval_neardup(
     )
     from de_polars_spark.operators import pq as PQ
 
-    corpus = keep(neardup_embeddings(spark, sf_dir))
+    corpus = neardup_embeddings(spark, sf_dir).localCheckpoint()
     cbs = PQ.fit_pq(
         corpus, "vec_id", "embedding", _pq_seeds(corpus), _PQ_M, _PQ_DSUB,
         iterations=_PQ_ITERS,

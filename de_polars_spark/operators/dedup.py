@@ -55,8 +55,7 @@ from pyspark.sql import functions as F
 from de_polars_spark.functions import text as TX
 from de_polars_spark.functions import vectors as VX
 from de_polars_spark.functions.local_relation import literal_column, sql_literal
-from de_polars_spark.sources.artifacts import keep
-# the package's one release of per-call persisted frames, under this name too
+# a no-op kept under this name for perfbench (sources/artifacts.release_cached)
 from de_polars_spark.sources.artifacts import release_cached  # noqa: F401
 
 #: Production default for every pair generator's bucket cap: a bucket
@@ -251,18 +250,17 @@ def simhash_hamming_pairs(
     # SAME fingerprint; collapse them first so the quadratic pair
     # expansion runs over distinct fingerprints, not documents — identical
     # output, and bucket sizes shrink by the duplication factor.
-    clusters = keep(sims.groupBy("simhash").agg(
+    clusters = sims.groupBy("simhash").agg(
         F.array_sort(F.collect_list(id_col)).alias("ids")
-    ))
-    # one row per distinct fingerprint (small, linear): persisting it is
+    ).localCheckpoint()
+    # one row per distinct fingerprint (small, linear): checkpointing it is
     # what keeps the expensive tokenize->vote pipeline from re-running
     # once per consuming branch — the within self-join, the two chunk
     # sides and the two id join-backs would otherwise re-derive it 8x
-    # (measured at sf3: the suite stalled on exactly that). The count()
-    # materializes the cache EAGERLY: under a single downstream action
-    # the consuming stages otherwise race to fill it and still re-run
-    # the pipeline (measured 161s vs 24s for the same join).
-    clusters.count()
+    # (measured at sf3: the suite stalled on exactly that). The checkpoint
+    # is EAGER: a lazily filled cache under a single downstream action
+    # lets the consuming stages race to fill it and still re-run the
+    # pipeline (measured 161s vs 24s for the same join).
     # distance-0: pairs within one fingerprint cluster. Duplicate-heavy
     # corpora make this the OUTPUT-bound part (sum over clusters of
     # C(k,2) — 345M true pairs at test sf3), and a plain self-join on
@@ -470,10 +468,10 @@ def ngram_jaccard_pairs(
     e.g. k=16, J=t=0.3, m=0.15: ~7%. Leave it None wherever oracle
     exactness matters (the inventory query does).
 
-    The distinct shingle postings are persisted: they are consumed by
-    three branches (document frequencies, prefixes, verification) and
-    recomputation — not data volume — dominates otherwise. Call
-    :func:`release_cached` after collecting if memory matters.
+    The distinct shingle postings are local-checkpointed: they are
+    consumed by three branches (document frequencies, prefixes,
+    verification) and recomputation — not data volume — dominates
+    otherwise. Their blocks are freed with the frames that read them.
     """
     # shingles are 64-bit hashes, not strings: every downstream
     # shuffle/sort/intersect works on fixed-width bigints (measured ~2x on
@@ -485,7 +483,7 @@ def ngram_jaccard_pairs(
     # is a single native codegen call per shingle instead of
     # md5 -> substring -> base-16 conv.
     grams = _hashed_gram_postings(df, id_col, text_col, block_col, shingle_n)
-    ex = keep(grams.select(id_col, "block", "shingle").distinct())
+    ex = grams.select(id_col, "block", "shingle").distinct().localCheckpoint()
     # per-doc shingle sets for the verification join, rebuilt from the
     # (already distinct) postings; docs with no shingles can never be
     # candidates, so their absence here is harmless
@@ -837,18 +835,16 @@ def minhash_estimate_pairs(
     stderr ~ sqrt(J(1-J)/n_hashes); exact verification remains the
     precision path.
 
-    The signature relation is persisted (consumed by banding AND the
-    pair-side joins); call :func:`release_cached` after collecting.
+    The signature relation is local-checkpointed (consumed by banding
+    AND the pair-side joins).
     """
     assert n_hashes % band_size == 0
-    sig = keep(
-        _minhash_sig_df(df, id_col, text_col, n_hashes, shingle_n).select(
-            F.col(id_col),
-            F.expr(
-                f"array({', '.join(f'mh{i}' for i in range(n_hashes))})"
-            ).alias("__sig"),
-        )
-    )
+    sig = _minhash_sig_df(df, id_col, text_col, n_hashes, shingle_n).select(
+        F.col(id_col),
+        F.expr(
+            f"array({', '.join(f'mh{i}' for i in range(n_hashes))})"
+        ).alias("__sig"),
+    ).localCheckpoint()
 
     bands = (
         sig.select(
@@ -994,10 +990,10 @@ def containment_pairs(
     size break toward the smaller id as ``id_small``.
     """
     grams = _hashed_gram_postings(df, id_col, text_col, block_col, shingle_n)
-    # the distinct postings feed both self-join sides — persist so the
+    # the distinct postings feed both self-join sides — checkpoint so the
     # tokenize/gram/distinct chain runs once (same recompute-dominated
-    # profile ngram_jaccard_pairs measured; release via release_cached())
-    post = keep(grams.select(id_col, "block", "shingle").distinct())
+    # profile ngram_jaccard_pairs measured)
+    post = grams.select(id_col, "block", "shingle").distinct().localCheckpoint()
     if max_df is not None:
         wfreq = Window.partitionBy("block", "shingle")
         post = post.withColumn("df", F.count(F.lit(1)).over(wfreq)).filter(
@@ -1096,7 +1092,7 @@ def longest_shared_span(
             .filter(F.col("df") <= max_df)
             .drop("df")
         )
-    post = keep(post)
+    post = post.localCheckpoint()
     a = post.select(
         "block", "h", F.col(id_col).alias("__ia"), F.col("p").alias("pa")
     )

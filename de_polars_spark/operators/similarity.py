@@ -30,9 +30,9 @@
   deterministic sample-fit used here keeps the operator oracle-checkable.
 
 Per-call intermediates that several branches read (the margin miners'
-scored pairs) are persisted through ``sources/artifacts.keep`` and freed
-by ``release_cached``, the package's one release (``dedup`` exports the
-same function).
+scored pairs) are ``localCheckpoint()``-ed: an RDD leaf no other plan is
+served from, whose blocks go with the last frame that reads it. The IVF
+memo is the package's one ``persist()``.
 """
 
 from __future__ import annotations
@@ -44,8 +44,8 @@ from pyspark.sql import functions as F
 
 from de_polars_spark.functions import vectors as VX
 from de_polars_spark.functions.local_relation import literal_column, values_df
-from de_polars_spark.sources.artifacts import Memo, keep, plan_version, unpersist
-# the package's one release of per-call persisted frames, under this name too
+from de_polars_spark.sources.artifacts import Memo, plan_version, unpersist
+# a no-op kept under this name for perfbench (sources/artifacts.release_cached)
 from de_polars_spark.sources.artifacts import release_cached  # noqa: F401
 
 
@@ -233,14 +233,13 @@ def _assigned_corpus(
 
 def clear_ivf_cache() -> int:
     """Unpersist and drop every assigned corpus the IVF cache holds;
-    returns the count. :func:`release_cached` leaves the cache alone."""
+    returns the count."""
     return _IVF_MEMO.clear()
 
 
 def ivf_cache_info() -> dict:
     """Hits, misses and entries of the IVF cache (see :func:`ivf_topk`);
-    :func:`release_cached` does not touch it, :func:`clear_ivf_cache`
-    empties it."""
+    :func:`clear_ivf_cache` empties it."""
     return _IVF_MEMO.info()
 
 
@@ -602,7 +601,7 @@ def margin_mutual_pairs_ivf(
             F.max("in_ba").alias("in_ba"),
         )
     )
-    cand = keep(cand)
+    cand = cand.localCheckpoint()
     wa = Window.partitionBy("id_a").orderBy(F.col("cosine").desc(), F.col("id_b"))
     wb = Window.partitionBy("id_b").orderBy(F.col("cosine").desc(), F.col("id_a"))
     r_ab = cand.filter("in_ab").withColumn("rank_a", F.row_number().over(wa))
@@ -870,7 +869,7 @@ def margin_mutual_pairs(
     ranked = scored.withColumn("rank_a", F.row_number().over(wa)).withColumn(
         "rank_b", F.row_number().over(wb)
     )
-    ranked = keep(ranked)
+    ranked = ranked.localCheckpoint()
     avg_a = (
         ranked.filter(F.col("rank_a") <= k)
         .groupBy("id_a")

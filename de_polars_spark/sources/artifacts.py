@@ -20,8 +20,9 @@ be told. :class:`Memo` is the one in-process cache: a bounded, locked LRU
 with hit and miss counts. The API response memo, the IVF cell-assignment
 cache and the quantile probe memo are each one ``Memo`` keyed by a
 ``plan_version`` (the GET routes by the CUR's ``manifest_tag``).
-:func:`keep` and :func:`release_cached` are the one list of per-call
-persisted frames.
+:func:`release_cached` is kept as a no-op: an intermediate that several
+branches of one call read is ``localCheckpoint()``-ed where it is built,
+and its blocks go with the last frame that reads it.
 """
 
 from __future__ import annotations
@@ -282,22 +283,12 @@ def unpersist(df) -> bool:
         return False
 
 
-#: frames persisted for the length of one call (:func:`keep`)
-_KEPT: list = []
-
-
-def keep(df):
-    """``df.persist()``, remembered until :func:`release_cached`: for an
-    intermediate that several branches of one query read."""
-    _KEPT.append(df.persist())
-    return df
-
-
 def release_cached() -> int:
-    """Unpersist every frame :func:`keep` persisted; returns how many were
-    released. Call it between jobs in a long session, while none runs.
-    The IVF cache is not released here (``similarity.clear_ivf_cache``)."""
-    n = 0
-    while _KEPT:
-        n += unpersist(_KEPT.pop())
-    return n
+    """A no-op that returns 0, kept for perfbench, its one caller.
+
+    There is nothing to release: a per-call intermediate is a
+    ``localCheckpoint()``, an RDD leaf rather than a ``CacheManager``
+    entry, and Spark's ``ContextCleaner`` frees its blocks once the frames
+    that read it are garbage. The IVF memo is emptied by
+    ``similarity.clear_ivf_cache``."""
+    return 0

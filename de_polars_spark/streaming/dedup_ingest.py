@@ -65,12 +65,9 @@ def dedup_ingest_sink(
             F.col(id_col) == F.col("__keep")
         ).drop("__keep")
         # one computation, two writes: the batch is re-derived inside each
-        # write; persist so the anti-join doesn't run twice
-        fresh = fresh.persist()
-        try:
-            write_out(fresh.drop("__fp"), batch_id)
-            write_state(fresh.select(F.col("__fp").alias("fp")), batch_id)
-        finally:
-            fresh.unpersist()
+        # write; checkpoint so the anti-join doesn't run twice
+        fresh = fresh.localCheckpoint()
+        write_out(fresh.drop("__fp"), batch_id)
+        write_state(fresh.select(F.col("__fp").alias("fp")), batch_id)
 
     return ingest

@@ -95,7 +95,7 @@ def neardup_ingest_sink(
         spark = df.sparkSession
         bands = _band_keys(
             df, id_col, text_col, n_hashes, band_size, shingle_n
-        ).persist()
+        ).localCheckpoint()
         state_exists = any(
             name.startswith("batch_id=")
             for name in fsutil.child_names(spark, state_dir)
@@ -128,17 +128,13 @@ def neardup_ingest_sink(
             .distinct()
         )
         rejected = hist_hits.unionByName(batch_hits).distinct()
-        admitted = df.join(rejected, id_col, "left_anti").persist()
-        try:
-            write_out(admitted, batch_id)
-            write_state(
-                bands.join(admitted.select(id_col), id_col, "left_semi")
-                .select("band_id", "band_key")
-                .distinct(),
-                batch_id,
-            )
-        finally:
-            admitted.unpersist()
-            bands.unpersist()
+        admitted = df.join(rejected, id_col, "left_anti").localCheckpoint()
+        write_out(admitted, batch_id)
+        write_state(
+            bands.join(admitted.select(id_col), id_col, "left_semi")
+            .select("band_id", "band_key")
+            .distinct(),
+            batch_id,
+        )
 
     return ingest

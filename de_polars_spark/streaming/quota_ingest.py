@@ -73,17 +73,14 @@ def quota_ingest_sink(
             d.withColumn("__rk", F.row_number().over(w))
             .where(F.col("__used") + F.col("__rk") <= cap)
             .drop("__rk", "__used")
+            .localCheckpoint()
         )
-        admitted = admitted.persist()
-        try:
-            write_out(admitted, batch_id)
-            write_state(
-                admitted.groupBy(source_col).agg(
-                    F.count(F.lit(1)).alias("n_admitted")
-                ),
-                batch_id,
-            )
-        finally:
-            admitted.unpersist()
+        write_out(admitted, batch_id)
+        write_state(
+            admitted.groupBy(source_col).agg(
+                F.count(F.lit(1)).alias("n_admitted")
+            ),
+            batch_id,
+        )
 
     return ingest

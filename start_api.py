@@ -79,11 +79,15 @@ def make_handler_class(handlers):
     class Handler(BaseHTTPRequestHandler):
         def _dispatch(self) -> None:
             split = urlsplit(self.path)
-            length = int(self.headers.get("Content-Length") or 0)
-            status, payload = handlers.handle(
-                self.command, split.path, dict(parse_qsl(split.query)),
-                self.rfile.read(length) if length > 0 else b"",
-            )
+            try:
+                length = int(self.headers.get("Content-Length") or 0)
+            except ValueError:
+                status, payload = 400, {"detail": "Content-Length is not an integer"}
+            else:
+                status, payload = handlers.handle(
+                    self.command, split.path, dict(parse_qsl(split.query)),
+                    self.rfile.read(length) if length > 0 else b"",
+                )
             body = json.dumps(payload, default=str).encode()
             self.send_response(status)
             self.send_header("Content-Type", "application/json")

@@ -373,6 +373,25 @@ class TestStdlibLauncher:
         status, out = _http(server, "POST", "/api/v1/finops/sql/query", body=body)
         assert status == 400 and "JSON" in out["detail"]
 
+    @pytest.mark.parametrize("length, status", [("abc", 400), ("-5", 422)])
+    def test_a_content_length_that_is_not_a_length_answers(self, server, length, status):
+        """A raw request whose ``Content-Length`` is no integer gets a 400,
+        not a closed connection; a negative one reads as an empty body."""
+        import json
+        import socket
+        from urllib.parse import urlsplit
+
+        url = urlsplit(server)
+        with socket.create_connection((url.hostname, url.port), timeout=60) as sock:
+            sock.sendall(f"POST /api/v1/finops/sql/query HTTP/1.0\r\n"
+                         f"Content-Length: {length}\r\n\r\n{{}}".encode())
+            reply = b""
+            while chunk := sock.recv(65536):
+                reply += chunk
+        head, _, body = reply.partition(b"\r\n\r\n")
+        assert head.split()[1] == str(status).encode(), reply
+        assert json.loads(body)["detail"]
+
     @pytest.mark.parametrize("query", ["limit=abc", "limit=2.5"])
     def test_an_unparsable_parameter_is_422(self, server, query):
         status, out = _http(server, "GET", f"/api/v1/finops/spend/regions/top?{query}")

@@ -243,11 +243,13 @@ def test_memo_counts_and_evictions_hold_under_racing_threads():
     assert info["size"] == 3
 
 
-def test_only_the_artifacts_module_keeps_a_cache_or_a_persist_list():
+def test_one_memo_class_and_no_persist_but_the_ivf_memos():
     """Guard: the package's one in-process LRU is ``sources/artifacts.Memo``
-    and its one list of per-call persisted frames is behind
-    ``sources/artifacts.keep``, so no hand-rolled memo (an ``OrderedDict``
-    with ``move_to_end``) or module-level ``*PERSISTED`` list can reappear."""
+    and its one ``persist()`` is the IVF memo's (``similarity.
+    _assigned_corpus``), so no hand-rolled memo (an ``OrderedDict`` with
+    ``move_to_end``), module-level ``*PERSISTED`` list, or ``.persist(`` /
+    ``.cache(`` call can reappear: a per-call intermediate is a
+    ``localCheckpoint()``."""
     offenders = []
     for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True):
         rel = os.path.relpath(path, PKG)
@@ -268,23 +270,46 @@ def test_only_the_artifacts_module_keeps_a_cache_or_a_persist_list():
                        else [node.target] if isinstance(node, ast.AnnAssign) else [])
             offenders += [f"{rel}:{node.lineno}" for t in targets
                           if isinstance(t, ast.Name) and t.id.endswith("PERSISTED")]
+            offenders += [
+                f"{rel}:{call.lineno}"
+                for call in ast.walk(node)
+                if isinstance(call, ast.Call) and isinstance(call.func, ast.Attribute)
+                and call.func.attr in ("persist", "cache")
+                and (rel, getattr(node, "name", None))
+                != (os.path.join("operators", "similarity.py"), "_assigned_corpus")
+            ]
     assert not offenders, offenders
 
 
-def test_recall_query_releases_its_persisted_corpus(spark):
-    """A recall query ``keep``s its derived corpus for its branches; after
-    the query, ``release_cached`` leaves none of it cached."""
-    from pyspark import StorageLevel
+def test_recall_query_caches_nothing_and_its_checkpoint_goes_with_it(spark):
+    """A recall query checkpoints its derived corpus for its branches: no
+    ``CacheManager`` entry is left after it, and once its frames are garbage
+    Spark frees the checkpoint's blocks with no release call."""
+    import gc
+    import time
 
     from de_polars_spark.inventory import recall_clustered as RC
-    from de_polars_spark.sources.artifacts import release_cached
+    from de_polars_spark.operators.similarity import clear_ivf_cache
 
-    release_cached()
-    RC.q_ann_recall_eval_clustered(spark, SF).collect()
-    corpus = RC.clustered_embeddings(spark, SF)  # the same plan: its cache, if any
-    assert corpus.storageLevel != StorageLevel.NONE
-    assert release_cached() >= 1
-    assert corpus.storageLevel == StorageLevel.NONE
+    def cached_rdds() -> set:
+        return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
+    out = RC.q_ann_recall_eval_clustered(spark, SF)
+    out.collect()
+    clear_ivf_cache()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert cached_rdds() - before  # held while the result can still read it
+    del out
+    deadline = time.monotonic() + 30
+    while True:
+        gc.collect()
+        spark._jvm.System.gc()
+        left = cached_rdds() - before
+        if not left or time.monotonic() > deadline:
+            break
+        time.sleep(0.5)
+    assert not left
 
 
 def test_manifest_tag_follows_the_files(tmp_path):

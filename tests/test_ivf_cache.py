@@ -149,11 +149,9 @@ def test_corpora_without_a_versioned_file_scan_bypass(spark, corpus_dir, queries
     assert _counts() == (0, 0, 0)
 
 
-def test_release_cached_keeps_the_entry_and_clear_unpersists_it(spark, corpus_dir,
-                                                                 queries):
+def test_the_entry_stays_until_clear_unpersists_it(spark, corpus_dir, queries):
     corpus = spark.read.parquet(corpus_dir)
     _topk(corpus, queries)
-    similarity.release_cached()
     assert _counts()[2] == 1
     stored = _stored(corpus)
     assert stored.storageLevel != StorageLevel.NONE

@@ -47,6 +47,35 @@ def test_ngram_jaccard_exact_similarity(docs):
     assert not any(5 in p for p in sim)  # different block never compared
 
 
+def test_ngram_jaccard_answers_from_a_file_rewritten_in_place(spark, tmp_path):
+    """The postings the operator reads in several branches are checkpointed,
+    not cached by plan: once a corpus's part file is overwritten in place
+    and the directory read again, a second call answers from the new rows."""
+    import os
+    import shutil
+
+    def write(path, texts):
+        (spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+         .withColumn("blk", F.lit(0)).coalesce(1).write.parquet(path))
+        return os.path.join(path, next(n for n in sorted(os.listdir(path))
+                                       if n.endswith(".parquet")))
+
+    def crc(path):
+        return os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+
+    def pairs(path):
+        return sorted(map(tuple, dedup.ngram_jaccard_pairs(
+            spark.read.parquet(path), "doc_id", "text", "blk").collect()))
+
+    corpus, other = str(tmp_path / "corpus"), str(tmp_path / "other")
+    dst = write(corpus, ["a b c d e f g h i j", "a b c d e f g h i k"])
+    before = pairs(corpus)
+    src = write(other, ["a b c d e f g h i j", "a b c d e f x y z w"])
+    for a, b in ((src, dst), (crc(src), crc(dst))):
+        shutil.copyfile(a, b)
+    assert pairs(corpus) == pairs(other) != before
+
+
 def test_gram_strings_duplicate_ids_do_not_interleave(spark):
     # two physical rows sharing an id must shingle independently — an
     # id-partitioned LEAD window would interleave their token positions
@@ -320,7 +349,6 @@ def test_margin_mutual_pairs_ivf_degenerates_to_exact(spark):
             emb, "emb_id", "vec", "label", 0, 1, cents, k=3, nprobe=4
         ).collect())
     )
-    similarity.release_cached()
     assert exact and ivf == exact
 
 
@@ -340,7 +368,6 @@ def test_margin_mutual_pairs_ivf_prunes_to_probed_cells(spark):
         margin_threshold=0.0,
     )
     got = {(r["id_a"], r["id_b"]) for r in out.collect()}
-    similarity.release_cached()
     assert got == {(1, 2), (10, 11)}
 
 

@@ -1140,7 +1140,7 @@ def test_containment_pairs_matches_model(spark, docs, n):
     """The posting-join plan must equal the naive per-pair set model —
     including the smaller-side orientation and the equal-size id
     tiebreak (threshold 0 so every co-occurring pair surfaces)."""
-    from de_polars_spark.operators.dedup import containment_pairs, release_cached
+    from de_polars_spark.operators.dedup import containment_pairs
 
     data = [(i, blk, " ".join(toks)) for i, (blk, toks) in enumerate(docs)]
     df = spark.createDataFrame(data, "rid long, blk int, text string")
@@ -1154,7 +1154,6 @@ def test_containment_pairs_matches_model(spark, docs, n):
             df, "rid", "text", "blk", threshold=0.0, shingle_n=n
         ).collect()
     }
-    release_cached()
 
     def shingles(toks):
         return {
@@ -1238,10 +1237,7 @@ def test_margin_mutual_pairs_matches_model(spark, rows, k):
     """The two-window single-relation plan must equal the naive model:
     mutual top-1 across sides, margin = cos / mean of both k-NN
     neighborhood averages, ties on neighbor id."""
-    from de_polars_spark.operators.similarity import (
-        margin_mutual_pairs,
-        release_cached,
-    )
+    from de_polars_spark.operators.similarity import margin_mutual_pairs
 
     data = [
         (i, lab, v) for i, (lab, v) in enumerate(rows)
@@ -1256,7 +1252,6 @@ def test_margin_mutual_pairs_matches_model(spark, rows, k):
         (r["id_a"], r["id_b"]): r["margin"]
         for r in margin_mutual_pairs(df, "rid", "v", "lab", 0, 1, k).collect()
     }
-    release_cached()
 
     import math
 
@@ -1394,10 +1389,7 @@ def test_late_arrival_audit_matches_model(spark, ts_offsets, bsz):
 def test_longest_shared_span_matches_model(spark, docs, n):
     """The diagonal gaps-and-islands plan must equal a naive quadratic
     scan for the longest exactly-shared token run per pair."""
-    from de_polars_spark.operators.dedup import (
-        longest_shared_span,
-        release_cached,
-    )
+    from de_polars_spark.operators.dedup import longest_shared_span
 
     data = [(i, blk, " ".join(toks)) for i, (blk, toks) in enumerate(docs)]
     df = spark.createDataFrame(data, "rid long, blk int, text string")
@@ -1408,7 +1400,6 @@ def test_longest_shared_span_matches_model(spark, docs, n):
         )
         for r in longest_shared_span(df, "rid", "text", "blk", n).collect()
     }
-    release_cached()
 
     expect = {}
     for i, (bi, ti) in enumerate(docs):

@@ -201,7 +201,6 @@ def main() -> None:
 
     only = set(sys.argv[1:])
     rows, flags, justified = [], [], []
-    from de_polars_spark.sources.artifacts import release_cached
 
     qs = entry_mod.queries()
     # run the heaviest spillers FIRST: a 200-plan sf1 session accumulates
@@ -224,14 +223,10 @@ def main() -> None:
             flags.append(f"- `{name}`: PLAN FAILED — {exc}")
             continue
         finally:
-            # same hygiene as bench.py: dedup/similarity ops persist
-            # internally; 200 executed plans otherwise accumulate
-            # cached postings until the storage pressure distorts (or
-            # kills) late queries
-            release_cached()
-            # and drop py4j refs promptly (same rationale as bench.py):
+            # drop py4j refs promptly (same rationale as bench.py):
             # ContextCleaner can only release finished plans' broadcast
-            # blocks once the driver-side references are GC'd — at sf1
+            # blocks and the local checkpoints dedup/similarity ops take
+            # once the driver-side references are GC'd — at sf1
             # the accumulated broadcast pressure otherwise OOMs a late
             # broadcast build (observed: dedup_ngram_jaccard PLAN FAILED
             # in the 202-plan audit session while the same query runs

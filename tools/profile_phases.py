@@ -3,7 +3,8 @@
 For each named inventory query, measures in one bench-shaped session:
 
 - ``build``: calling the inventory function (Python DSL construction,
-  plus any EAGER driver work inside — fits/collects/persists it runs).
+  plus any EAGER driver work inside — fits, collects and local
+  checkpoints it runs).
 - ``plan``: forcing the analyzed+optimized+physical plan of the final
   frame (Catalyst cost, driver-side single thread).
 - ``exec``: the terminal collect().
@@ -18,6 +19,7 @@ clock; run in a calm window and interleave reps for A/B claims.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
@@ -56,7 +58,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from de_polars_spark.inventory import QUERIES
-    from de_polars_spark.sources.artifacts import release_cached
 
     unknown = [n for n in names if n not in QUERIES]
     if unknown:
@@ -79,9 +80,6 @@ def main() -> None:
             t2 = time.perf_counter()
             df.collect()
             t3 = time.perf_counter()
-            release_cached()
-            import gc
-
             gc.collect()
             cur = {
                 "query": name,
