@@ -57,6 +57,14 @@ _SECTIONS: dict[str, list[str]] = {
 _INT_COLS = {"rds_license", "rds_no_license"}
 
 
+def _sum(col: str):
+    """The package's ``DSUM8``: a double column summed as DECIMAL(38,8), so
+    the total does not depend on the order partial sums merge in."""
+    if col in _INT_COLS:
+        return F.sum(col)
+    return F.sum(F.col(col).cast("decimal(38,8)")).cast("double")
+
+
 class KPISummary(AnalyticsModule):
     """engine.kpi — the flagship dashboard view."""
 
@@ -110,10 +118,9 @@ class KPISummary(AnalyticsModule):
         df = self._tracker(
             billing_period, payer_account_id, linked_account_id, tags_filter
         )
-        money = [c for cols in _SECTIONS.values() for c in cols]
-        aggs = [F.count(F.lit(1)).alias("__rows"),
-                F.sum("spend_all_cost").alias("spend_all_cost")]
-        aggs += [F.sum(c).alias(c) for c in money]
+        money = ["spend_all_cost"] + [c for cols in _SECTIONS.values() for c in cols]
+        aggs = [F.count(F.lit(1)).alias("__rows")]
+        aggs += [_sum(c).alias(c) for c in money]
         row = df.agg(*aggs).collect()[0].asDict()
         if not row["__rows"]:
             return self._empty_response()

@@ -172,7 +172,7 @@ class SpendAnalytics(AnalyticsModule):
         WHERE line_item_unblended_cost > 0
           AND DATE_TRUNC('month', line_item_usage_start_date) = DATE_TRUNC('month', {{now}})
         {f'GROUP BY {group}' if group else ''}
-        ORDER BY spend DESC
+        ORDER BY spend DESC{f', {group}' if group else ''}
         LIMIT 50
         """
         rows = self._rows(self._sql(sql))

@@ -13,6 +13,13 @@ that genuinely need external codecs (progressive/color JPEG, ffmpeg
 video) raise a clearly marked error; the 'fake' format keeps the
 zero-dependency plumbing tests cheap.
 
+Two adapters hold the ``mapInPandas`` plumbing: ``_attach`` encodes a
+fixture payload per row from its geometry columns, and ``_map_payloads``
+runs every per-payload reducer (format allow-list, row flattening, the
+typed output frame). A format costs one ``_attach`` call and one ``rows``
+function. The BMP pixel reducers read pixels through
+:func:`decode_bmp_pixels`, which decodes uncompressed 24-bit only.
+
 At scale: binary payloads dominate row width — keep them out of shuffles
 (decode early, project features, drop the payload) and size
 ``spark.sql.files.maxPartitionBytes`` so a batch of payloads fits
@@ -22,15 +29,96 @@ executor memory.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DECODED_SCHEMA = (
     "doc_id bigint, width int, height int, mode string, n_bytes int"
 )
+
+
+def _md5_byte(text_col: str, i: int) -> Column:
+    """Byte ``i`` (0-15) of ``md5(text_col)`` as an int column: the seed
+    every real-bytes fixture derives its geometry from."""
+    return F.conv(F.substring(F.md5(F.col(text_col)), 2 * i + 1, 2), 16, 10).cast(
+        "int"
+    )
+
+
+def _attach(
+    df: DataFrame, id_col: str, fmt: str, encode: Callable[..., bytes],
+    *geometry: Column,
+) -> DataFrame:
+    """Per row, the payload ``encode(*geometry)`` (geometry columns in the
+    encoder's argument order) plus the ``media_meta`` struct naming the
+    format ``fmt`` and the payload's size."""
+    geo = df.select(
+        F.col(id_col).alias("doc_id"),
+        *(g.alias(f"__g{i}") for i, g in enumerate(geometry)),
+    )
+
+    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            args = zip(*(pdf[c] for c in pdf.columns[1:]))
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": [encode(*map(int, a)) for a in args],
+                }
+            )
+
+    enc = geo.mapInPandas(_enc, schema="doc_id bigint, payload binary")
+    return enc.select(
+        "doc_id",
+        "payload",
+        F.struct(
+            F.lit(fmt).alias("format"),
+            F.length("payload").cast("int").alias("n_bytes"),
+        ).alias("media_meta"),
+    )
+
+
+def _map_payloads(
+    with_payload: DataFrame,
+    schema: str,
+    rows: Callable[[int, bytes, str], Iterable[tuple]],
+    shipped: tuple[str, ...] = (),
+    needs: str = "",
+) -> DataFrame:
+    """Per Arrow batch, ``rows(doc_id, payload, format)`` for every
+    payload, its output tuples (any number per payload) flattened into one
+    frame with ``schema``'s columns. With ``shipped``, a batch holding any
+    other format raises ``NotImplementedError`` naming what it ``needs``.
+
+    The frame is built ``dtype=object`` so Arrow casts each Python value
+    to the declared type: a column of ints and ``None`` would otherwise
+    pass through float64 and lose precision above 2**53."""
+    struct_type = StructType.fromDDL(schema)
+    names = struct_type.names
+
+    def _reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            fmts = [None] * len(pdf)
+            if shipped:
+                fmts = [m["format"] for m in pdf["media_meta"]]
+                unknown = set(fmts) - set(shipped)
+                if unknown:
+                    raise NotImplementedError(
+                        f"format(s) {sorted(unknown)} require {needs}, not "
+                        f"available in this env (shipped: {', '.join(shipped)})"
+                    )
+            out = [
+                r
+                for doc_id, b, fmt in zip(pdf["doc_id"], pdf["payload"], fmts)
+                for r in rows(doc_id, b, fmt)
+            ]
+            yield pd.DataFrame(out, columns=names, dtype=object)
+
+    return with_payload.mapInPandas(_reduce, schema=struct_type)
 
 
 def attach_fake_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -84,43 +172,45 @@ def parse_bmp(b: bytes) -> tuple[int, int, str, int]:
     return width, abs(height), mode, len(b)
 
 
+def decode_bmp_pixels(b: bytes):
+    """Full BMP pixel decode: the ``(height, width, 3)`` int64 BGR array,
+    its 4-byte-aligned rows read from the pixel-data offset the header
+    declares (bytes 10-13), in file order — the order the fixtures' ``y``
+    indexes. Uncompressed 24-bit only: any other bit depth or a
+    compressed payload raises ``ValueError``."""
+    import numpy as np
+
+    w, h, _, _ = parse_bmp(b)
+    (offset,) = struct.unpack_from("<I", b, 10)
+    bits, compression = struct.unpack_from("<HI", b, 28)
+    if bits != 24 or compression != 0:
+        raise ValueError(
+            f"decode_bmp_pixels ships uncompressed 24-bit only, got {bits}-bit "
+            f"compression {compression}"
+        )
+    rowsize = (3 * w + 3) // 4 * 4
+    arr = np.frombuffer(b, dtype=np.uint8, count=h * rowsize, offset=offset)
+    return arr.reshape(h, rowsize)[:, : 3 * w].reshape(h, w, 3).astype(np.int64)
+
+
 def extract_bmp_channel_stats(with_payload: DataFrame) -> DataFrame:
     """Per-image channel statistics from REAL decoded pixel data: parse
     the BMP header, slice the 4-byte-aligned BGR rows out of the actual
     payload, and reduce per-channel integer sums (numpy over the Arrow
     batch). Integer outputs stay bit-exact across engines — the
     strict-gate convention for float-free feature extraction."""
-    import numpy as np
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in (
-                "doc_id", "n_pixels", "sum_b", "sum_g", "sum_r", "max_b",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _, _ = parse_bmp(b)
-                rowsize = (3 * w + 3) // 4 * 4
-                arr = np.frombuffer(
-                    b, dtype=np.uint8, count=h * rowsize, offset=54
-                ).reshape(h, rowsize)
-                px = arr[:, : 3 * w].reshape(h, w, 3).astype(np.int64)
-                cols["doc_id"].append(doc_id)
-                cols["n_pixels"].append(w * h)
-                cols["sum_b"].append(int(px[:, :, 0].sum()))
-                cols["sum_g"].append(int(px[:, :, 1].sum()))
-                cols["sum_r"].append(int(px[:, :, 2].sum()))
-                cols["max_b"].append(int(px[:, :, 0].max()))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64" if k != "doc_id" else None)
-                 for k, v in cols.items()}
-            )
+    def rows(doc_id, b, _fmt):
+        px = decode_bmp_pixels(b)
+        h, w, _ = px.shape
+        yield (doc_id, w * h, *map(int, px.sum(axis=(0, 1))),
+               int(px[:, :, 0].max()))
 
-    return with_payload.mapInPandas(
-        _stats,
-        schema=(
-            "doc_id bigint, n_pixels bigint, sum_b bigint, sum_g bigint, "
-            "sum_r bigint, max_b bigint"
-        ),
+    return _map_payloads(
+        with_payload,
+        "doc_id bigint, n_pixels bigint, sum_b bigint, sum_g bigint, "
+        "sum_r bigint, max_b bigint",
+        rows, shipped=("bmp",), needs="PIL",
     )
 
 
@@ -130,39 +220,11 @@ def attach_bmp_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     height = 1 + b1 % 16, pixel seed = b2) — so an oracle can predict the
     DECODED output exactly while the payload itself is a real image file
     the decoder must actually parse."""
-
-    def _byte(i: int):
-        return F.conv(F.substring(F.md5(F.col(text_col)), 2 * i + 1, 2), 16, 10).cast(
-            "int"
-        )
-
-    geo = df.select(
-        F.col(id_col).alias("doc_id"),
-        (1 + _byte(0) % 16).alias("__w"),
-        (1 + _byte(1) % 16).alias("__h"),
-        _byte(2).alias("__seed"),
-    )
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        encode_bmp(int(w), int(h), int(s))
-                        for w, h, s in zip(pdf["__w"], pdf["__h"], pdf["__seed"])
-                    ],
-                }
-            )
-
-    enc = geo.mapInPandas(_enc, schema="doc_id bigint, payload binary")
-    return enc.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("bmp").alias("format"),
-            F.length("payload").cast("int").alias("n_bytes"),
-        ).alias("media_meta"),
+    return _attach(
+        df, id_col, "bmp", encode_bmp,
+        1 + _md5_byte(text_col, 0) % 16,
+        1 + _md5_byte(text_col, 1) % 16,
+        _md5_byte(text_col, 2),
     )
 
 
@@ -220,43 +282,15 @@ def attach_wav_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Real-bytes audio fixture: a genuine PCM16 WAV per row, geometry
     seeded from ``md5(text)`` (rate from {8000,16000,22050,44100} by
     b0 % 4, n_samples = 100 + (b1*256+b2) % 2000, fill seed = b3)."""
-
-    def _byte(i: int):
-        return F.conv(F.substring(F.md5(F.col(text_col)), 2 * i + 1, 2), 16, 10).cast(
-            "int"
-        )
-
     rate = F.element_at(
         F.array(F.lit(8000), F.lit(16000), F.lit(22050), F.lit(44100)),
-        _byte(0) % 4 + 1,
+        _md5_byte(text_col, 0) % 4 + 1,
     )
-    geo = df.select(
-        F.col(id_col).alias("doc_id"),
-        rate.alias("__rate"),
-        (100 + (_byte(1) * 256 + _byte(2)) % 2000).alias("__n"),
-        _byte(3).alias("__seed"),
-    )
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        encode_wav(int(n), int(r), int(s))
-                        for r, n, s in zip(pdf["__rate"], pdf["__n"], pdf["__seed"])
-                    ],
-                }
-            )
-
-    enc = geo.mapInPandas(_enc, schema="doc_id bigint, payload binary")
-    return enc.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("wav").alias("format"),
-            F.length("payload").cast("int").alias("n_bytes"),
-        ).alias("media_meta"),
+    return _attach(
+        df, id_col, "wav", encode_wav,
+        100 + (_md5_byte(text_col, 1) * 256 + _md5_byte(text_col, 2)) % 2000,
+        rate,
+        _md5_byte(text_col, 3),
     )
 
 
@@ -269,90 +303,41 @@ AUDIO_SCHEMA = (
 def decode_audio(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched audio decode: real WAV header parsing per payload."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts = pdf["media_meta"].map(lambda m: m["format"])
-            unknown = set(fmts) - {"wav"}
-            if unknown:
-                raise NotImplementedError(
-                    f"audio decode for {sorted(unknown)} requires ffmpeg, "
-                    "not available in this env (shipped: wav)"
-                )
-            cols = {k: [] for k in (
-                "doc_id", "sample_rate", "n_channels", "bits",
-                "n_samples", "duration_us", "n_bytes",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                rate, ch, bits, n, size = parse_wav(b)
-                cols["doc_id"].append(doc_id)
-                cols["sample_rate"].append(rate)
-                cols["n_channels"].append(ch)
-                cols["bits"].append(bits)
-                cols["n_samples"].append(n)
-                # INTEGER microseconds: floor division is bit-exact in
-                # every engine, where a float-ms ROUND risked the
-                # Python-banker's-vs-DuckDB-half-away 1-ulp drift class
-                cols["duration_us"].append(n * 1_000_000 // rate)
-                cols["n_bytes"].append(size)
-            yield pd.DataFrame(
-                {
-                    "doc_id": cols["doc_id"],
-                    "sample_rate": pd.Series(cols["sample_rate"], dtype="int32"),
-                    "n_channels": pd.Series(cols["n_channels"], dtype="int32"),
-                    "bits": pd.Series(cols["bits"], dtype="int32"),
-                    "n_samples": pd.Series(cols["n_samples"], dtype="int32"),
-                    "duration_us": pd.Series(cols["duration_us"], dtype="int64"),
-                    "n_bytes": pd.Series(cols["n_bytes"], dtype="int32"),
-                }
-            )
+    def rows(doc_id, b, _fmt):
+        rate, ch, bits, n, size = parse_wav(b)
+        # INTEGER microseconds: floor division is bit-exact in every
+        # engine, where a float-ms ROUND risked the
+        # Python-banker's-vs-DuckDB-half-away 1-ulp drift class
+        yield doc_id, rate, ch, bits, n, n * 1_000_000 // rate, size
 
-    return with_payload.mapInPandas(_decode, schema=AUDIO_SCHEMA)
+    return _map_payloads(
+        with_payload, AUDIO_SCHEMA, rows, shipped=("wav",), needs="ffmpeg"
+    )
 
 
-def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-batch decode. 'bmp'/'png'/'jpeg' payloads are REALLY parsed
+def _decoded_row(doc_id, b, fmt):
+    """Per-payload decode. 'bmp'/'png'/'jpeg' payloads are REALLY parsed
     (header magic, dimensions, bit depth — see :func:`parse_bmp`,
     :func:`parse_png_header`, :func:`parse_jpeg_header`); 'fake' derives
-    dimensions from raw payload bytes (zero-dependency plumbing path);
-    anything else raises — PIL/ffmpeg are absent here."""
-    for pdf in batches:
-        fmts = pdf["media_meta"].map(lambda m: m["format"])
-        unknown = set(fmts) - {"fake", "bmp", "png", "jpeg"}
-        if unknown:
-            raise NotImplementedError(
-                f"decode for format(s) {sorted(unknown)} requires PIL/ffmpeg, "
-                "not available in this env (shipped: bmp, png, jpeg, fake)"
-            )
-        out = {"doc_id": [], "width": [], "height": [], "mode": [], "n_bytes": []}
-        for doc_id, fmt, b in zip(pdf["doc_id"], fmts, pdf["payload"]):
-            if fmt == "bmp":
-                w, h, mode, n = parse_bmp(b)
-            elif fmt == "png":
-                w, h, mode, n = parse_png_header(b)
-            elif fmt == "jpeg":
-                w, h, mode, n = parse_jpeg_header(b)
-            else:
-                w, h = b[0], b[1]
-                mode, n = ("RGB", "L", "RGBA")[b[2] % 3], len(b)
-            out["doc_id"].append(doc_id)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["mode"].append(mode)
-            out["n_bytes"].append(n)
-        yield pd.DataFrame(
-            {
-                "doc_id": out["doc_id"],
-                "width": pd.Series(out["width"], dtype="int32"),
-                "height": pd.Series(out["height"], dtype="int32"),
-                "mode": out["mode"],
-                "n_bytes": pd.Series(out["n_bytes"], dtype="int32"),
-            }
-        )
+    dimensions from raw payload bytes (zero-dependency plumbing path)."""
+    if fmt == "bmp":
+        w, h, mode, n = parse_bmp(b)
+    elif fmt == "png":
+        w, h, mode, n = parse_png_header(b)
+    elif fmt == "jpeg":
+        w, h, mode, n = parse_jpeg_header(b)
+    else:
+        w, h = b[0], b[1]
+        mode, n = ("RGB", "L", "RGBA")[b[2] % 3], len(b)
+    yield doc_id, w, h, mode, n
 
 
 def decode_images(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched decode: binary in → typed feature columns out."""
-    return with_payload.mapInPandas(_decode_batch, schema=DECODED_SCHEMA)
+    return _map_payloads(
+        with_payload, DECODED_SCHEMA, _decoded_row,
+        shipped=("bmp", "png", "jpeg", "fake"), needs="PIL/ffmpeg",
+    )
 
 
 RESIZED_SCHEMA = (
@@ -368,26 +353,15 @@ def resize_images(with_payload: DataFrame, out_w: int, out_h: int) -> DataFrame:
     ``PIL.Image.resize((out_w, out_h))`` and re-encodes the payload; batch
     shape, schema, and the decode-early/drop-payload pattern are what
     scale (the binary never enters a shuffle)."""
+    import numpy as np
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            p = pdf["payload"]
-            w = p.map(lambda b: b[0]).astype("int32")
-            h = p.map(lambda b: b[1]).astype("int32")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": w,
-                    "height": h,
-                    "out_width": out_w,
-                    "out_height": out_h,
-                    "scale_x": (out_w / w.clip(lower=1)).round(6),
-                    "scale_y": (out_h / h.clip(lower=1)).round(6),
-                    "out_bytes": out_w * out_h * 3,
-                }
-            )
+    def rows(doc_id, b, _fmt):
+        w, h = b[0], b[1]
+        yield (doc_id, w, h, out_w, out_h,
+               np.round(out_w / max(w, 1), 6), np.round(out_h / max(h, 1), 6),
+               out_w * out_h * 3)
 
-    return with_payload.mapInPandas(_resize, schema=RESIZED_SCHEMA)
+    return _map_payloads(with_payload, RESIZED_SCHEMA, rows)
 
 
 def extract_features(with_payload: DataFrame, dim: int = 4) -> DataFrame:
@@ -395,19 +369,11 @@ def extract_features(with_payload: DataFrame, dim: int = 4) -> DataFrame:
     (deterministic byte scaling stands in for a vision-encoder forward
     pass). Output feeds the ANN operators (operators/similarity.py)."""
 
-    def _feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "features": pdf["payload"].map(
-                        lambda b: [round(b[i] / 255.0, 6) for i in range(dim)]
-                    ),
-                }
-            )
+    def rows(doc_id, b, _fmt):
+        yield doc_id, [round(b[i] / 255.0, 6) for i in range(dim)]
 
-    return with_payload.mapInPandas(
-        _feats, schema="doc_id bigint, features array<double>"
+    return _map_payloads(
+        with_payload, "doc_id bigint, features array<double>", rows
     )
 
 
@@ -420,19 +386,12 @@ def sample_frames(with_payload: DataFrame, frame_interval_s: float = 0.5) -> Dat
     extraction in a real build). Demonstrates the row-expanding
     ``mapInPandas`` shape — output cardinality independent of input."""
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "frame_id": [], "frame_ts": [], "frame_checksum": []}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = 1 + b[3] % 5
-                for fid in range(n_frames):
-                    out["doc_id"].append(doc_id)
-                    out["frame_id"].append(fid)
-                    out["frame_ts"].append(round(fid * frame_interval_s, 6))
-                    out["frame_checksum"].append((b[4] + 31 * fid) % 256)
-            yield pd.DataFrame(out)
+    def rows(doc_id, b, _fmt):
+        for fid in range(1 + b[3] % 5):
+            yield (doc_id, fid, round(fid * frame_interval_s, 6),
+                   (b[4] + 31 * fid) % 256)
 
-    return with_payload.mapInPandas(_frames, schema=FRAMES_SCHEMA)
+    return _map_payloads(with_payload, FRAMES_SCHEMA, rows)
 
 
 # ------------------------------------------------------------------ #
@@ -527,42 +486,13 @@ def attach_y4m_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Real-bytes video fixture: a genuine Y4M stream per row, geometry
     seeded from ``md5(text)`` (w = 4 + b0 % 5, h = 3 + b1 % 4,
     n_frames = 1 + b2 % 6, Y-ramp seed = b3, fixed 4:1 fps)."""
-
-    def _byte(i: int):
-        return F.conv(F.substring(F.md5(F.col(text_col)), 2 * i + 1, 2), 16, 10).cast(
-            "int"
-        )
-
-    geo = df.select(
-        F.col(id_col).alias("doc_id"),
-        (4 + _byte(0) % 5).alias("__w"),
-        (3 + _byte(1) % 4).alias("__h"),
-        (1 + _byte(2) % 6).alias("__nf"),
-        _byte(3).alias("__seed"),
-    )
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        encode_y4m(int(w), int(h), int(nf), seed=int(s))
-                        for w, h, nf, s in zip(
-                            pdf["__w"], pdf["__h"], pdf["__nf"], pdf["__seed"]
-                        )
-                    ],
-                }
-            )
-
-    enc = geo.mapInPandas(_enc, schema="doc_id bigint, payload binary")
-    return enc.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("y4m").alias("format"),
-            F.length("payload").cast("int").alias("n_bytes"),
-        ).alias("media_meta"),
+    return _attach(
+        df, id_col, "y4m",
+        lambda w, h, nf, seed: encode_y4m(w, h, nf, seed=seed),
+        4 + _md5_byte(text_col, 0) % 5,
+        3 + _md5_byte(text_col, 1) % 4,
+        1 + _md5_byte(text_col, 2) % 6,
+        _md5_byte(text_col, 3),
     )
 
 
@@ -583,44 +513,19 @@ def sample_video_frames(with_payload: DataFrame, every_n: int = 2) -> DataFrame:
     extraction would use at scale."""
     import numpy as np
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts = pdf["media_meta"].map(lambda m: m["format"])
-            unknown = set(fmts) - {"y4m"}
-            if unknown:
-                raise NotImplementedError(
-                    f"frame sampling for {sorted(unknown)} requires ffmpeg, "
-                    "not available in this env (shipped: y4m)"
-                )
-            cols = {
-                k: []
-                for k in (
-                    "doc_id", "frame_id", "frame_ts_us", "y_checksum", "n_frames",
-                )
-            }
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, num, den, offsets = parse_y4m(b)
-                npx = w * h
-                for fid, off in enumerate(offsets):
-                    if fid % every_n:
-                        continue
-                    y = np.frombuffer(bytes(b[off : off + npx]), dtype=np.uint8)
-                    cols["doc_id"].append(doc_id)
-                    cols["frame_id"].append(fid)
-                    cols["frame_ts_us"].append(fid * 1_000_000 * den // num)
-                    cols["y_checksum"].append(int(y.sum()))
-                    cols["n_frames"].append(len(offsets))
-            yield pd.DataFrame(
-                {
-                    "doc_id": cols["doc_id"],
-                    "frame_id": pd.Series(cols["frame_id"], dtype="int32"),
-                    "frame_ts_us": pd.Series(cols["frame_ts_us"], dtype="int64"),
-                    "y_checksum": pd.Series(cols["y_checksum"], dtype="int64"),
-                    "n_frames": pd.Series(cols["n_frames"], dtype="int32"),
-                }
-            )
+    def rows(doc_id, b, _fmt):
+        w, h, num, den, offsets = parse_y4m(b)
+        npx = w * h
+        for fid, off in enumerate(offsets):
+            if fid % every_n:
+                continue
+            y = np.frombuffer(bytes(b[off : off + npx]), dtype=np.uint8)
+            yield (doc_id, fid, fid * 1_000_000 * den // num, int(y.sum()),
+                   len(offsets))
 
-    return with_payload.mapInPandas(_frames, schema=VIDEO_FRAMES_SCHEMA)
+    return _map_payloads(
+        with_payload, VIDEO_FRAMES_SCHEMA, rows, shipped=("y4m",), needs="ffmpeg"
+    )
 
 
 BMP_RESIZED_SCHEMA = (
@@ -642,48 +547,17 @@ def resize_bmp_nearest(
     here — only the (tiny) resized features continue through shuffles."""
     import numpy as np
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts = pdf["media_meta"].map(lambda m: m["format"])
-            unknown = set(fmts) - {"bmp"}
-            if unknown:
-                raise NotImplementedError(
-                    f"pixel resize for {sorted(unknown)} requires PIL, "
-                    "not available in this env (shipped: bmp)"
-                )
-            cols = {k: [] for k in (
-                "doc_id", "src_w", "src_h", "sum_b", "sum_g", "sum_r",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _, _ = parse_bmp(b)
-                rowsize = (3 * w + 3) // 4 * 4
-                arr = np.frombuffer(
-                    b, dtype=np.uint8, count=h * rowsize, offset=54
-                ).reshape(h, rowsize)
-                px = arr[:, : 3 * w].reshape(h, w, 3).astype(np.int64)
-                sx = np.arange(out_w, dtype=np.int64) * w // out_w
-                sy = np.arange(out_h, dtype=np.int64) * h // out_h
-                resized = px[np.ix_(sy, sx)]  # (out_h, out_w, 3) gather
-                cols["doc_id"].append(doc_id)
-                cols["src_w"].append(w)
-                cols["src_h"].append(h)
-                cols["sum_b"].append(int(resized[:, :, 0].sum()))
-                cols["sum_g"].append(int(resized[:, :, 1].sum()))
-                cols["sum_r"].append(int(resized[:, :, 2].sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": cols["doc_id"],
-                    "src_w": pd.Series(cols["src_w"], dtype="int32"),
-                    "src_h": pd.Series(cols["src_h"], dtype="int32"),
-                    "out_w": pd.Series([out_w] * len(cols["doc_id"]), dtype="int32"),
-                    "out_h": pd.Series([out_h] * len(cols["doc_id"]), dtype="int32"),
-                    "sum_b": pd.Series(cols["sum_b"], dtype="int64"),
-                    "sum_g": pd.Series(cols["sum_g"], dtype="int64"),
-                    "sum_r": pd.Series(cols["sum_r"], dtype="int64"),
-                }
-            )
+    def rows(doc_id, b, _fmt):
+        px = decode_bmp_pixels(b)
+        h, w, _ = px.shape
+        sx = np.arange(out_w, dtype=np.int64) * w // out_w
+        sy = np.arange(out_h, dtype=np.int64) * h // out_h
+        resized = px[np.ix_(sy, sx)]  # (out_h, out_w, 3) gather
+        yield (doc_id, w, h, out_w, out_h, *map(int, resized.sum(axis=(0, 1))))
 
-    return with_payload.mapInPandas(_resize, schema=BMP_RESIZED_SCHEMA)
+    return _map_payloads(
+        with_payload, BMP_RESIZED_SCHEMA, rows, shipped=("bmp",), needs="PIL"
+    )
 
 
 BMP_FEATURES_SCHEMA = (
@@ -702,52 +576,25 @@ def extract_bmp_block_features(with_payload: DataFrame) -> DataFrame:
     gate, and the payload column dies at this operator boundary."""
     import numpy as np
 
-    def _feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts = pdf["media_meta"].map(lambda m: m["format"])
-            unknown = set(fmts) - {"bmp"}
-            if unknown:
-                raise NotImplementedError(
-                    f"pixel features for {sorted(unknown)} requires PIL, "
-                    "not available in this env (shipped: bmp)"
-                )
-            cols = {k: [] for k in (
-                "doc_id", "sum_q00", "sum_q01", "sum_q10", "sum_q11",
-                "n_q00", "n_q01", "n_q10", "n_q11",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _, _ = parse_bmp(b)
-                rowsize = (3 * w + 3) // 4 * 4
-                arr = np.frombuffer(
-                    b, dtype=np.uint8, count=h * rowsize, offset=54
-                ).reshape(h, rowsize)
-                blue = arr[:, : 3 * w].reshape(h, w, 3)[:, :, 0].astype(np.int64)
-                qx = np.arange(w, dtype=np.int64) * 2 // w  # 0/1 per column
-                qy = np.arange(h, dtype=np.int64) * 2 // h  # 0/1 per row
-                cols["doc_id"].append(doc_id)
-                for gx in (0, 1):
-                    for gy in (0, 1):
-                        mask = np.outer(qy == gy, qx == gx)
-                        cnt = int(mask.sum())
-                        # a 1-wide/1-tall image has EMPTY right/bottom
-                        # quadrants: NULL sum (SQL aggregate-over-no-rows
-                        # semantics), count 0
-                        cols[f"sum_q{gx}{gy}"].append(
-                            int(blue[mask].sum()) if cnt else None
-                        )
-                        cols[f"n_q{gx}{gy}"].append(cnt)
-            yield pd.DataFrame(
-                {
-                    k: pd.Series(
-                        v,
-                        dtype=None if k == "doc_id"
-                        else ("Int64" if k.startswith("sum_") else "int64"),
-                    )
-                    for k, v in cols.items()
-                }
-            )
+    def rows(doc_id, b, _fmt):
+        blue = decode_bmp_pixels(b)[:, :, 0]
+        h, w = blue.shape
+        qx = np.arange(w, dtype=np.int64) * 2 // w  # 0/1 per column
+        qy = np.arange(h, dtype=np.int64) * 2 // h  # 0/1 per row
+        sums, counts = [], []
+        for gx in (0, 1):
+            for gy in (0, 1):
+                mask = np.outer(qy == gy, qx == gx)
+                cnt = int(mask.sum())
+                # a 1-wide/1-tall image has EMPTY right/bottom quadrants:
+                # NULL sum (SQL aggregate-over-no-rows semantics), count 0
+                sums.append(int(blue[mask].sum()) if cnt else None)
+                counts.append(cnt)
+        yield (doc_id, *sums, *counts)
 
-    return with_payload.mapInPandas(_feats, schema=BMP_FEATURES_SCHEMA)
+    return _map_payloads(
+        with_payload, BMP_FEATURES_SCHEMA, rows, shipped=("bmp",), needs="PIL"
+    )
 
 
 # ------------------------------------------------------------------ #
@@ -1320,39 +1167,11 @@ def attach_jpeg_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     heavy non-multiple-of-8 crop coverage), pixel seed = b2 — so the
     oracle predicts the decoded block-solid output analytically while
     the payload is a genuine baseline JPEG bitstream."""
-
-    def _byte(i: int):
-        return F.conv(F.substring(F.md5(F.col(text_col)), 2 * i + 1, 2), 16, 10).cast(
-            "int"
-        )
-
-    geo = df.select(
-        F.col(id_col).alias("doc_id"),
-        (1 + _byte(0) % 40).alias("__w"),
-        (1 + _byte(1) % 40).alias("__h"),
-        _byte(2).alias("__seed"),
-    )
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        encode_jpeg(int(w), int(h), int(s))
-                        for w, h, s in zip(pdf["__w"], pdf["__h"], pdf["__seed"])
-                    ],
-                }
-            )
-
-    enc = geo.mapInPandas(_enc, schema="doc_id bigint, payload binary")
-    return enc.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("jpeg").alias("format"),
-            F.length("payload").cast("int").alias("n_bytes"),
-        ).alias("media_meta"),
+    return _attach(
+        df, id_col, "jpeg", encode_jpeg,
+        1 + _md5_byte(text_col, 0) % 40,
+        1 + _md5_byte(text_col, 1) % 40,
+        _md5_byte(text_col, 2),
     )
 
 
@@ -1369,37 +1188,14 @@ def decode_jpeg_images(with_payload: DataFrame) -> DataFrame:
     covers every pixel, so any bitstream/IDCT error breaks the strict
     oracle gate."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts = pdf["media_meta"].map(lambda m: m["format"])
-            unknown = set(fmts) - {"jpeg"}
-            if unknown:
-                raise NotImplementedError(
-                    f"decode_jpeg_images got format(s) {sorted(unknown)}"
-                )
-            cols = {k: [] for k in (
-                "doc_id", "width", "height", "mode", "sum_v", "max_v",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_jpeg_pixels(bytes(b))
-                cols["doc_id"].append(doc_id)
-                cols["height"].append(px.shape[0])
-                cols["width"].append(px.shape[1])
-                cols["mode"].append("L")
-                cols["sum_v"].append(int(px.sum(dtype="int64")))
-                cols["max_v"].append(int(px.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": cols["doc_id"],
-                    "width": pd.Series(cols["width"], dtype="int32"),
-                    "height": pd.Series(cols["height"], dtype="int32"),
-                    "mode": cols["mode"],
-                    "sum_v": pd.Series(cols["sum_v"], dtype="int64"),
-                    "max_v": pd.Series(cols["max_v"], dtype="int32"),
-                }
-            )
+    def rows(doc_id, b, _fmt):
+        px = decode_jpeg_pixels(bytes(b))
+        yield (doc_id, px.shape[1], px.shape[0], "L",
+               int(px.sum(dtype="int64")), int(px.max()))
 
-    return with_payload.mapInPandas(_decode, schema=JPEG_DECODED_SCHEMA)
+    return _map_payloads(
+        with_payload, JPEG_DECODED_SCHEMA, rows, shipped=("jpeg",), needs="PIL"
+    )
 
 
 def attach_png_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1407,39 +1203,11 @@ def attach_png_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     :func:`attach_bmp_payload` (width = 1 + b0 % 16, height = 1 + b1 % 16,
     pixel seed = b2 from ``md5(text)``) so the oracle predicts the decoded
     output analytically while the payload is a genuine PNG file."""
-
-    def _byte(i: int):
-        return F.conv(F.substring(F.md5(F.col(text_col)), 2 * i + 1, 2), 16, 10).cast(
-            "int"
-        )
-
-    geo = df.select(
-        F.col(id_col).alias("doc_id"),
-        (1 + _byte(0) % 16).alias("__w"),
-        (1 + _byte(1) % 16).alias("__h"),
-        _byte(2).alias("__seed"),
-    )
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        encode_png(int(w), int(h), int(s))
-                        for w, h, s in zip(pdf["__w"], pdf["__h"], pdf["__seed"])
-                    ],
-                }
-            )
-
-    enc = geo.mapInPandas(_enc, schema="doc_id bigint, payload binary")
-    return enc.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("png").alias("format"),
-            F.length("payload").cast("int").alias("n_bytes"),
-        ).alias("media_meta"),
+    return _attach(
+        df, id_col, "png", encode_png,
+        1 + _md5_byte(text_col, 0) % 16,
+        1 + _md5_byte(text_col, 1) % 16,
+        _md5_byte(text_col, 2),
     )
 
 
@@ -1456,31 +1224,11 @@ def decode_png_images(with_payload: DataFrame) -> DataFrame:
     filter reconstruction anywhere shifts a sum (the channel sums cover
     every byte of every scanline, so they are a complete witness)."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in (
-                "doc_id", "width", "height", "mode", "sum_r", "sum_g", "sum_b",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, mode, _ = parse_png_header(b)
-                px = decode_png_pixels(b).astype("int64")
-                cols["doc_id"].append(doc_id)
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["mode"].append(mode)
-                cols["sum_r"].append(int(px[:, :, 0].sum()))
-                cols["sum_g"].append(int(px[:, :, 1].sum()))
-                cols["sum_b"].append(int(px[:, :, 2].sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": cols["doc_id"],
-                    "width": pd.Series(cols["width"], dtype="int32"),
-                    "height": pd.Series(cols["height"], dtype="int32"),
-                    "mode": cols["mode"],
-                    "sum_r": pd.Series(cols["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(cols["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(cols["sum_b"], dtype="int64"),
-                }
-            )
+    def rows(doc_id, b, _fmt):
+        w, h, mode, _ = parse_png_header(b)
+        px = decode_png_pixels(b).astype("int64")
+        yield (doc_id, w, h, mode, *map(int, px.sum(axis=(0, 1))))
 
-    return with_payload.mapInPandas(_decode, schema=PNG_DECODED_SCHEMA)
+    return _map_payloads(
+        with_payload, PNG_DECODED_SCHEMA, rows, shipped=("png",), needs="PIL"
+    )

@@ -894,6 +894,41 @@ def test_kpi_summary_survives_the_inventory_chain_in_its_session(memo_engines, c
     assert engine.spark.table("kpi_tracker").count() == pinned
 
 
+def test_kpi_summary_does_not_depend_on_the_shuffle_layout(memo_engines, cur_root):
+    """The summary's money totals are sums over DECIMAL: the order partial
+    sums merge in, which the number of shuffle partitions sets, changes no
+    digit of the answer."""
+    engine = memo_engines(cur_root).engine
+    answers = []
+    for partitions in ("1", "13"):
+        engine.spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        answers.append(engine.kpi.get_comprehensive_summary())
+    assert answers[0] == answers[1]
+
+
+def test_spend_breakdown_breaks_equal_spend_ties_by_its_dimensions(spark, tmp_path):
+    """More than 50 groups spend the same: the 50 answered are the first by
+    ``(spend DESC, region, service)``, not whichever the sort met first."""
+    from datetime import datetime
+
+    from de_polars_spark.analytics.spend import SpendAnalytics
+    from de_polars_spark.engine.core import SparkEngine
+
+    groups = [(f"region-{r:02d}", f"svc-{s}") for r in range(20) for s in range(3)]
+    path = str(tmp_path / "cur")
+    spark.createDataFrame(
+        [(region, svc, 1.0, f"{region}/{svc}", datetime(1998, 10, 5))
+         for region, svc in reversed(groups)],
+        "product_region string, product_servicecode string, "
+        "line_item_unblended_cost double, line_item_resource_id string, "
+        "line_item_usage_start_date timestamp",
+    ).repartition(4).write.parquet(path)
+    engine = SparkEngine(new_session(spark), DataConfig(
+        export_type=DataExportType.GENERIC, table_name="tie_cur", local_data_path=path))
+    got = SpendAnalytics(engine, now="1998-10-01").get_spend_breakdown()["breakdown"]
+    assert [(g["region"], g["service"]) for g in got] == sorted(groups)[:50]
+
+
 def _jobs_run(spark, group: str, fn):
     """``fn()`` and the number of Spark jobs it ran."""
     sc = spark.sparkContext

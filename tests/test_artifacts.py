@@ -184,6 +184,19 @@ def test_one_ngram_builder_forms_every_word_gram():
     assert inspect.getsource(TX.ngrams) in L._pair_graph_key()
 
 
+def test_one_payload_adapter_runs_every_multimodal_operator():
+    """Guard: the multimodal operators go through ``_attach`` (fixture
+    payloads) and ``_map_payloads`` (per-payload reducers), which hold the
+    module's only ``mapInPandas`` calls and its one format allow-list
+    error, and no BMP reducer slices pixels at a hard-coded offset in
+    place of ``decode_bmp_pixels``."""
+    with open(os.path.join(PKG, "operators", "multimodal.py")) as f:
+        src = f.read()
+    assert src.count("mapInPandas(") == 2
+    assert src.count("raise NotImplementedError") == 1
+    assert "offset=54" not in src
+
+
 def test_memo_is_an_lru_that_keeps_the_first_value_and_evicts_through_the_hook():
     evicted = []
     memo = Memo(2, on_evict=evicted.append)

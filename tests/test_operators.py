@@ -764,6 +764,51 @@ def test_bmp_block_features_match_handcount(spark):
     assert r2["sum_q11"] is None and r2["n_q11"] == 0
 
 
+def _bmp_payload(spark, b):
+    return spark.createDataFrame(
+        [(1, bytearray(b), {"format": "bmp"})],
+        "doc_id bigint, payload binary, media_meta map<string,string>",
+    )
+
+
+def test_bmp_reducers_read_pixels_from_the_declared_offset(spark):
+    # the 2x2 seed-10 image with a 4-byte gap before its pixels: the
+    # header's bfOffBits (bytes 10-13) says 58, not 54
+    import struct
+
+    b = bytearray(multimodal.encode_bmp(2, 2, seed=10))
+    b[54:54] = b"\xff" * 4
+    struct.pack_into("<I", b, 2, len(b))
+    struct.pack_into("<I", b, 10, 58)
+    payload = _bmp_payload(spark, b)
+    v = {(x, y): (10 + 7 * x + 13 * y) % 256 for x in range(2) for y in range(2)}
+    vals = list(v.values())
+    sums = (sum(vals), sum(3 * c % 256 for c in vals), sum(5 * c % 256 for c in vals))
+    r = multimodal.extract_bmp_channel_stats(payload).collect()[0]
+    assert (r["sum_b"], r["sum_g"], r["sum_r"], r["max_b"]) == (*sums, 30)
+    r = multimodal.resize_bmp_nearest(payload, 2, 2).collect()[0]
+    assert (r["sum_b"], r["sum_g"], r["sum_r"]) == sums
+    r = multimodal.extract_bmp_block_features(payload).collect()[0]
+    assert [r[f"sum_q{x}{y}"] for x in (0, 1) for y in (0, 1)] == [
+        v[(x, y)] for x in (0, 1) for y in (0, 1)]
+
+
+def test_bmp_pixel_reducers_refuse_a_32_bit_bmp(spark):
+    # 2x2, every pixel B=10 G=20 R=30 A=255: the 24-bit slicer would read
+    # the alpha bytes as colour, so the pixel decoder refuses it
+    import struct
+
+    pix = bytes((10, 20, 30, 255)) * 4
+    b = (b"BM" + struct.pack("<IHHI", 54 + len(pix), 0, 0, 54)
+         + struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 32, 0, len(pix), 2835, 2835, 0, 0)
+         + pix)
+    assert multimodal.parse_bmp(b)[2] == "RGBA"  # the header still parses
+    with pytest.raises(ValueError, match="24-bit"):
+        multimodal.decode_bmp_pixels(b)
+    with pytest.raises(Exception, match="24-bit"):
+        multimodal.extract_bmp_channel_stats(_bmp_payload(spark, b)).collect()
+
+
 def test_png_encode_decode_roundtrip():
     # pure-Python, stdlib zlib only: encoder writes a REAL PNG (varied
     # row filters) and the decoder reconstructs every pixel exactly
@@ -947,6 +992,10 @@ def test_png_channel_sums_match_handcount(spark):
     assert r["sum_r"] == sum(vals)
     assert r["sum_g"] == sum(v * 3 % 256 for v in vals)
     assert r["sum_b"] == sum(v * 5 % 256 for v in vals)
+    # a format with no shipped pixel decoder refuses loudly, like its siblings
+    bmp = _bmp_payload(spark, multimodal.encode_bmp(2, 2, seed=10))
+    with pytest.raises(Exception, match="NotImplementedError.*PIL"):
+        multimodal.decode_png_images(bmp).collect()
 
 
 def test_pair_graph_cap_switch(spark, sf_dir, monkeypatch):
