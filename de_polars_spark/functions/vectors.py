@@ -35,8 +35,13 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their norms ``na`` and ``nb``,
+    rounded to 6 decimals: the value every cosine operator compares, ranks
+    and reports, so ties and thresholds agree with a double-precision
+    oracle. Pass the norms as attributes computed in a Project of their
+    own (one fold per row, not one per pair)."""
+    return F.round(dot(a, b) / (na * nb), 6)
 
 
 def sign_bucket(vec: Column, dims: list[int]) -> Column:

@@ -88,46 +88,17 @@ _N_HASHES, _BAND_SIZE = 8, 2
 # Since round 7 this is the DEFAULT for the shared pair graph and its
 # six consumers (components, keep_best, pagerank, graph_stats,
 # cluster_size_histogram, cluster_aware_split) — their oracles model
-# the cap. The uncapped exact form stays as the documented opt-out,
-# anchored by dedup_minhash_lsh's exact oracle (r6 verdict: the exact
+# the cap. The uncapped exact form (``max_bucket_size=None``) is what
+# dedup_minhash_lsh's exact oracle anchors (r6 verdict: the exact
 # default measured quadratic at sf1 — 10x docs -> 158x pairs,
-# graph_stats 448 s vs 1.0 s capped — so out-of-the-box must be capped).
+# graph_stats 448 s vs 1.0 s capped — so the shared graph is capped).
 _LSH_CAP = 16
-
-
-def _lsh_graph_cap() -> int | None:
-    """Bucket cap for the SHARED pair graph (default: capped).
-
-    Returns :data:`_LSH_CAP` unless ``SPARK_GRAFT_LSH_CAP`` overrides
-    it: a positive integer sets a different cap; ``0``/``none``/``exact``
-    opt out into exact (uncapped) banding. The cap is part of the
-    artifact's content address, so capped and exact graphs never
-    cross-contaminate. NOTE: any override desynchronizes the six graph
-    consumers from their committed cap-16 oracles —
-    ``tools/check_correctness.py`` refuses to run with the override set."""
-    import os
-
-    raw = os.environ.get("SPARK_GRAFT_LSH_CAP", "").strip().lower()
-    if not raw:
-        return _LSH_CAP
-    if raw in ("0", "none", "exact"):
-        return None
-    cap = int(raw)
-    if cap <= 0:
-        # a negative cap would filter size(ids) <= cap, dropping EVERY
-        # bucket and silently materializing an empty pair graph for all
-        # six consumers — refuse the typo instead
-        raise ValueError(
-            f"SPARK_GRAFT_LSH_CAP={raw!r}: cap must be a positive integer "
-            "(or 0/none/exact for exact banding)"
-        )
-    return cap
 
 
 def _pair_graph_key() -> str:
     """What shapes the shared MinHash pair graph: the LSH parameters (incl.
-    the optional production bucket cap) and the generating implementation,
-    so any edit to the MinHash/LSH code invalidates cached graphs."""
+    the production bucket cap) and the generating implementation, so any
+    edit to the MinHash/LSH code invalidates cached graphs."""
     import inspect
 
     impl = (
@@ -135,7 +106,7 @@ def _pair_graph_key() -> str:
         + inspect.getsource(dedup._minhash_sig_df)
         + inspect.getsource(dedup.minhash_lsh_pairs)
     )
-    return f"{impl}|{_N_HASHES}|{_BAND_SIZE}|shingle2|cap={_lsh_graph_cap()}"
+    return f"{impl}|{_N_HASHES}|{_BAND_SIZE}|shingle2|cap={_LSH_CAP}"
 
 
 def _pair_graph_artifact_dir(sf_dir: str) -> str:
@@ -201,7 +172,7 @@ def _dedup_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pair_graph_artifact_dir(sf_dir),
         lambda tmp: dedup.minhash_lsh_pairs(
             t["documents"], "doc_id", "text", _N_HASHES, _BAND_SIZE,
-            shingle_n=2, max_bucket_size=_lsh_graph_cap(),
+            shingle_n=2, max_bucket_size=_LSH_CAP,
         ).write.parquet(tmp),
     )
     return spark.read.parquet(path)
@@ -2802,18 +2773,19 @@ ORACLES["embedding_pool_chunks"] = f"""
 _RECALL_K = 3
 
 
-def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = register_testdata(spark, sf_dir)
-    corpus = t["embeddings"]
-    queries = corpus.filter(F.col("vec_id") % 100 == 0)
+def _ivf_recall(corpus: DataFrame, qmod: int, k: int, nprobe: int) -> DataFrame:
+    """Per query (``vec_id % qmod = 0``): how many of its exact cosine
+    top-``k`` the IVF top-``k`` finds (8 sampled centroids, ``nprobe``
+    probed cells): ``(query_id, n_hits, recall)``."""
+    queries = corpus.filter(F.col("vec_id") % qmod == 0)
     exact = similarity.cosine_topk(
-        corpus, queries, "vec_id", "embedding", k=_RECALL_K
+        corpus, queries, "vec_id", "embedding", k=k
     ).select("query_id", "neighbor_id")
     cents = similarity.fit_centroids_sample(
         corpus, "vec_id", "embedding", nlist=8, mod=67, rem=1
     )
     approx = similarity.ivf_topk(
-        corpus, queries, "vec_id", "embedding", cents, k=_RECALL_K, nprobe=2
+        corpus, queries, "vec_id", "embedding", cents, k=k, nprobe=nprobe
     ).select("query_id", "neighbor_id")
     hits = (
         approx.join(exact, ["query_id", "neighbor_id"])
@@ -2828,6 +2800,11 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_hits", F.lit(0)) / F.col("k").cast("double"), 6
         ).alias("recall"),
     )
+
+
+def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = register_testdata(spark, sf_dir)
+    return _ivf_recall(t["embeddings"], 100, _RECALL_K, nprobe=2)
 
 
 QUERIES["ann_recall_eval"] = q_ann_recall_eval
@@ -3728,20 +3705,12 @@ def _ensure_pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
         return json.load(f)
 
 
-def _pq_codes(spark: SparkSession, sf_dir: str):
-    """(codes DataFrame, codebooks, corpus) shared by the PQ queries."""
-    from de_polars_spark.operators import pq as PQ
-
-    t = register_testdata(spark, sf_dir)
-    corpus = t["embeddings"]
-    cbs = _ensure_pq_codebooks(spark, sf_dir)
-    return PQ.pq_encode(corpus, "vec_id", "embedding", cbs), cbs, corpus
-
-
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from de_polars_spark.operators import pq as PQ
 
-    codes, cbs, corpus = _pq_codes(spark, sf_dir)
+    corpus = register_testdata(spark, sf_dir)["embeddings"]
+    cbs = _ensure_pq_codebooks(spark, sf_dir)
+    codes = PQ.pq_encode(corpus, "vec_id", "embedding", cbs)
     queries = corpus.filter(F.col("vec_id") % 100 == 0)
     out = PQ.pq_adc_topk(codes, queries, "vec_id", "embedding", cbs, k=3)
     return out.withColumn("rank", F.col("rank").cast("bigint"))
@@ -3869,16 +3838,24 @@ QUERIES["ann_pq_topk"] = q_ann_pq_topk
 ORACLES["ann_pq_topk"] = _pq_topk_oracle()
 
 
-def q_ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@3 of the PQ/ADC top-k against the exact L2 top-k — the
-    acceptance gate a production quantized index ships behind."""
+def _pq_recall(corpus: DataFrame, qmod: int = 100, cbs: list | None = None) -> DataFrame:
+    """Recall@3 of the PQ/ADC top-k against the exact L2 top-k for the
+    queries ``vec_id % qmod = 0`` — the Spark side of
+    :func:`_pq_recall_tail`: ``(query_id, n_returned, n_hit,
+    recall_at_3)``. ``cbs``: fitted codebooks; None fits them over
+    ``corpus`` here."""
     from pyspark.sql import Window
 
-    from de_polars_spark.operators import pq as PQ
     from de_polars_spark.functions import vectors as VX
+    from de_polars_spark.operators import pq as PQ
 
-    codes, cbs, corpus = _pq_codes(spark, sf_dir)
-    queries = corpus.filter(F.col("vec_id") % 100 == 0)
+    if cbs is None:
+        cbs = PQ.fit_pq(
+            corpus, "vec_id", "embedding", _pq_seeds(corpus), _PQ_M, _PQ_DSUB,
+            iterations=_PQ_ITERS,
+        )
+    codes = PQ.pq_encode(corpus, "vec_id", "embedding", cbs)
+    queries = corpus.filter(F.col("vec_id") % qmod == 0)
     approx = PQ.pq_adc_topk(codes, queries, "vec_id", "embedding", cbs, k=3)
 
     c = corpus.select(
@@ -3931,9 +3908,16 @@ def q_ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q_ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@3 of the PQ/ADC top-k against the exact L2 top-k — the
+    acceptance gate a production quantized index ships behind."""
+    corpus = register_testdata(spark, sf_dir)["embeddings"]
+    return _pq_recall(corpus, cbs=_ensure_pq_codebooks(spark, sf_dir))
+
+
 def _pq_recall_tail() -> str:
     """The recall-scoring SQL after the ``e``/codes/``scored`` chain —
-    shared by the uniform and clustered PQ recall oracles."""
+    shared by the three PQ recall oracles (Spark side: :func:`_pq_recall`)."""
     exact_d2 = (
         "ROUND(list_aggregate(list_transform(generate_series(1, 64), "
         "i -> (q.qv[i] - x.v[i]) * (q.qv[i] - x.v[i])), 'sum'), 6)"

@@ -108,32 +108,12 @@ _RC_QMOD = 25
 
 
 def q_ann_recall_eval_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from de_polars_spark.inventory.llm_ops import _ivf_recall
+
     # checkpoint: exact baseline, centroid sampler, and IVF probe all
     # re-reference the derived corpus (window+join lineage)
     corpus = clustered_embeddings(spark, sf_dir).localCheckpoint()
-    queries = corpus.filter(F.col("vec_id") % _RC_QMOD == 0)
-    exact = similarity.cosine_topk(
-        corpus, queries, "vec_id", "embedding", k=_RC_K
-    ).select("query_id", "neighbor_id")
-    cents = similarity.fit_centroids_sample(
-        corpus, "vec_id", "embedding", nlist=8, mod=67, rem=1
-    )
-    approx = similarity.ivf_topk(
-        corpus, queries, "vec_id", "embedding", cents, k=_RC_K, nprobe=_RC_NPROBE
-    ).select("query_id", "neighbor_id")
-    hits = (
-        approx.join(exact, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    qn = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("k"))
-    return qn.join(hits, "query_id", "left").select(
-        "query_id",
-        F.coalesce("n_hits", F.lit(0)).cast("bigint").alias("n_hits"),
-        F.round(
-            F.coalesce("n_hits", F.lit(0)) / F.col("k").cast("double"), 6
-        ).alias("recall"),
-    )
+    return _ivf_recall(corpus, _RC_QMOD, _RC_K, _RC_NPROBE)
 
 
 _QE = _COS.format(a="q.v", b="e.v")
@@ -435,73 +415,9 @@ _PQ_QMOD = 25
 def q_ann_pq_recall_eval_clustered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql import Window
+    from de_polars_spark.inventory.llm_ops import _pq_recall
 
-    from de_polars_spark.inventory.llm_ops import (
-        _PQ_DSUB,
-        _PQ_ITERS,
-        _PQ_M,
-        _pq_seeds,
-    )
-    from de_polars_spark.operators import pq as PQ
-
-    corpus = clustered_embeddings(spark, sf_dir).localCheckpoint()
-    cbs = PQ.fit_pq(
-        corpus, "vec_id", "embedding", _pq_seeds(corpus), _PQ_M, _PQ_DSUB,
-        iterations=_PQ_ITERS,
-    )
-    codes = PQ.pq_encode(corpus, "vec_id", "embedding", cbs)
-    queries = corpus.filter(F.col("vec_id") % _PQ_QMOD == 0)
-    approx = PQ.pq_adc_topk(codes, queries, "vec_id", "embedding", cbs, k=3)
-
-    c = corpus.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-    )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    exact_scored = c.join(
-        F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias("d2"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("neighbor_id")
-    )
-    exact = (
-        exact_scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    hits = (
-        approx.join(exact, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    return (
-        approx.groupBy("query_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_returned"))
-        .join(hits, "query_id", "left")
-        .fillna(0, ["n_hit"])
-        .select(
-            "query_id",
-            "n_returned",
-            F.col("n_hit").cast("bigint").alias("n_hit"),
-            (F.col("n_hit") / F.lit(3.0)).alias("recall_at_3"),
-        )
-        .orderBy("query_id")
-    )
+    return _pq_recall(clustered_embeddings(spark, sf_dir).localCheckpoint(), _PQ_QMOD)
 
 
 def _pq_clustered_oracle() -> str:
@@ -582,73 +498,9 @@ def neardup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_pq_recall_eval_neardup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql import Window
+    from de_polars_spark.inventory.llm_ops import _pq_recall
 
-    from de_polars_spark.inventory.llm_ops import (
-        _PQ_DSUB,
-        _PQ_ITERS,
-        _PQ_M,
-        _pq_seeds,
-    )
-    from de_polars_spark.operators import pq as PQ
-
-    corpus = neardup_embeddings(spark, sf_dir).localCheckpoint()
-    cbs = PQ.fit_pq(
-        corpus, "vec_id", "embedding", _pq_seeds(corpus), _PQ_M, _PQ_DSUB,
-        iterations=_PQ_ITERS,
-    )
-    codes = PQ.pq_encode(corpus, "vec_id", "embedding", cbs)
-    queries = corpus.filter(F.col("vec_id") % _PQ_QMOD == 0)
-    approx = PQ.pq_adc_topk(codes, queries, "vec_id", "embedding", cbs, k=3)
-
-    c = corpus.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-    )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    exact_scored = c.join(
-        F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias("d2"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("neighbor_id")
-    )
-    exact = (
-        exact_scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    hits = (
-        approx.join(exact, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    return (
-        approx.groupBy("query_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_returned"))
-        .join(hits, "query_id", "left")
-        .fillna(0, ["n_hit"])
-        .select(
-            "query_id",
-            "n_returned",
-            F.col("n_hit").cast("bigint").alias("n_hit"),
-            (F.col("n_hit") / F.lit(3.0)).alias("recall_at_3"),
-        )
-        .orderBy("query_id")
-    )
+    return _pq_recall(neardup_embeddings(spark, sf_dir).localCheckpoint(), _PQ_QMOD)
 
 
 def _pq_neardup_oracle() -> str:

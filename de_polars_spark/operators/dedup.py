@@ -657,9 +657,7 @@ def embedding_neardup_pairs(
             .drop("__bn")
         )
     a, b = docs.alias("a"), docs.alias("b")
-    cos = F.round(
-        VX.dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm")), 6
-    )
+    cos = VX.cosine(F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm"))
     return (
         a.join(
             b,

@@ -76,9 +76,8 @@ def semantic_dedup_summary(
             )
         )
     a, b = docs.alias("a"), docs.alias("b")
-    cos = F.round(
-        VX.dot(F.col("a.__v"), F.col("b.__v")) / (F.col("a.nrm") * F.col("b.nrm")),
-        6,
+    cos = VX.cosine(
+        F.col("a.__v"), F.col("b.__v"), F.col("a.nrm"), F.col("b.nrm")
     )
     pairs = (
         a.join(

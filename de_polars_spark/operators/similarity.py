@@ -7,8 +7,9 @@
   partition before the final shuffle of k rows per query).
 - ``lsh_bucketed_topk``: the scale path — sign-bit LSH buckets shrink each
   query's candidate set to ~corpus/2^bits; same top-k afterwards. Recall
-  trades off with bucket count; at 100 TB you'd add multi-probe (flip one
-  bit) which is a UNION of bucket keys, not a new algorithm.
+  trades off with bucket count; ``lsh_multiprobe_topk`` also probes the
+  buckets one flipped bit away, a UNION of bucket keys on the query side
+  (the same body, another probe column).
 - ``ivf_topk``: the other classic scale path (IVF — inverted file index).
   A small centroid set partitions the corpus into cells; each query only
   scores the ``nprobe`` nearest cells. Cell assignment here is map-only:
@@ -28,6 +29,15 @@
   parquet index for use across processes. At 100 TB you would fit the
   centroids with k-means (e.g. one MLlib pass over a sample); the
   deterministic sample-fit used here keeps the operator oracle-checkable.
+
+Every pairwise-cosine operator scores the same way: each side is
+``_normed`` (id, vector as doubles, norm in a Project of its own), the
+pair's score is ``VX.cosine`` (rounded to 6 decimals before any
+comparison), and the top-k operators differ only in the candidate
+predicate ``_scored_topk`` joins on: another row than the query (exact),
+in the same LSH bucket or probed IVF cell, or with another label (hard
+negatives). The two margin miners differ only in their scored pairs and
+share ``_margin_tail``: k-NN averages, mutual top-1, NULL-safe margin.
 
 Per-call intermediates that several branches read (the margin miners'
 scored pairs) are ``localCheckpoint()``-ed: an RDD leaf no other plan is
@@ -49,15 +59,36 @@ from de_polars_spark.sources.artifacts import Memo, plan_version, unpersist
 from de_polars_spark.sources.artifacts import release_cached  # noqa: F401
 
 
-def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
+def _scored_topk(c: DataFrame, q: DataFrame, on, k: int, *carry: str) -> DataFrame:
+    """Per query, the ``k`` best-scoring pairs of the corpus side ``c``
+    (``neighbor_id, cv, cn``) and the broadcast query side ``q``
+    (``query_id, qv, qn``) that the join predicate ``on`` admits:
+    ``(query_id, neighbor_id, *carry, cosine, rank)``, cosine descending,
+    ties to the lower neighbor id. ``carry`` names corpus-side columns to
+    keep (``neighbor_label``). Catalyst plans a partial top-k per partition
+    before the final shuffle of k rows per query."""
+    scored = c.join(F.broadcast(q), on).select(
+        "query_id",
+        "neighbor_id",
+        *carry,
+        VX.cosine(q["qv"], c["cv"], q["qn"], c["cn"]).alias("cosine"),
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+        .select("query_id", "neighbor_id", *carry, "cosine", "rank")
     )
+
+
+def _not_self() -> "F.Column":
+    return F.col("query_id") != F.col("neighbor_id")
+
+
+def _other_label() -> "F.Column":
+    return F.col("query_label") != F.col("neighbor_label")
 
 
 def cosine_topk(
@@ -71,23 +102,9 @@ def cosine_topk(
 
     Norms are precomputed per row on both sides so each of the Q×N pairs
     pays one dot-product fold, not three."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), VX.as_double(F.col(vec_col)).alias("cv")
-    ).select("neighbor_id", "cv", VX.norm(F.col("cv")).alias("cn"))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), VX.as_double(F.col(vec_col)).alias("qv")
-    ).select("query_id", "qv", VX.norm(F.col("qv")).alias("qn"))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                VX.dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cosine"),
-        )
-    )
-    return _ranked_topk(scored, k)
+    c, _ = _normed(corpus, id_col, vec_col, None, "neighbor")
+    q, _ = _normed(queries, id_col, vec_col, None, "query")
+    return _scored_topk(c, q, _not_self(), k)
 
 
 def _py_norm(vec: list) -> float:
@@ -341,12 +358,7 @@ def append_ivf_index(
     ``build_ivf_index`` when recall drops)."""
     import os
 
-    cents = sorted(
-        (int(r["cid"]), list(r["cv"]))
-        for r in corpus.sparkSession.read.parquet(
-            os.path.join(path, "centroids")
-        ).collect()
-    )
+    cents, _ = load_ivf_index(corpus.sparkSession, path)
     c = _assign_cells(corpus, id_col, vec_col, cents)
     c.write.mode("append").partitionBy("cell").parquet(
         os.path.join(path, "postings")
@@ -450,17 +462,7 @@ def ivf_topk_from_index(
     cost drops to probing ``nprobe`` inverted lists; no corpus scan, no
     re-assignment, no norm recomputation."""
     q = _probe_cells(queries, id_col, vec_col, centroids, nprobe)
-    scored = postings.join(
-        F.broadcast(q),
-        (postings["cell"] == q["cell"]) & (F.col("query_id") != F.col("neighbor_id")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            VX.dot(q["qv"], postings["cv"]) / (q["qn"] * postings["cn"]), 6
-        ).alias("cosine"),
-    )
-    return _ranked_topk(scored, k)
+    return _scored_topk(postings, q, (postings["cell"] == q["cell"]) & _not_self(), k)
 
 
 def hard_negative_topk_ivf(
@@ -487,24 +489,8 @@ def hard_negative_topk_ivf(
     """
     c = _assign_cells(corpus, id_col, vec_col, centroids, label_col)
     q = _probe_cells(anchors, id_col, vec_col, centroids, nprobe, label_col)
-    scored = c.join(
-        F.broadcast(q),
-        (c["cell"] == q["cell"])
-        & (F.col("query_label") != F.col("neighbor_label")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        "neighbor_label",
-        F.round(VX.dot(q["qv"], c["cv"]) / (q["qn"] * c["cn"]), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "neighbor_label", "cosine", "rank")
-    )
+    on = (c["cell"] == q["cell"]) & _other_label()
+    return _scored_topk(c, q, on, k, "neighbor_label")
 
 
 def margin_mutual_pairs_ivf(
@@ -545,53 +531,27 @@ def margin_mutual_pairs_ivf(
     (``_centroid_scores``), rank ties to the lower neighbor id, and the
     ANSI-safe margin guard emits NULL on a zero denominator.
     """
-    def _side(side, suffix: str) -> DataFrame:
-        v = f"v{suffix}"
-        return (
-            corpus.filter(F.col(label_col) == side)
-            .select(
-                F.col(id_col).alias(f"id{suffix}"),
-                VX.as_double(F.col(vec_col)).alias(v),
-            )
-            .select(f"id{suffix}", v, VX.norm(F.col(v)).alias(f"n{suffix}"))
-            .select(
-                f"id{suffix}",
-                v,
-                f"n{suffix}",
-                F.transform(
-                    F.slice(
-                        _centroid_scores(F.col(v), centroids, F.col(f"n{suffix}")),
-                        1,
-                        nprobe,
-                    ),
-                    lambda p: p["cid"],
-                ).alias(f"probes{suffix}"),
-            )
-            .withColumn(f"cell{suffix}", F.element_at(f"probes{suffix}", 1))
+    def probed_pairs(from_a: bool) -> DataFrame:
+        """``(id_a, id_b, cosine, in_ab, in_ba)``: each row of one side
+        (A if ``from_a``) against the other side's rows assigned to the
+        cells it probes."""
+        x, y = (side_a, side_b) if from_a else (side_b, side_a)
+        q = _probe_cells(
+            corpus.filter(F.col(label_col) == x), id_col, vec_col, centroids, nprobe
+        )
+        c = _assign_cells(corpus.filter(F.col(label_col) == y), id_col, vec_col, centroids)
+        id_a, id_b = ("query_id", "neighbor_id") if from_a else ("neighbor_id", "query_id")
+        return c.join(q, c["cell"] == q["cell"]).select(
+            F.col(id_a).alias("id_a"),
+            F.col(id_b).alias("id_b"),
+            VX.cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cosine"),
+            F.lit(from_a).alias("in_ab"),
+            F.lit(not from_a).alias("in_ba"),
         )
 
-    a = _side(side_a, "_a")
-    b = _side(side_b, "_b")
-    cos = F.round(
-        VX.dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")), 6
-    ).alias("cosine")
-    pairs_ab = (
-        a.select("id_a", "v_a", "n_a", F.explode("probes_a").alias("probe"))
-        .join(b.drop("probes_b"), F.col("probe") == F.col("cell_b"))
-        .select("id_a", "id_b", cos)
-    )
-    pairs_ba = (
-        b.select("id_b", "v_b", "n_b", F.explode("probes_b").alias("probe"))
-        .join(a.drop("probes_a"), F.col("probe") == F.col("cell_a"))
-        .select("id_a", "id_b", cos)
-    )
     cand = (
-        pairs_ab.withColumn("in_ab", F.lit(True))
-        .withColumn("in_ba", F.lit(False))
-        .unionByName(
-            pairs_ba.withColumn("in_ab", F.lit(False))
-            .withColumn("in_ba", F.lit(True))
-        )
+        probed_pairs(True)
+        .unionByName(probed_pairs(False))
         # a pair probed from both directions is one candidate (cosines
         # are identical round-6 values — max is a no-op dedup)
         .groupBy("id_a", "id_b")
@@ -602,53 +562,28 @@ def margin_mutual_pairs_ivf(
         )
     )
     cand = cand.localCheckpoint()
-    wa = Window.partitionBy("id_a").orderBy(F.col("cosine").desc(), F.col("id_b"))
-    wb = Window.partitionBy("id_b").orderBy(F.col("cosine").desc(), F.col("id_a"))
-    r_ab = cand.filter("in_ab").withColumn("rank_a", F.row_number().over(wa))
-    r_ba = cand.filter("in_ba").withColumn("rank_b", F.row_number().over(wb))
-    avg_a = (
-        r_ab.filter(F.col("rank_a") <= k)
-        .groupBy("id_a")
-        .agg(
-            (
-                F.sum(F.col("cosine").cast("decimal(38,6)")).cast("double")
-                / F.lit(float(k))
-            ).alias("avg_a")
-        )
+    return _margin_tail(
+        cand.filter("in_ab"), cand.filter("in_ba"), k, margin_threshold
     )
-    avg_b = (
-        r_ba.filter(F.col("rank_b") <= k)
-        .groupBy("id_b")
-        .agg(
-            (
-                F.sum(F.col("cosine").cast("decimal(38,6)")).cast("double")
-                / F.lit(float(k))
-            ).alias("avg_b")
-        )
-    )
-    mutual = (
-        r_ab.filter(F.col("rank_a") == 1)
-        .select("id_a", "id_b", "cosine")
-        .join(
-            r_ba.filter(F.col("rank_b") == 1).select("id_a", "id_b"),
-            ["id_a", "id_b"],
-        )
-    )
-    denom = (F.col("avg_a") + F.col("avg_b")) / 2
-    raw_margin = F.when(denom != 0.0, F.col("cosine") / denom)
-    return (
-        mutual.join(avg_a, "id_a")
-        .join(avg_b, "id_b")
-        .filter(raw_margin > margin_threshold)
-        .select(
-            "id_a",
-            "id_b",
-            "cosine",
-            F.round("avg_a", 6).alias("avg_a"),
-            F.round("avg_b", 6).alias("avg_b"),
-            F.round(raw_margin, 6).alias("margin"),
-        )
-    )
+
+
+def _lsh_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    bucket_dims: tuple[int, ...],
+    probes,
+) -> DataFrame:
+    """Top-k among the corpus rows whose sign bucket is one of the query's
+    ``probes(bucket)`` (a column of one bucket key, or an exploded set)."""
+    dims = list(bucket_dims)
+    c, _ = _normed(corpus, id_col, vec_col, None, "neighbor")
+    q, _ = _normed(queries, id_col, vec_col, None, "query")
+    c = c.withColumn("bucket", VX.sign_bucket(F.col("cv"), dims))
+    q = q.withColumn("bucket", probes(VX.sign_bucket(F.col("qv"), dims)))
+    return _scored_topk(c, q, (c["bucket"] == q["bucket"]) & _not_self(), k)
 
 
 def lsh_bucketed_topk(
@@ -660,32 +595,7 @@ def lsh_bucketed_topk(
     bucket_dims: tuple[int, ...] = (1, 17, 33, 49),
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket."""
-    dims = list(bucket_dims)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        VX.as_double(F.col(vec_col)).alias("cv"),
-        VX.sign_bucket(F.col(vec_col), dims).alias("bucket"),
-    ).select("neighbor_id", "cv", "bucket", VX.norm(F.col("cv")).alias("cn"))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        VX.as_double(F.col(vec_col)).alias("qv"),
-        VX.sign_bucket(F.col(vec_col), dims).alias("bucket"),
-    ).select("query_id", "qv", "bucket", VX.norm(F.col("qv")).alias("qn"))
-    scored = (
-        c.join(
-            F.broadcast(q),
-            (c["bucket"] == q["bucket"])
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                VX.dot(q["qv"], c["cv"]) / (q["qn"] * c["cn"]), 6
-            ).alias("cosine"),
-        )
-    )
-    return _ranked_topk(scored, k)
+    return _lsh_topk(corpus, queries, id_col, vec_col, k, bucket_dims, lambda b: b)
 
 
 def lsh_multiprobe_topk(
@@ -709,8 +619,7 @@ def lsh_multiprobe_topk(
     explosion is a UNION of bucket keys, not a new algorithm — at 100 TB
     the corpus-side layout (partitioned by bucket) is unchanged.
     """
-    dims = list(bucket_dims)
-    n_bits = len(dims)
+    n_bits = len(bucket_dims)
 
     def flips(bucket):  # bucket: Column of '0'/'1' strings, len n_bits
         variants = [bucket]
@@ -725,33 +634,9 @@ def lsh_multiprobe_topk(
                     F.substring(bucket, i + 1, n_bits - i),
                 )
             )
-        return F.array_distinct(F.array(*variants))
+        return F.explode(F.array_distinct(F.array(*variants)))
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        VX.as_double(F.col(vec_col)).alias("cv"),
-        VX.sign_bucket(F.col(vec_col), dims).alias("bucket"),
-    ).select("neighbor_id", "cv", "bucket", VX.norm(F.col("cv")).alias("cn"))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        VX.as_double(F.col(vec_col)).alias("qv"),
-        F.explode(flips(VX.sign_bucket(F.col(vec_col), dims))).alias("bucket"),
-    ).select("query_id", "qv", "bucket", VX.norm(F.col("qv")).alias("qn"))
-    scored = (
-        c.join(
-            F.broadcast(q),
-            (c["bucket"] == q["bucket"])
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                VX.dot(q["qv"], c["cv"]) / (q["qn"] * c["cn"]), 6
-            ).alias("cosine"),
-        )
-    )
-    return _ranked_topk(scored, k)
+    return _lsh_topk(corpus, queries, id_col, vec_col, k, bucket_dims, flips)
 
 
 def hard_negative_topk(
@@ -781,36 +666,9 @@ def hard_negative_topk(
     Output: ``(query_id, neighbor_id, neighbor_label, cosine, rank)``,
     ties broken by neighbor_id.
     """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        VX.as_double(F.col(vec_col)).alias("cv"),
-    ).select(
-        "neighbor_id", "neighbor_label", "cv", VX.norm(F.col("cv")).alias("cn")
-    )
-    q = anchors.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("query_label"),
-        VX.as_double(F.col(vec_col)).alias("qv"),
-    ).select("query_id", "query_label", "qv", VX.norm(F.col("qv")).alias("qn"))
-    scored = c.join(
-        F.broadcast(q), F.col("query_label") != F.col("neighbor_label")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        "neighbor_label",
-        F.round(
-            VX.dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "neighbor_label", "cosine", "rank")
-    )
+    c, _ = _normed(corpus, id_col, vec_col, label_col, "neighbor")
+    q, _ = _normed(anchors, id_col, vec_col, label_col, "query")
+    return _scored_topk(c, q, _other_label(), k, "neighbor_label")
 
 
 def margin_mutual_pairs(
@@ -837,8 +695,9 @@ def margin_mutual_pairs(
     Shape: ONE scored A×B relation (B rides a broadcast; at corpus
     scale bucket both sides with the IVF index and score within probed
     cells), then both rank directions as two windows over the SAME
-    relation — no second scoring pass — and two neighborhood-average
-    aggregates bounded by |A| + |B| rows. Determinism: cosines round-6;
+    relation — no second scoring pass — each folded into one aggregate
+    per row (k-NN average and top-1 partner), |A| + |B| rows joined once
+    for the mutual pairs (``_margin_tail``). Determinism: cosines round-6;
     neighborhood averages are decimal-quantized sums over exactly k
     ranked neighbors; top-1 ties break on neighbor id.
 
@@ -851,55 +710,68 @@ def margin_mutual_pairs(
     neighborhood (all-orthogonal cosines) is handled: its margin is
     NULL and the threshold filter drops it in both engines.
     """
-    a = corpus.filter(F.col(label_col) == side_a).select(
-        F.col(id_col).alias("id_a"), VX.as_double(F.col(vec_col)).alias("va")
-    ).select("id_a", "va", VX.norm(F.col("va")).alias("na"))
-    b = corpus.filter(F.col(label_col) == side_b).select(
-        F.col(id_col).alias("id_b"), VX.as_double(F.col(vec_col)).alias("vb")
-    ).select("id_b", "vb", VX.norm(F.col("vb")).alias("nb"))
+    # B rides the broadcast: it is the query side of the scored pairs
+    a, _ = _normed(
+        corpus.filter(F.col(label_col) == side_a), id_col, vec_col, None, "neighbor"
+    )
+    b, _ = _normed(
+        corpus.filter(F.col(label_col) == side_b), id_col, vec_col, None, "query"
+    )
     scored = a.crossJoin(F.broadcast(b)).select(
-        "id_a",
-        "id_b",
-        F.round(
-            VX.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-        ).alias("cosine"),
+        F.col("neighbor_id").alias("id_a"),
+        F.col("query_id").alias("id_b"),
+        VX.cosine(F.col("cv"), F.col("qv"), F.col("cn"), F.col("qn")).alias("cosine"),
     )
-    wa = Window.partitionBy("id_a").orderBy(F.col("cosine").desc(), F.col("id_b"))
-    wb = Window.partitionBy("id_b").orderBy(F.col("cosine").desc(), F.col("id_a"))
-    ranked = scored.withColumn("rank_a", F.row_number().over(wa)).withColumn(
-        "rank_b", F.row_number().over(wb)
-    )
-    ranked = ranked.localCheckpoint()
-    avg_a = (
-        ranked.filter(F.col("rank_a") <= k)
-        .groupBy("id_a")
-        .agg(
-            (
-                F.sum(F.col("cosine").cast("decimal(38,6)")).cast("double")
-                / F.lit(float(k))
-            ).alias("avg_a")
+    scored = scored.localCheckpoint()
+    return _margin_tail(scored, scored, k, margin_threshold)
+
+
+def _margin_tail(
+    ab: DataFrame, ba: DataFrame, k: int, margin_threshold: float
+) -> DataFrame:
+    """The margin criterion over scored pairs ``(id_a, id_b, cosine)``:
+    ``ab`` holds the pairs each A row ranks, ``ba`` those each B row
+    ranks (the same relation for the exact miner). Ranks order by cosine
+    descending, ties to the lower id; each side's k-NN average is a
+    decimal-quantized sum over its ``k`` best divided by ``k``; a pair is
+    kept when each side is the other's top-1 and the margin clears
+    ``margin_threshold``. Output ``(id_a, id_b, cosine, avg_a, avg_b,
+    margin)``."""
+
+    def nearest(pairs: DataFrame, side: str, other: str) -> DataFrame:
+        """Per ``id_<side>`` row, from ONE ranking: its k-NN average
+        ``avg_<side>``, its top-1 partner ``top_<side>`` and their cosine
+        ``cos_<side>``."""
+        w = Window.partitionBy(f"id_{side}").orderBy(
+            F.col("cosine").desc(), F.col(f"id_{other}")
         )
-    )
-    avg_b = (
-        ranked.filter(F.col("rank_b") <= k)
-        .groupBy("id_b")
-        .agg(
-            (
-                F.sum(F.col("cosine").cast("decimal(38,6)")).cast("double")
-                / F.lit(float(k))
-            ).alias("avg_b")
+        top1 = F.col("rank") == 1
+        return (
+            pairs.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .groupBy(f"id_{side}")
+            .agg(
+                (
+                    F.sum(F.col("cosine").cast("decimal(38,6)")).cast("double")
+                    / F.lit(float(k))
+                ).alias(f"avg_{side}"),
+                F.max(F.when(top1, F.col(f"id_{other}"))).alias(f"top_{side}"),
+                F.max(F.when(top1, F.col("cosine"))).alias(f"cos_{side}"),
+            )
         )
+
+    mutual = nearest(ab, "a", "b").join(
+        nearest(ba, "b", "a"),
+        (F.col("top_a") == F.col("id_b")) & (F.col("top_b") == F.col("id_a")),
     )
-    mutual = ranked.filter((F.col("rank_a") == 1) & (F.col("rank_b") == 1))
     # guard the zero-neighborhood denominator (all-orthogonal k-NN sets
     # sum to exactly 0): Spark's ANSI mode throws on x/0 where DuckDB
     # yields NULL — the when() makes both engines emit NULL, which the
     # threshold filter then drops identically
     denom = (F.col("avg_a") + F.col("avg_b")) / 2
-    raw_margin = F.when(denom != 0.0, F.col("cosine") / denom)
+    raw_margin = F.when(denom != 0.0, F.col("cos_a") / denom)
     return (
-        mutual.join(avg_a, "id_a")
-        .join(avg_b, "id_b")
+        mutual
         # threshold on the RAW ratio (the rounded display value would
         # shift the boundary by up to 5e-7); the averages themselves are
         # engine-exact (decimal sum over exactly k terms / k)
@@ -907,7 +779,7 @@ def margin_mutual_pairs(
         .select(
             "id_a",
             "id_b",
-            "cosine",
+            F.col("cos_a").alias("cosine"),
             F.round("avg_a", 6).alias("avg_a"),
             F.round("avg_b", 6).alias("avg_b"),
             F.round(raw_margin, 6).alias("margin"),

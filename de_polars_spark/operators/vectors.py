@@ -22,13 +22,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from de_polars_spark.functions.vectors import dot as _dot
+from de_polars_spark.functions.vectors import cosine as _cosine
 from de_polars_spark.functions.vectors import norm as _norm
 
 
 def l2_normalize(vec: Column) -> Column:
     """vec / ||vec|| (double arithmetic; zero vectors pass through)."""
-    norm = F.sqrt(_dot(vec, vec))
+    norm = _norm(vec)
     return F.when(norm == 0.0, vec).otherwise(
         F.transform(vec, lambda x: x / norm)
     )
@@ -45,8 +45,8 @@ def truncate_normalize(
     """
     v = F.col(vec_col).cast("array<double>")
     tv = F.slice(v, 1, dim)
-    full_norm = F.sqrt(_dot(v, v))
-    trunc_norm = F.sqrt(_dot(tv, tv))
+    full_norm = _norm(v)
+    trunc_norm = _norm(tv)
     return df.select(
         F.col(id_col),
         F.size(F.col(vec_col)).alias("full_dim"),
@@ -310,9 +310,7 @@ def centroid_silhouette(
         "__vid",
         "__lab",
         "__clab",
-        F.round(
-            _dot(F.col("v"), F.col("carr")) / (F.col("vnorm") * F.col("cnorm")), 6
-        ).alias("cos"),
+        _cosine(F.col("v"), F.col("carr"), F.col("vnorm"), F.col("cnorm")).alias("cos"),
     )
     per_vec = affin.groupBy("__vid", "__lab").agg(
         F.max(F.when(F.col("__clab") == F.col("__lab"), F.col("cos"))).alias(

@@ -197,6 +197,49 @@ def test_one_payload_adapter_runs_every_multimodal_operator():
     assert "offset=54" not in src
 
 
+def test_one_cosine_scorer_serves_every_vector_operator():
+    """Guard: the rounded pair cosine is ``functions/vectors.cosine``, so
+    under ``operators/`` the dot product is called (``VX.dot``, or ``dot``
+    imported from ``functions.vectors``) only by ``_centroid_scores``; and
+    ``similarity.py`` ranks pairs in one top-k window (``_scored_topk``)
+    besides the margin miners' shared ``_margin_tail``."""
+    dot_callers = []
+    for path in glob.glob(os.path.join(PKG, "operators", "*.py")):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        dot_names = {
+            a.asname or a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom) and (node.module or "").endswith("functions.vectors")
+            for a in node.names
+            if a.name == "dot"
+        }
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or fn.col_offset:
+                continue
+            for call in ast.walk(fn):
+                if not isinstance(call, ast.Call):
+                    continue
+                f = call.func
+                if (isinstance(f, ast.Attribute) and f.attr == "dot"
+                        and isinstance(f.value, ast.Name) and f.value.id == "VX") or (
+                        isinstance(f, ast.Name) and f.id in dot_names):
+                    dot_callers.append((os.path.basename(path), fn.name))
+    assert set(dot_callers) == {("similarity.py", "_centroid_scores")}, dot_callers
+
+    with open(os.path.join(PKG, "operators", "similarity.py")) as f:
+        tree = ast.parse(f.read())
+    windows = [
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for call in ast.walk(fn)
+        if isinstance(call, ast.Call) and isinstance(call.func, ast.Attribute)
+        and call.func.attr == "row_number"
+    ]
+    assert sorted(windows) == ["_margin_tail", "_scored_topk"], windows
+
+
 def test_memo_is_an_lru_that_keeps_the_first_value_and_evicts_through_the_hook():
     evicted = []
     memo = Memo(2, on_evict=evicted.append)

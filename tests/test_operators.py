@@ -154,11 +154,14 @@ def test_vector_functions(spark):
     row = df.select(
         V.dot(F.col("a"), F.col("b")).alias("dot"),
         V.norm(F.col("a")).alias("norm"),
-        V.cosine(F.col("a"), F.col("b")).alias("cos"),
+        V.cosine(F.col("a"), F.col("b"), V.norm(F.col("a")), V.norm(F.col("b"))).alias("cos"),
+        V.cosine(F.col("a"), F.array(F.lit(1.0), F.lit(1.0)), F.lit(5.0), F.sqrt(F.lit(2.0)))
+        .alias("cos45"),
     ).collect()[0]
     assert row["dot"] == 25.0
     assert row["norm"] == 5.0
     assert abs(row["cos"] - 1.0) < 1e-12
+    assert row["cos45"] == round(7 / (5 * 2 ** 0.5), 6)  # rounded to 6 decimals
 
 
 def test_text_functions(spark):
@@ -386,6 +389,36 @@ def test_hard_negative_topk_ivf_degenerates_to_exact(spark):
     ivf = sorted(map(tuple, similarity.hard_negative_topk_ivf(
         emb, anchors, "emb_id", "vec", "label", cents, k=3, nprobe=4).collect()))
     assert exact and ivf == exact
+
+
+@pytest.mark.parametrize("approx", ["ivf_full_probe", "lsh_bucketed", "lsh_multiprobe"])
+def test_candidate_filters_degenerate_to_exact_topk(spark, approx):
+    # every vector has positive sign-bucket coordinates (one LSH bucket)
+    # and IVF probes every cell (nprobe = nlist): the candidate set is the
+    # whole corpus, so each must equal cosine_topk row for row
+    import random
+
+    rng = random.Random(5)
+    rows = [(i, [rng.uniform(0.01, 1) for _ in range(6)]) for i in range(40)]
+    emb = spark.createDataFrame(rows, ["emb_id", "vec"])
+    queries = emb.filter(F.col("emb_id") % 4 == 0)
+    dims = (1, 3, 5)
+    run = {
+        "ivf_full_probe": lambda: similarity.ivf_topk(
+            emb, queries, "emb_id", "vec",
+            similarity.fit_centroids_sample(emb, "emb_id", "vec", nlist=4, mod=3, rem=1),
+            k=4, nprobe=4,
+        ),
+        "lsh_bucketed": lambda: similarity.lsh_bucketed_topk(
+            emb, queries, "emb_id", "vec", k=4, bucket_dims=dims
+        ),
+        "lsh_multiprobe": lambda: similarity.lsh_multiprobe_topk(
+            emb, queries, "emb_id", "vec", k=4, bucket_dims=dims
+        ),
+    }[approx]
+    exact = sorted(map(tuple, similarity.cosine_topk(emb, queries, "emb_id", "vec", k=4).collect()))
+    got = sorted(map(tuple, run().collect()))
+    assert len(exact) == 10 * 4 and got == exact
 
 
 def test_fit_centroids_sample_deterministic(spark):
@@ -998,39 +1031,25 @@ def test_png_channel_sums_match_handcount(spark):
         multimodal.decode_png_images(bmp).collect()
 
 
-def test_pair_graph_cap_switch(spark, sf_dir, monkeypatch):
-    """The SHARED pair-graph artifact is capped (near-linear) by DEFAULT
-    since r7 (SURVEY §13 A/B: uncapped banding is quadratic in the
-    corpus); SPARK_GRAFT_LSH_CAP=exact/0/none opts out into the exact
-    oracle-anchored graph under a distinct content address."""
+def test_pair_graph_cap_switch(spark, sf_dir):
+    """The SHARED pair-graph artifact is the capped (near-linear) graph
+    (SURVEY §13 A/B: uncapped banding is quadratic in the corpus); the
+    exact graph, ``max_bucket_size=None``, keeps every pair it has."""
     import de_polars_spark.inventory.llm_ops as L
-
-    monkeypatch.delenv("SPARK_GRAFT_LSH_CAP", raising=False)
-    assert L._lsh_graph_cap() == L._LSH_CAP  # capped out of the box
-    p_capped = L._pair_graph_artifact_dir(sf_dir)
-    monkeypatch.setenv("SPARK_GRAFT_LSH_CAP", "exact")
-    assert L._lsh_graph_cap() is None
-    p_exact = L._pair_graph_artifact_dir(sf_dir)
-    assert p_exact != p_capped  # capped and exact graphs never mix
-    n_exact = L._dedup_pair_graph(spark, sf_dir).count()
-
-    monkeypatch.setenv("SPARK_GRAFT_LSH_CAP", "0")
-    assert L._lsh_graph_cap() is None  # 0 and none alias exact
-    monkeypatch.setenv("SPARK_GRAFT_LSH_CAP", "8")
-    assert L._lsh_graph_cap() == 8  # a positive int overrides the cap
-
-    monkeypatch.delenv("SPARK_GRAFT_LSH_CAP")
-    n_capped = L._dedup_pair_graph(spark, sf_dir).count()
     from de_polars_spark.operators.dedup import minhash_lsh_pairs
     from de_polars_spark.sources.registry import register_testdata
 
+    n_capped = L._dedup_pair_graph(spark, sf_dir).count()
     t = register_testdata(spark, sf_dir)
-    want = minhash_lsh_pairs(
-        t["documents"], "doc_id", "text", L._N_HASHES, L._BAND_SIZE,
-        shingle_n=2, max_bucket_size=L._LSH_CAP,
-    ).count()
-    assert n_capped == want  # the default artifact IS the capped graph
-    assert n_exact >= n_capped
+
+    def pairs(cap):
+        return minhash_lsh_pairs(
+            t["documents"], "doc_id", "text", L._N_HASHES, L._BAND_SIZE,
+            shingle_n=2, max_bucket_size=cap,
+        ).count()
+
+    assert n_capped == pairs(L._LSH_CAP)  # the artifact IS the capped graph
+    assert pairs(None) >= n_capped
 
 
 # ------------------------------------------------------------------ #

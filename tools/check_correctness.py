@@ -53,21 +53,6 @@ def main() -> int:
     import __spark_entry__ as e
     from de_polars_spark.engine.session import get_spark
 
-    # The committed oracles model the DEFAULT pair-graph cap (16 — see
-    # inventory/llm_ops._LSH_CAP); any override desynchronizes the six
-    # graph-consumer oracles, so a sweep under one would report spurious
-    # failures. Refuse rather than mislead (r6 ADVICE item).
-    from de_polars_spark.inventory.llm_ops import _LSH_CAP
-
-    cap_env = os.environ.get("SPARK_GRAFT_LSH_CAP", "").strip()
-    if cap_env and cap_env != str(_LSH_CAP):
-        print(
-            "REFUSING: SPARK_GRAFT_LSH_CAP=%r is set — the committed "
-            "oracles model the default cap (%d); unset the override "
-            "before running the correctness sweep." % (cap_env, _LSH_CAP)
-        )
-        return 2
-
     argv = sys.argv[1:]
     sample_n = seed = None
     if "--sample" in argv:
